@@ -3,9 +3,10 @@ package graft.kv
 import graft.core.{ConditionalCheckFailedException, GraftException, RetentionFloorLostException}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.sources.GraftKvTable
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.RelationShim
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
@@ -16,16 +17,17 @@ import java.util.UUID
 /** Versioned, partitioned key-value table
   * (client/.../tables/KeyValueTable.java:119,
   * KeyValueTableConfiguration.java:39-55) re-expressed as an LSM over
-  * parquet: every update batch commits one delta file per touched bucket
-  * plus a manifest CAS; reads resolve base+deltas by latest commit version
-  * per key; compaction rewrites the resolved state as a new base
+  * parquet: every update batch commits one delta file per touched part
+  * index plus a manifest CAS; reads resolve base+deltas by latest commit
+  * version per key; compaction rewrites the resolved state as a new base
   * (TableCompactor analog). Entry versions are commit versions — exactly
   * the reference's monotonic per-entry `Version` semantics.
   *
-  * Scale: buckets = `hash(pk) % partitionCount` spread keys across
-  * partitions; point reads prune to one bucket's files via parquet stats
-  * on `bucket`/`pk`; the read amplification between compactions is
-  * #deltas, bounded by the compaction cadence. No driver-side state.
+  * Scale: every read resolves through [[graft.sources.GraftKvScan]],
+  * which relies on the write layout ([[KeyValueTable.partIndexOfBucket]]): a
+  * key's whole history sits at one part index in every directory, so a
+  * point read plans one partition, resolves without a shuffle, and reads
+  * #deltas files, bounded by the compaction cadence. No driver-side state.
   */
 final case class KvFile(path: String, kind: String, commitVersion: Long)
 /** A compacted-away file awaiting physical deletion after its
@@ -56,11 +58,33 @@ final case class KvManifest(name: String, partitionCount: Int, version: Long,
                             incarnation: String = "")
 
 object KeyValueTable {
-  /** Conditional batches up to this many touched keys are validated with
-    * literal (bucket, pk) pushdown predicates; larger batches fall back
-    * to a broadcast semi-join below the versioning window.
+  /** Conditional batches up to this many keys are compared on the
+    * driver against a pk-literal (part-index-pruned) read; larger batches
+    * fall back to a broadcast semi-join above the same scan.
     */
   val ConditionPruneLimit: Int = 1024
+
+  /** A key's bucket: the write path's `pmod(xxhash64(pk), n)`, replicated
+    * on the driver so a key becomes a literal without a Spark job.
+    */
+  def bucketOf(pk: String, partitionCount: Int): Long = {
+    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      org.apache.spark.unsafe.types.UTF8String.fromString(pk),
+      org.apache.spark.sql.types.StringType, 42L)
+    ((h % partitionCount) + partitionCount) % partitionCount
+  }
+
+  /** The part-file index a bucket lands at: the write path's
+    * `repartition(n, bucket)` is Spark's hash partitioning,
+    * `pmod(murmur3(bucket, 42), n)`, and each task writes `part-<index>`.
+    * The co-located scan's pruning is sound only while this holds
+    * (`KvLayoutSpec` checks it against the files).
+    */
+  def partIndexOfBucket(bucket: Long, partitionCount: Int): Int = {
+    val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction.hash(
+      bucket, org.apache.spark.sql.types.LongType, 42L).toInt
+    ((h % partitionCount) + partitionCount) % partitionCount
+  }
 
   /** Per-table serialization of manifest GC within this JVM — work
     * deduplication, not a correctness lock (same rationale as
@@ -225,49 +249,54 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
   /** Apply a batch of modifications atomically. `ops` columns:
     * pk string, sk string, value binary, op string (PUT|REMOVE),
     * expectedVersion long (-1 = unconditional, 0 = must-not-exist i.e.
-    * Insert, >0 = conditional Put/Remove on that exact version).
-    * Returns the commit version. Condition failures raise
-    * ConditionalCheckFailed before anything becomes visible
-    * (BadKeyVersionException / table-segment conditional-update analog,
+    * Insert, >0 = conditional Put/Remove on that exact version). A null
+    * sk is stored as "" (the API's default sk). Returns the commit
+    * version. Condition failures raise ConditionalCheckFailed before
+    * anything becomes visible (BadKeyVersionException / table-segment
+    * conditional-update analog,
     * segmentstore/contracts/.../tables/TableStore.java:114-242).
     */
   def update(ops: DataFrame): Long = {
     var attempts = 0
+    val keyed = ops.withColumn("sk", coalesce($"sk", lit("")))
+      .withColumn("bucket", pmod(xxhash64($"pk"), lit(partitionCount)))
     while (true) {
       val m = latest()
       val commitVersion = m.version + 1
-      val keyed = ops.withColumn("bucket", pmod(xxhash64($"pk"), lit(partitionCount)))
 
-      // conditional checks against the current resolved state of the
-      // TOUCHED keys only: the touched (bucket, pk) set becomes literal
-      // predicates on the raw file scan (conditional batches are small —
-      // reference conditional updates are one wire-command batch), so
-      // parquet bucket/pk stats prune untouched buckets instead of
-      // resolving the whole table; oversized batches fall back to a
-      // broadcast semi-join, still applied below the window.
+      // conditional checks against the state of manifest m (the one
+      // this commit CASes on), for the TOUCHED keys only: small batches
+      // read their pk literals (one part index each) and compare on the
+      // driver; oversized ones semi-join a broadcast of their keys.
       val conds = keyed.filter($"expectedVersion" >= 0)
-      val condKeyRows = conds.select($"bucket", $"pk")
+      val condRows = conds.select($"pk", $"sk", $"expectedVersion")
         .limit(KeyValueTable.ConditionPruneLimit + 1).collect()
-      if (condKeyRows.nonEmpty) {
-        val cur =
-          if (condKeyRows.length <= KeyValueTable.ConditionPruneLimit) {
-            val buckets = condKeyRows.map(_.getLong(0)).distinct.toSeq
-            val pks = condKeyRows.map(_.getString(1)).distinct.toSeq
-            resolved(m, raw => raw.filter($"bucket".isin(buckets: _*) && $"pk".isin(pks: _*)))
-          } else
-            resolved(m, raw => raw.join(
-              broadcast(conds.select($"bucket", $"pk", $"sk").distinct()),
-              Seq("bucket", "pk", "sk"), "left_semi"))
-        val bad = conds.join(cur.select($"pk", $"sk", $"version"), Seq("pk", "sk"), "left")
-          .filter(
-            ($"expectedVersion" === 0 && $"version".isNotNull) ||
-            ($"expectedVersion" > 0 && ($"version".isNull || $"version" =!= $"expectedVersion")))
-          .limit(1).collect()
-        if (bad.nonEmpty) {
-          val r = bad.head
+      if (condRows.nonEmpty) {
+        def violates(expected: Long, actual: Option[Long]) =
+          if (expected == 0L) actual.isDefined else !actual.contains(expected)
+        val bad: Option[(String, Long, Option[Long])] =
+          if (condRows.length <= KeyValueTable.ConditionPruneLimit) {
+            val pks = condRows.map(_.getString(0)).distinct.toSeq
+            val cur = read(m).filter($"pk".isin(pks: _*))
+              .select($"pk", $"sk", $"version").collect()
+              .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+            condRows.iterator.map(r =>
+              (r.getString(0), r.getLong(2), cur.get((r.getString(0), r.getString(1)))))
+              .find { case (_, e, v) => violates(e, v) }
+          } else {
+            val cur = read(m).select($"pk", $"sk", $"version").join(
+              broadcast(conds.select($"pk", $"sk").distinct()), Seq("pk", "sk"), "left_semi")
+            conds.join(cur, Seq("pk", "sk"), "left")
+              .filter(
+                ($"expectedVersion" === 0 && $"version".isNotNull) ||
+                ($"expectedVersion" > 0 && ($"version".isNull || $"version" =!= $"expectedVersion")))
+              .select($"pk", $"expectedVersion", $"version")
+              .limit(1).collect().headOption
+              .map(r => (r.getString(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long])))
+          }
+        bad.foreach { case (pk, e, v) =>
           throw new ConditionalCheckFailedException(
-            s"kv $name: condition failed for pk=${r.getAs[String]("pk")} " +
-            s"expected=${r.getAs[Long]("expectedVersion")} actual=${Option(r.get(r.fieldIndex("version"))).getOrElse("absent")}")
+            s"kv $name: condition failed for pk=$pk expected=$e actual=${v.getOrElse("absent")}")
         }
       }
 
@@ -275,8 +304,9 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
       keyed
         .select($"bucket", $"pk", $"sk", $"value", $"op",
                 lit(commitVersion).as("version"))
-        // explicit count: one task per bucket (AQE would coalesce the
-        // small shuffle to one task and serialize the sort+encode)
+        // explicit count: one task per part index (AQE would coalesce the
+        // small shuffle to one task and serialize the sort+encode); the
+        // hash partitioning IS the layout (KeyValueTable.partIndexOfBucket)
         .repartition(partitionCount, $"bucket")
         .sortWithinPartitions($"bucket", $"pk", $"sk")
         .write.parquet(deltaDir.toString)
@@ -304,10 +334,16 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
   def put(entries: DataFrame): Long =
     update(entries.withColumn("op", lit("PUT")).withColumn("expectedVersion", lit(-1L)))
 
-  /** Conditional Put against an exact entry version. */
-  def putIfVersion(entries: DataFrame, expectedVersion: Long): Long =
+  /** Conditional Put against an exact entry version (>= 1: commit
+    * versions start at 1). The other modes have their own calls.
+    */
+  def putIfVersion(entries: DataFrame, expectedVersion: Long): Long = {
+    require(expectedVersion >= 1L,
+      s"putIfVersion needs an entry version >= 1, got $expectedVersion: " +
+        "use put for an unconditional write or insert to write only if absent")
     update(entries.withColumn("op", lit("PUT"))
       .withColumn("expectedVersion", lit(expectedVersion)))
+  }
 
   /** Remove keys; `df` needs pk + sk. (client/.../tables/Remove.java). */
   def remove(keys: DataFrame): Long =
@@ -316,55 +352,35 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
 
   // ------------------------------------------------------------------- read
 
-  /** Latest live entries (pk, sk, value, version). */
-  def entries(): DataFrame = resolved(latest())
-
-  /** Latest-version resolution. `prune` is applied to the RAW file scan,
-    * BELOW the versioning window — sound for any filter that keeps or
-    * drops whole (bucket, pk, sk) groups (the window's partitioning), and
-    * it is what lets literal key predicates reach the parquet stats.
+  /** This table through the co-located scan, pinned to manifest `m`:
+    * resolved latest-per-key state, or the raw delta feed after
+    * `fromVersion`. Reading through THIS instance keeps its tip hint warm.
     */
-  private def resolved(m: KvManifest, prune: DataFrame => DataFrame = identity): DataFrame = {
-    if (m.files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "bucket BIGINT, pk STRING, sk STRING, value BINARY, version BIGINT"))
-    val raw = prune(spark.read.parquet(m.files.map(_.path): _*))
-    val w = Window.partitionBy($"bucket", $"pk", $"sk").orderBy($"version".desc)
-    raw.withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1 && $"op" === "PUT")
-      .select($"bucket", $"pk", $"sk", $"value", $"version")
-  }
+  private def read(m: KvManifest, fromVersion: Option[Long] = None): DataFrame =
+    RelationShim.dataFrame(spark, new GraftKvTable(this, name, None, Some(m)),
+      fromVersion.fold(Map.empty[String, String])(v => Map("fromVersion" -> v.toString)))
 
-  /** Scala-side replica of the write path's `pmod(xxhash64(pk), n)`
-    * bucketing — lets point reads turn a key into its bucket WITHOUT a
-    * Spark job, so the bucket becomes a literal pushdown predicate.
-    */
-  private def bucketOf(pk: String): Long = {
-    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-      org.apache.spark.unsafe.types.UTF8String.fromString(pk),
-      org.apache.spark.sql.types.StringType, 42L)
-    ((h % partitionCount) + partitionCount) % partitionCount
-  }
+  private def resolvedAt(m: KvManifest): DataFrame =
+    read(m).select($"bucket", $"pk", $"sk", $"value", $"version")
+
+  /** Latest live entries (bucket, pk, sk, value, version). */
+  def entries(): DataFrame = resolvedAt(latest())
 
   /** Batched multiget (KeyValueTable.java:181 getAll): resolve ONLY the
-    * requested keys — literal (bucket, pk) predicates on the raw scan
-    * prune every untouched bucket's files via parquet stats before the
-    * versioning window runs. Returns (pk, sk, value, version) for keys
-    * that exist.
+    * requested keys — their pk literals plan only the part indices that
+    * hold them and reach parquet row-group stats. Returns (pk, sk, value,
+    * version) for keys that exist.
     */
   def getAll(keys: Seq[(String, String)]): DataFrame = {
     require(keys.nonEmpty, "getAll needs at least one key")
-    val buckets = keys.map(k => bucketOf(k._1)).distinct
     val pks = keys.map(_._1).distinct
     val exact = keys.map { case (p, s) => $"pk" === p && $"sk" === s }.reduce(_ || _)
-    resolved(latest(), raw =>
-      raw.filter($"bucket".isin(buckets: _*) && $"pk".isin(pks: _*)).filter(exact))
+    entries().filter($"pk".isin(pks: _*) && exact)
       .select($"pk", $"sk", $"value", $"version")
   }
 
-  /** Point lookup (KeyValueTable.java:181 get): one bucket's files via
-    * the same pruned path as [[getAll]].
+  /** Point lookup (KeyValueTable.java:181 get): one part index's files,
+    * one Spark job, via the same path as [[getAll]].
     */
   def get(pk: String, sk: String = ""): Option[(Array[Byte], Long)] = {
     val rows = getAll(Seq((pk, sk))).select($"value", $"version").collect()
@@ -386,9 +402,10 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     * the first `pageSize` entries with (pk, sk) strictly after
     * `afterKey`; the caller passes the last row back as the continuation
     * token. Each page is an independent bounded query (limit → TakeOrdered,
-    * no global sort, no offset skip-scan), so paging cost does not grow
-    * with position — the Spark shape of the reference's
-    * continuation-token iterator.
+    * no global sort, no offset skip-scan), and its key predicates reach
+    * parquet stats below resolution, so paging cost does not grow with
+    * position — the Spark shape of the reference's continuation-token
+    * iterator.
     */
   def scanPage(fromPk: String, toPk: String, pageSize: Int,
                afterKey: Option[(String, String)] = None): DataFrame = {
@@ -418,16 +435,9 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
   /** Changes since a commit version — the ReadTableEntriesDelta analog
     * (WireCommands.java:2718): every PUT/REMOVE with version > from.
     */
-  def deltaSince(fromVersion: Long): DataFrame = {
-    val m = latest()
-    val files = m.files.filter(_.commitVersion > fromVersion).map(_.path)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "bucket BIGINT, pk STRING, sk STRING, value BINARY, op STRING, version BIGINT"))
-    else spark.read.parquet(files: _*).filter($"version" > fromVersion)
+  def deltaSince(fromVersion: Long): DataFrame =
+    read(latest(), Some(fromVersion))
       .select($"bucket", $"pk", $"sk", $"value", $"op", $"version")
-  }
 
   def currentVersion: Long = latest().version
 
@@ -507,7 +517,7 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     * snapshot older than the last sweep may reference deleted files
     * (the standard retention-bounded time-travel contract).
     */
-  def entriesAt(version: Long): DataFrame = resolved(manifestAt(Some(version)))
+  def entriesAt(version: Long): DataFrame = resolvedAt(manifestAt(Some(version)))
 
   /** Latest commit version stamped at or before `epochMillis` — the
     * `TIMESTAMP AS OF` resolution surface, mirroring
@@ -731,9 +741,8 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     val m = latest()
     if (m.files.isEmpty) return
     val baseDir = new Path(tableDir, s"base-${m.version}-${UUID.randomUUID()}")
-    resolved(m)
-      .withColumn("op", lit("PUT"))
-      .select($"bucket", $"pk", $"sk", $"value", $"op", $"version")
+    resolvedAt(m)
+      .select($"bucket", $"pk", $"sk", $"value", lit("PUT").as("op"), $"version")
       .repartition(partitionCount, $"bucket")
       .sortWithinPartitions($"bucket", $"pk", $"sk")
       .write.parquet(baseDir.toString)

@@ -3,6 +3,7 @@ package graft.sources
 import graft.catalog.StreamCatalog
 import graft.core.{NoSuchStreamException, StreamConfig}
 import graft.storage.GraftStreams
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.catalog.{CatalogPlugin, Column, Identifier, NamespaceChange, SupportsNamespaces, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
@@ -86,7 +87,10 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with SupportsNamespac
     */
   private def loadKvTable(scope: String, name: String, asOf: Option[Long]): Table = {
     val cfg = cat.getKeyValueTableConfig(scope, name)
-    new GraftKvTable(rootDir, scope, name, cfg.partitionCount, asOf)
+    val spark = org.apache.spark.sql.SparkSession.active
+    val kvt = new graft.kv.KeyValueTable(spark, new Path(new Path(rootDir, scope), "_kvt").toString,
+      name, partitionCount = cfg.partitionCount, hadoopConf = spark.sessionState.newHadoopConf())
+    new GraftKvTable(kvt, s"$scope/$name", asOf)
   }
 
   override def loadTable(ident: Identifier): Table = {

@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.graftshim.ParquetShim
+import org.apache.spark.sql.sources.{And, EqualNullSafe, EqualTo, Filter, GreaterThan, In, IsNull, LessThanOrEqual, Or}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -41,6 +42,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * bytes are read only when the query asks for them; a pushed
   * `version > from` filter prunes delta-feed row groups, and whole
   * directories drop at plan time via the manifest's `commitVersion`.
+  * `pk` literals map to their part indices through the same hashing
+  * ([[KeyValueTable.partIndexOfBucket]]), so a point read plans one partition.
+  *
+  * This is the only KV resolver: the typed API ([[KeyValueTable]]
+  * reads, conditional checks, compaction) reads through the same scan,
+  * pinned to the manifest it already resolved.
   */
 object GraftKvTable {
   /** Raw file layout = table schema; resolved reads report op='PUT'. */
@@ -63,23 +70,45 @@ object GraftKvTable {
     * `resolvedBudgetBytes` option.
     */
   val DefaultResolvedBudgetBytes: Long = 2L << 30
+
+  /** Columns constant within a key group: filters over only these are
+    * sound below resolution.
+    */
+  val KeyColumns: Set[String] = Set("bucket", "pk", "sk")
+
+  /** The pk values a conjunction of filters admits, when it names them
+    * as literals (`pk = 'a'`, `pk IN (...)`, and their And/Or
+    * combinations); None when some admitted row's pk is unbounded.
+    */
+  def pkLiterals(conjuncts: Seq[Filter]): Option[Set[String]] = {
+    def of(f: Filter): Option[Set[String]] = f match {
+      case EqualTo("pk", v: String) => Some(Set(v))
+      case EqualNullSafe("pk", v: String) => Some(Set(v))
+      case In("pk", vs) if vs.forall(_.isInstanceOf[String]) =>
+        Some(vs.map(_.asInstanceOf[String]).toSet)
+      case And(a, b) => both(of(a), of(b))
+      case Or(a, b) => for (x <- of(a); y <- of(b)) yield x ++ y
+      case _ => None
+    }
+    def both(a: Option[Set[String]], b: Option[Set[String]]) = (a, b) match {
+      case (Some(x), Some(y)) => Some(x intersect y)
+      case _ => a.orElse(b)
+    }
+    conjuncts.map(of).foldLeft(Option.empty[Set[String]])(both)
+  }
 }
 
-class GraftKvTable(rootDir: String, scope: String, tableName: String,
-                   partitionCount: Int, asOfVersion: Option[Long]) extends Table
+class GraftKvTable(kvt: KeyValueTable, displayName: String, asOfVersion: Option[Long],
+                   pinned: Option[KvManifest] = None) extends Table
     with SupportsRead {
 
   override def name(): String =
-    s"graft-kv:$scope/$tableName" + asOfVersion.fold("")(v => s"@v$v")
+    s"graft-kv:$displayName" + asOfVersion.fold("")(v => s"@v$v")
   override def schema(): StructType = GraftKvTable.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val spark = SparkSession.active
-    val kvt = new KeyValueTable(spark, new Path(new Path(rootDir, scope), "_kvt").toString,
-      tableName, partitionCount = partitionCount,
-      hadoopConf = spark.sessionState.newHadoopConf())
     val asOf = Option(options.get("asOfVersion")).map(_.toLong).orElse(asOfVersion)
     val fromV = Option(options.get("fromVersion")).map(_.toLong)
     val toV = Option(options.get("toVersion")).map(_.toLong)
@@ -89,25 +118,40 @@ class GraftKvTable(rootDir: String, scope: String, tableName: String,
       "fromVersion/toVersion (delta feed) and VERSION AS OF are mutually exclusive")
     val budget = Option(options.get("resolvedBudgetBytes")).map(_.toLong)
       .getOrElse(GraftKvTable.DefaultResolvedBudgetBytes)
-    new GraftKvScanBuilder(spark, kvt, asOf, fromV, toV, budget)
+    new GraftKvScanBuilder(SparkSession.active, kvt, asOf, fromV, toV, budget, pinned)
   }
 }
 
+/** Filter pushdown over the KEY columns (bucket, pk, sk). Each is
+  * constant within a key group, so a filter over them keeps or drops
+  * whole groups and may reach parquet row-group stats BELOW resolution
+  * without changing which version wins. `pk` equality/IN literals also
+  * prune whole part indices at plan time. Every filter is returned to
+  * Spark for re-evaluation: pruning changes what is read, never an
+  * answer.
+  */
 class GraftKvScanBuilder(spark: SparkSession, kvt: KeyValueTable,
                          asOf: Option[Long], fromV: Option[Long], toV: Option[Long],
-                         budgetBytes: Long)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
+                         budgetBytes: Long, pinned: Option[KvManifest])
+    extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
   private var required: StructType = GraftKvTable.schema
+  private var pushed: Array[Filter] = Array.empty
   override def pruneColumns(s: StructType): Unit = required = s
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    pushed = filters.filter(_.references.forall(GraftKvTable.KeyColumns))
+    filters
+  }
+  override def pushedFilters(): Array[Filter] = pushed
   override def build(): Scan =
-    new GraftKvScan(spark, kvt, asOf, fromV, toV, required, budgetBytes)
+    new GraftKvScan(spark, kvt, asOf, fromV, toV, required, budgetBytes, pushed, pinned)
 }
 
 class GraftKvScan(spark: SparkSession, kvt: KeyValueTable,
                   asOf: Option[Long], fromV: Option[Long], toV: Option[Long],
                   required: StructType,
-                  budgetBytes: Long = GraftKvTable.DefaultResolvedBudgetBytes)
-    extends Scan with Batch {
+                  budgetBytes: Long, private[graft] val pushedFilters: Array[Filter],
+                  pinned: Option[KvManifest])
+    extends Scan with Batch with SupportsReportStatistics {
   private val delta = fromV.isDefined
   // parquet read set: requested columns plus what the mode itself keys
   // on — resolution needs (pk, sk, op, version); the delta filter needs
@@ -124,41 +168,70 @@ class GraftKvScan(spark: SparkSession, kvt: KeyValueTable,
     val mode =
       if (delta) s"delta (${fromV.get}, ${toV.fold("latest")(_.toString)}]"
       else asOf.fold("resolved")(v => s"resolved@v$v")
-    s"graft-kv ${kvt.name} $mode, read=${parquetReadSchema.fieldNames.mkString(",")}"
+    s"graft-kv ${kvt.name} $mode, read=${parquetReadSchema.fieldNames.mkString(",")}" +
+      s", pushed=[${pushedFilters.mkString(", ")}]"
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** Part indices a pk literal set touches (None = no pk literal bound). */
+  private lazy val touchedParts: Option[Set[Int]] =
+    GraftKvTable.pkLiterals(pushedFilters).map(_.map(pk =>
+      KeyValueTable.partIndexOfBucket(KeyValueTable.bucketOf(pk, kvt.partitionCount),
+        kvt.partitionCount)))
+
+  /** (part index, files) for every planned index, listed once per scan
+    * and shared by statistics and planning.
+    */
+  private lazy val planned: Seq[(Int, Vector[PartitionedFile])] = {
     // the delta feed reads the file set AT toVersion (bounded history);
-    // resolved/as-of reads the manifest they resolve against
-    val m: KvManifest = kvt.manifestAt(if (delta) toV else asOf)
+    // resolved/as-of reads the manifest they resolve against; typed API
+    // reads arrive with the manifest they already resolved
+    val m: KvManifest = pinned.getOrElse(kvt.manifestAt(if (delta) toV else asOf))
     // dir-level pruning: delta dirs wholly outside (from, to] never list
     val dirs = m.files.filter(f => !delta || f.commitVersion > fromV.get)
+    val keep = touchedParts.getOrElse((0 until kvt.partitionCount).toSet)
     val conf = spark.sessionState.newHadoopConf()
-    val byIdx = scala.collection.mutable.Map.empty[Int, Vector[org.apache.spark.sql.execution.datasources.PartitionedFile]]
+    val byIdx = scala.collection.mutable.Map.empty[Int, Vector[PartitionedFile]]
     dirs.foreach { d =>
       val p = new Path(d.path)
       val fs = p.getFileSystem(conf)
       fs.listStatus(p).foreach { st =>
         val idx = GraftKvTable.partIndexOf(st.getPath.getName)
-        if (idx >= 0)
+        if (idx >= 0 && keep(idx))
           byIdx(idx) = byIdx.getOrElse(idx, Vector.empty) :+
             ParquetShim.partitionedFile(InternalRow.empty, st)
       }
     }
-    byIdx.toSeq.sortBy(_._1).map { case (idx, pfs) =>
+    byIdx.toSeq.sortBy(_._1)
+  }
+
+  // planned file bytes, as a parquet relation reports them: without
+  // statistics Spark sizes a DSv2 scan at spark.sql.defaultSizeInBytes
+  // and never plans a join with KV entries as a broadcast
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): java.util.OptionalLong =
+      java.util.OptionalLong.of(planned.iterator.flatMap(_._2).map(_.length).sum)
+    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
+  }
+
+  override def planInputPartitions(): Array[InputPartition] =
+    planned.map { case (idx, pfs) =>
       GraftKvInputPartition(idx, FilePartition(idx, pfs.toArray))
     }.toArray
-  }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // pushed version bounds prune delta-feed row groups via parquet stats
-    val filters: Array[org.apache.spark.sql.sources.Filter] =
+    val versionBounds: Array[Filter] =
       if (!delta) Array.empty
-      else Array(org.apache.spark.sql.sources.GreaterThan("version", fromV.get)) ++
-        toV.map(t => org.apache.spark.sql.sources.LessThanOrEqual("version", t))
+      else Array[Filter](GreaterThan("version", fromV.get)) ++
+        toV.map(t => LessThanOrEqual("version", t))
+    // key filters prune row groups in every mode. A stored null sk reads
+    // as "" (see the reader), so a filter over sk also keeps null-sk rows
+    // and the reader's fold sees the whole ("" sk) key group.
+    val keyFilters = pushedFilters.map(f =>
+      if (f.references.contains("sk")) Or(f, IsNull("sk")) else f)
     new GraftKvReaderFactory(
       ParquetShim.parquetReaderFactory(spark, GraftKvTable.schema,
-        new StructType(), parquetReadSchema, filters),
+        new StructType(), parquetReadSchema, versionBounds ++ keyFilters),
       parquetReadSchema.fieldNames, required.fieldNames,
       delta, fromV.getOrElse(-1L), toV.getOrElse(Long.MaxValue),
       budgetBytes, kvt.partitionCount)

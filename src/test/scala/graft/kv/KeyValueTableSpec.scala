@@ -19,6 +19,8 @@ class KeyValueTableSpec extends AnyFunSuite {
   private def fresh(parts: Int = 8): KeyValueTable =
     new KeyValueTable(spark, Files.createTempDirectory("graft-kv").toString, "t", parts)
 
+  private def kvScan(df: DataFrame) = graft.sources.GraftKvTableSpec.kvScan(df)
+
   private def kv(pairs: (String, String)*): DataFrame =
     pairs.toSeq.toDF("pk", "v")
       .select($"pk", lit("").as("sk"), encode($"v", "UTF-8").as("value"))
@@ -115,15 +117,13 @@ class KeyValueTableSpec extends AnyFunSuite {
     assert(pages == 7, s"157 entries / 25 per page = 7 pages, got $pages")
 
     // scale gate: the page's pk range + continuation predicates must push
-    // BELOW the versioning window to the parquet scan (pk is part of the
-    // window's partitioning, so Catalyst may — and must — push them);
-    // without this every page would re-resolve the whole table
-    val pagePlan = t.scanPage("key0000", "key0200", 25, after)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    val pagePushed = pagePlan.linesIterator.filter(_.contains("PushedFilters")).mkString
+    // BELOW resolution into the KV scan (they keep or drop whole key
+    // groups, so the scan hands them to parquet stats); without this
+    // every page would re-resolve the whole table
+    val pagePushed = kvScan(t.scanPage("key0000", "key0200", 25, after))
+      .pushedFilters.mkString(" ")
     assert(pagePushed.contains("GreaterThan") && pagePushed.contains("pk"),
-      s"pk keyset predicates not pushed below the window to parquet: $pagePushed")
+      s"pk keyset predicates not pushed below resolution to the scan: $pagePushed")
 
     // prefix paging returns the same keys as the unpaged prefix scan
     val prefixAll = t.scanPrefix("key00").select($"pk").as[String].collect().toList
@@ -375,12 +375,27 @@ class KeyValueTableSpec extends AnyFunSuite {
       new String(r.getAs[Array[Byte]]("value"))).toMap
     assert(rows == Map("k7" -> "v7", "k123" -> "v123"))
 
-    // the bucket/pk literals must reach the parquet scan as pushed filters
-    val plan = got.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    val pushed = plan.linesIterator.filter(_.contains("PushedFilters")).mkString
-    assert(pushed.contains("bucket") && pushed.contains("pk"),
-      s"bucket/pk predicates not pushed to parquet: $pushed")
+    // the pk literals must reach the scan as pushed filters, and the scan
+    // must plan exactly the part indices those keys hash to (every bucket
+    // holds keys here, so every touched index has files)
+    def partOf(pk: String) =
+      KeyValueTable.partIndexOfBucket(KeyValueTable.bucketOf(pk, 8), 8)
+    def planned(s: graft.sources.GraftKvScan) = s.planInputPartitions()
+      .map(_.asInstanceOf[graft.sources.GraftKvInputPartition].partIdx).toSet
+    val scan = kvScan(got)
+    val pushed = scan.pushedFilters.mkString(" ")
+    assert(pushed.contains("pk"), s"pk predicates not pushed to the scan: $pushed")
+    assert(planned(scan) == Set("k7", "k123", "nope").map(partOf),
+      s"planned ${planned(scan)}")
+
+    // a single key plans one partition: one job, one task, no shuffle
+    val one = t.getAll(Seq(("k7", "")))
+    assert(one.collect().length == 1)
+    val oneScan = kvScan(one)
+    assert(planned(oneScan) == Set(partOf("k7")),
+      s"single-key getAll planned ${planned(oneScan)}")
+    val plan = one.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && !plan.contains("Window"), plan)
   }
 
   test("1-key conditional put validates against a pruned scan, not the whole table") {
@@ -414,6 +429,36 @@ class KeyValueTableSpec extends AnyFunSuite {
 
     // wrong version still fails via the pruned path
     assertThrows[ConditionalCheckFailedException](t.putIfVersion(kv("k3" -> "x"), v))
+  }
+
+  test("conditional batches past ConditionPruneLimit validate through the semi-join path") {
+    val t = fresh(parts = 4)
+    val n = KeyValueTable.ConditionPruneLimit + 76
+    val keys = (0 until n).map(i => f"k$i%05d" -> s"v$i")
+    val v1 = t.insert(kv(keys: _*))
+    // every key now exists: a large insert touching one of them fails whole
+    val again = keys.drop(1).map { case (k, _) => (k + "x") -> "n" } :+ ("k00000" -> "dup")
+    val e = intercept[ConditionalCheckFailedException](t.insert(kv(again: _*)))
+    assert(e.getMessage.contains("pk=k00000"), e.getMessage)
+    assert(t.currentVersion == v1)
+    // a large putIfVersion at the right version wins; at a wrong one fails
+    val v2 = t.putIfVersion(kv(keys.map { case (k, _) => k -> "w" }: _*), v1)
+    assertThrows[ConditionalCheckFailedException](
+      t.putIfVersion(kv(keys.map { case (k, _) => k -> "z" }: _*), v1))
+    assert(t.get("k00007").map(p => (new String(p._1), p._2)) == Some(("w", v2)))
+  }
+
+  test("putIfVersion refuses expected versions below 1 instead of switching mode") {
+    val t = fresh()
+    val v1 = t.put(kv("a" -> "1"))
+    // -1 would be an unconditional put and 0 insert-if-absent in update's
+    // per-row modes; the typed call names put/insert instead
+    for (bad <- Seq(-1L, 0L)) {
+      val e = intercept[IllegalArgumentException](t.putIfVersion(kv("a" -> "x"), bad))
+      assert(e.getMessage.contains("put") && e.getMessage.contains("insert"), e.getMessage)
+    }
+    assert(t.currentVersion == v1, "a refused putIfVersion committed")
+    assert(t.get("a").map(p => new String(p._1)) == Some("1"))
   }
 
   test("compact() reclaims past-grace tombstones from earlier compactions") {

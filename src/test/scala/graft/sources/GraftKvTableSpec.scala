@@ -13,6 +13,24 @@ import java.nio.file.Files
   * reaching parquet, DDL visibility, and the rejection surface (writes /
   * TRUNCATE / streaming / TIMESTAMP AS OF).
   */
+object GraftKvTableSpec {
+  /** The KV scan under a DataFrame's executed plan. */
+  def kvScan(df: org.apache.spark.sql.DataFrame): GraftKvScan = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def find(p: org.apache.spark.sql.execution.SparkPlan): Option[BatchScanExec] =
+      p match {
+        case b: BatchScanExec => Some(b)
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          find(a.executedPlan)
+        case other => other.children.view.flatMap(find(_)).headOption
+      }
+    find(df.queryExecution.executedPlan)
+      .getOrElse(throw new AssertionError("no BatchScanExec in plan:\n" +
+        df.queryExecution.executedPlan.toString))
+      .scan.asInstanceOf[GraftKvScan]
+  }
+}
+
 class GraftKvTableSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -105,26 +123,11 @@ class GraftKvTableSpec extends AnyFunSuite {
     assert(scan.count() == 12L)
   }
 
-  private def kvScan(df: org.apache.spark.sql.DataFrame): GraftKvScan = {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    def find(p: org.apache.spark.sql.execution.SparkPlan): Option[BatchScanExec] =
-      p match {
-        case b: BatchScanExec => Some(b)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          find(a.executedPlan)
-        case other => other.children.view.flatMap(find(_)).headOption
-      }
-    find(df.queryExecution.executedPlan)
-      .getOrElse(fail("no BatchScanExec in plan:\n" +
-        df.queryExecution.executedPlan.toString))
-      .scan.asInstanceOf[GraftKvScan]
-  }
-
   test("column pruning reaches parquet: value bytes unread when unrequested") {
     val (cat, _, _) = mk()
     val df = spark.sql(s"SELECT count(*) AS n FROM $cat.s.t")
     assert(df.as[Long].head() == 48L)
-    val read = kvScan(df).parquetReadSchema.fieldNames.toSeq
+    val read = GraftKvTableSpec.kvScan(df).parquetReadSchema.fieldNames.toSeq
     assert(read == Seq("pk", "sk", "op", "version"),
       s"value column should be pruned from the parquet read; read=$read")
   }
@@ -175,6 +178,27 @@ class GraftKvTableSpec extends AnyFunSuite {
     assert(msg.contains("resolvedBudgetBytes"), s"override knob not named: $msg")
     // the default budget is far above the test table: same read succeeds
     assert(spark.sql(s"SELECT count(*) AS n FROM $cat.s.t").as[Long].head() == 48L)
+  }
+
+  test("a null sk reads as \"\" on every surface: get, getAll, entries, SQL") {
+    val (cat, _, t) = mk()
+    t.put(Seq(("nul", "n1")).toDF("pk", "v")
+      .select($"pk", lit(null).cast("string").as("sk"), encode($"v", "UTF-8").as("value")))
+    val v = t.currentVersion
+    assert(t.get("nul").map(p => (new String(p._1), p._2)) == Some(("n1", v)))
+    val multi = t.getAll(Seq(("nul", ""))).select($"sk", $"version").collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    assert(multi.toSeq == Seq(("", v)))
+    def skOf(df: org.apache.spark.sql.DataFrame) =
+      df.filter($"pk" === "nul").select($"sk").as[String].collect().toSeq
+    assert(skOf(t.entries()) == Seq(""))
+    assert(skOf(spark.sql(s"SELECT pk, sk FROM $cat.s.t")) == Seq(""))
+    // the delta feed carries the stored (normalized) sk too
+    assert(skOf(t.deltaSince(v - 1)) == Seq(""))
+    // and an explicit "" addresses the same key: remove hides it everywhere
+    t.remove(Seq(("nul", "")).toDF("pk", "sk"))
+    assert(t.get("nul").isEmpty && skOf(t.entries()).isEmpty &&
+      skOf(spark.sql(s"SELECT pk, sk FROM $cat.s.t")).isEmpty)
   }
 
   test("resolution survives compaction and stays SQL-visible") {
