@@ -177,11 +177,10 @@ final case class TxnRecord(
     committedAt: Option[Long] = None,
     /** Legacy: txn-local rows per segment (superseded by `calls`). */
     tails: Map[Long, Long] = Map.empty,
-    /** Number of writeToTxn calls so far. Each call stages rows with an
-      * explicit `callSeq` column plus monotonically_increasing_id
-      * txn-local offsets; the commit merge re-ranks by
-      * (segmentId, callSeq, offset), so offsets only need to be monotone
-      * within a call — no bit-packing.
+    /** Number of writeToTxn calls so far. Call `callSeq` stages rows
+      * with txn-local offsets (callSeq << 40) + rank and records its files
+      * in `txn-<id>/call-<callSeq>.json`; the commit merge reads exactly
+      * those files and re-ranks by (segmentId, txn-local offset).
       */
     calls: Long = 0L) {
   def expired(now: Long): Boolean =
@@ -304,7 +303,7 @@ final case class StreamMetadata(
     StreamCut(segments.map(s => s.segmentId -> headCut.getOrElse(s.segmentId, s.startOffset)).toMap)
 }
 
-class GraftException(msg: String) extends RuntimeException(msg)
+class GraftException(msg: String, cause: Throwable = null) extends RuntimeException(msg, cause)
 class NoSuchStreamException(msg: String) extends GraftException(msg)
 /** A manifest BELOW the requested version is missing from the log —
   * replay cannot reach a checkpoint. Manifests are never individually

@@ -1,23 +1,38 @@
 package graft.storage
 
-import graft.catalog.StreamCatalog
+import graft.catalog.{CasFiles, StreamCatalog}
 import graft.core._
 import graft.functions.GraftFunctions.hash_to_range
 import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ParquetWriteShim
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, TimestampType}
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.time.Instant
 import java.util.UUID
+import scala.collection.mutable
+import scala.util.Try
+import scala.util.control.NonFatal
 
 /** Data plane for graft streams (SURVEY §3.1/§3.2 re-expressed for Spark).
   *
   * Write path (EventStreamWriter analog, client/.../EventStreamWriterImpl.java:122):
   *   route rows to the segment owning hash(routingKey) → one shuffle
-  *   partitioned by segment → per-segment contiguous offsets assigned by a
-  *   ranking window → one parquet file per (batch, segment) → a single
-  *   manifest CAS makes everything visible atomically. No WAL: the object
-  *   store plus the atomic manifest is both durability tiers.
+  *   partitioned by segment → each task writes one parquet file per
+  *   segment, numbering offsets on from the tail as rows pass, and reports
+  *   the file entries in its result ([[writeSegmentFiles]]) → a single
+  *   manifest CAS makes everything visible atomically. No WAL, no output
+  *   commit protocol: the object store plus the atomic manifest is both
+  *   durability tiers.
   *
   * Read path (BatchClientFactory analog, client/.../BatchClientFactory.java:80):
   *   plan = manifest file entries overlapping [fromCut, toCut) — the exact
@@ -45,78 +60,22 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
     * already-committed batch is a no-op (the Spark translation of the
     * reference's writer-id event-number dedup, AppendProcessor.java:179-387).
     */
-  // Phase profiler for the per-commit driver path (SPARK_GRAFT_WRITE_PROF):
-  // prints where a writeEvents wall goes — manifest read, write job,
-  // footer stats, manifest CAS — so engine-write bench rows can be
-  // attributed without guessing (guide §1).
-  private val writeProf = sys.env.contains("SPARK_GRAFT_WRITE_PROF")
-  @inline private def prof[T](tag: String)(body: => T): T =
-    if (!writeProf) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"WPROF $tag ${(System.nanoTime() - t0) / 1e6}%.1fms")
-      r
-    }
-
   def writeEvents(scope: String, stream: String, df: DataFrame,
                   writerId: Option[String] = None, batchId: Option[Long] = None,
                   noteTimeFromBatch: Boolean = false): StreamCut = {
-    val meta = prof("getStream")(catalog.getStream(scope, stream))
+    val meta = catalog.getStream(scope, stream)
     if (meta.isSealed) throw new StreamSealedException(s"$scope/$stream is sealed")
     for (w <- writerId; b <- batchId)
       if (meta.writerBatches.get(w).exists(_ >= b)) return meta.tailCut
 
     val open = meta.openSegments.sortBy(_.keyLow)
-    require(open.nonEmpty, "stream has no open segments")
-
-    // Route: CASE over the epoch's key ranges (few segments → codegen'd
-    // chain; the hash itself is a native expression).
-    val h = hash_to_range(col("routingKey"))
-    val segCol = open.init.foldRight(lit(open.last.segmentId): Column) { (s, rest) =>
-      when(h < s.keyHigh, lit(s.segmentId)).otherwise(rest)
-    }
-
     val baseBySeg = open.map(s => s.segmentId -> s.tailOffset).toMap
-    val baseCol = open.foldRight(lit(0L): Column) { (s, rest) =>
-      when(col("segmentId") === s.segmentId, lit(baseBySeg(s.segmentId))).otherwise(rest)
-    }
-
     val batchDir = new Path(catalog.dataDir(scope, stream), s"batch-${UUID.randomUUID()}")
-    // MAX_EVENT_SIZE (Serializer.java:33): payloads above it do NOT fail —
-    // they are split in-plan into <= MaxEventSize chunk rows occupying
-    // CONSECUTIVE offsets of the same segment (the LargeEventWriter
-    // transient-segment + merge analog, client/.../stream/impl/
-    // LargeEventWriter.java:77,99,153); readEvents reassembles them
-    // transparently. Splitting happens BEFORE the shuffle, so no shuffled
-    // row ever exceeds the chunk size.
-    val win = Window.partitionBy($"segmentId").orderBy($"arrivalSeq", $"chunkSeq")
-    val routed = GraftStreams.chunkPayloads(df.withColumn("arrivalSeq", monotonically_increasing_id()))
-      .withColumn("segmentId", segCol)
-      // explicit partition count: one task per segment (the reference's
-      // per-segment append parallelism); AQE would otherwise coalesce the
-      // tiny shuffle into a single task and serialize the sort+encode
-      .repartition(open.size, $"segmentId")
-      .withColumn("offset", baseCol + row_number().over(win) - 1)
-      .withColumn("processingTime", current_timestamp())
-      .select($"segmentId", $"offset", $"routingKey", $"eventTime", $"processingTime",
-        $"payload", $"chunkSeq", $"chunkCount")
-      .withColumn("segId", $"segmentId")
-    // no extra sort: the ranking window already leaves each partition
-    // ordered by (segmentId, arrivalSeq, chunkSeq) == (segmentId, offset)
-
-    try prof("writeJob")(routed.write.partitionBy("segId").parquet(batchDir.toString))
-    catch {
-      case e: Throwable =>
-        batchDir.getFileSystem(spark.sessionState.newHadoopConf()).delete(batchDir, true)
-        throw new GraftException(s"write batch failed, staging dropped: ${e.getMessage}")
-    }
-
-    // Per-file commit stats from parquet footers — no second data scan.
-    val entries = prof("footerStats")(statsFromFooters(batchDir))
+    val entries = writeSegmentFiles("graft.writeEvents", appendPlan(df, open), batchDir,
+      offsetBase = baseBySeg, stamp = true)
     GraftStreams.kp("write.staged") // crash here = staged batch, no CAS
 
-    val updated = try prof("manifestCas")(catalog.update(scope, stream) { m =>
+    val updated = try catalog.update(scope, stream) { m =>
       if (m.isSealed) throw new StreamSealedException(s"$scope/$stream sealed during write")
       // Offsets were assigned against `meta`'s tails; if another writer
       // advanced them meanwhile, this commit would interleave offsets —
@@ -132,39 +91,105 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
       val sealedHit = entries.map(_.segmentId).distinct.filter(sid => m.segment(sid).isSealed)
       if (sealedHit.nonEmpty) throw new ConditionalCheckFailedException(
         s"$scope/$stream segments ${sealedHit.mkString(",")} sealed during write of $batchDir")
-      val newTails = entries.groupBy(_.segmentId).map { case (sid, fs) => sid -> fs.map(_.endOffset).max }
       val now = System.currentTimeMillis()
       val rowsPerSeg = entries.groupBy(_.segmentId).map { case (sid, fs) => sid -> fs.map(_.rowCount).sum }
-      m.copy(
-        files = m.files ++ entries,
-        segments = m.segments.map { s =>
-          val appended = rowsPerSeg.getOrElse(s.segmentId, 0L)
-          val attrs =
-            if (appended == 0) s.attributes
-            else s.attributes + (Attributes.EventCount ->
-              AttributeUpdate(Attributes.EventCount, "ACCUMULATE", appended)
-                .apply(s.attributes.get(Attributes.EventCount)))
-          s.copy(tailOffset = newTails.getOrElse(s.segmentId, s.tailOffset), attributes = attrs)
-        },
+      withAppended(m, entries).copy(
         segmentRates = m.segmentRates ++ rowsPerSeg.map { case (sid, n) =>
           sid -> m.segmentRates.getOrElse(sid, SegmentRates()).update(n, now) },
         writerBatches = (for (w <- writerId; b <- batchId) yield m.writerBatches + (w -> b))
           .getOrElse(m.writerBatches),
         // auto noteTime from the batch's max eventTime (already in the
-        // parquet footers — no extra pass), committed atomically with the
-        // data; marks only move forward (EventStreamWriterImpl.java:117)
+        // task-reported file entries — no extra pass), committed atomically
+        // with the data; marks only move forward (EventStreamWriterImpl.java:117)
         writerMarks = (for {
           w <- writerId if noteTimeFromBatch && entries.nonEmpty
           t = entries.map(_.maxEventTime).max
           if !m.writerMarks.get(w).exists(_.time >= t)
         } yield m.writerMarks + (w -> WriterMark(w, t, now))).getOrElse(m.writerMarks))
-    }) catch {
+    } catch {
       case e: ConditionalCheckFailedException =>
         // never committed — drop the staged files so retries don't leak
-        batchDir.getFileSystem(spark.sessionState.newHadoopConf()).delete(batchDir, true)
+        dropDir(batchDir)
         throw e
     }
     updated.tailCut
+  }
+
+  /** Route each row to the open segment owning hash(routingKey): a CASE
+    * over the epoch's key ranges (few segments → codegen'd chain; the
+    * hash itself is a native expression).
+    */
+  private def route(open: Seq[SegmentRecord]): Column = {
+    require(open.nonEmpty, "stream has no open segments")
+    val h = hash_to_range(col("routingKey"))
+    open.init.foldRight(lit(open.last.segmentId): Column) { (s, rest) =>
+      when(h < s.keyHigh, lit(s.segmentId)).otherwise(rest)
+    }
+  }
+
+  /** The plan of writeEvents and writeToTxn (arrival sequence as a
+    * placeholder offset), the same code on every call against one epoch.
+    * MAX_EVENT_SIZE (Serializer.java:33): payloads above it do NOT fail —
+    * they are split in-plan into <= MaxEventSize chunk rows occupying
+    * CONSECUTIVE offsets of the same segment (the LargeEventWriter
+    * transient-segment + merge analog, client/.../stream/impl/
+    * LargeEventWriter.java:77,99,153); readEvents reassembles them. The
+    * split runs BEFORE the shuffle, so no shuffled row exceeds the chunk.
+    */
+  private def appendPlan(df: DataFrame, open: Seq[SegmentRecord]): DataFrame =
+    GraftStreams.chunkPayloads(df.withColumn("arrivalSeq", monotonically_increasing_id()))
+      .withColumn("segmentId", route(open))
+      // explicit partition count: one task per segment (the reference's
+      // per-segment append parallelism); AQE would otherwise coalesce the
+      // tiny shuffle into a single task and serialize the sort+encode
+      .repartition(open.size, $"segmentId")
+      .sortWithinPartitions($"segmentId", $"arrivalSeq", $"chunkSeq")
+      .select($"segmentId", $"arrivalSeq".as("offset"), $"routingKey".cast(StringType),
+        $"eventTime".cast(LongType), lit(null).cast(TimestampType).as("processingTime"),
+        $"payload".cast(BinaryType), $"chunkSeq", $"chunkCount")
+
+  /** The one stream writer (append, txn staging, txn merge, compaction,
+    * redaction): runs `plan` — storage-schema rows, all of a segment's in
+    * one task, in offset order — and each task writes one parquet file
+    * per segment under `dir/segId=N/`, returning the files' entries. No
+    * output commit protocol: only files a successful task reported can
+    * enter a commit. Per-call values are task data, never plan literals:
+    * with `offsetBase` offsets run on from each segment's base; with
+    * `stamp` processingTime is this call's time. A failed job drops `dir`.
+    */
+  private def writeSegmentFiles(name: String, plan: DataFrame, dir: Path,
+                                offsetBase: Map[Long, Long] = Map.empty,
+                                stamp: Boolean = false): Seq[FileEntry] = {
+    require(plan.schema.map(_.dataType) == GraftStreams.storageSchema.map(_.dataType),
+      s"$name: plan must produce the storage schema, got ${plan.schema.simpleString}")
+    val writers = ParquetWriteShim.parquetWriters(spark, GraftStreams.storageSchema)
+    val out = dir.toString
+    val nowMicros = if (stamp) Some(DateTimeUtils.instantToMicros(Instant.now())) else None
+    try ParquetWriteShim.withExecution(plan, name)(_.mapPartitions(rows =>
+      GraftStreams.writeTask(rows, out, writers, offsetBase, nowMicros)).collect().toSeq)
+    catch {
+      case NonFatal(e) =>
+        dropDir(dir)
+        throw new GraftException(s"$name failed, staging dropped: ${e.getMessage}", e)
+    }
+  }
+
+  private def fsOf(p: Path) = p.getFileSystem(spark.sessionState.newHadoopConf())
+  private def dropDir(p: Path): Unit = fsOf(p).delete(p, true)
+
+  /** `m` with `entries` appended: files listed, each written segment's
+    * tail at its highest written offset, its EventCount accumulated.
+    */
+  private def withAppended(m: StreamMetadata, entries: Seq[FileEntry]): StreamMetadata = {
+    val bySeg = entries.groupBy(_.segmentId)
+    m.copy(files = m.files ++ entries, segments = m.segments.map { s =>
+      bySeg.get(s.segmentId).fold(s) { fs =>
+        s.copy(tailOffset = fs.map(_.endOffset).max,
+          attributes = s.attributes + (Attributes.EventCount ->
+            AttributeUpdate(Attributes.EventCount, "ACCUMULATE", fs.map(_.rowCount).sum)
+              .apply(s.attributes.get(Attributes.EventCount))))
+      }
+    })
   }
 
   // ------------------------------------------------------- segment attributes
@@ -216,95 +241,6 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
 
   def deleteStreamCut(scope: String, stream: String, name: String): Unit =
     catalog.update(scope, stream)(m => m.copy(namedCuts = m.namedCuts - name))
-
-  private def stripScheme(p: String): String =
-    if (p.startsWith("file:")) new Path(p).toUri.getPath else p
-
-  /** Commit stats straight from parquet footers (rowCount + offset/
-    * eventTime min-max live in block metadata): no second data scan per
-    * write — at scale this is footer-metadata IO only, the same trick the
-    * reference plays with per-segment attributes instead of data reads.
-    */
-  private def statsFromFooters(dir: Path): Seq[FileEntry] = {
-    import org.apache.parquet.format.converter.ParquetMetadataConverter
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    // (path, byteSize) of every staged parquet file. Hadoop's local FS
-    // shells out per entry for permission metadata the commit never reads
-    // (~40 ms per staging dir, paid once per commit — 12× on the deep
-    // version-chain fixtures); local paths take a java.nio walk instead
-    // (~0.5 ms), remote schemes keep the Hadoop listing (r16, guide §1).
-    val files: List[(Path, Long)] = prof("fs.list") {
-      val fsys = dir.getFileSystem(conf)
-      // EXACT class match, not isInstanceOf: object-store simulations
-      // (LaggedObjectStoreFs) subclass RawLocalFileSystem to override
-      // listing visibility — the NIO fast-path must never bypass them
-      if (fsys.getClass == classOf[org.apache.hadoop.fs.LocalFileSystem] ||
-          fsys.getClass == classOf[org.apache.hadoop.fs.RawLocalFileSystem]) {
-        val root = java.nio.file.Paths.get(stripScheme(dir.toString))
-        val walk = java.nio.file.Files.walk(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala
-            .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-              java.nio.file.Files.isRegularFile(p))
-            .map(p => (new Path("file:" + p.toAbsolutePath), java.nio.file.Files.size(p)))
-            .toList
-        } finally walk.close()
-      } else {
-        val it = fsys.listFiles(dir, true)
-        val fs = scala.collection.mutable.ListBuffer.empty[(Path, Long)]
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-            fs += ((st.getPath, st.getLen))
-        }
-        fs.toList
-      }
-    }
-    // footer reads are independent per file — read them concurrently
-    // (one file per open segment per commit; serial reads stack up on
-    // the commit-heavy fixtures) (r16)
-    val futs = files.map { case (p, len) =>
-      scala.concurrent.Future {
-        val segId = p.getParent.getName.stripPrefix("segId=").toLong
-        val footer = ParquetFileReader.readFooter(conf, p, ParquetMetadataConverter.NO_FILTER)
-        var rows = 0L
-        var offLo = Long.MaxValue; var offHi = Long.MinValue
-        var tLo = Long.MaxValue; var tHi = Long.MinValue
-        var ckMax = 1
-        footer.getBlocks.asScala.foreach { b =>
-          rows += b.getRowCount
-          b.getColumns.asScala.foreach { c =>
-            val name = c.getPath.toDotString
-            val s = c.getStatistics
-            if (s != null && !s.isEmpty) {
-              if (name == "offset") {
-                offLo = math.min(offLo, s.genericGetMin.asInstanceOf[Number].longValue)
-                offHi = math.max(offHi, s.genericGetMax.asInstanceOf[Number].longValue)
-              } else if (name == "eventTime") {
-                tLo = math.min(tLo, s.genericGetMin.asInstanceOf[Number].longValue)
-                tHi = math.max(tHi, s.genericGetMax.asInstanceOf[Number].longValue)
-              } else if (name == "chunkCount" && s.genericGetMax != null) {
-                ckMax = math.max(ckMax, s.genericGetMax.asInstanceOf[Number].intValue)
-              }
-            }
-          }
-        }
-        if (rows > 0)
-          Some(FileEntry(segId, stripScheme(p.toString), offLo, rows,
-            if (tLo == Long.MaxValue) 0L else tLo,
-            if (tHi == Long.MinValue) 0L else tHi,
-            maxChunkCount = ckMax, byteSize = len))
-        else None
-      }(scala.concurrent.ExecutionContext.global)
-    }
-    // listing order preserved (map over the ordered file list) — entry
-    // order never carried meaning, but determinism keeps manifests diffable
-    futs.map(f => scala.concurrent.Await.result(
-      f, scala.concurrent.duration.Duration(120, "s"))).flatten
-  }
 
   // ------------------------------------------------------------------- read
 
@@ -499,12 +435,11 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
   }
 
   /** Append under an open transaction (Transaction.java:61 writeEvent):
-    * rows are routed exactly like committed writes but offsets are
-    * txn-local — (callSeq << 40) + rank within the call. The merge at
-    * commit re-ranks by (segmentId, txn-local offset), so txn-local
-    * offsets only need to be monotone across calls, not contiguous; that
-    * makes each writeToTxn a single Spark job (the staging write) with no
-    * separate counting pass over the input.
+    * rows are routed and ordered like committed writes into
+    * `txn-<id>/call-<callSeq>/` with txn-local offsets (callSeq << 40) +
+    * rank, which the merge at commit re-ranks by (segmentId, offset).
+    * After the job the driver records the files its tasks reported in
+    * `call-<callSeq>.json`; commitTxn merges exactly the recorded files.
     */
   def writeToTxn(scope: String, stream: String, txnId: String, df: DataFrame): Unit = {
     val meta = catalog.getStream(scope, stream)
@@ -523,35 +458,36 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
     }
 
     val open = meta.openSegments.sortBy(_.keyLow)
-    val h = hash_to_range(col("routingKey"))
-    val segCol = open.init.foldRight(lit(open.last.segmentId): Column) { (s, rest) =>
-      when(h < s.keyHigh, lit(s.segmentId)).otherwise(rest)
+    val staged = writeSegmentFiles("graft.writeToTxn", appendPlan(df, open),
+      new Path(catalog.txnDir(scope, stream, txnId), s"call-$callSeq"),
+      offsetBase = open.map(_.segmentId -> (callSeq << 40)).toMap, stamp = true)
+    val list = callList(scope, stream, txnId, callSeq)
+    val out = CasFiles.createExclusive(fsOf(list), list)
+    try out.write(Serialization.write(staged)(DefaultFormats).getBytes(UTF_8)) finally out.close()
+  }
+
+  private def callList(scope: String, stream: String, txnId: String, callSeq: Long): Path =
+    new Path(catalog.txnDir(scope, stream, txnId), s"call-$callSeq.json")
+
+  /** The staged files of every writeToTxn call, read from the call lists
+    * by exact path (no listing). A missing or torn list is a call that
+    * never returned (its rows were never acknowledged); a file no list
+    * names (a lost task attempt's output, a stray copy) is never merged.
+    */
+  private def stagedFiles(scope: String, stream: String, txn: TxnRecord): Seq[FileEntry] = {
+    val fsys = fsOf(catalog.txnDir(scope, stream, txn.id))
+    (0L until txn.calls).flatMap { seq =>
+      val json = try {
+        val in = fsys.open(callList(scope, stream, txn.id, seq))
+        try new String(in.readAllBytes(), UTF_8) finally in.close()
+      } catch { case _: java.io.FileNotFoundException => "" }
+      Try(Serialization.read[Seq[FileEntry]](json)(DefaultFormats, implicitly)).getOrElse(Nil)
     }
-    // Txn-local offsets only order the merge — no shuffle, no ranking
-    // window: the merge sorts by (segmentId, callSeq, offset), so the
-    // explicit callSeq column orders calls and monotonically_increasing_id
-    // (globally unique, per-source-partition ordered) orders rows within a
-    // call — valid for ANY partition count, no bit-packing assumptions.
-    // The staging write is one map-only job; the dynamic partitionBy
-    // fan-out per task mirrors a real Spark sink.
-    val part = catalog.txnDir(scope, stream, txnId)
-    // chunk oversized payloads exactly like the direct write path; chunk
-    // rows get consecutive monotonic ids, and the commit merge's
-    // (segmentId, callSeq, offset) ordering keeps them adjacent
-    GraftStreams.chunkPayloads(df)
-      .withColumn("segmentId", segCol)
-      .withColumn("callSeq", lit(callSeq))
-      .withColumn("offset", monotonically_increasing_id())
-      .withColumn("processingTime", current_timestamp())
-      .select($"segmentId", $"callSeq", $"offset", $"routingKey", $"eventTime",
-        $"processingTime", $"payload", $"chunkSeq", $"chunkCount")
-      .withColumn("segId", $"segmentId")
-      .write.mode("append").partitionBy("segId").parquet(part.toString)
   }
 
   /** Commit (Transaction.java:88, CommitRequestHandler.java:247-367):
-    * OPEN→COMMITTING via CAS, then a merge job rewrites staged rows with
-    * real offsets appended to each target segment (the
+    * OPEN→COMMITTING via CAS, then a merge job rewrites the recorded
+    * staged files with real offsets appended to each target segment (the
     * MergeSegmentOperation analog), then a publish CAS makes the files
     * visible, advances tails and marks COMMITTED. Commit order = manifest
     * version order, so concurrent commits serialize exactly like the
@@ -586,7 +522,7 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
     if (txnStatus(entered, txnId).state == TxnState.Committed) return
 
     val stagingDir = catalog.txnDir(scope, stream, txnId)
-    val fsys = stagingDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fsys = fsOf(stagingDir)
 
     // Phase 2: merge + publish, re-planned from fresh metadata until the
     // publish CAS lands (bounded only as a runaway guard).
@@ -599,38 +535,21 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
 
       var entries: Seq[FileEntry] = Nil
       var commitDir: Path = null
-      if (fsys.exists(stagingDir)) {
+      val staged = stagedFiles(scope, stream, txnStatus(meta, txnId))
+      if (staged.nonEmpty) {
         commitDir = new Path(catalog.dataDir(scope, stream),
           s"txncommit-$txnId-${UUID.randomUUID().toString.take(8)}")
         val open = meta.openSegments.sortBy(_.keyLow)
-        require(open.nonEmpty, "stream has no open segments")
-        val openIds = open.map(_.segmentId)
-        val h = hash_to_range(col("routingKey"))
-        val rerouted = open.init.foldRight(lit(open.last.segmentId): Column) { (s, rest) =>
-          when(h < s.keyHigh, lit(s.segmentId)).otherwise(rest)
-        }
-        val baseCol = meta.segments.foldRight(lit(0L): Column) { (s, rest) =>
-          when(col("targetSeg") === s.segmentId, lit(metaTails(s.segmentId))).otherwise(rest)
-        }
         // Per-key order survives rerouting: within a routing key all staged
-        // rows shared one original segment, and the merge rank orders by
-        // (original segmentId, writeToTxn call sequence, txn-local offset).
-        val win = Window.partitionBy($"targetSeg").orderBy($"segmentId", $"callSeq", $"offset")
-        val stagedSchema = org.apache.spark.sql.types.StructType(
-          GraftStreams.storageSchema.fields.patch(1,
-            Seq(org.apache.spark.sql.types.StructField("callSeq",
-              org.apache.spark.sql.types.LongType, nullable = false)), 0))
-        val toWrite = spark.read.schema(stagedSchema).parquet(stagingDir.toString)
-          .withColumn("targetSeg",
-            when(col("segmentId").isInCollection(openIds), col("segmentId")).otherwise(rerouted))
-          .repartition(math.max(open.size, 1), $"targetSeg")
-          .withColumn("offset", baseCol + row_number().over(win) - 1)
-          .select(col("targetSeg").as("segmentId"), $"offset", $"routingKey", $"eventTime",
-            $"processingTime", $"payload", $"chunkSeq", $"chunkCount")
-          .withColumn("segId", $"segmentId")
-          .sortWithinPartitions($"segmentId", $"offset")
-        toWrite.write.partitionBy("segId").parquet(commitDir.toString)
-        entries = statsFromFooters(commitDir)
+        // rows shared one original segment, and the merge orders by
+        // (original segmentId, txn-local offset = call, rank in call).
+        val plan = spark.read.schema(GraftStreams.storageSchema).parquet(staged.map(_.path): _*)
+          .withColumn("targetSeg", when(col("segmentId").isInCollection(open.map(_.segmentId)),
+            col("segmentId")).otherwise(route(open)))
+          .repartition(open.size, $"targetSeg")
+          .sortWithinPartitions($"targetSeg", $"segmentId", $"offset")
+          .select($"targetSeg" +: GraftStreams.storageSchema.fieldNames.tail.toSeq.map(col): _*)
+        entries = writeSegmentFiles("graft.commitTxn", plan, commitDir, offsetBase = metaTails)
       }
       GraftStreams.kp("txn.merged") // crash here = merged files, no publish
 
@@ -649,21 +568,8 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
             }
             if (invalid) throw new ConditionalCheckFailedException(
               s"tails moved or targets sealed during txn $txnId commit")
-            val newTails = entries.groupBy(_.segmentId).map { case (sid, fs) => sid -> fs.map(_.endOffset).max }
-            val rowsPerSeg = entries.groupBy(_.segmentId).map { case (sid, fs) => sid -> fs.map(_.rowCount).sum }
-            m.copy(
-              files = m.files ++ entries,
-              segments = m.segments.map { s =>
-                val appended = rowsPerSeg.getOrElse(s.segmentId, 0L)
-                val attrs =
-                  if (appended == 0) s.attributes
-                  else s.attributes + (Attributes.EventCount ->
-                    AttributeUpdate(Attributes.EventCount, "ACCUMULATE", appended)
-                      .apply(s.attributes.get(Attributes.EventCount)))
-                s.copy(tailOffset = newTails.getOrElse(s.segmentId, s.tailOffset), attributes = attrs)
-              },
-              transactions = m.transactions + (txnId -> cur.copy(
-                state = TxnState.Committed, committedAt = Some(System.currentTimeMillis()))))
+            withAppended(m, entries).copy(transactions = m.transactions + (txnId -> cur.copy(
+              state = TxnState.Committed, committedAt = Some(System.currentTimeMillis()))))
           }
         }
         GraftStreams.kp("txn.published") // crash here = COMMITTED, staging left
@@ -694,8 +600,7 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
         throw new TxnFailedException(s"cannot abort txn $txnId in ${cur.state}")
       m.copy(transactions = m.transactions + (txnId -> cur.copy(state = TxnState.Aborted)))
     }
-    val stagingDir = catalog.txnDir(scope, stream, txnId)
-    stagingDir.getFileSystem(spark.sessionState.newHadoopConf()).delete(stagingDir, true)
+    dropDir(catalog.txnDir(scope, stream, txnId))
   }
 
   /** Lease keep-alive (client/.../stream/impl/Pinger.java:47). */
@@ -772,7 +677,7 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
     val referenced = keepPaths.map(p => new Path(p).getParent.getParent.toString).toSet ++
       keepPaths.map(p => new Path(p).getParent.toString).toSet
     val dataDir = catalog.dataDir(scope, stream)
-    val fsys = dataDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val fsys = fsOf(dataDir)
     if (!fsys.exists(dataDir)) return Nil
     val cutoff = System.currentTimeMillis() - olderThanMillis
     val removed = fsys.listStatus(dataDir).toSeq
@@ -785,7 +690,7 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
          // moved out) or never did, so past-grace reclaim is safe
          st.getPath.getName.startsWith("sinkstage-")) &&
         !referenced.contains(st.getPath.toString) &&
-        !referenced.contains(stripScheme(st.getPath.toString)) &&
+        !referenced.contains(GraftStreams.stripScheme(st.getPath.toString)) &&
         st.getModificationTime < cutoff)
     removed.foreach(st => fsys.delete(st.getPath, true))
 
@@ -819,45 +724,9 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
     */
   def compactStream(scope: String, stream: String, minFilesPerSegment: Int = 2): (Int, Int) = {
     val meta = catalog.getStream(scope, stream)
-    val bySeg = meta.files.groupBy(_.segmentId)
-    val targets = bySeg.filter(_._2.size >= minFilesPerSegment)
+    val targets = meta.files.groupBy(_.segmentId).filter(_._2.size >= minFilesPerSegment)
     if (targets.isEmpty) return (meta.files.size, meta.files.size)
-
-    val head = meta.headStreamCut.positions
-    val compactDir = new Path(catalog.dataDir(scope, stream), s"compact-${UUID.randomUUID()}")
-    val oldPaths = targets.values.flatten.map(_.path).toSeq
-    spark.read.schema(GraftStreams.storageSchema).parquet(oldPaths: _*)
-      .filter(targets.keySet.map(sid =>
-        col("segmentId") === sid && col("offset") >= head.getOrElse(sid, 0L)).reduce(_ || _))
-      .withColumn("segId", col("segmentId"))
-      .repartition(col("segmentId"))
-      .sortWithinPartitions(col("segmentId"), col("offset"))
-      .write.partitionBy("segId").parquet(compactDir.toString)
-
-    val newEntries = statsFromFooters(compactDir)
-    GraftStreams.kp("compact.staged") // crash here = rewritten files, no swap
-    val deadline = System.currentTimeMillis() + graft.catalog.StreamCatalog.DefaultDeleteGraceMillis
-    val updated = try catalog.update(scope, stream) { m =>
-      // the CAS closure revalidates: if any target segment gained a file
-      // since planning, fail (caller can rerun) rather than lose it
-      val changed = targets.exists { case (sid, fs) =>
-        m.files.filter(_.segmentId == sid).map(_.path).toSet != fs.map(_.path).toSet
-      }
-      if (changed) throw new ConditionalCheckFailedException(
-        s"$scope/$stream files changed during compaction")
-      // replaced files become tombstones, NOT immediate deletes: a reader
-      // that planned from the pre-compaction manifest may still be
-      // scanning them; catalog.sweepDeletes reclaims after the grace
-      m.copy(files = m.files.filterNot(f => targets.contains(f.segmentId)) ++ newEntries,
-        pendingDeletes = m.pendingDeletes ++ oldPaths.map(p => PendingDelete(p, deadline)))
-    } catch {
-      case e: ConditionalCheckFailedException =>
-        // never swapped — drop the rewritten files so a lost CAS doesn't
-        // leak a compact-* dir per losing attempt (writeEvents' pattern)
-        compactDir.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(compactDir, true)
-        throw e
-    }
+    val updated = rewriteSegments(scope, stream, targets, "compact", "compaction", liveRows(meta, targets))
     (meta.files.size, updated.files.size)
   }
 
@@ -882,43 +751,58 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
     val targets = meta.files.filter(f => targetSegs.contains(f.segmentId))
       .groupBy(_.segmentId)
     if (targets.isEmpty) return 0L
-    val oldPaths = targets.values.flatten.map(_.path).toSeq
-    // shed truncated rows exactly like compactStream: rows below the head
-    // StreamCut are dead to every reader, so the rewrite drops them
-    // instead of carrying dead pre-head data (and its payloads for
-    // non-target keys) forward into the redacted files
-    val head = meta.headStreamCut.positions
-    val src = spark.read.schema(GraftStreams.storageSchema).parquet(oldPaths: _*)
-      .filter(targets.keySet.map(sid =>
-        col("segmentId") === sid && col("offset") >= head.getOrElse(sid, 0L)).reduce(_ || _))
+    val src = liveRows(meta, targets)
     val n = src.filter(col("routingKey") === routingKey).count()
     if (n == 0L) return 0L
-    val redactDir = new Path(catalog.dataDir(scope, stream), s"compact-${UUID.randomUUID()}")
-    src
-      .withColumn("payload", when(col("routingKey") === routingKey,
-        lit(Array.empty[Byte])).otherwise(col("payload")))
-      .withColumn("segId", col("segmentId"))
-      .repartition(col("segmentId"))
-      .sortWithinPartitions(col("segmentId"), col("offset"))
-      .write.partitionBy("segId").parquet(redactDir.toString)
-    val newEntries = statsFromFooters(redactDir)
-    GraftStreams.kp("redact.staged") // crash here = rewritten files, no swap
+    rewriteSegments(scope, stream, targets, "redact", "redaction",
+      src.withColumn("payload", when(col("routingKey") === routingKey,
+        lit(Array.empty[Byte])).otherwise(col("payload"))))
+    n
+  }
+
+  /** The rows of `targets`'s files at or above the head StreamCut: rows
+    * below it are dead to every reader, so a rewrite drops them instead
+    * of carrying dead pre-head data (and its payloads) forward.
+    */
+  private def liveRows(meta: StreamMetadata, targets: Map[Long, Seq[FileEntry]]): DataFrame = {
+    val head = meta.headStreamCut.positions
+    spark.read.schema(GraftStreams.storageSchema)
+      .parquet(targets.values.flatten.map(_.path).toSeq: _*)
+      .filter(targets.keySet.map(sid =>
+        col("segmentId") === sid && col("offset") >= head.getOrElse(sid, 0L)).reduce(_ || _))
+  }
+
+  /** Rewrite `rows` (offsets kept) into a `compact-*` dir and swap the
+    * new files for every file of the `targets` segments in one CAS.
+    */
+  private def rewriteSegments(scope: String, stream: String, targets: Map[Long, Seq[FileEntry]],
+                              kind: String, what: String, rows: DataFrame): StreamMetadata = {
+    val dir = new Path(catalog.dataDir(scope, stream), s"compact-${UUID.randomUUID()}")
+    val newEntries = writeSegmentFiles(s"graft.${kind}Stream",
+      rows.repartition(col("segmentId")).sortWithinPartitions(col("segmentId"), col("offset")), dir)
+    GraftStreams.kp(s"$kind.staged") // crash here = rewritten files, no swap
+    val oldPaths = targets.values.flatten.map(_.path).toSeq
     val deadline = System.currentTimeMillis() + graft.catalog.StreamCatalog.DefaultDeleteGraceMillis
     try catalog.update(scope, stream) { m =>
+      // the CAS closure revalidates: if any target segment gained a file
+      // since planning, fail (caller can rerun) rather than lose it
       val changed = targets.exists { case (sid, fs) =>
         m.files.filter(_.segmentId == sid).map(_.path).toSet != fs.map(_.path).toSet
       }
       if (changed) throw new ConditionalCheckFailedException(
-        s"$scope/$stream files changed during redaction")
+        s"$scope/$stream files changed during $what")
+      // replaced files become tombstones, NOT immediate deletes: a reader
+      // that planned from the pre-rewrite manifest may still be scanning
+      // them; catalog.sweepDeletes reclaims after the grace
       m.copy(files = m.files.filterNot(f => targets.contains(f.segmentId)) ++ newEntries,
         pendingDeletes = m.pendingDeletes ++ oldPaths.map(p => PendingDelete(p, deadline)))
     } catch {
       case e: ConditionalCheckFailedException =>
-        redactDir.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(redactDir, true)
+        // never swapped — drop the rewritten files so a lost CAS doesn't
+        // leak a compact-* dir per losing attempt (writeEvents' pattern)
+        dropDir(dir)
         throw e
     }
-    n
   }
 
   // ------------------------------------------------------------- watermarks
@@ -1018,6 +902,60 @@ object GraftStreams {
     */
   @volatile private[graft] var killPoint: Option[String => Unit] = None
   @inline private[graft] def kp(name: String): Unit = killPoint.foreach(_(name))
+
+  private def stripScheme(p: String): String =
+    if (p.startsWith("file:")) new Path(p).toUri.getPath else p
+
+  /** Task side of [[GraftStreams#writeSegmentFiles]]: one parquet file per
+    * segment (every plan sorts a task's rows by segment), its entry built
+    * from the rows as they pass. An assigned offset or stamp is set in
+    * place, so rows are not copied; a failed attempt deletes its files.
+    */
+  private def writeTask(rows: Iterator[InternalRow], dir: String, writers: ParquetWriteShim.Writers,
+                        offsetBase: Map[Long, Long], nowMicros: Option[Long]): Iterator[FileEntry] = {
+    val tc = TaskContext.get()
+    val conf = writers.conf.value
+    val entries = mutable.ArrayBuffer.empty[FileEntry]
+    val opened = mutable.ArrayBuffer.empty[Path]
+    tc.addTaskFailureListener { (_, _) =>
+      opened.foreach(p => try p.getFileSystem(conf).delete(p, false) catch { case NonFatal(_) => })
+    }
+    var w: OutputWriter = null
+    var seg, first, n, tLo, tHi, records, bytes = 0L
+    var ck = 1
+    def closeFile(): Unit = {
+      w.close()
+      val p = new Path(w.path())
+      val len = p.getFileSystem(conf).getFileStatus(p).getLen
+      entries += FileEntry(seg, stripScheme(p.toString), first, n,
+        if (tLo > tHi) 0L else tLo, if (tLo > tHi) 0L else tHi, maxChunkCount = ck, byteSize = len)
+      records += n; bytes += len
+      w = null
+    }
+    rows.foreach { r =>
+      val s = r.getLong(0)
+      if (w != null && s != seg) closeFile()
+      if (w == null) {
+        seg = s; n = 0L; tLo = Long.MaxValue; tHi = Long.MinValue; ck = 1
+        w = writers.open(s"$dir/segId=$s", f"part-${tc.partitionId()}%05d-${tc.taskAttemptId()}")
+        opened += new Path(w.path())
+      }
+      val row = if (offsetBase.isEmpty && nowMicros.isEmpty) r else {
+        val m = r match { case u: UnsafeRow => u; case o => o.copy() }
+        if (offsetBase.nonEmpty) m.setLong(1, offsetBase(s) + n)
+        nowMicros.foreach(m.setLong(4, _))
+        m
+      }
+      if (n == 0L) first = row.getLong(1)
+      if (!row.isNullAt(3)) { val t = row.getLong(3); tLo = math.min(tLo, t); tHi = math.max(tHi, t) }
+      if (!row.isNullAt(7)) ck = math.max(ck, row.getInt(7))
+      w.write(row)
+      n += 1
+    }
+    if (w != null) closeFile()
+    ParquetWriteShim.reportOutput(bytes, records)
+    entries.iterator
+  }
 
   /** Max event payload PER ROW (Serializer.MAX_EVENT_SIZE,
     * Serializer.java:33). Larger events are accepted and chunked — see
