@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
-import java.io.{FileNotFoundException, OutputStream}
 import java.nio.charset.StandardCharsets
 
 /** Stream metadata catalog — the controller replacement (SURVEY §2.9,
@@ -139,21 +138,6 @@ object StreamCatalog {
       t
     })
 
-  /** Per-stream serialization of manifest GC within this JVM — a WORK
-    * deduplication, not a correctness lock: the floor marker is a
-    * CAS-appended chain ([[FloorChain]]), monotone across any number of
-    * JVMs by construction, so unserialized concurrent gcs can never
-    * regress it — the loser of the marker CAS discovers supersession
-    * and skips its deletes (which would have been a harmless subset
-    * anyway; deletes are idempotent). The lock just keeps two in-process
-    * maintenance tickers from re-listing and re-deleting the same
-    * retired range. (The reference runs retention under bucket
-    * OWNERSHIP — controller/.../server/bucket/BucketManager.java — a
-    * deployment contract this engine no longer needs for the floor.)
-    */
-  private[catalog] val gcLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** JVM-wide count of manifest-CAS losses (an `update` attempt beaten to
     * its version by a concurrent committer, re-read + retried). Pure
     * telemetry for contention measurement (CommitContentionBench /
@@ -171,14 +155,14 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
   /** Newest reconstructed state per stream, version-monotone WITHIN a
     * stream incarnation. Manifests are immutable once written, so within
     * an incarnation a cached state is never WRONG, at most behind — and
-    * `getStream` always re-lists versions first, so staleness is
+    * `getStream` always resolves the chain tip first, so staleness is
     * impossible too. Across incarnations (delete+recreate of the same
     * name by ANOTHER catalog instance) version numbers collide, so
     * `reconstruct` validates every cache use against the on-disk record's
     * `incarnation` stamp before trusting it. Steady state: a committer's
     * read-modify-write reads one tip record (the validation GET) and
-    * writes O(delta); a tailing reader pays one LIST + one small record
-    * read per poll — O(1), independent of file count.
+    * writes O(delta); a tailing reader pays a few exact-key probes + one
+    * small record read per poll — O(1), independent of file count.
     */
   private val tipCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), StreamMetadata]
@@ -189,21 +173,17 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
   private def scopePath(scope: String) = new Path(root, scope)
   private def streamPath(scope: String, stream: String) = new Path(scopePath(scope), stream)
   private def metaPath(scope: String, stream: String) = new Path(streamPath(scope, stream), "_meta")
-  private def manifestPath(scope: String, stream: String, version: Long) =
-    new Path(metaPath(scope, stream), f"manifest-$version%012d.json")
-  // the names deliberately do NOT match the `manifest-*.json` pattern:
-  // sidecars and the GC floor are invisible to listVersions's version
-  // collection and to Fsck's chain check
+  // the name deliberately does NOT match the `manifest-*.json` pattern:
+  // sidecars are invisible to the chain's version listing
   private def checkpointPath(scope: String, stream: String, version: Long) =
     new Path(metaPath(scope, stream), f"checkpoint-$version%012d.json")
-  // the GC retention floor: a CAS-appended chain of `floor-<seq>.json`
-  // records under _meta (see FloorChain) — one instance per stream so
-  // warm reads ride an in-memory tip hint, like the manifest tipCache
-  private val floorChains =
-    scala.collection.concurrent.TrieMap.empty[(String, String), FloorChain]
-  private def floorChain(scope: String, stream: String): FloorChain =
-    floorChains.getOrElseUpdate((scope, stream),
-      new FloorChain(() => fs, metaPath(scope, stream)))
+  // one manifest chain per stream, so warm reads ride its tip hint
+  private val chains =
+    scala.collection.concurrent.TrieMap.empty[(String, String), ManifestChain]
+  private def chain(scope: String, stream: String): ManifestChain =
+    chains.getOrElseUpdate((scope, stream),
+      new ManifestChain(() => fs, metaPath(scope, stream), "manifest-", ".json",
+        first = 0L, probeCap = math.max(2 * checkpointInterval, 8)))
   def dataDir(scope: String, stream: String): Path = new Path(streamPath(scope, stream), "data")
   def txnDir(scope: String, stream: String, txnId: String): Path =
     new Path(streamPath(scope, stream), s"txn-$txnId")
@@ -234,7 +214,7 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     val ok = fs.delete(scopePath(scope), true)
     // recreated streams under a recreated scope restart their chains at 0
     tipCache.keysIterator.filter(_._1 == scope).foreach(tipCache.remove)
-    floorChains.keysIterator.filter(_._1 == scope).foreach(floorChains.remove)
+    chains.keysIterator.filter(_._1 == scope).foreach(k => chains.remove(k).foreach(_.invalidate()))
     ok
   }
 
@@ -256,7 +236,7 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
       // the name is creatable again instead of stuck "already exists"
       // with zero manifests. Two RACING creators are still arbitrated
       // by the exclusive v0 create below, never by this cleanup.
-      if (fs.exists(manifestPath(scope, stream, 0L)))
+      if (chain(scope, stream).exists(0L))
         throw new GraftException(s"stream $scope/$stream already exists")
       fs.delete(metaPath(scope, stream), true)
     }
@@ -272,93 +252,22 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
       epochs = Seq(EpochRecord(0, segs.map(_.segmentId), now)),
       segments = segs, files = Nil, headCut = Map.empty,
       transactions = Map.empty, writerMarks = Map.empty, writerBatches = Map.empty)
-    writeManifest(meta, None)
+    writeManifest(meta, None).getOrElse(
+      throw new GraftException(s"stream $scope/$stream already exists"))
   }
 
   def streamExists(scope: String, stream: String): Boolean =
-    latestVersion(scope, stream).isDefined
+    chain(scope, stream).list().nonEmpty
 
-  def getStream(scope: String, stream: String): StreamMetadata = {
-    // Dense-chain fast path: with a cached tip, the current tip is found
-    // by probing exact keys FORWARD from it — no directory LIST at all.
-    // VersionsBench measured the `_meta` listing dominating EVERY warm
-    // read and commit past ~10^3 chain versions (160 ms/commit at 10^4:
-    // each CAS round trip re-listed the whole chain); exact-key probes
-    // are O(new versions) and, on object stores, read-after-write
-    // consistent where LIST is not. Soundness: the chain is dense and
-    // GC only deletes below the floor marker (written BEFORE deletes),
-    // so a probe walk that stopped at a concurrent-GC hole lands below
-    // the floor read AFTERWARDS — detected, falls back to the LIST
-    // path. reconstruct() itself still validates the cache against the
-    // v0 identity record, so a delete+recreate collision is caught
-    // exactly as on the slow path.
-    tipCache.get((scope, stream)).foreach { c =>
-      if (fs.exists(manifestPath(scope, stream, c.version))) {
-        // The walk is CAPPED: each probe is one exists() GET, so an
-        // instance whose cache is far behind (idle a day against a
-        // 1-commit/sec stream ≈ 86k missed versions) must not pay one
-        // sequential round trip per missed version — past ~2 checkpoint
-        // intervals of probes, one LIST page is cheaper and the slow
-        // path below already handles arbitrarily deep gaps.
-        val cap = c.version + math.max(2L * checkpointInterval, 8L)
-        var max = c.version
-        while (max < cap && fs.exists(manifestPath(scope, stream, max + 1))) max += 1
-        // the floor gate catches a walk that stalled at a concurrent
-        // GC's delete hole (manifests below the floor vanish while the
-        // cached tip's own manifest may linger mid-sweep): max < floor
-        // means the true tip is NOT reachable by probes — LIST path.
-        // floorFast is one exists() miss when the chain hasn't advanced
-        // (vs a full record GET before the FloorChain move): staleness
-        // is bounded by reconstruct()'s v0 identity validation plus the
-        // LIST path's authoritative recovery, same as the tipCache.
-        if (max < cap && max >= floorChain(scope, stream).floorFast()) {
-          // torn-tip handling mirrors the LIST path: retry the newest
-          // briefly, fall back one version (never below the cached tip,
-          // which reconstructed successfully once already). A broken
-          // chain here falls THROUGH to the LIST path rather than
-          // throwing: a probe racing concurrent GC deletes can hit a
-          // same-instant hole that a fresh listing (with the new floor
-          // visible) resolves cleanly — genuine corruption throws the
-          // same exception from the LIST path below.
-          val candidates = (math.max(c.version, max - 1) to max).reverse
-          var broken = false
-          for ((v, idx) <- candidates.zipWithIndex if !broken) {
-            val retries = if (idx == 0) 20 else 1
-            for (_ <- 1 to retries if !broken) {
-              try return reconstruct(scope, stream, v)
-              catch {
-                case _: ManifestChainBrokenException => broken = true
-                case _: Exception => Thread.sleep(10)
-              }
-            }
-          }
-          // exhausted: fall through to the LIST path for full semantics
-        }
-      }
-    }
-    val versions = listVersions(scope, stream)
-    if (versions.isEmpty)
-      throw new NoSuchStreamException(s"stream $scope/$stream does not exist")
-    // The newest manifest may be created but not yet fully written by a
-    // concurrent committer (exclusive create + write is not one atomic
-    // step on every FS). Manifests are immutable once written, so: retry
-    // the newest briefly, then fall back to the previous version.
-    val newestFirst = versions.sorted.reverse
-    for ((v, idx) <- newestFirst.zipWithIndex) {
-      val retries = if (idx == 0) 20 else 1
-      for (_ <- 1 to retries) {
-        try return reconstruct(scope, stream, v)
-        catch {
-          // falling back to an older version is only sound for a torn
-          // TIP; a broken chain would make every fallback a silently
-          // stale read — surface it instead (Fsck's manifest-chain case)
-          case e: ManifestChainBrokenException => throw e
-          case _: Exception => Thread.sleep(10)
-        }
-      }
-    }
-    throw new GraftException(s"no readable manifest for $scope/$stream")
-  }
+  /** The stream's newest committed state (see [[ManifestChain.readTip]]:
+    * LIST-free while this instance's tip hint is warm, torn-tip fallback
+    * of one version). reconstruct() validates any cached state against
+    * the v0 identity record, so a delete+recreate collision is caught on
+    * either path.
+    */
+  def getStream(scope: String, stream: String): StreamMetadata =
+    chain(scope, stream).readTip(v => reconstruct(scope, stream, v)).map(_._2)
+      .getOrElse(throw new NoSuchStreamException(s"stream $scope/$stream does not exist"))
 
   def listStreams(scope: String): Seq[String] = {
     val p = scopePath(scope)
@@ -367,8 +276,7 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     // checkpointer racing a delete can leave a _meta holding only a
     // sidecar — listing that residue would make listStreamsByTag (which
     // getStream's each listed name) throw on a stream that is GONE
-    else fs.listStatus(p).filter(s => s.isDirectory &&
-        fs.exists(new Path(new Path(s.getPath, "_meta"), f"manifest-${0L}%012d.json")))
+    else fs.listStatus(p).filter(s => s.isDirectory && chain(scope, s.getPath.getName).exists(0L))
       .map(_.getPath.getName).toSeq.sorted
   }
 
@@ -390,9 +298,9 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     flushCheckpoints()
     fs.delete(streamPath(scope, stream), true)
     // a recreated stream restarts its version chain at 0 — the old tip
-    // must not shadow it; same for the floor chain hint
+    // must not shadow it; same for the chain's hints
     tipCache.remove((scope, stream))
-    floorChains.remove((scope, stream)).foreach(_.invalidate())
+    chains.remove((scope, stream)).foreach(_.invalidate())
   }
 
   /** EWMA (α=¼) of one CAS attempt's wall cost — read tip + transform +
@@ -514,14 +422,12 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
         casSlotNanos.updateAndGet(prev => prev - (prev >> 2) + (dt >> 2))
       }
       val cur = getStream(scope, stream)
-      val next0 = f(cur)
-      val next = next0.copy(version = cur.version + 1)
-      try {
-        val committed = writeManifest(next, Some(cur))
-        observeAttempt()
-        return committed
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException | _: java.nio.file.FileAlreadyExistsException =>
+      val next = f(cur).copy(version = cur.version + 1)
+      writeManifest(next, Some(cur)) match {
+        case Some(committed) =>
+          observeAttempt()
+          return committed
+        case None =>
           StreamCatalog.casLosses.increment()
           observeAttempt()
           attempt += 1
@@ -709,7 +615,7 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     * behind the delta feed, as-of reads and `tools.Fsck`'s chain check.
     */
   def manifestVersions(scope: String, stream: String): Seq[Long] =
-    listVersions(scope, stream).sorted
+    chain(scope, stream).list()
 
   /** The stream's committed state at an exact manifest version — the
     * time-travel read surface (`VERSION AS OF`). Valid within the
@@ -718,257 +624,35 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     * but fails loudly at scan time on the missing file (the Delta
     * VACUUM contract).
     */
-  def getStreamAt(scope: String, stream: String, version: Long): StreamMetadata = {
-    if (!fs.exists(manifestPath(scope, stream, version)))
+  def getStreamAt(scope: String, stream: String, version: Long): StreamMetadata =
+    chain(scope, stream).readAt(version)(v => reconstruct(scope, stream, v)).getOrElse(
       throw new NoSuchStreamException(
         s"stream $scope/$stream has no manifest version $version " +
-          s"(available: ${manifestVersions(scope, stream).mkString(", ")})")
-    // Same created-but-not-yet-written window as getStream's newest-
-    // manifest retry: the file exists the instant the committer wins the
-    // CAS, its bytes land just after. Manifests are immutable once
-    // written, so retry briefly — but never fall back to ANOTHER version
-    // here: the caller asked for exactly this one.
-    var last: Exception = null
-    for (_ <- 1 to 20) {
-      try return reconstruct(scope, stream, version)
-      catch {
-        // retrying can heal a torn not-yet-written tip, never corruption
-        case e: ManifestChainBrokenException => throw e
-        // the version can be RETIRED between the existence check above
-        // and the read (a concurrent gc advancing the floor): that is
-        // the retention miss, not an unreadable manifest
-        case e: FileNotFoundException
-            if !fs.exists(manifestPath(scope, stream, version)) =>
-          throw new NoSuchStreamException(
-            s"version $version of $scope/$stream was garbage-collected mid-read ($e)")
-        case e: Exception => last = e; Thread.sleep(10)
-      }
-    }
-    throw new GraftException(
-      s"manifest $version of $scope/$stream exists but stayed unreadable: $last")
-  }
+          s"(available: ${manifestVersions(scope, stream).mkString(", ")})"))
 
   /** Latest version committed at or before `epochMillis`, for
-    * `TIMESTAMP AS OF`. None if the stream didn't exist yet at t;
-    * [[TruncatedDataException]] if the instant falls inside manifest
-    * history that [[gcManifests]] retired (resolving it to the v0
-    * creation state would silently answer with an EMPTY stream — the
-    * retention contract demands a loud failure instead, exactly like the
-    * KV path). The answer is max{v : stamp(v) <= t} where `stamp` is the
-    * `committedAt` written inside each record at CAS time (mtime
-    * fallback only for pre-upgrade manifests) — a later version carrying
-    * an earlier clock (writer skew) can never smuggle post-t commits in.
-    *
-    * Cost: commit stamps are MONOTONE by construction — every CAS clamps
-    * `committedAt` to at least the previous version's stamp (see
-    * [[writeManifest]]) — so resolution is a pure binary search for the
-    * last stamp <= t: O(log n) record GETs at any retained chain depth,
-    * vs the previous O(n) full-chain scan (a 10^4-version chain paid
-    * 10^4 GETs per time-travel query; VersionsBench `time_resolve_ms`).
-    * A short backward verify-walk absorbs local inversions in chains
-    * whose stamps predate the clamp (mtime-fallback manifests included);
-    * on clamped chains it never takes a step. Concurrent GC/delete
-    * mid-search falls back to one linear pass over the compensated
-    * listing.
-    *
-    * LIST-free (r13): resolution needs only the RANGE, not the listing —
-    * the retained chain is dense over [max(1, floor), tip] by the GC
-    * contract (plus the always-retained v0), so tip rides `getStream`'s
-    * warm probe path and the floor rides the floor chain: with a warm
-    * cache the whole query is O(log n) exact-key record GETs and ZERO
-    * directory listings (the one compensated LIST — 195 ms at 10^4
-    * versions — was the entire pre-GC `time_resolve` cost in
-    * VersionsBench; the listing now appears only in the concurrent-GC
-    * linear fallback).
+    * `TIMESTAMP AS OF` (see [[ManifestChain.versionAtTime]]). None if the
+    * stream didn't exist yet at t; [[TruncatedDataException]] if the
+    * instant falls inside manifest history that [[gcManifests]] retired.
+    * The stamp is the `committedAt` written inside each record at CAS
+    * time, clamped monotone by [[writeManifest]]; with a warm tip hint
+    * the whole query is O(log n) record GETs and no listing.
     */
-  def versionAtTime(scope: String, stream: String, epochMillis: Long): Option[Long] = {
-    var tip =
-      try getStream(scope, stream).version
-      catch { case _: NoSuchStreamException => return None }
-    val floor = manifestFloor(scope, stream)
-    // tip is snapshotted BEFORE the floor, so a gc racing fast commits
-    // can advance the floor past the stale tip (floor <= tip holds on
-    // any consistent snapshot: the gc cuts strictly below the tip it
-    // listed). One tip re-read restores order; persisting disorder
-    // means the ground moved wholesale (delete/recreate mid-call) —
-    // resolve linearly over the fresh compensated listing rather than
-    // bisect an empty/negative range (which would silently return None
-    // for a resolvable time — r13 ADVICE).
-    if (floor > tip)
-      tip = try getStream(scope, stream).version
-            catch { case _: NoSuchStreamException => return None }
-    // v0 always rides along: resolving INTO the retired gap must land on
-    // it and fail loudly through gated() (Some(0) < floor), exactly as
-    // with the old listing — stamps stay monotone across the gap.
-    // The sequence {v0} ++ [lo, tip] is never materialized: the
-    // bisection runs over Long INDICES (an un-GC'd year-deep chain —
-    // 3×10^7 versions, or far past Int range — costs the driver O(1)
-    // memory and no truncation).
-    val lo = math.max(1L, floor)
-    def stampOf(v: Long): Long = {
-      def once(): Long =
-        readRecord(scope, stream, v).meta.committedAt match {
-          case 0L => fs.getFileStatus(manifestPath(scope, stream, v)).getModificationTime
-          case t  => t
-        }
-      // a TORN read (CAS winner still streaming bytes — only possible at
-      // the chain tip) reads as "not committed yet": stamp +∞ keeps the
-      // bisection sound and simply excludes the in-flight commit. A
-      // missing file (concurrent gc/delete) propagates for the caller's
-      // linear fallback.
-      for (_ <- 1 to 3) {
-        try return once()
-        catch {
-          case e: FileNotFoundException => throw e
-          case _: Exception => Thread.sleep(5)
-        }
-      }
-      Long.MaxValue
-    }
-    def gated(best: Option[Long]): Option[Long] = {
-      val floor = manifestFloor(scope, stream)
-      if (floor > 0L && best.exists(_ < floor))
-        throw new TruncatedDataException(
-          s"stream $scope/$stream history at ${java.time.Instant.ofEpochMilli(epochMillis)} " +
-            s"was garbage-collected (manifest retention floor is version $floor)")
-      best
-    }
-    def linear(): Option[Long] = {
-      var best: Option[Long] = None
-      // re-list: concurrent GC just moved the ground under the range —
-      // the compensated listing is the authority on what remains
-      for (v <- manifestVersions(scope, stream)) {
-        try if (stampOf(v) <= epochMillis) best = Some(v)
-        catch { case _: FileNotFoundException => } // concurrently removed: skip
-      }
-      gated(best)
-    }
-    if (floor > tip) return linear()
-    def verAt(i: Long): Long = if (i == 0L) 0L else lo + (i - 1)
-    val n = tip - lo + 2 // |{v0}| + |[lo, tip]|
-    try {
-      // first index with stamp > t (stamps ascend with version)
-      var l = 0L
-      var h = n
-      while (l < h) {
-        val mid = (l + h) >>> 1
-        if (stampOf(verAt(mid)) > epochMillis) h = mid else l = mid + 1
-      }
-      // verify-walk for pre-clamp local inversions; 0 steps on clamped
-      // chains (verAt(l-1) was read as <= t by the search itself)
-      var i = l - 1
-      while (i >= 0L && stampOf(verAt(i)) > epochMillis) i -= 1
-      gated(if (i < 0L) None else Some(verAt(i)))
-    } catch {
-      // a version retired by concurrent GC (or the stream dropped) mid-
-      // search breaks the bisection invariants — re-resolve linearly
-      // over whatever the compensated listing now returns
-      case _: FileNotFoundException => linear()
-    }
-  }
-
-  private def listVersions(scope: String, stream: String): Seq[Long] = {
-    val p = metaPath(scope, stream)
-    val listed =
-      try fs.listStatus(p).iterator
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("manifest-") && n.endsWith(".json") =>
-          n.stripPrefix("manifest-").stripSuffix(".json").toLong }
-        .toSeq
-      catch { case _: FileNotFoundException => Seq.empty }
-    // List-after-write-lag guard for object stores: a freshly-committed
-    // manifest can be invisible to LIST while a direct HEAD on its exact
-    // key is already consistent. The version chain is dense and monotone
-    // (createStream writes 0, every CAS writes max+1), so every
-    // committed-but-unlisted version is recoverable by exists() probes —
-    // the log-store discovery trick: (a) probe PAST the listed max until
-    // the first miss, and (b) probe any HOLE from version 0 (chains
-    // start at 0, so a listing whose min is above 0 is itself lagging)
-    // to the listed max, because eventually-consistent listings surface
-    // objects in no particular order (a newer manifest can appear before
-    // an older one). Versions in (0, floor) are GC-RETIRED, not lagged
-    // — skipped without probes. The floor is read lazily and at most
-    // once per listing (shared between the hole filter and the recovery
-    // check below; only the recovery's own re-read loop goes back to
-    // the chain). Cost on a dense consistent listing: one exists() miss
-    // plus the one recovery floor read.
-    // Fsck's chain-density check reads this same compensated listing, so
-    // it never reports a LIST-lag hole (or a GC hole) as corruption.
-    val listedSet = listed.toSet
-    var floorKnown = -1L
-    def floorOnce(): Long = {
-      if (floorKnown < 0L) floorKnown = manifestFloor(scope, stream)
-      floorKnown
-    }
-    val holes =
-      if (listed.isEmpty) Seq.empty[Long]
-      else {
-        val holes0 = (0L to listed.max).filterNot(listedSet)
-        if (holes0.isEmpty) holes0
-        else holes0.filter(v => v == 0L || v >= floorOnce())
-          .filter(v => fs.exists(manifestPath(scope, stream, v)))
-      }
-    var next = if (listed.isEmpty) 0L else listed.max + 1
-    val extra = Seq.newBuilder[Long]
-    while (fs.exists(manifestPath(scope, stream, next))) { extra += next; next += 1 }
-    val extras = extra.result()
-    val found = listed ++ holes ++ extras
-    // GC + list-lag double-blind (GcRaceSpec caught it live): after
-    // gcManifests retires (0, floor) the probe-past-max walk from a
-    // stale listing dies at the FIRST retired version — if the lag
-    // window additionally hides every retained manifest (floor..tip all
-    // younger than the lag), the listing collapses to {0} and getStream
-    // would silently reconstruct the EMPTY v0 creation state. The floor
-    // marker is the recovery base: its version is retained by the gc
-    // contract (base verified before the marker, marker before deletes,
-    // floors only move up), so probing forward FROM the floor always
-    // rediscovers the chain. The floor is read UNCONDITIONALLY here
-    // (one cheap chain read — shared with the hole filter above via
-    // floorOnce) and the from-floor probe skipped only when maxFound
-    // already reached it. A manifest the probe walk confirmed is NOT
-    // proof by itself: "a partially-swept chain is a deleted prefix"
-    // holds for a snapshot, not for a time-spanning walk — a concurrent
-    // gc can overtake the walk (walk confirms v, gc retires v..floor-1,
-    // walk's probe of v+1 misses), leaving extras ending at a
-    // now-deleted version >= 1 while the whole retained chain is still
-    // undiscovered (r13 ADVICE). The re-read loop absorbs a gc
-    // advancing the floor mid-probe (each retry strictly increases the
-    // floor, so it terminates).
-    val maxFound = found.foldLeft(0L)(math.max)
-    var fromFloor = Seq.empty[Long]
-    var fl = floorOnce()
-    var prevFl = -1L
-    while (fromFloor.isEmpty && fl > maxFound && fl != prevFl) {
-      var n2 = fl
-      val b = Seq.newBuilder[Long]
-      while (fs.exists(manifestPath(scope, stream, n2))) { b += n2; n2 += 1 }
-      fromFloor = b.result()
-      prevFl = fl
-      if (fromFloor.isEmpty) fl = manifestFloor(scope, stream)
-    }
-    if (fromFloor.isEmpty && fl > maxFound)
-      throw new ManifestChainBrokenException(
-        s"stream $scope/$stream: retention floor $fl names a retained " +
-          s"chain but no manifest at or above it is readable (max found " +
-          s"$maxFound) — concurrent delete or storage corruption")
-    found ++ fromFloor
-  }
-
-  private def latestVersion(scope: String, stream: String): Option[Long] = {
-    val versions = listVersions(scope, stream)
-    if (versions.isEmpty) None else Some(versions.max)
-  }
+  def versionAtTime(scope: String, stream: String, epochMillis: Long): Option[Long] =
+    chain(scope, stream).versionAtTime(epochMillis, () =>
+      try Some(getStream(scope, stream).version)
+      catch { case _: NoSuchStreamException => None }
+    )(b => parseRecord(b).meta.committedAt)
 
   /** Parse ONE manifest version's on-disk record without reconstructing
     * state. Legacy manifests (bare StreamMetadata JSON, pre-log format)
     * read as full checkpoints — the `kind` field is the discriminator.
     */
-  private def readRecord(scope: String, stream: String, version: Long): ManifestRecord = {
-    val in = fs.open(manifestPath(scope, stream, version))
-    val jv =
-      try org.json4s.jackson.JsonMethods.parse(
-        new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-      finally in.close()
+  private def readRecord(scope: String, stream: String, version: Long): ManifestRecord =
+    parseRecord(chain(scope, stream).bytes(version))
+
+  private def parseRecord(bytes: Array[Byte]): ManifestRecord = {
+    val jv = org.json4s.jackson.JsonMethods.parse(new String(bytes, StandardCharsets.UTF_8))
     jv \ "kind" match {
       case org.json4s.JString(_) => jv.extract[ManifestRecord]
       case _ => ManifestRecord(ManifestRecord.Full, jv.extract[StreamMetadata])
@@ -1025,7 +709,7 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
       // never resurrect a deleted stream's _meta dir: the chain record
       // this sidecar summarizes must still exist (read-repair and the
       // async queue can both race a concurrent deleteStream)
-      if (!fs.exists(manifestPath(meta.scope, meta.name, meta.version))) return
+      if (!chain(meta.scope, meta.name).exists(meta.version)) return
       val dst = checkpointPath(meta.scope, meta.name, meta.version)
       val tmp = new Path(dst.getParent,
         dst.getName + ".tmp-" + java.util.UUID.randomUUID())
@@ -1041,7 +725,7 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
       // may already own _meta again). A residual v0-less _meta dir is
       // additionally tolerated everywhere: createStream clears it,
       // listStreams skips it.
-      if (!fs.exists(manifestPath(meta.scope, meta.name, meta.version)))
+      if (!chain(meta.scope, meta.name).exists(meta.version))
         fs.delete(dst, false): Unit
     } catch { case _: Exception => () }
 
@@ -1074,30 +758,33 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     * never GC'd (no marker file). See [[ManifestFloor]].
     */
   def manifestFloor(scope: String, stream: String): Long =
-    floorChain(scope, stream).read().floor
-
-  /** The full floor record (floor + the stamping gc's incarnation) —
-    * the audit surface Fsck compares against the live v0 identity.
-    */
-  def manifestFloorRecord(scope: String, stream: String): ManifestFloor =
-    floorChain(scope, stream).read()
+    chain(scope, stream).floor()
 
   /** (chain seq, floor record) — the `describe_retention` surface. */
   def manifestFloorWithSeq(scope: String, stream: String): (Long, ManifestFloor) =
-    floorChain(scope, stream).readWithSeq()
+    chain(scope, stream).floorWithSeq()
 
   /** Exact-key probe of the chain's permanent anchor (ops introspection;
     * false on a never-GC'd stream).
     */
   def floorAnchorPresent(scope: String, stream: String): Boolean =
-    floorChain(scope, stream).anchorPresent()
+    chain(scope, stream).floorAnchorPresent()
 
-  /** Corruption audit for Fsck (`gc-floor-anchor-lost`): floor-chain
-    * suffix records are listable while the permanent anchor misses its
-    * exact-key read — see [[FloorChain.anchorLost]].
+  /** The stream's manifest chain audit for Fsck (see
+    * [[ManifestChain.audit]]): a version's base reads when it
+    * reconstructs; the live identity is the current incarnation.
     */
-  def floorAnchorLost(scope: String, stream: String): Boolean =
-    floorChain(scope, stream).anchorLost()
+  def auditStream(scope: String, stream: String): Seq[ChainIssue] =
+    chain(scope, stream).audit(
+      v => scala.util.Try(reconstruct(scope, stream, v)).isSuccess,
+      () => getStream(scope, stream).incarnation)
+
+  /** The chain audit of a registered key-value table's manifests — no
+    * Spark session needed (see [[graft.kv.KeyValueTable.auditChain]]).
+    */
+  def auditKeyValueTable(scope: String, name: String): Seq[ChainIssue] =
+    graft.kv.KeyValueTable.auditChain(graft.kv.KeyValueTable.manifestChain(
+      () => fs, new Path(new Path(kvtRoot(scope), name), "_meta")))
 
   /** Retire manifest history older than `keepVersions` behind the tip —
     * log retention, the piece that keeps `_meta/` from growing one file
@@ -1105,72 +792,47 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     * 3×10^7 objects in one listing). The floor lands on the largest
     * checkpoint-eligible version ≤ (tip − keepVersions) whose SIDECAR is
     * verified readable (read-repaired on the spot if the checkpointer
-    * had crashed), the marker file commits the new floor, and only then
-    * are records and sidecars strictly below it — except the v0 identity
-    * record — physically deleted. As-of reads below the floor fail
-    * loudly at resolution (the same retention-bounded time-travel
-    * contract as data-file sweeps); everything at or above the floor
-    * reconstructs exactly as before. Returns the retired versions.
+    * had crashed); then [[ManifestChain.gc]] commits the floor and deletes
+    * records and sidecars strictly below it — except the v0 identity
+    * record. As-of reads below the floor fail loudly at resolution (the
+    * same retention-bounded time-travel contract as data-file sweeps);
+    * everything at or above the floor reconstructs exactly as before.
+    * Returns the retired versions.
     */
   def gcManifests(scope: String, stream: String, keepVersions: Int): Seq[Long] = {
     require(keepVersions >= 1, "keepVersions must be >= 1")
-    val lock = StreamCatalog.gcLocks.computeIfAbsent(
-      s"$root#$scope/$stream", _ => new Object)
-    lock.synchronized { gcManifestsLocked(scope, stream, keepVersions) }
-  }
-
-  private def gcManifestsLocked(scope: String, stream: String,
-                                keepVersions: Int): Seq[Long] = {
-    val versions = listVersions(scope, stream)
-    if (versions.isEmpty)
-      throw new NoSuchStreamException(s"stream $scope/$stream does not exist")
-    val tip = versions.max
-    val cut = tip - keepVersions
-    val curFloor = manifestFloor(scope, stream)
-    // the floor only ever moves up, in checkpoint-interval steps
-    val cv = (cut / checkpointInterval) * checkpointInterval
-    if (cv <= curFloor || cv <= 0) return Nil
-    val inc = streamIncarnation(scope, stream).getOrElse(
-      throw new GraftException(
-        s"gc aborted for $scope/$stream: identity record unreadable"))
-    // the new floor must carry a readable base BEFORE anything is
-    // deleted; a crashed checkpointer's hole is repaired synchronously.
-    // A CONCURRENT gc with a larger cut may retire cv itself mid-flight —
-    // that is supersession, not failure: their floor covers ours.
-    if (readSidecar(scope, stream, cv, inc).isEmpty) {
-      try writeSidecar(getStreamAt(scope, stream, cv))
-      catch { case _: NoSuchStreamException => }
-      if (readSidecar(scope, stream, cv, inc).isEmpty) {
-        if (manifestFloor(scope, stream) >= cv) return Nil // superseded
-        throw new GraftException(
-          s"gc aborted for $scope/$stream: could not establish a checkpoint base at v$cv")
+    // UNCONDITIONAL sidecar delete (a no-op when absent): a catalog with
+    // a different checkpointInterval may have written sidecars at
+    // versions THIS instance considers ineligible, and those would leak
+    // below the floor forever
+    chain(scope, stream).gc(v =>
+      try fs.delete(checkpointPath(scope, stream, v), false): Unit
+      catch { case _: Exception => () }) { versions =>
+      if (versions.isEmpty)
+        throw new NoSuchStreamException(s"stream $scope/$stream does not exist")
+      val cut = versions.last - keepVersions
+      // the floor only ever moves up, in checkpoint-interval steps
+      val cv = (cut / checkpointInterval) * checkpointInterval
+      if (cv <= manifestFloor(scope, stream) || cv <= 0) None
+      else {
+        val inc = streamIncarnation(scope, stream).getOrElse(
+          throw new GraftException(
+            s"gc aborted for $scope/$stream: identity record unreadable"))
+        // the new floor must carry a readable base BEFORE anything is
+        // deleted; a crashed checkpointer's hole is repaired synchronously.
+        // A CONCURRENT gc with a larger cut may retire cv itself mid-flight —
+        // that is supersession, not failure: their floor covers ours.
+        if (readSidecar(scope, stream, cv, inc).isDefined) Some((cv, inc))
+        else {
+          try writeSidecar(getStreamAt(scope, stream, cv))
+          catch { case _: NoSuchStreamException => }
+          if (readSidecar(scope, stream, cv, inc).isDefined) Some((cv, inc))
+          else if (manifestFloor(scope, stream) >= cv) None // superseded
+          else throw new GraftException(
+            s"gc aborted for $scope/$stream: could not establish a checkpoint base at v$cv")
+        }
       }
     }
-    // the marker CAS: floors are monotone across JVMs by construction
-    // (FloorChain appends through exclusive-create — losing the append
-    // means a concurrent gc advanced the chain first), so a slower gc
-    // racing a larger-cut gc can never regress the floor; the loser
-    // discovers supersession atomically and leaves the deletes to the
-    // winner (whose retired range covers ours).
-    if (!floorChain(scope, stream).advance(cv, inc)) return Nil
-    // ASCENDING delete order: a crashed/overtaken sweep always leaves a
-    // deleted PREFIX of (0, floor), which is what lets Fsck classify a
-    // partially-swept chain as benign retention (not corruption) and
-    // keeps the probe walks' miss-at-first-hole geometry predictable.
-    val retired = versions.filter(v => v > 0 && v < cv).sorted
-    retired.foreach { v =>
-      try fs.delete(manifestPath(scope, stream, v), false)
-      catch { case _: Exception => () } // idempotent: re-run finishes the job
-      // UNCONDITIONAL sidecar delete (a no-op when absent): eligibility
-      // is a per-instance notion — a catalog configured with a different
-      // checkpointInterval may have written sidecars at versions THIS
-      // instance considers ineligible, and those are invisible to
-      // listVersions, so gating the delete on this instance's interval
-      // would leak them below the floor forever.
-      try fs.delete(checkpointPath(scope, stream, v), false)
-      catch { case _: Exception => () }
-    }
-    retired
   }
 
   /** The CURRENT incarnation id of a stream, read from the v0 record —
@@ -1343,8 +1005,9 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
       case _ => Some(state)
     }
 
+  /** CAS `meta0` as its version; None = the version was already taken. */
   private def writeManifest(meta0: StreamMetadata,
-                            prev: Option[StreamMetadata]): StreamMetadata = {
+                            prev: Option[StreamMetadata]): Option[StreamMetadata] = {
     // commit time is stamped INSIDE the manifest at CAS time — the
     // TIMESTAMP AS OF authority (file mtimes are unreliable: coarse
     // granularity / writer clock skew can order them against versions) —
@@ -1399,24 +1062,8 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
         }
       case _ => ManifestRecord(ManifestRecord.Full, meta)
     }
-    val path = manifestPath(meta.scope, meta.name, meta.version)
-    fs.mkdirs(path.getParent)
-    // overwrite=false → exclusive create; the CAS. One retry on a
-    // vanished parent: createStream's residue cleanup (a _meta dir with
-    // no v0 record) can race the nanoseconds between our mkdirs and the
-    // exclusive create — re-mkdir and go again; arbitration is still the
-    // exclusive create itself.
-    val bytes = Serialization.write(rec).getBytes(StandardCharsets.UTF_8)
-    var out: OutputStream = null
-    try {
-      out = try CasFiles.createExclusive(fs, path)
-      catch {
-        case _: java.nio.file.NoSuchFileException | _: FileNotFoundException =>
-          fs.mkdirs(path.getParent)
-          CasFiles.createExclusive(fs, path)
-      }
-      out.write(bytes)
-    } finally if (out != null) out.close()
+    if (!chain(meta.scope, meta.name).create(meta.version,
+        Serialization.write(rec).getBytes(StandardCharsets.UTF_8))) return None
     // seed the cache with what was just committed: the writer's next
     // read-modify-write round trip touches only the tip record
     cacheForward((meta.scope, meta.name), meta)
@@ -1425,6 +1072,6 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     // thread AFTER the CAS landed. A crash before the sidecar lands is
     // invisible — readers replay deltas to the previous base.
     if (checkpointEligible(meta.version)) scheduleCheckpoint(meta)
-    meta
+    Some(meta)
   }
 }

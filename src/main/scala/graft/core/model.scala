@@ -316,9 +316,10 @@ class ManifestChainBrokenException(msg: String) extends GraftException(msg)
 /** A GC retention floor names a retained chain, but no manifest at or
   * above it is readable — concurrent delete or storage corruption. The
   * loud alternative to silently serving the empty pre-history state;
-  * fsck classifies exactly this type as `gc-floor-base`.
+  * fsck classifies exactly this type as `gc-floor-base`. A broken chain
+  * like any other, so callers that catch one catch both.
   */
-class RetentionFloorLostException(msg: String) extends GraftException(msg)
+class RetentionFloorLostException(msg: String) extends ManifestChainBrokenException(msg)
 class StreamSealedException(msg: String) extends GraftException(msg)
 class TruncatedDataException(msg: String) extends GraftException(msg)
 class ConditionalCheckFailedException(msg: String) extends GraftException(msg)

@@ -1,6 +1,7 @@
 package graft.kv
 
-import graft.core.{ConditionalCheckFailedException, GraftException, RetentionFloorLostException}
+import graft.catalog.{ChainIssue, ManifestChain}
+import graft.core.{ConditionalCheckFailedException, GraftException, ManifestChainBrokenException}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.sources.GraftKvTable
@@ -10,7 +11,6 @@ import org.apache.spark.sql.graftshim.RelationShim
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
-import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
@@ -86,23 +86,28 @@ object KeyValueTable {
     ((h % partitionCount) + partitionCount) % partitionCount
   }
 
-  /** Per-table serialization of manifest GC within this JVM — work
-    * deduplication, not a correctness lock (same rationale as
-    * `StreamCatalog.gcLocks`): the floor marker is a CAS-appended chain
-    * ([[graft.catalog.FloorChain]]), monotone across JVMs by
-    * construction, so unserialized concurrent gcs can never regress it.
+  /** The table's manifest chain: self-contained `manifest-%012d.json`
+    * records under `_meta`. Versions start at 1 (an empty table is
+    * version 0, so entry versions stay strictly positive and never
+    * collide with the expectedVersion=0 "must not exist" sentinel); the
+    * LIST-free tip walk is capped at 32 probes, about a few LIST pages'
+    * worth of latency.
     */
-  private[kv] val gcLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private[graft] def manifestChain(fsf: () => FileSystem, metaDir: Path): ManifestChain =
+    new ManifestChain(fsf, metaDir, "manifest-", ".json", first = 1L, probeCap = 32)
 
-  /** Cap on the probe-forward tip walk: each probe is one exists() GET,
-    * so an instance whose hint is FAR behind (idle against a busy table)
-    * must fall back to one LIST rather than pay a sequential round trip
-    * per missed version. 32 probes ≈ a few LIST pages' worth of latency
-    * — past that the listing wins.
+  private def decode(bytes: Array[Byte]): KvManifest = {
+    implicit val fmts: Formats = DefaultFormats
+    Serialization.read[KvManifest](new String(bytes, StandardCharsets.UTF_8))
+  }
+
+  /** The chain half of fsck, without Spark: a version's base reads when
+    * its manifest parses (KV manifests are self-contained); the live
+    * identity is the newest readable manifest's incarnation.
     */
-  val ProbeWalkCap: Int = 32
-
+  def auditChain(chain: ManifestChain): Seq[ChainIssue] =
+    chain.audit(v => scala.util.Try(decode(chain.bytes(v))).isSuccess,
+      () => chain.readTip(v => decode(chain.bytes(v))).fold("")(_._2.incarnation))
 }
 
 class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
@@ -118,116 +123,24 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
 
   // ------------------------------------------------------------- manifest io
 
-  private def manifestPath(v: Long) = new Path(metaDir, f"manifest-$v%012d.json")
-  // the GC retention floor: a CAS-appended `floor-<seq>.json` chain
-  // under _meta (names deliberately outside the `manifest-*` pattern,
-  // invisible to the version listing) — see graft.catalog.FloorChain
-  private val floorChain = new graft.catalog.FloorChain(() => fs, metaDir)
+  // the GC retention floor rides the chain: `floor-<seq>.json` records
+  // under _meta, outside the `manifest-*` names
+  private val chain = KeyValueTable.manifestChain(() => fs, metaDir)
 
-  private def listedVersions(): Seq[Long] =
-    try fs.listStatus(metaDir).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("manifest-") =>
-        n.stripPrefix("manifest-").stripSuffix(".json").toLong }.toSeq
-    catch { case _: FileNotFoundException => Seq.empty[Long] }
+  private def readManifest(v: Long): KvManifest = KeyValueTable.decode(chain.bytes(v))
 
-  /** Newest version this instance has SEEN — the probe-forward hint that
-    * keeps warm reads and commits LIST-free (VersionsBench measured the
-    * `_meta` listing at ~150 ms once a chain passes 10^4 versions, paid
-    * by EVERY read and CAS round trip). Only a hint: a stale or retired
-    * value falls back to the listing path, never to a wrong answer.
+  /** The newest committed manifest (empty table = version 0). Manifests
+    * are SELF-CONTAINED, so whatever version the tip walk lands on reads
+    * as exactly that version's full state — delete+recreate of the same
+    * name can never mix incarnations.
     */
-  @volatile private var tipHint: Long = 0L
+  private def latest(): KvManifest =
+    chain.readTip(readManifest).map(_._2).getOrElse(KvManifest(name, partitionCount, 0L, Nil))
 
-  private def latest(): KvManifest = {
-    // Dense-chain fast path: probe exact keys forward from the hint — no
-    // LIST. Sound because the chain is dense, exact-key reads are
-    // read-after-write consistent on object stores, manifests are
-    // SELF-CONTAINED (whatever version the probe lands on, reading it
-    // yields exactly that version's full state — delete+recreate of the
-    // same name can never mix incarnations), and a probe walk stopped at
-    // a concurrent-GC hole lands below the floor marker (written before
-    // any delete) — detected, falls back to the listing.
-    val hint = tipHint
-    if (hint > 0L && fs.exists(manifestPath(hint))) {
-      // capped walk: a hint that is ProbeWalkCap+ versions behind falls
-      // back to the listing (one LIST beats thousands of serial GETs;
-      // the worst case otherwise inverts the warm-path optimization)
-      val cap = hint + KeyValueTable.ProbeWalkCap
-      var max = hint
-      while (max < cap && fs.exists(manifestPath(max + 1))) max += 1
-      // floorFast: one exists() miss when the floor chain hasn't
-      // advanced — stale only after a cross-instance delete+recreate,
-      // which the LIST-path fallback below resolves authoritatively
-      if (max < cap && max >= floorChain.floorFast()) {
-        val m = readManifest(max)
-        tipHint = max
-        return m
-      }
-    }
-    val listed = listedVersions()
-    // List-after-write-lag guard (same trick as StreamCatalog
-    // .listVersions): the commit chain is dense from 1, so probe
-    // exists() past the listed max — an object store's stale LIST can
-    // never hide a committed manifest from the next reader/committer.
-    val listedMax = if (listed.isEmpty) 0L else listed.max
-    var max = listedMax
-    while (fs.exists(manifestPath(max + 1))) max += 1
-    // GC + list-lag double-blind (GcRaceSpec caught the stream twin
-    // live): gcManifests retires [1, floor) and the probe walk above
-    // dies at the first retired version — if the lag window also hides
-    // every RETAINED manifest from the listing, max lands at 0 and the
-    // table would silently read as EMPTY. The floor marker is the
-    // recovery base (retained by contract: marker before deletes,
-    // floors monotone across JVMs by CAS-append) — probe forward from
-    // it; re-read the floor if a concurrent gc advanced it mid-probe
-    // (strictly increasing, so the loop terminates; a floor chain
-    // removed by deleteTable reads as 0 and falls through). The floor
-    // is read UNCONDITIONALLY (one cheap chain read) and the recovery
-    // skipped only when max already reached it: a probe-confirmed
-    // manifest is NOT proof by itself — a concurrent gc can OVERTAKE
-    // the walk (walk confirms v, gc retires v..floor-1, probe of v+1
-    // misses), leaving max at a now-deleted version >= 1 below the
-    // whole retained chain (r13 ADVICE; "deleted prefix" holds for a
-    // snapshot, not a time-spanning walk).
-    var fl = floorChain.read().floor
-    var prevFl = -1L
-    while (max < fl && fl != prevFl) {
-      var n2 = fl
-      while (fs.exists(manifestPath(n2))) { max = n2; n2 += 1 }
-      prevFl = fl
-      if (max < fl) fl = floorChain.read().floor
-    }
-    if (max < fl)
-      throw new RetentionFloorLostException(
-        s"kv $name: retention floor $fl names a retained chain but no " +
-          s"manifest at or above it is readable (max found $max) — " +
-          "concurrent delete or storage corruption")
-    // empty table = version 0, so the FIRST commit is version 1: entry
-    // versions stay strictly positive and can never collide with the
-    // reserved expectedVersion=0 ("must not exist") sentinel
-    if (max == 0L) KvManifest(name, partitionCount, 0L, Nil)
-    else {
-      val m = readManifest(max)
-      tipHint = max
-      m
-    }
-  }
-
-  private def readManifest(v: Long): KvManifest = {
-    val in = fs.open(manifestPath(v))
-    try Serialization.read[KvManifest](
-      new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-    finally in.close()
-  }
-
-  private def commit(m0: KvManifest, prevCommittedAt: Long): KvManifest = {
-    // commit time stamped INSIDE the manifest at CAS time (file mtimes
-    // are unreliable across stores) — the TIMESTAMP AS OF authority —
-    // and CLAMPED to never precede the previous commit's stamp: the CAS
-    // serializes commits, so the sequence is monotone by construction
-    // even across skewed writer clocks, which is what lets versionAtTime
-    // resolve by pure binary search (same contract as
-    // StreamCatalog.writeManifest)
+  /** CAS `m0` as its version; false = the version was already taken. */
+  private def commit(m0: KvManifest, prevCommittedAt: Long): Boolean = {
+    // the TIMESTAMP AS OF stamp, clamped monotone exactly as
+    // StreamCatalog.writeManifest's
     // v1 = the incarnation's first commit: mint its identity here (the
     // CAS arbitrates racing first-committers, so exactly one identity
     // ever lands); every later commit carries the tip's forward
@@ -235,13 +148,7 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
       math.max(System.currentTimeMillis(), prevCommittedAt),
       incarnation =
         if (m0.version == 1L) UUID.randomUUID().toString else m0.incarnation)
-    fs.mkdirs(metaDir)
-    val out = graft.catalog.CasFiles.createExclusive(fs, manifestPath(m.version)) // exclusive → CAS
-    try out.write(Serialization.write(m).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // the committer's next read-modify-write probes forward from here
-    tipHint = m.version
-    m
+    chain.create(m.version, Serialization.write(m).getBytes(StandardCharsets.UTF_8))
   }
 
   // ------------------------------------------------------------------ write
@@ -311,17 +218,13 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
         .sortWithinPartitions($"bucket", $"pk", $"sk")
         .write.parquet(deltaDir.toString)
 
-      try {
-        commit(m.copy(version = commitVersion,
+      if (commit(m.copy(version = commitVersion,
           files = m.files :+ KvFile(deltaDir.toString, "delta", commitVersion)),
-          m.committedAt)
+          m.committedAt))
         return commitVersion
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException | _: java.nio.file.FileAlreadyExistsException =>
-          fs.delete(deltaDir, true) // lost the race: re-check conditions on fresh state
-          attempts += 1
-          if (attempts > 10) throw new ConditionalCheckFailedException(s"kv $name: CAS lost $attempts times")
-      }
+      fs.delete(deltaDir, true) // lost the race: re-check conditions on fresh state
+      attempts += 1
+      if (attempts > 10) throw new ConditionalCheckFailedException(s"kv $name: CAS lost $attempts times")
     }
     -1L // unreachable
   }
@@ -444,7 +347,7 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
   /** The GC retention floor: manifest versions below it are retired.
     * 0 = never GC'd.
     */
-  def manifestFloor: Long = floorChain.read().floor
+  def manifestFloor: Long = chain.floor()
 
   /** This table incarnation's creation identity (minted by the v1
     * commit, carried by every commit after it; "" before the first
@@ -453,54 +356,31 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
   def incarnation: String = latest().incarnation
 
   /** (chain seq, floor record) — the `kv_describe_retention` surface. */
-  def floorWithSeq: (Long, graft.catalog.ManifestFloor) = floorChain.readWithSeq()
+  def floorWithSeq: (Long, graft.catalog.ManifestFloor) = chain.floorWithSeq()
 
   /** Exact-key probe of the floor chain's permanent anchor (false on a
     * never-GC'd table).
     */
-  def floorAnchorPresent: Boolean = floorChain.anchorPresent()
+  def floorAnchorPresent: Boolean = chain.floorAnchorPresent()
 
   /** Retire manifest history older than `keepVersions` behind the tip —
     * the KVT side of manifest-log retention (the chain otherwise grows
     * one file per commit forever). KV manifests are SELF-CONTAINED full
     * state, so unlike the stream log no checkpoint base is needed: any
-    * retained version reconstructs alone. The floor marker commits
-    * first (crash-safe: a floor claiming more than was deleted only
-    * skips some lag probes), then manifests strictly below it are
-    * deleted. As-of reads (`entriesAt`, SQL `VERSION AS OF`) below the
-    * floor fail loudly at resolution; `deltaSince` and live reads only
-    * ever read the LATEST manifest and are unaffected. Returns the
-    * retired versions.
+    * retained version reconstructs alone. [[ManifestChain.gc]] commits the
+    * floor (stamped with the table's incarnation, so a chain surviving a
+    * delete+recreate audits as stale), then deletes manifests below it.
+    * As-of reads (`entriesAt`, SQL `VERSION AS OF`) below the floor fail
+    * loudly at resolution; `deltaSince` and live reads only ever read the
+    * LATEST manifest and are unaffected. Returns the retired versions.
     */
   def gcManifests(keepVersions: Int): Seq[Long] = {
     require(keepVersions >= 1, "keepVersions must be >= 1")
-    val lock = KeyValueTable.gcLocks.computeIfAbsent(
-      tableDir.toString, _ => new Object)
-    lock.synchronized { gcManifestsLocked(keepVersions) }
-  }
-
-  private def gcManifestsLocked(keepVersions: Int): Seq[Long] = {
-    val m = latest()
-    val cut = m.version - keepVersions
-    if (cut <= 0 || cut <= manifestFloor) return Nil
-    // the marker CAS: floors are monotone across JVMs by construction
-    // (FloorChain appends through exclusive-create), so a slower gc
-    // racing a larger-cut gc can never regress the floor — the loser
-    // discovers supersession atomically and leaves the deletes to the
-    // winner (whose retired range covers ours). The record carries the
-    // table's incarnation identity (symmetric with the stream side's v0
-    // stamp) so a chain surviving a delete+recreate audits as stale.
-    if (!floorChain.advance(cut, m.incarnation)) return Nil
-    // ASCENDING delete order: a crashed/overtaken sweep always leaves a
-    // deleted PREFIX of [1, floor), which is what lets fsck classify a
-    // partially-swept chain as benign retention (not corruption) and
-    // keeps the probe walks' miss-at-first-hole geometry predictable.
-    val retired = listedVersions().filter(v => v >= 1 && v < cut).sorted
-    retired.foreach { v =>
-      try fs.delete(manifestPath(v), false)
-      catch { case _: Exception => () } // idempotent: a re-run finishes
+    chain.gc() { _ =>
+      val m = latest()
+      val cut = m.version - keepVersions
+      if (cut <= 0 || cut <= manifestFloor) None else Some((cut, m.incarnation))
     }
-    retired
   }
 
   /** Snapshot (time-travel) read: the table as of commit `version`.
@@ -520,79 +400,16 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
   def entriesAt(version: Long): DataFrame = resolvedAt(manifestAt(Some(version)))
 
   /** Latest commit version stamped at or before `epochMillis` — the
-    * `TIMESTAMP AS OF` resolution surface, mirroring
-    * `StreamCatalog.versionAtTime`: the answer is max{v : stamp(v) <= t}
-    * (ascending-scan-keep-last semantics — clock skew between racing
-    * committers can never smuggle post-t commits in), mtime fallback for
-    * pre-upgrade manifests. None if the table had no commit yet at t;
-    * throws [[graft.core.TruncatedDataException]] when the instant falls
-    * inside GC-retired history (floor > 0 and nothing retained
-    * qualifies) — the retention contract fails loudly instead of
-    * guessing.
-    *
-    * Cost: commit stamps are MONOTONE by construction (every CAS clamps
-    * the stamp to at least the previous commit's — see [[commit]]), so
-    * resolution is a pure binary search over the RETAINED range
-    * [max(1,floor), tip]: O(log n) manifest GETs, and retired versions
-    * are never probed at all (the old linear scan paid one exists miss
-    * plus an exception per retired version). A short backward
-    * verify-walk absorbs local inversions in pre-clamp history; on
-    * clamped chains it never takes a step.
+    * `TIMESTAMP AS OF` resolution surface (see
+    * [[ManifestChain.versionAtTime]]): max{v : stamp(v) <= t}, mtime
+    * fallback for pre-upgrade manifests. None if the table had no commit
+    * yet at t; [[graft.core.TruncatedDataException]] when the instant falls
+    * inside GC-retired history — with no version 0, that includes an
+    * instant before the first commit once a floor exists.
     */
-  def versionAtTime(epochMillis: Long): Option[Long] = {
-    val floor = manifestFloor
-    val tip = latest().version
-    val lo0 = math.max(1L, floor)
-    def gated(best: Option[Long]): Option[Long] = {
-      if (best.isEmpty && floor > 0L)
-        throw new graft.core.TruncatedDataException(
-          s"kv table $name history at ${java.time.Instant.ofEpochMilli(epochMillis)} " +
-            s"was garbage-collected (manifest retention floor is version $floor)")
-      best
-    }
-    if (tip < lo0) return gated(None)
-    def stampOf(v: Long): Long = {
-      def once(): Long = {
-        val m = readManifest(v)
-        if (m.committedAt != 0L) m.committedAt
-        else fs.getFileStatus(manifestPath(v)).getModificationTime
-      }
-      // torn read at the chain tip (CAS winner mid-write) = "not
-      // committed yet": +∞ keeps the bisection sound; a missing file
-      // (concurrent gc) propagates for the linear fallback
-      for (_ <- 1 to 3) {
-        try return once()
-        catch {
-          case e: java.io.FileNotFoundException => throw e
-          case _: Exception => Thread.sleep(5)
-        }
-      }
-      Long.MaxValue
-    }
-    def linear(): Option[Long] = {
-      var best: Option[Long] = None
-      for (v <- lo0 to tip) {
-        try if (stampOf(v) <= epochMillis) best = Some(v)
-        catch { case _: Exception => } // concurrently removed: skip
-      }
-      gated(best)
-    }
-    try {
-      var lo = lo0
-      var hi = tip + 1 // first version with stamp > t, or tip+1
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (stampOf(mid) > epochMillis) hi = mid else lo = mid + 1
-      }
-      var v = lo - 1
-      while (v >= lo0 && stampOf(v) > epochMillis) v -= 1
-      gated(if (v < lo0) None else Some(v))
-    } catch {
-      // concurrent GC (floor moved) or drop mid-search: one linear pass
-      // over what remains keeps the old skip-on-missing semantics
-      case _: FileNotFoundException => linear()
-    }
-  }
+  def versionAtTime(epochMillis: Long): Option[Long] =
+    chain.versionAtTime(epochMillis, () => Some(latest().version))(
+      b => KeyValueTable.decode(b).committedAt)
 
   /** The committed manifest at `version` (None = latest) — the planning
     * surface for the SQL read path (`sources.GraftKvTable`), which needs
@@ -602,24 +419,18 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     case None => latest()
     case Some(v) if v <= 0L => KvManifest(name, partitionCount, 0L, Nil)
     case Some(v) =>
-      val p = manifestPath(v)
-      if (!fs.exists(p))
-        // deliberately no latest() in the message: resolving the tip
-        // costs a probe walk/LIST, and error paths (e.g. probing retired
-        // versions) must stay O(1) — the floor covers the common cause
-        throw new IllegalArgumentException(
-          s"kv table $name has no commit $v" +
-            (if (manifestFloor > 0L) s" (versions below ${manifestFloor} are GC-retired)" else ""))
-      val in = fs.open(p)
-      try Serialization.read[KvManifest](
-        new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-      finally in.close()
+      // deliberately no latest() in the message: resolving the tip costs
+      // a probe walk/LIST, and error paths (e.g. probing retired versions)
+      // must stay O(1) — the floor covers the common cause
+      chain.readAt(v)(readManifest).getOrElse(throw new IllegalArgumentException(
+        s"kv table $name has no commit $v" +
+          (if (manifestFloor > 0L) s" (versions below $manifestFloor are GC-retired)" else "")))
   }
 
   /** Integrity audit of this table's own storage (the KVT counterpart
-    * of `tools.Fsck`'s stream checks — O(metadata), no data scan):
-    * manifest chain complete (history for the delta feed and as-of
-    * reads, bounded by the compaction horizon for data files), every
+    * of `tools.Fsck`'s stream checks — O(metadata), no data scan): the
+    * manifest chain audit ([[ManifestChain.audit]]: history for the delta
+    * feed and as-of reads, torn tip, GC floor), every
     * LIVE file present, and directory-parquet files that are neither
     * live nor pending-delete flagged as orphans (a crashed writer's
     * leak — harmless to reads, reclaimable). Returns human-readable
@@ -630,76 +441,13 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
 
   def fsck(): Seq[String] = {
     val issues = Seq.newBuilder[String]
+    issues ++= KeyValueTable.auditChain(chain).map(i => s"${i.kind}: ${i.detail}")
     // a floor naming an unreachable retained chain throws loudly in
-    // latest() (never a silent empty-table answer) — fsck's job is to
-    // REPORT that state, not crash on it. Only the DEDICATED type is
-    // classified: any other failure from latest() is not a floor issue
-    // and must propagate as itself, not masquerade as one.
+    // latest(); the audit above reported it, and there is no live
+    // manifest to check files against
     val m =
       try latest()
-      catch {
-        case e: RetentionFloorLostException =>
-          return Seq(s"gc-floor-base: ${e.getMessage}")
-      }
-    // versions below the GC floor are retired by contract, not holes.
-    // A REGRESSED marker (legacy rename-replace surgery; unreachable
-    // through the FloorChain CAS) reads as holes spanning exactly
-    // [floor, X) with the chain from X intact — a healthy store with a
-    // stale marker, self-healing because floors only move up: one
-    // benign advisory, not chain-corruption spam (mirrors the stream
-    // side's Fsck classification).
-    val floor = manifestFloor
-    val missing = (math.max(1L, floor) to m.version)
-      .filterNot(v => fs.exists(manifestPath(v)))
-    val regressedBase: Option[Long] =
-      if (floor <= 0L || missing.isEmpty) None
-      else {
-        val x = missing.max + 1
-        val contiguousFromFloor =
-          missing.head == floor && missing.sameElements(floor until x) &&
-            x <= m.version
-        // KV manifests are self-contained: X parsing IS the base check
-        if (contiguousFromFloor &&
-            (try { readManifest(x); true } catch { case _: Exception => false }))
-          Some(x)
-        else None
-      }
-    regressedBase match {
-      case Some(x) =>
-        issues += (s"gc-floor-regressed: floor marker at v$floor but " +
-          s"versions $floor..${x - 1} are already retired; retained " +
-          "chain from v" + x + " is intact — benign stale marker, " +
-          "self-heals on the next gc pass")
-      case None =>
-        missing.foreach(v =>
-          issues += s"manifest-chain: missing version $v of ${m.version}")
-    }
-    // gc-floor-anchor-lost: suffix floor records listable while the
-    // PERMANENT anchor (floor-1, never pruned) misses its exact-key
-    // read — unreachable through the chain's own protocol, so hand
-    // surgery or storage corruption. A fully lag-blinded cold reader in
-    // this state would read floor 0 and lose the gc × list-lag recovery
-    // base; the chain's cold read now recovers a positive floor from
-    // the listed suffix, and THIS is where the state gets reported.
-    if (floorChain.anchorLost())
-      issues += ("gc-floor-anchor-lost: floor chain records exist but " +
-        "the permanent floor-1 anchor misses its exact-key read — hand " +
-        "surgery or storage corruption; a fully list-lag-blinded cold " +
-        "reader would otherwise conclude the table was never GC'd")
-    // gc-floor-stale-incarnation: the floor chain names a DIFFERENT
-    // table incarnation than the live manifest chain — a chain that
-    // survived a delete+recreate (its floor constrains versions of a
-    // dead chain; the new chain's versions collide numerically). ""
-    // on either side = pre-upgrade records, exempt.
-    locally {
-      val fc = floorChain.read()
-      if (fc.floor > 0L && fc.incarnation.nonEmpty && m.incarnation.nonEmpty &&
-          fc.incarnation != m.incarnation)
-        issues += (s"gc-floor-stale-incarnation: floor chain stamped by " +
-          s"incarnation ${fc.incarnation} but the live chain is " +
-          s"${m.incarnation} — floor survived a delete+recreate; delete " +
-          "the floor-*.json records (next gc re-establishes the floor)")
-    }
+      catch { case _: ManifestChainBrokenException => return issues.result() }
     m.files.foreach { f =>
       if (!fs.exists(new Path(f.path)))
         issues += s"file-missing: live ${f.kind} file ${f.path} (commit ${f.commitVersion})"
@@ -746,20 +494,17 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
       .repartition(partitionCount, $"bucket")
       .sortWithinPartitions($"bucket", $"pk", $"sk")
       .write.parquet(baseDir.toString)
-    try {
-      // replaced files become tombstones with a reader-grace deadline —
-      // an in-flight read planned from the old manifest can finish;
-      // sweepDeletes() reclaims them afterwards
-      val deadline = System.currentTimeMillis() + deleteGraceMillis
-      commit(KvManifest(name, partitionCount, m.version + 1,
+    // replaced files become tombstones with a reader-grace deadline —
+    // an in-flight read planned from the old manifest can finish;
+    // sweepDeletes() reclaims them afterwards
+    val deadline = System.currentTimeMillis() + deleteGraceMillis
+    if (!commit(KvManifest(name, partitionCount, m.version + 1,
         Seq(KvFile(baseDir.toString, "base", m.version)),
         m.pendingDeletes ++ m.files.map(f => KvPendingDelete(f.path, deadline)),
         incarnation = m.incarnation),
-        m.committedAt)
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException | _: java.nio.file.FileAlreadyExistsException =>
-        fs.delete(baseDir, true)
-        throw new GraftException(s"kv $name: compaction lost CAS; rerun")
+        m.committedAt)) {
+      fs.delete(baseDir, true)
+      throw new GraftException(s"kv $name: compaction lost CAS; rerun")
     }
   }
 
@@ -777,13 +522,10 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     val donePaths = due.map(_.path)
       .filter(p => scala.util.Try(fs.delete(new Path(p), true)).getOrElse(false))
       .toSet
-    try commit(m.copy(version = m.version + 1,
+    // a lost CAS is fine: the files are gone, tombstones clear on a later sweep
+    commit(m.copy(version = m.version + 1,
       pendingDeletes = m.pendingDeletes.filterNot(p => donePaths.contains(p.path))),
-      m.committedAt)
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException | _: java.nio.file.FileAlreadyExistsException =>
-        () // lost the CAS: files are gone, tombstones clear on a later sweep
-    }
+      m.committedAt): Unit
     donePaths.toSeq.sorted
   }
 

@@ -1,10 +1,10 @@
 package graft.kv
 
+import graft.catalog.ManifestChain
 import graft.core.ConditionalCheckFailedException
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 
 /** Optimistically-replicated shared state
@@ -13,7 +13,8 @@ import java.nio.charset.StandardCharsets
   * revision file per version; an update reads the latest revision, applies
   * a function, and commits the next revision with create-if-absent
   * semantics — the exact CAS-at-offset behavior of a revisioned stream,
-  * with the revision number standing in for the stream offset.
+  * with the revision number standing in for the stream offset. The
+  * revisions are a [[ManifestChain]] of `rev-%012d` records from 0.
   *
   * Driver-side by design: this is coordination metadata (reader-group
   * state, app config), never bulk data.
@@ -23,17 +24,17 @@ class StateSynchronizer(rootDir: String, name: String,
 
   private val dir = new Path(new Path(rootDir), s"_state/$name")
   private def fs: FileSystem = dir.getFileSystem(hadoopConf)
-  private def revPath(r: Long) = new Path(dir, f"rev-$r%012d")
+  private val chain = new ManifestChain(() => fs, dir, "rev-", "", first = 0L, probeCap = 32)
 
   /** Revision files are FRAMED (`GSR1 <len> <crc32>\n<payload>`) because
     * exclusive-create + write is not one atomic step on every FS: a
     * concurrent reader can open a just-claimed revision before its bytes
     * land and would otherwise take the truncation as valid state — the
     * silent-lost-update shape a shared counter turns into corruption.
-    * The frame lets [[fetch]] detect an in-flight write, retry briefly,
-    * and fall back to the newest COMPLETE revision (safe: a stale fetch
-    * only makes the next conditional write lose its CAS and retry).
-    * Mirrors the manifest read path's retry+fallback in StreamCatalog.
+    * The frame lets [[fetch]] detect an in-flight write, which the
+    * chain's torn-tip read retries and then falls back from (safe: a
+    * stale fetch only makes the next conditional write lose its CAS and
+    * retry).
     */
   private val Magic = "GSR1 "
 
@@ -65,55 +66,19 @@ class StateSynchronizer(rootDir: String, name: String,
   }
 
   /** Latest (revision, state); revision -1 = no state yet. */
-  def fetch(): (Long, Option[String]) = {
-    val listed =
-      try fs.listStatus(dir).iterator.map(_.getPath.getName)
-        .collect { case n if n.startsWith("rev-") => n.stripPrefix("rev-").toLong }.toSeq
-      catch { case _: FileNotFoundException => Seq.empty[Long] }
-    // list-after-write-lag guard (same dense-chain probe as the stream
-    // and KV manifests): revisions are 0,1,2,…, so exists() past the
-    // listed max finds commits a stale object-store LIST hides
-    val extra = Seq.newBuilder[Long]
-    var next = if (listed.isEmpty) 0L else listed.max + 1
-    while (fs.exists(revPath(next))) { extra += next; next += 1 }
-    val revs = listed ++ extra.result()
-    def read(r: Long): Option[String] = {
-      val in = fs.open(revPath(r))
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 8192, false)
-        unframe(bytes.toByteArray)
-      } finally in.close()
-    }
-    // newest first: retry the newest briefly (its writer may be mid-put),
-    // then fall back to the previous complete revision
-    for ((r, idx) <- revs.sorted.reverse.zipWithIndex) {
-      val retries = if (idx == 0) 20 else 1
-      for (_ <- 1 to retries) {
-        read(r) match {
-          case Some(s) => return (r, Some(s))
-          case None => Thread.sleep(5)
-        }
-      }
-    }
-    (-1L, None)
-  }
+  def fetch(): (Long, Option[String]) =
+    chain.readTip(r => unframe(chain.bytes(r)).getOrElse(
+      throw new java.io.IOException(s"state $name: revision $r incomplete")))
+      .fold((-1L, Option.empty[String])) { case (r, st) => (r, Some(st)) }
 
   /** writeConditionally (RevisionedStreamClient.java:78): commit `state` as
     * `expectedRevision + 1`; loses → ConditionalCheckFailed.
     */
   def writeConditionally(expectedRevision: Long, state: String): Long = {
-    fs.mkdirs(dir)
     val next = expectedRevision + 1
-    try {
-      val out = graft.catalog.CasFiles.createExclusive(fs, revPath(next))
-      try out.write(frame(state)) finally out.close()
-      next
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException | _: java.nio.file.FileAlreadyExistsException =>
-        throw new ConditionalCheckFailedException(
-          s"state $name: revision $next already written")
-    }
+    if (!chain.create(next, frame(state)))
+      throw new ConditionalCheckFailedException(s"state $name: revision $next already written")
+    next
   }
 
   /** Retry loop: fetch → transform → conditional write (the
@@ -130,14 +95,14 @@ class StateSynchronizer(rootDir: String, name: String,
     throw new ConditionalCheckFailedException(s"state $name: update lost $maxRetries races")
   }
 
-  /** Compact old revisions (StateSynchronizer.compact analog): drop all but
-    * the newest `keep` revisions.
+  /** Compact old revisions (StateSynchronizer.compact analog): the chain's
+    * GC keeping the newest `keep` revisions (revision 0 is never retired).
     */
   def compact(keep: Int = 1): Unit = {
-    val revs =
-      try fs.listStatus(dir).iterator.map(_.getPath.getName)
-        .collect { case n if n.startsWith("rev-") => n.stripPrefix("rev-").toLong }.toSeq.sorted
-      catch { case _: FileNotFoundException => return }
-    revs.dropRight(keep).foreach(r => fs.delete(revPath(r), false))
+    require(keep >= 1, "keep must be >= 1")
+    chain.gc() { revs =>
+      val floor = revs.lastOption.fold(0L)(_ - keep + 1)
+      if (floor <= 1L || floor <= chain.floor()) None else Some((floor, ""))
+    }: Unit
   }
 }

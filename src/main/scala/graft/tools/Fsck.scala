@@ -11,17 +11,23 @@ import org.apache.hadoop.fs.Path
   * corpus size.
   *
   * Checks per stream:
-  *  - manifest chain: versions 1..current all present (the delta feed
-  *    and as-of reads walk this history);
+  *  - the manifest chain audit ([[graft.catalog.ManifestChain.audit]]):
+  *    `manifest-chain` (a version missing above the GC floor — the delta
+  *    feed and as-of reads walk this history), `manifest-torn`,
+  *    `gc-floor-base`, `gc-floor-regressed`, `gc-floor-anchor-lost` and
+  *    `gc-floor-stale-incarnation`;
   *  - file existence: every live `FileEntry` resolves on the store, and
   *    its on-disk length matches the manifest-recorded `byteSize`
   *    (0 = pre-size manifest, skipped);
   *  - offset geometry: per segment, live files tile
   *    [max(head, startOffset), tailOffset) contiguously — no gap, no
   *    overlap (offsets below the truncation head are legitimately gone);
-  *  - segment geometry: open segments' key ranges tile [0, 1).
+  *  - segment geometry: open segments' key ranges tile [0, 1);
+  *  - orphan data dirs, expired or stuck transactions.
   *
-  * KV tables: latest manifest parses and every live file exists.
+  * Per registered KV table: the registration config parses, and the same
+  * chain audit over the table's `_meta` manifests (no Spark needed).
+  * Live KV files and orphans are `KeyValueTable.fsck()`'s job.
   *
   * Usage: runMain graft.tools.Fsck <rootDir> [scope]
   * Exit 0 = clean; 1 = issues (one line each: scope/stream kind detail).
@@ -30,21 +36,13 @@ object Fsck {
 
   final case class Issue(where: String, kind: String, detail: String)
 
+  /** The state checks of one stream's live manifest (the chain itself is
+    * audited by [[checkRoot]]).
+    */
   def checkStream(cat: StreamCatalog, meta: StreamMetadata,
-                  conf: org.apache.hadoop.conf.Configuration,
-                  floorOverride: Option[Long] = None): Seq[Issue] = {
+                  conf: org.apache.hadoop.conf.Configuration): Seq[Issue] = {
     val where = s"${meta.scope}/${meta.name}"
     val issues = Seq.newBuilder[Issue]
-
-    // manifest history (delta feed / as-of read dependency); versions in
-    // (0, floor) are GC-retired by contract, not holes. A caller that
-    // already classified a REGRESSED marker (checkRoot) passes the
-    // effective retained base so the same benign holes are not
-    // re-reported as chain corruption here.
-    val versions = cat.manifestVersions(meta.scope, meta.name).toSet
-    val floor = floorOverride.getOrElse(cat.manifestFloor(meta.scope, meta.name))
-    (1L to meta.version).filterNot(versions.contains).filter(_ >= floor).foreach(v =>
-      issues += Issue(where, "manifest-chain", s"missing manifest version $v"))
 
     // file existence + recorded sizes
     val fs = new Path(meta.files.headOption.map(_.path).getOrElse("/")).getFileSystem(conf)
@@ -168,115 +166,22 @@ object Fsck {
     val scopes = onlyScope.map(Seq(_)).getOrElse(cat.listScopes())
     scopes.flatMap { scope =>
       val streamIssues = cat.listStreams(scope).flatMap { st =>
-        // chain density from the version listing, independent of state
-        // reconstruction: with the incremental manifest log a mid-chain
-        // hole makes getStream fail loudly
-        // (ManifestChainBrokenException) rather than reconstruct, so the
-        // chain report must not depend on it. manifestVersions is the
-        // LAG-COMPENSATED listing (every hole from 0 to max confirmed by
-        // a direct exists() probe), so an object-store listing that
-        // surfaces a newer manifest before an older one never reads as
-        // corruption here
-        // a floor naming an unreachable retained chain throws loudly in
-        // listVersions (never a silent empty answer) — fsck's job is to
-        // REPORT that state, so catch and classify it here
-        val listed =
-          try cat.manifestVersions(scope, st)
-          catch { case _: graft.core.ManifestChainBrokenException => Seq.empty[Long] }
-        // versions in (0, floor) are GC-retired by contract, not holes;
-        // the floor itself must still carry its base (v0 + the retained
-        // chain reconstruct everything at or above it)
-        val floor = cat.manifestFloor(scope, st)
-        val holes =
-          if (listed.isEmpty) Seq.empty[Long]
-          else (0L to listed.max).filterNot(listed.toSet)
-            .filter(v => v == 0L || v >= floor)
-        // gc-floor-regressed: the marker sits BELOW already-retired
-        // history — the holes are exactly the contiguous range
-        // [floor, X) for a retained X that reconstructs, with the chain
-        // above X intact. That is a healthy store with a stale marker
-        // (self-healing: floors only move up, the next gc pass rewrites
-        // it), not corruption — one advisory line instead of N
-        // chain-corruption pages. Reachable only through legacy
-        // rename-replaced markers or hand surgery: the FloorChain CAS
-        // makes a live regression impossible going forward.
-        val regressedBase: Option[Long] =
-          if (floor <= 0L || holes.isEmpty || holes.head == 0L) None
-          else {
-            val x = holes.max + 1
-            val contiguousFromFloor =
-              holes.head == floor && holes.sameElements(floor until x)
-            val baseOk = contiguousFromFloor && x <= listed.max &&
-              (try { cat.getStreamAt(scope, st, x); true }
-               catch { case _: Exception => false })
-            if (baseOk) Some(x) else None
-          }
-        val chainIssues = regressedBase match {
-          case Some(x) => Seq(Issue(s"$scope/$st", "gc-floor-regressed",
-            s"floor marker at v$floor but versions $floor..${x - 1} are " +
-              s"already retired; retained chain from v$x is intact — " +
-              "benign stale marker, self-heals on the next gc pass"))
-          case None => holes.map(v =>
-            Issue(s"$scope/$st", "manifest-chain", s"missing manifest version $v"))
-        }
-        // a GC'd stream's oldest retained versions reconstruct from the
-        // floor's checkpoint sidecar — if that base was lost after GC,
-        // they are unreadable: corruption, not retention. In the
-        // regressed state the effective base is X (already verified).
-        val floorIssues =
-          if (floor <= 0L || regressedBase.isDefined) Seq.empty
-          else try { cat.getStreamAt(scope, st, floor); Seq.empty[Issue] }
-          catch {
-            case e: Exception => Seq(Issue(s"$scope/$st", "gc-floor-base",
-              s"floor v$floor does not reconstruct (checkpoint base lost after gc): $e"))
-          }
-        // gc-floor-anchor-lost: suffix floor-chain records listable while
-        // the PERMANENT floor-1 anchor misses its exact-key read —
-        // unreachable through the chain's own protocol (prune never
-        // touches seq 1), so hand surgery or storage corruption. A fully
-        // list-lag-blinded cold reader in this state would conclude
-        // "never GC'd" (floor 0) and lose the gc × list-lag recovery
-        // base; FloorChain's cold read now recovers a positive floor
-        // from the listed suffix — this is where the state is REPORTED.
-        val anchorIssues =
-          if (cat.floorAnchorLost(scope, st))
-            Seq(Issue(s"$scope/$st", "gc-floor-anchor-lost",
-              "floor chain records exist but the permanent floor-1 anchor " +
-                "misses its exact-key read — hand surgery or storage " +
-                "corruption; a fully list-lag-blinded cold reader would " +
-                "otherwise conclude the stream was never GC'd"))
-          else Seq.empty
-        // gc-floor-stale-incarnation: the floor chain was stamped by a
-        // DIFFERENT stream incarnation than the live chain — it survived
-        // a delete+recreate and constrains a dead chain's version space.
-        val staleIncIssues =
-          (try {
-            val fr = cat.manifestFloorRecord(scope, st)
-            val live = cat.getStream(scope, st).incarnation
-            if (fr.floor > 0L && fr.incarnation.nonEmpty && live.nonEmpty &&
-                fr.incarnation != live)
-              Seq(Issue(s"$scope/$st", "gc-floor-stale-incarnation",
-                s"floor chain stamped by incarnation ${fr.incarnation} but " +
-                  s"the live chain is $live — floor survived a " +
-                  "delete+recreate; delete the floor-*.json records"))
-            else Seq.empty[Issue]
-          } catch { case _: Exception => Seq.empty[Issue] })
-        chainIssues ++ floorIssues ++ anchorIssues ++ staleIncIssues ++ (
-          try checkStream(cat, cat.getStream(scope, st), conf, floorOverride = regressedBase)
+        // the chain audit reads the lag-compensated listing, independent
+        // of state reconstruction: a mid-chain hole makes getStream fail
+        // loudly, so the chain report must not depend on it
+        cat.auditStream(scope, st).map(i => Issue(s"$scope/$st", i.kind, i.detail)) ++ (
+          try checkStream(cat, cat.getStream(scope, st), conf)
           catch {
             case e: Exception =>
               Seq(Issue(s"$scope/$st", "manifest-unreadable", e.toString))
           })
       }
-      // KVT registrations: config must parse (the tables' own manifests
-      // live under their storage roots and are resolved per read — the
-      // catalog's registration is what fsck owns here)
       val kvIssues = cat.listKeyValueTables(scope).flatMap { t =>
-        try { cat.getKeyValueTableConfig(scope, t); Seq.empty[Issue] }
+        (try { cat.getKeyValueTableConfig(scope, t); Seq.empty[Issue] }
         catch {
           case e: Exception =>
             Seq(Issue(s"$scope/$t", "kvt-config-unreadable", e.toString))
-        }
+        }) ++ cat.auditKeyValueTable(scope, t).map(i => Issue(s"$scope/$t", i.kind, i.detail))
       }
       streamIssues ++ kvIssues
     }

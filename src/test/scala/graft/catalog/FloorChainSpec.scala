@@ -8,8 +8,8 @@ import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, CyclicBarrier}
 
 /** The GC floor marker CAS chain, raced WITHOUT any shared lock — the
-  * cross-JVM surface distilled. `StreamCatalog.gcLocks` serializes gc
-  * passes per (root, stream) IN-PROCESS, which is exactly what used to
+  * cross-JVM surface distilled. `ManifestChain`'s gc lock serializes gc
+  * passes per chain directory IN-PROCESS, which is exactly what used to
   * hide the delete+rename floor window from in-JVM races; every case
   * here uses independent [[FloorChain]] / catalog instances that share
   * NOTHING but the store, on both FS contracts, so the interleavings a
@@ -38,8 +38,8 @@ class FloorChainSpec extends AnyFunSuite {
       conf.set("fs.oscas.impl", classOf[graft.storage.LaggedObjectStoreFs].getName)
     val dir = Files.createTempDirectory(s"graft-floorchain-$contract")
     // a second NAME for the same physical directory: catalog instances
-    // opened through it get a DIFFERENT gcLocks key (the key is
-    // "root#scope/stream"), so their gc passes are as unserialized as
+    // opened through it get a DIFFERENT gcLocks key (the key is the
+    // chain directory's path), so their gc passes are as unserialized as
     // two separate JVMs'
     val alias = Files.createSymbolicLink(
       dir.getParent.resolve(dir.getFileName.toString + "-alias"), dir)

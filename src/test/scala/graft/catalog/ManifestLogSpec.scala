@@ -137,6 +137,7 @@ class ManifestLogSpec extends AnyFunSuite {
     Files.write(torn, Array.empty[Byte])
     val c2 = new StreamCatalog(root, checkpointInterval = 4)
     assert(c2.getStream("s", "x").version == 6L, "torn tip → fall back one version")
+    assert(graft.tools.Fsck.checkRoot(root).map(_.kind).contains("manifest-torn"))
     Files.delete(torn)
 
     // broken chain: CORRUPT a committed mid-chain delta (v5, between the
@@ -554,33 +555,4 @@ class ManifestLogSpec extends AnyFunSuite {
     val kinds = graft.tools.Fsck.checkRoot(root).map(_.kind)
     assert(kinds.contains("gc-floor-base"), kinds.mkString("; "))
   }
-}
-
-/** Instrumented object-store contract FS: counts point-status probes and
-  * listings so specs can assert HOW a read resolved (probe walk vs LIST
-  * fallback), not only what it returned. Separate scheme (`cntfs`) keeps
-  * the counters isolated from parallel suites using `oscas`.
-  */
-class CountingOsFs extends graft.storage.LaggedObjectStoreFs {
-  override def getScheme: String = "cntfs"
-  override def getUri: java.net.URI = java.net.URI.create("cntfs:///")
-  override def getFileStatus(f: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus = {
-    // RawLocalFileSystem.listStatus materializes each child through
-    // getFileStatus — those are part of the ONE listing round trip on a
-    // real store, not extra point GETs, so don't double-count them
-    if (!CountingOsFs.inList.get()) CountingOsFs.statusCalls.incrementAndGet()
-    super.getFileStatus(f)
-  }
-  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
-    CountingOsFs.listCalls.incrementAndGet()
-    CountingOsFs.inList.set(true)
-    try super.listStatus(f) finally CountingOsFs.inList.set(false)
-  }
-}
-
-object CountingOsFs {
-  val statusCalls = new java.util.concurrent.atomic.AtomicLong()
-  val listCalls = new java.util.concurrent.atomic.AtomicLong()
-  val inList: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 }

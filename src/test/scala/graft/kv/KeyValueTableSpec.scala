@@ -521,20 +521,70 @@ class KeyValueTableSpec extends AnyFunSuite {
   }
 
   test("capped probe walk: a far-behind hint falls back to the listing") {
-    val work = Files.createTempDirectory("graft-kvcap").toString
-    val a = new KeyValueTable(spark, work, "t", 2)
+    // on the counting object-store contract, like the stream twin in
+    // ManifestLogSpec: HOW the read resolved, not only what it returned
+    val fsImpl = classOf[graft.catalog.CountingOsFs].getName
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.cntfs.impl", fsImpl)
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", fsImpl)
+    val work = "cntfs://" + Files.createTempDirectory("graft-kvcap").toString
+    val a = new KeyValueTable(spark, work, "t", 2, hadoopConf = conf)
     a.put(kv("seed" -> "1"))
     assert(a.currentVersion == 1L) // a's hint: v1
-    // another instance advances the chain PAST the probe cap
-    val b = new KeyValueTable(spark, work, "t", 2)
-    val gap = KeyValueTable.ProbeWalkCap + 8
+    // another instance advances the chain far PAST the 32-probe cap
+    val b = new KeyValueTable(spark, work, "t", 2, hadoopConf = conf)
+    val gap = 64
     for (i <- 1 to gap) b.put(kv(s"k$i" -> s"v$i"))
+    import graft.catalog.CountingOsFs.{listCalls, statusCalls}
+    val s0 = statusCalls.get()
+    val l0 = listCalls.get()
     // a's capped walk abandons probing, takes the listing, serves the tip
     assert(a.currentVersion == 1L + gap)
+    val probes = statusCalls.get() - s0
+    val lists = listCalls.get() - l0
+    // without the cap this read pays ~gap sequential exists() GETs
+    assert(lists >= 1, "LIST fallback did not engage")
+    assert(probes <= 40L, s"far-behind read made $probes point GETs (walk not capped)")
     assert(a.entries().count() == 1L + gap)
-    // hint repaired: the next read stays on the fast path
+    // hint repaired: the next read stays on the fast path, LIST-free
     b.put(kv("zz" -> "tail"))
+    val l1 = listCalls.get()
     assert(a.currentVersion == 2L + gap)
+    assert(listCalls.get() == l1, "warm read re-listed _meta")
+  }
+
+  // the CAS winner of tip+1 died between the exclusive create and its
+  // write: the zero-byte record must cost one version of staleness, never
+  // the table (reads, fsck) — and commits must fail loudly, not parse-crash
+  for (contract <- Seq("local", "objectstore")) {
+    test(s"[$contract] a torn tip manifest: reads serve the tip, fsck reports, commits fail loudly") {
+      val conf = new org.apache.hadoop.conf.Configuration()
+      val fsImpl = classOf[graft.storage.LaggedObjectStoreFs].getName
+      if (contract == "objectstore") {
+        conf.set("fs.oscas.impl", fsImpl)
+        spark.sparkContext.hadoopConfiguration.set("fs.oscas.impl", fsImpl)
+      }
+      val dir = Files.createTempDirectory(s"graft-kv-torn-$contract").toString
+      val root = if (contract == "objectstore") "oscas://" + dir else dir
+      val t = new KeyValueTable(spark, root, "t", 2, hadoopConf = conf)
+      for (i <- 1 to 3) t.put(kv(s"k$i" -> s"v$i"))
+      val tip = t.currentVersion
+      Files.write(java.nio.file.Paths.get(dir, "t", "_meta", f"manifest-${tip + 1}%012d.json"),
+        Array.empty[Byte])
+      // a warm and a cold instance both serve the tip's state
+      for (r <- Seq(t, new KeyValueTable(spark, root, "t", 2, hadoopConf = conf))) {
+        assert(r.get("k3").map(p => new String(p._1, "UTF-8")).contains("v3"))
+        assert(r.entries().count() == 3L)
+        assert(r.currentVersion == tip)
+      }
+      val e = intercept[graft.core.GraftException](t.entriesAt(tip + 1))
+      assert(e.getMessage.contains(s"version ${tip + 1}"), e.getMessage)
+      val issues = t.fsck()
+      assert(issues.exists(_.startsWith("manifest-torn")), issues.mkString("; "))
+      // every CAS loses to the torn record until the retries run out
+      intercept[ConditionalCheckFailedException](t.put(kv("k4" -> "v4")))
+      assert(t.currentVersion == tip && t.get("k4").isEmpty)
+    }
   }
 
   test("stream -> KV materialized view via foreachBatch (latest value per key)") {

@@ -118,6 +118,20 @@ class FsckSpec extends AnyFunSuite {
     assert(kinds.contains("manifest-chain"))
   }
 
+  test("a hole in a registered KV table's manifest chain is reported") {
+    val (root, g) = freshRoot()
+    val t = g.catalog.openKeyValueTable(spark, "s", "kt")
+    for (i <- 1 to 3)
+      t.put(Seq(s"k$i").toDF("pk").select($"pk", lit("").as("sk"), encode($"pk", "UTF-8").as("value")))
+    assert(Fsck.checkRoot(root).isEmpty)
+    val holed = new Path(root, s"s/_kvt/kt/_meta/manifest-${"%012d".format(2)}.json")
+    val fs = holed.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.delete(holed, false), s"expected manifest at $holed")
+    val issues = Fsck.checkRoot(root)
+    assert(issues.exists(i => i.where == "s/kt" && i.kind == "manifest-chain" && i.detail.contains("2")),
+      issues.mkString("; "))
+  }
+
   test("a lost floor-chain anchor is classified gc-floor-anchor-lost; reads recover a positive floor") {
     import graft.core.FileEntry
     val root = Files.createTempDirectory("graft-fsck-anchor").toString
