@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver bench: runs every registered operator query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -31,7 +29,6 @@ object Bench {
     val load5Start = loadAvg(1)
     val load15Start = loadAvg(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Ephemeral scratch (shuffle/local dirs, temp checkpoints, fixture
     // workspaces) on the fastest local media — java.io.tmpdir is what
     // Spark's local-dir resolution and every temp-checkpoint path read,
@@ -40,15 +37,7 @@ object Bench {
     // queries 20–35 s (pure noise in per-query rows); a production
     // cluster points spark.local.dir at local NVMe for the same reason.
     System.setProperty("java.io.tmpdir", graft.util.WorkDirs.scratchRoot)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(defaultCpus = 4)
 
     // JVM/codegen warm-up so per-query timings measure the plan, not
     // first-call compilation: exercise each subsystem's hot path once on

@@ -7,10 +7,6 @@ import org.apache.spark.sql.functions._
   * One parquet file per table under the given scale-factor dir.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Older driver-generated events.parquet carried TIMESTAMP(NANOS), which
     * Spark's parquet reader rejects — nanosAsLong reads those as long nanos
     * and `load` converts. Newer generations write TIMESTAMP(MICROS,

@@ -305,9 +305,6 @@ object GraftFunctions {
   def sorted_intersect_size(a: Column, b: Column): Column =
     ColumnShim.column(SortedIntersectSize(ColumnShim.expression(a), ColumnShim.expression(b)))
 
-  def minhash_signature(tokenHashes: Column, shingleSize: Int, numHashes: Int): Column =
-    ColumnShim.column(MinHashSignature(ColumnShim.expression(tokenHashes), shingleSize, numHashes))
-
   def hash_to_range(c: Column): Column =
     ColumnShim.column(HashToRange(ColumnShim.expression(c)))
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** MinHash + banded LSH near-duplicate detection, entirely in codegen'd
@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
   * hash family (md5-derived shingle ids + modular affine permutations), so
   * the DuckDB oracle can replay the FULL pipeline — shingling, signatures,
   * banding, candidate generation and verification are all hash-checked,
-  * not just sampled for recall. [[fastNearDuplicates]] keeps the
-  * maximum-throughput xxhash64/murmur3 family for when reproducibility is
-  * not needed.
+  * not just sampled for recall.
   *
   * At 100 TB the only shuffles are the band-bucket exchange (width =
   * numHashes longs per doc, not the text) and the pair verification join;
@@ -24,22 +22,6 @@ import org.apache.spark.sql.functions._
   * per-bucket pair expansion, which AQE skew-split handles.
   */
 object MinHashLSH {
-
-  /** Per-document MinHash signature as an array<bigint> column
-    * (fast murmur3 family — not oracle-reproducible).
-    */
-  def signature(tokens: Column, shingleSize: Int, numHashes: Int): Column = {
-    val shingles = array_distinct(
-      when(size(tokens) >= shingleSize,
-        transform(sequence(lit(0), size(tokens) - shingleSize),
-          i => concat_ws(" ", slice(tokens, i + 1, lit(shingleSize)))))
-        .otherwise(array(concat_ws(" ", tokens))))
-    val hs = transform(shingles, s => xxhash64(s))
-    // hash family h_j(x) = murmur3(x, j): j acts as the seed column, no
-    // overflow under ANSI mode, still a fixed pseudo-random map per j
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      j => array_min(transform(hs, h => hash(h, j))))
-  }
 
   // ---------------------------------------------------------------- hash family
 
@@ -172,7 +154,7 @@ object MinHashLSH {
       .select(col("id"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
   }
 
-  /** DETERMINISTIC-INPUT REQUIREMENT (both this and [[fastNearDuplicates]]):
+  /** DETERMINISTIC-INPUT REQUIREMENT:
     * since r14 the input is scanned THREE times (bucket counts, self-join
     * feed, verification semi-join) with no persisted snapshot — the price
     * of never materializing anything corpus-sized. A non-deterministic
@@ -242,12 +224,14 @@ object MinHashLSH {
     // cached partitions, largest exactly in the saturated regime where
     // memory is already the problem (r14 ADVICE).
     val cacheSigs = persistSignatures(narrow)
-    val bandedIn = if (cacheSigs) banded.persist() else banded
-    val (sized, dupCache) = boundedBuckets(bandedIn, maxBucketSize,
-      resolvedMaxCandidates(docs.sparkSession, maxCandidates))
+    var dupCache: DataFrame = null
     var candidates: DataFrame = null
     var verif: DataFrame = null
     try {
+      if (cacheSigs) banded.persist()
+      val (sized, dup) = boundedBuckets(banded, maxBucketSize,
+        resolvedMaxCandidates(docs.sparkSession, maxCandidates))
+      dupCache = dup
       candidates = sized.as("x").join(sized.as("y"),
           col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
             col("x.id") < col("y.id"))
@@ -282,8 +266,8 @@ object MinHashLSH {
         println(s"BRANCH lsh.bandedCacheBytes mem=${st.map(_.memSize).sum} " +
           s"disk=${st.map(_.diskSize).sum}")
       }
-      dupCache.unpersist(false)
-      if (cacheSigs) bandedIn.unpersist(false)
+      if (dupCache != null) dupCache.unpersist(false)
+      if (cacheSigs) banded.unpersist(false)
       if (candidates != null) candidates.unpersist(false)
       if (verif != null) verif.unpersist(false)
     }
@@ -471,8 +455,8 @@ object MinHashLSH {
     * token arrays per candidate (~2 × avg array bytes per row — the
     * a-side join's output is the b-side join's shuffle input), so bytes
     * ≈ budget × array width: 10⁸ × ~300 B ≈ 30 GB, sized to fit a single
-    * node's shuffle spill. Measured estimates (MinhashBreakdown
-    * SPARK_GRAFT_BUCKETS): 3.9×10⁷ at 5×10⁵ docs on the saturating
+    * node's shuffle spill. Measured estimate (round 12, from the exact
+    * bucket-size histogram): 3.9×10⁷ at 5×10⁵ docs on the saturating
     * sandbox corpus — this floor keeps the effective cap at
     * `maxBucketSize` (results byte-identical with or without the budget)
     * at every tested scale factor, and engages only in the fourth-decade
@@ -520,78 +504,6 @@ object MinHashLSH {
       val cores = s.sparkContext.defaultParallelism.toLong
       math.max(DefaultMaxCandidates, cores * PerCoreCandidates)
     }
-
-  /** Maximum-throughput variant on the xxhash64/murmur3 family (native
-    * `minhash_signature` kernel) — same pipeline shape, NOT replayable by
-    * an external SQL engine. Use when no cross-engine check is required.
-    */
-  def fastNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
-                         shingleSize: Int = 5, numHashes: Int = 64, bands: Int = 16,
-                         threshold: Double = 0.35,
-                         maxBucketSize: Int = DefaultMaxBucketSize,
-                         maxCandidates: Long = AutoMaxCandidates): DataFrame = {
-    import graft.functions.GraftFunctions.{minhash_signature, sorted_intersect_size}
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-
-    // Same bounded-materialization shape as [[nearDuplicates]] (r14):
-    // no corpus-sized cache anywhere — the self-join input semi-joins
-    // to the collision-bucket set, verification re-tokenizes only
-    // candidate-touched docs, and the minhash kernel runs twice as the
-    // deliberate CPU-for-disk trade.
-    val narrow = docs.select(col(idCol).as("id"), col(textCol).as("txt"))
-    val banded = narrow
-      .repartition(col("id"))
-      .select(col("id"),
-        transform(split(lower(trim(col("txt"))), "\\s+"), x => xxhash64(x)).as("th"))
-      .select(col("id"), minhash_signature(col("th"), shingleSize, numHashes).as("sig"))
-      .select(col("id"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"), hash(b, slice(col("sig"), b * rows + 1, lit(rows))).as("bsig"))))
-          .as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
-
-    // Same try/finally cache lifecycle as [[nearDuplicates]] — no leaked
-    // cached partitions on the fail-loud saturation path (r14 ADVICE).
-    val cacheSigs = persistSignatures(narrow)
-    val bandedIn = if (cacheSigs) banded.persist() else banded
-    val (sized, dupCache) = boundedBuckets(bandedIn, maxBucketSize,
-      resolvedMaxCandidates(docs.sparkSession, maxCandidates))
-    var candidates: DataFrame = null
-    var verif: DataFrame = null
-    try {
-      candidates = sized.as("x").join(sized.as("y"),
-          col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
-            col("x.id") < col("y.id"))
-        .select(col("x.id").as("a_id"), col("y.id").as("b_id"))
-        .distinct()
-        .persist()
-
-      val candIds = candidates.select(col("a_id").as("id"))
-        .union(candidates.select(col("b_id").as("id"))).distinct()
-      verif = docs.select(col(idCol).as("id"), col(textCol).as("txt"))
-        .join(candIds, Seq("id"), "left_semi")
-        .select(col("id"),
-          array_sort(array_distinct(
-            transform(split(lower(trim(col("txt"))), "\\s+"), x => xxhash64(x)))).as("toks"))
-        .persist()
-
-      val a = verif.select(col("id").as("a_id"), col("toks").as("a_toks"))
-      val b = verif.select(col("id").as("b_id"), col("toks").as("b_toks"))
-      candidates.join(a, "a_id").join(b, "b_id")
-        .withColumn("inter", sorted_intersect_size(col("a_toks"), col("b_toks")).cast("double"))
-        .withColumn("jaccard",
-          col("inter") / (size(col("a_toks")) + size(col("b_toks")) - col("inter")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("a_id"), col("b_id"), col("jaccard"))
-        .localCheckpoint() // eager: caches released in finally
-    } finally {
-      dupCache.unpersist(false)
-      if (cacheSigs) bandedIn.unpersist(false)
-      if (candidates != null) candidates.unpersist(false)
-      if (verif != null) verif.unpersist(false)
-    }
-  }
 
   /** Back-compat alias: [[nearDuplicates]] with the bounded-slice default
     * parameters the oracle twin query has always used.

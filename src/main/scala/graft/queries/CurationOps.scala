@@ -820,55 +820,58 @@ object CurationOps {
         md5(lower(trim($"text"))).as("fp"),
         size(split(trim($"text"), "\\s+")).cast("long").as("n_tok"))
       .cache()
-    val keepFp = d.groupBy($"fp").agg(min($"doc_id").as("keep_id"))
-    val exactKept = d.join(
-      keepFp.select($"fp", $"keep_id".as("doc_id")), Seq("fp", "doc_id"), "left_semi")
-    val nearDrop = graft.operators.MinHashLSH
-      .nearDuplicates(exactKept, "doc_id", "text",
-        shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.35)
-      .select($"b_id".as("doc_id")).distinct()
-    val evalFp = d.filter($"doc_id" % 97 === 0).select($"fp").distinct()
-    val flagged = d
-      .join(keepFp, Seq("fp"))
-      .join(broadcast(nearDrop.withColumn("nd", lit(1L))), Seq("doc_id"), "left")
-      .join(broadcast(evalFp.withColumn("ev", lit(1L))), Seq("fp"), "left")
-      .withColumn("alive2", $"doc_id" === $"keep_id")
-      .withColumn("alive3", $"alive2" && $"nd".isNull)
-      .withColumn("alive4", $"alive3" && $"n_tok".between(20L, 200L))
-      .withColumn("alive5", $"alive4" && $"ev".isNull)
-    val packed = flagged.filter($"alive5")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy($"source").orderBy($"doc_id")))
-      .filter($"rk" <= 400)
-      .withColumn("bucket",
-        conv(substring(md5($"doc_id".cast("string")), 1, 8), 16, 10).cast("long") % 100)
-      .withColumn("split",
-        when($"bucket" < 80, "train").when($"bucket" < 90, "val").otherwise("test"))
-    val stages = flagged.agg(
-        count(lit(1)).as("c1"), sum($"n_tok").as("t1"),
-        sum(when($"alive2", 1L).otherwise(0L)).as("c2"),
-        sum(when($"alive2", $"n_tok").otherwise(0L)).as("t2"),
-        sum(when($"alive3", 1L).otherwise(0L)).as("c3"),
-        sum(when($"alive3", $"n_tok").otherwise(0L)).as("t3"),
-        sum(when($"alive4", 1L).otherwise(0L)).as("c4"),
-        sum(when($"alive4", $"n_tok").otherwise(0L)).as("t4"),
-        sum(when($"alive5", 1L).otherwise(0L)).as("c5"),
-        sum(when($"alive5", $"n_tok").otherwise(0L)).as("t5"))
-      .select(expr("""stack(5,
-        '1_ingested',    c1, t1,
-        '2_exact_dedup', c2, t2,
-        '3_near_dedup',  c3, t3,
-        '4_quality',     c4, t4,
-        '5_decontam',    c5, t5) AS (stage, n_docs, n_tokens)"""))
-    val packRows = packed
-      .groupBy(concat(lit("6_pack_"), $"split").as("stage"))
-      .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("n_tokens"))
     // Materialize the (tiny) report eagerly so the corpus cache can be
     // RELEASED before returning — this query used to leak one cached
     // corpus copy per invocation into the session (the bench invokes it
-    // twice), storage pressure every later query paid (r15).
-    try stages.unionByName(packRows).orderBy($"stage").localCheckpoint()
-    finally d.unpersist(false)
+    // twice), storage pressure every later query paid (r15). The release
+    // covers every stage after the cache(): the LSH saturation guard is
+    // designed to throw.
+    try {
+      val keepFp = d.groupBy($"fp").agg(min($"doc_id").as("keep_id"))
+      val exactKept = d.join(
+        keepFp.select($"fp", $"keep_id".as("doc_id")), Seq("fp", "doc_id"), "left_semi")
+      val nearDrop = graft.operators.MinHashLSH
+        .nearDuplicates(exactKept, "doc_id", "text",
+          shingleSize = 3, numHashes = 64, bands = 16, threshold = 0.35)
+        .select($"b_id".as("doc_id")).distinct()
+      val evalFp = d.filter($"doc_id" % 97 === 0).select($"fp").distinct()
+      val flagged = d
+        .join(keepFp, Seq("fp"))
+        .join(broadcast(nearDrop.withColumn("nd", lit(1L))), Seq("doc_id"), "left")
+        .join(broadcast(evalFp.withColumn("ev", lit(1L))), Seq("fp"), "left")
+        .withColumn("alive2", $"doc_id" === $"keep_id")
+        .withColumn("alive3", $"alive2" && $"nd".isNull)
+        .withColumn("alive4", $"alive3" && $"n_tok".between(20L, 200L))
+        .withColumn("alive5", $"alive4" && $"ev".isNull)
+      val packed = flagged.filter($"alive5")
+        .withColumn("rk", row_number().over(
+          Window.partitionBy($"source").orderBy($"doc_id")))
+        .filter($"rk" <= 400)
+        .withColumn("bucket",
+          conv(substring(md5($"doc_id".cast("string")), 1, 8), 16, 10).cast("long") % 100)
+        .withColumn("split",
+          when($"bucket" < 80, "train").when($"bucket" < 90, "val").otherwise("test"))
+      val stages = flagged.agg(
+          count(lit(1)).as("c1"), sum($"n_tok").as("t1"),
+          sum(when($"alive2", 1L).otherwise(0L)).as("c2"),
+          sum(when($"alive2", $"n_tok").otherwise(0L)).as("t2"),
+          sum(when($"alive3", 1L).otherwise(0L)).as("c3"),
+          sum(when($"alive3", $"n_tok").otherwise(0L)).as("t3"),
+          sum(when($"alive4", 1L).otherwise(0L)).as("c4"),
+          sum(when($"alive4", $"n_tok").otherwise(0L)).as("t4"),
+          sum(when($"alive5", 1L).otherwise(0L)).as("c5"),
+          sum(when($"alive5", $"n_tok").otherwise(0L)).as("t5"))
+        .select(expr("""stack(5,
+          '1_ingested',    c1, t1,
+          '2_exact_dedup', c2, t2,
+          '3_near_dedup',  c3, t3,
+          '4_quality',     c4, t4,
+          '5_decontam',    c5, t5) AS (stage, n_docs, n_tokens)"""))
+      val packRows = packed
+        .groupBy(concat(lit("6_pack_"), $"split").as("stage"))
+        .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("n_tokens"))
+      stages.unionByName(packRows).orderBy($"stage").localCheckpoint()
+    } finally d.unpersist(false)
   }
 
   private val pipelineFullSql = {

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.core.{StreamCut, TxnState}
 import graft.storage.{GraftStreams, Maintenance}
-import org.apache.spark.sql.SparkSession
 
 /** Unified admin entry point over a storage root — the Spark-native analog
   * of the reference's interactive admin CLI
@@ -54,13 +53,7 @@ object Admin {
       sys.exit(if (issues.isEmpty) 0 else 1)
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(defaultCpus = 8)
     val g = new GraftStreams(spark, root)
     try run(g, cmd, rest) finally spark.stop()
   }

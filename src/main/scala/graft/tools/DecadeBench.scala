@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Two-decade scale sweep: runs the genuinely data-bound queries at THREE
   * scale factors (base, 10×, 100× — ScaleGen-replicated) and reports
   * per-query growth across BOTH decades. One decade (BENCH_sf1) showed
@@ -33,21 +31,12 @@ object DecadeBench {
     val subset: Seq[String] =
       if (args.length > 3) args(3).split(',').map(_.trim).filter(_.nonEmpty).toSeq
       else Default
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // sized for the LARGEST dir in the sweep; AQE coalesces the excess
-      // at the small sfs, exactly as a production deployment would size
-      // shuffle partitions for its data volume (32 fixed partitions at
-      // 100x data = 100x per-partition volume = spill, which measures
-      // the misconfiguration, not the operator)
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle partitions sized for the LARGEST dir in the sweep; AQE
+    // coalesces the excess at the small sfs, exactly as a production
+    // deployment would size shuffle partitions for its data volume (32
+    // fixed partitions at 100x data = 100x per-partition volume = spill,
+    // which measures the misconfiguration, not the operator)
+    val spark = graft.util.LocalSession(defaultCpus = 32, shufflePartitions = Some(256))
 
     // cold run (codegen + AQE compile + page-cache warm), then MIN of
     // three warm runs: single-shot warm timings at the 100× point swing

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-growth bench: runs the data-driven registered queries at TWO scale
   * factors (the driver's sf dir and a ScaleGen-replicated K× dir) and
   * reports per-query growth = t(scaled) / t(base). With K=10, ~linear
@@ -74,16 +72,7 @@ object ScaleBench {
       else DataDriven
     val runs = if (args.length > 4) args(4).toInt else 2
     val baseRuns = if (args.length > 5) args(5).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(defaultCpus = 32)
     // extra session conf via env, e.g. pinning the LSH candidate budget
     // for cross-round comparability: SPARK_GRAFT_CONF="k=v;k=v"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>

@@ -34,15 +34,7 @@ object ScaleGen {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(',').map(_.trim).filter(_.nonEmpty).toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(defaultCpus = 32)
     generate(spark, in, out, k, only)
     spark.stop()
   }

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.core._
 import graft.storage.{AutoScaler, GraftStreams, Retention}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable end-to-end demo of the stream engine's public API: create →
@@ -13,13 +12,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(defaultCpus = 8)
 
     val g = new GraftStreams(spark, work)
     g.catalog.createScope("demo")

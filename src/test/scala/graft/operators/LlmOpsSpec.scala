@@ -89,9 +89,15 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(tight.size === 6 + 1 && tight.subsetOf(full) && run(112L) === tight)
     // a budget excluding all but the 2-group
     assert(run(16L).size === 1)
-    // even size-2 buckets over budget: loud saturation failure
+    // even size-2 buckets over budget: loud saturation failure, and the
+    // throw leaves no cache behind (banded signatures, collision buckets)
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     assert(intercept[IllegalArgumentException](run(15L))
       .getMessage.contains("maxCandidates"))
+    assert(spark.sharedState.cacheManager.isEmpty, "saturation throw leaked a cached plan")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(rddsBefore).isEmpty,
+      "saturation throw leaked a persisted RDD")
   }
 
   test("candidate budget resolution: explicit wins, conf overrides, cluster-aware default with floor") {

@@ -86,4 +86,19 @@ class CurationOpsSpec extends AnyFunSuite {
     val total = docs.count()
     assert(kept > 0 && kept < total, s"degenerate sample: $kept of $total")
   }
+
+  test("ds_pipeline_full: an LSH saturation failure releases the corpus cache") {
+    val conf = graft.operators.MinHashLSH.MaxCandidatesConf
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    spark.conf.set(conf, "1")
+    try {
+      val e = intercept[IllegalArgumentException](
+        SparkEntry.queries("ds_pipeline_full")(spark, sf))
+      assert(e.getMessage.contains("maxCandidates"), e.getMessage)
+    } finally spark.conf.unset(conf)
+    assert(spark.sharedState.cacheManager.isEmpty, "saturation throw leaked a cached plan")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(rddsBefore).isEmpty,
+      "saturation throw leaked a persisted RDD")
+  }
 }

@@ -32,18 +32,19 @@ for line in open(sys.argv[1]):
 superlinear = [n for n, r in rows.items()
                if r["x100"] / max(r["base"], 0.25) > 125.0]
 
-# Attribution for growth terms measured by tools/PairGrowth: the LSH
-# near-dup family is OUTPUT-bound — ScaleGen's K-fold replication grows
-# duplicate DENSITY as well as volume (word-permuted replicas of one
-# original still collide in MinHash bands -> ~replicas^2 genuine pairs
-# per original), so wall tracks verified-pair count, not corpus size.
+# Attribution for growth terms measured in round 9 by tools/PairGrowth
+# (since deleted): the LSH near-dup family is OUTPUT-bound — ScaleGen's
+# K-fold replication grows duplicate DENSITY as well as volume
+# (word-permuted replicas of one original still collide in MinHash
+# bands -> ~replicas^2 genuine pairs per original), so wall tracks
+# verified-pair count, not corpus size.
 notes = {
     "dedup_minhash_lsh": (
         "output-bound: verified pairs 2,630 -> 272,155 (103x) -> "
         "25,496,148 (94x) per decade while cost/pair FALLS 775 -> 10.3 "
-        "-> 0.7 us (tools/PairGrowth); the wall growth is the replica "
-        "corpus genuinely containing ~100x more near-dup pairs per "
-        "decade, not a quadratic in the operator"),
+        "-> 0.7 us (tools/PairGrowth, round 9, tool since deleted); the "
+        "wall growth is the replica corpus genuinely containing ~100x "
+        "more near-dup pairs per decade, not a quadratic in the operator"),
 }
 out = {
     "metric": "decade_growth",
