@@ -5,9 +5,15 @@ import graft.core.{ConditionalCheckFailedException, GraftException, ManifestChai
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.sources.GraftKvTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.storage.TaskFileWriter
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.RelationShim
+import org.apache.spark.sql.types.StructType
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
@@ -17,8 +23,11 @@ import java.util.UUID
 /** Versioned, partitioned key-value table
   * (client/.../tables/KeyValueTable.java:119,
   * KeyValueTableConfiguration.java:39-55) re-expressed as an LSM over
-  * parquet: every update batch commits one delta file per touched part
-  * index plus a manifest CAS; reads resolve base+deltas by latest commit
+  * parquet: every update batch writes one delta directory holding one
+  * file per part index it touches, through the task-side
+  * [[graft.storage.TaskFileWriter]], and commits it with a manifest CAS;
+  * a driver-local batch is one write task with no shuffle, any other is
+  * shuffled by bucket first. Reads resolve base+deltas by latest commit
   * version per key; compaction rewrites the resolved state as a new base
   * (TableCompactor analog). Entry versions are commit versions — exactly
   * the reference's monotonic per-entry `Version` semantics.
@@ -30,6 +39,8 @@ import java.util.UUID
   * #deltas files, bounded by the compaction cadence. No driver-side state.
   */
 final case class KvFile(path: String, kind: String, commitVersion: Long)
+/** One file a KV write task wrote: its part index, rows and bytes. */
+final case class KvPartFile(partIndex: Int, path: String, rows: Long, bytes: Long)
 /** A compacted-away file awaiting physical deletion after its
   * reader-grace deadline (see StreamCatalog.sweepDeletes rationale).
   */
@@ -74,16 +85,41 @@ object KeyValueTable {
     ((h % partitionCount) + partitionCount) % partitionCount
   }
 
-  /** The part-file index a bucket lands at: the write path's
-    * `repartition(n, bucket)` is Spark's hash partitioning,
-    * `pmod(murmur3(bucket, 42), n)`, and each task writes `part-<index>`.
-    * The co-located scan's pruning is sound only while this holds
-    * (`KvLayoutSpec` checks it against the files).
+  /** The part-file index a bucket lands at, `pmod(murmur3(bucket, 42), n)`:
+    * every write names its files `part-<index>` by it, and it is also
+    * Spark's hash partitioning, so `repartition(n, bucket)` puts a part
+    * index in the task of that number. The co-located scan's pruning is
+    * sound only while this holds (`KvLayoutSpec` checks it against the
+    * files).
     */
   def partIndexOfBucket(bucket: Long, partitionCount: Int): Int = {
     val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction.hash(
       bucket, org.apache.spark.sql.types.LongType, 42L).toInt
     ((h % partitionCount) + partitionCount) % partitionCount
+  }
+
+  /** [[partIndexOfBucket]] as a column: `hash` is Murmur3 with seed 42. */
+  private def partIndex(bucket: Column, partitionCount: Int): Column =
+    pmod(hash(bucket), lit(partitionCount))
+
+  /** KV files: `part-NNNNN-<attempt>` per part index of the bucket
+    * (column 0); with `version`, each row's version (column 5) is that
+    * commit version, set in place.
+    */
+  private final class PartLayout(partitionCount: Int, version: Option[Long])
+      extends TaskFileWriter.Layout[KvPartFile] {
+    def schema: StructType = GraftKvTable.schema
+    def fileKey(row: InternalRow): Long = partIndexOfBucket(row.getLong(0), partitionCount)
+    def fileName(idx: Long, tc: TaskContext): String = f"part-$idx%05d-${tc.taskAttemptId()}"
+    def newFile(idx: Long): TaskFileWriter.FileRows[KvPartFile] = new TaskFileWriter.FileRows[KvPartFile] {
+      def add(r: InternalRow, i: Long): InternalRow = version.fold(r) { v =>
+        val m = r match { case u: UnsafeRow => u; case o => o.copy() }
+        m.setLong(5, v)
+        m
+      }
+      def entry(path: String, rows: Long, bytes: Long): KvPartFile =
+        KvPartFile(idx.toInt, path, rows, bytes)
+    }
   }
 
   /** The table's manifest chain: self-contained `manifest-%012d.json`
@@ -167,6 +203,15 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     var attempts = 0
     val keyed = ops.withColumn("sk", coalesce($"sk", lit("")))
       .withColumn("bucket", pmod(xxhash64($"pk"), lit(partitionCount)))
+    // the delta's rows; the version is set per call in the write tasks.
+    // A driver-local batch is one task with no shuffle. Any other input
+    // is shuffled by bucket, one task per part index: without it every
+    // input task would write its own file per part index, and every get
+    // reads all of a part index's files.
+    val rows = keyed.select($"bucket", $"pk", $"sk", $"value", $"op", lit(0L).as("version"))
+    val placed =
+      if (keyed.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) rows.coalesce(1)
+      else rows.repartition(partitionCount, $"bucket")
     while (true) {
       val m = latest()
       val commitVersion = m.version + 1
@@ -208,15 +253,7 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
       }
 
       val deltaDir = new Path(tableDir, s"delta-$commitVersion-${UUID.randomUUID()}")
-      keyed
-        .select($"bucket", $"pk", $"sk", $"value", $"op",
-                lit(commitVersion).as("version"))
-        // explicit count: one task per part index (AQE would coalesce the
-        // small shuffle to one task and serialize the sort+encode); the
-        // hash partitioning IS the layout (KeyValueTable.partIndexOfBucket)
-        .repartition(partitionCount, $"bucket")
-        .sortWithinPartitions($"bucket", $"pk", $"sk")
-        .write.parquet(deltaDir.toString)
+      writeParts("graft.kvUpdate", placed, deltaDir, Some(commitVersion))
 
       if (commit(m.copy(version = commitVersion,
           files = m.files :+ KvFile(deltaDir.toString, "delta", commitVersion)),
@@ -227,6 +264,20 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
       if (attempts > 10) throw new ConditionalCheckFailedException(s"kv $name: CAS lost $attempts times")
     }
     -1L // unreachable
+  }
+
+  /** Write `rows` (the table schema) into `dir` through [[TaskFileWriter]]:
+    * each task sorts by (part index, bucket, pk, sk) and writes one
+    * `part-NNNNN` file per part index it holds, every row stamped with
+    * `version` when one is given. An empty write still leaves `dir`, so a
+    * committed directory always lists.
+    */
+  private def writeParts(name: String, rows: DataFrame, dir: Path, version: Option[Long]): Unit = {
+    val files = TaskFileWriter.write(spark, name,
+      rows.sortWithinPartitions(KeyValueTable.partIndex($"bucket", partitionCount),
+        $"bucket", $"pk", $"sk"),
+      dir, new KeyValueTable.PartLayout(partitionCount, version))
+    if (files.isEmpty) fs.mkdirs(dir)
   }
 
   /** Insert: fail if the key already exists (client/.../tables/Insert.java). */
@@ -489,11 +540,9 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     val m = latest()
     if (m.files.isEmpty) return
     val baseDir = new Path(tableDir, s"base-${m.version}-${UUID.randomUUID()}")
-    resolvedAt(m)
+    writeParts("graft.kvCompact", resolvedAt(m)
       .select($"bucket", $"pk", $"sk", $"value", lit("PUT").as("op"), $"version")
-      .repartition(partitionCount, $"bucket")
-      .sortWithinPartitions($"bucket", $"pk", $"sk")
-      .write.parquet(baseDir.toString)
+      .repartition(partitionCount, $"bucket"), baseDir, None)
     // replaced files become tombstones with a reader-grace deadline —
     // an in-flight read planned from the old manifest can finish;
     // sweepDeletes() reclaims them afterwards

@@ -1472,11 +1472,12 @@ object TextOps {
     import s.implicits._
     val docs = Tables.documents(s, dir)
     val work = graft.util.WorkDirs.temp("graft-searchkv")
-    // Index bucket count SCALES WITH THE CORPUS: a KVT put writes one
-    // task per bucket (`repartition(partitionCount, bucket)`), so the
-    // fixed 8 buckets that are perfect at 5×10^4 docs serialize ~75M
-    // posting rows per task at 1.5×10^7 docs — the r13 sf300 probe
-    // measured txt_search_lookup 39× wall at 30× data, all of it in the
+    // Index bucket count SCALES WITH THE CORPUS: a put of a distributed
+    // frame is shuffled into one write task per part index
+    // (`repartition(partitionCount, bucket)`), so the fixed 8 buckets
+    // that are perfect at 5×10^4 docs serialize ~75M posting rows per
+    // task at 1.5×10^7 docs — the r13 sf300 probe measured
+    // txt_search_lookup 39× wall at 30× data, all of it in the
     // 8-way postings write. One bucket per ~250k docs (≈10M postings),
     // floor 8 (the oracle-scale fixtures keep their old layout), cap 256
     // (serve-side bucket pruning stays one-bucket-per-term effective at

@@ -28,16 +28,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * surface, exactly like the reference keeps table writes behind the
   * client.
   *
-  * Scale design: the write path lands every commit with
-  * `repartition(partitionCount, $"bucket")` and compaction preserves the
-  * layout, so a key's ENTIRE history sits at the same part-file INDEX in
-  * every delta/base directory (partitionCount is creation-time
-  * immutable). The scan therefore plans one InputPartition per part
-  * index: each reader merges only its own files — complete key groups,
-  * zero read amplification, no shuffle, no window — and resolves
-  * latest-per-key in a hash map bounded by live keys / partitionCount
-  * (the same per-bucket memory bound the write path's shuffle and the
-  * reference's fixed table-partition layout already assume; the knob is
+  * Scale design: every KV write (update and compaction) names each file
+  * by the part index of its rows' bucket
+  * ([[KeyValueTable.partIndexOfBucket]]), one file per touched index, so
+  * a key's ENTIRE history sits at the same part-file INDEX in every
+  * delta/base directory (partitionCount is creation-time immutable).
+  * The scan therefore plans one InputPartition per part index: each
+  * reader merges only its own files — complete key groups, zero read
+  * amplification, no shuffle, no window — and resolves latest-per-key in
+  * a hash map bounded by live keys / partitionCount (the same
+  * per-bucket memory bound compaction's shuffle and the reference's
+  * fixed table-partition layout already assume; the knob is
   * partitionCount at creation). Column pruning reaches parquet — `value`
   * bytes are read only when the query asks for them; a pushed
   * `version > from` filter prunes delta-feed row groups, and whole

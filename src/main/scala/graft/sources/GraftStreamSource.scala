@@ -220,11 +220,24 @@ class GraftStreamTable(baseProps: java.util.Map[String, String]) extends Table
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     // per-write options (autoNoteTime) overlay table identity, mirroring
     // newScanBuilder's read-option overlay
+    new GraftWriteBuilder(GraftSourceConfig.from(overlay(info.options())(_ => true)), info)
+  }
+
+  /** The table's properties with the `keep` keys of `options` on top. A
+    * per-call key replaces the table's key of any case: Spark passes
+    * per-call keys lower-cased, and two case variants of one key would
+    * leave the winner to hash order.
+    */
+  private def overlay(options: CaseInsensitiveStringMap)(keep: String => Boolean)
+      : CaseInsensitiveStringMap = {
     val merged = new java.util.HashMap[String, String](baseProps)
-    info.options().entrySet().forEach { e =>
-      merged.put(e.getKey, e.getValue)
+    options.entrySet().forEach { e =>
+      if (keep(e.getKey.toLowerCase(java.util.Locale.ROOT))) {
+        merged.keySet().removeIf(_.equalsIgnoreCase(e.getKey))
+        merged.put(e.getKey, e.getValue)
+      }
     }
-    new GraftWriteBuilder(GraftSourceConfig.from(new CaseInsensitiveStringMap(merged)), info)
+    new CaseInsensitiveStringMap(merged)
   }
 
   /** TRUNCATE TABLE: raise the head cut to the current tail — the
@@ -246,16 +259,10 @@ class GraftStreamTable(baseProps: java.util.Map[String, String]) extends Table
     // per-read options (cuts, pacing — never identity/schema keys)
     // overlay the table's own: catalog tables get
     // `.option("fromStreamCut", ...)` for free
-    val merged = new java.util.HashMap[String, String](baseProps)
-    options.entrySet().forEach { e =>
-      val k = e.getKey.toLowerCase(java.util.Locale.ROOT)
-      if (k.startsWith("fromstreamcut") || k.startsWith("tostreamcut") ||
-          k == "maxrowspertrigger" || k == "maxbytespertrigger" ||
-          k.startsWith("asofversion") || k == "fromversion" || k == "toversion")
-        merged.put(e.getKey, e.getValue)
-    }
-    val scanConf = GraftSourceConfig.from(new CaseInsensitiveStringMap(merged))
-    new GraftScanBuilder(scanConf)
+    new GraftScanBuilder(GraftSourceConfig.from(overlay(options)(k =>
+      k.startsWith("fromstreamcut") || k.startsWith("tostreamcut") ||
+        k == "maxrowspertrigger" || k == "maxbytespertrigger" ||
+        k.startsWith("asofversion") || k == "fromversion" || k == "toversion")))
   }
 }
 

@@ -9,9 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ParquetWriteShim
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, TimestampType}
 import org.json4s.DefaultFormats
 import org.json4s.jackson.Serialization
@@ -19,9 +17,7 @@ import org.json4s.jackson.Serialization
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Instant
 import java.util.UUID
-import scala.collection.mutable
 import scala.util.Try
-import scala.util.control.NonFatal
 
 /** Data plane for graft streams (SURVEY §3.1/§3.2 re-expressed for Spark).
   *
@@ -29,7 +25,7 @@ import scala.util.control.NonFatal
   *   route rows to the segment owning hash(routingKey) → one shuffle
   *   partitioned by segment → each task writes one parquet file per
   *   segment, numbering offsets on from the tail as rows pass, and reports
-  *   the file entries in its result ([[writeSegmentFiles]]) → a single
+  *   the file entries in its result ([[TaskFileWriter]]) → a single
   *   manifest CAS makes everything visible atomically. No WAL, no output
   *   commit protocol: the object store plus the atomic manifest is both
   *   durability tiers.
@@ -148,31 +144,18 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
         $"eventTime".cast(LongType), lit(null).cast(TimestampType).as("processingTime"),
         $"payload".cast(BinaryType), $"chunkSeq", $"chunkCount")
 
-  /** The one stream writer (append, txn staging, txn merge, compaction,
-    * redaction): runs `plan` — storage-schema rows, all of a segment's in
-    * one task, in offset order — and each task writes one parquet file
-    * per segment under `dir/segId=N/`, returning the files' entries. No
-    * output commit protocol: only files a successful task reported can
-    * enter a commit. Per-call values are task data, never plan literals:
-    * with `offsetBase` offsets run on from each segment's base; with
-    * `stamp` processingTime is this call's time. A failed job drops `dir`.
+  /** Every stream write (append, txn staging, txn merge, compaction,
+    * redaction) runs `plan` — storage-schema rows, all of a segment's in
+    * one task, in offset order — through [[TaskFileWriter]] in the
+    * [[GraftStreams.SegmentLayout]]: one parquet file per segment per task
+    * under `dir/segId=N/`. With `offsetBase` offsets run on from each
+    * segment's base; with `stamp` processingTime is this call's time.
     */
   private def writeSegmentFiles(name: String, plan: DataFrame, dir: Path,
                                 offsetBase: Map[Long, Long] = Map.empty,
-                                stamp: Boolean = false): Seq[FileEntry] = {
-    require(plan.schema.map(_.dataType) == GraftStreams.storageSchema.map(_.dataType),
-      s"$name: plan must produce the storage schema, got ${plan.schema.simpleString}")
-    val writers = ParquetWriteShim.parquetWriters(spark, GraftStreams.storageSchema)
-    val out = dir.toString
-    val nowMicros = if (stamp) Some(DateTimeUtils.instantToMicros(Instant.now())) else None
-    try ParquetWriteShim.withExecution(plan, name)(_.mapPartitions(rows =>
-      GraftStreams.writeTask(rows, out, writers, offsetBase, nowMicros)).collect().toSeq)
-    catch {
-      case NonFatal(e) =>
-        dropDir(dir)
-        throw new GraftException(s"$name failed, staging dropped: ${e.getMessage}", e)
-    }
-  }
+                                stamp: Boolean = false): Seq[FileEntry] =
+    TaskFileWriter.write(spark, name, plan, dir, new GraftStreams.SegmentLayout(offsetBase,
+      if (stamp) Some(DateTimeUtils.instantToMicros(Instant.now())) else None))
 
   private def fsOf(p: Path) = p.getFileSystem(spark.sessionState.newHadoopConf())
   private def dropDir(p: Path): Unit = fsOf(p).delete(p, true)
@@ -690,7 +673,7 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
          // moved out) or never did, so past-grace reclaim is safe
          st.getPath.getName.startsWith("sinkstage-")) &&
         !referenced.contains(st.getPath.toString) &&
-        !referenced.contains(GraftStreams.stripScheme(st.getPath.toString)) &&
+        !referenced.contains(TaskFileWriter.stripScheme(st.getPath.toString)) &&
         st.getModificationTime < cutoff)
     removed.foreach(st => fsys.delete(st.getPath, true))
 
@@ -903,58 +886,38 @@ object GraftStreams {
   @volatile private[graft] var killPoint: Option[String => Unit] = None
   @inline private[graft] def kp(name: String): Unit = killPoint.foreach(_(name))
 
-  private def stripScheme(p: String): String =
-    if (p.startsWith("file:")) new Path(p).toUri.getPath else p
-
-  /** Task side of [[GraftStreams#writeSegmentFiles]]: one parquet file per
-    * segment (every plan sorts a task's rows by segment), its entry built
-    * from the rows as they pass. An assigned offset or stamp is set in
-    * place, so rows are not copied; a failed attempt deletes its files.
+  /** Stream files: `segId=N/part-<task>-<attempt>` for segment N
+    * (column 0), each file's entry built from its rows as they pass. An
+    * assigned offset or stamp is set in place, so rows are not copied.
     */
-  private def writeTask(rows: Iterator[InternalRow], dir: String, writers: ParquetWriteShim.Writers,
-                        offsetBase: Map[Long, Long], nowMicros: Option[Long]): Iterator[FileEntry] = {
-    val tc = TaskContext.get()
-    val conf = writers.conf.value
-    val entries = mutable.ArrayBuffer.empty[FileEntry]
-    val opened = mutable.ArrayBuffer.empty[Path]
-    tc.addTaskFailureListener { (_, _) =>
-      opened.foreach(p => try p.getFileSystem(conf).delete(p, false) catch { case NonFatal(_) => })
-    }
-    var w: OutputWriter = null
-    var seg, first, n, tLo, tHi, records, bytes = 0L
-    var ck = 1
-    def closeFile(): Unit = {
-      w.close()
-      val p = new Path(w.path())
-      val len = p.getFileSystem(conf).getFileStatus(p).getLen
-      entries += FileEntry(seg, stripScheme(p.toString), first, n,
-        if (tLo > tHi) 0L else tLo, if (tLo > tHi) 0L else tHi, maxChunkCount = ck, byteSize = len)
-      records += n; bytes += len
-      w = null
-    }
-    rows.foreach { r =>
-      val s = r.getLong(0)
-      if (w != null && s != seg) closeFile()
-      if (w == null) {
-        seg = s; n = 0L; tLo = Long.MaxValue; tHi = Long.MinValue; ck = 1
-        w = writers.open(s"$dir/segId=$s", f"part-${tc.partitionId()}%05d-${tc.taskAttemptId()}")
-        opened += new Path(w.path())
+  private final class SegmentLayout(offsetBase: Map[Long, Long], nowMicros: Option[Long])
+      extends TaskFileWriter.Layout[FileEntry] {
+    def schema: StructType = storageSchema
+    def fileKey(row: InternalRow): Long = row.getLong(0)
+    def fileName(seg: Long, tc: TaskContext): String =
+      f"segId=$seg/part-${tc.partitionId()}%05d-${tc.taskAttemptId()}"
+    def newFile(seg: Long): TaskFileWriter.FileRows[FileEntry] = new TaskFileWriter.FileRows[FileEntry] {
+      private val base = if (offsetBase.isEmpty) 0L else offsetBase(seg)
+      private var first = 0L
+      private var tLo = Long.MaxValue
+      private var tHi = Long.MinValue
+      private var ck = 1
+      def add(r: InternalRow, i: Long): InternalRow = {
+        val row = if (offsetBase.isEmpty && nowMicros.isEmpty) r else {
+          val m = r match { case u: UnsafeRow => u; case o => o.copy() }
+          if (offsetBase.nonEmpty) m.setLong(1, base + i)
+          nowMicros.foreach(m.setLong(4, _))
+          m
+        }
+        if (i == 0L) first = row.getLong(1)
+        if (!row.isNullAt(3)) { val t = row.getLong(3); tLo = math.min(tLo, t); tHi = math.max(tHi, t) }
+        if (!row.isNullAt(7)) ck = math.max(ck, row.getInt(7))
+        row
       }
-      val row = if (offsetBase.isEmpty && nowMicros.isEmpty) r else {
-        val m = r match { case u: UnsafeRow => u; case o => o.copy() }
-        if (offsetBase.nonEmpty) m.setLong(1, offsetBase(s) + n)
-        nowMicros.foreach(m.setLong(4, _))
-        m
-      }
-      if (n == 0L) first = row.getLong(1)
-      if (!row.isNullAt(3)) { val t = row.getLong(3); tLo = math.min(tLo, t); tHi = math.max(tHi, t) }
-      if (!row.isNullAt(7)) ck = math.max(ck, row.getInt(7))
-      w.write(row)
-      n += 1
+      def entry(path: String, rows: Long, bytes: Long): FileEntry =
+        FileEntry(seg, path, first, rows, if (tLo > tHi) 0L else tLo, if (tLo > tHi) 0L else tHi,
+          maxChunkCount = ck, byteSize = bytes)
     }
-    if (w != null) closeFile()
-    ParquetWriteShim.reportOutput(bytes, records)
-    entries.iterator
   }
 
   /** Max event payload PER ROW (Serializer.MAX_EVENT_SIZE,

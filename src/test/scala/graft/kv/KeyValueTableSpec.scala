@@ -1,12 +1,19 @@
 package graft.kv
 
 import graft.SparkTestSession
-import graft.core.ConditionalCheckFailedException
+import graft.core.{ConditionalCheckFailedException, GraftException}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** kv-table fixture (FIXTURES.md) mirroring KeyValueTableTest.java:
   * conditional semantics incl. bad-version, sorted prefix/range iteration,
@@ -459,6 +466,81 @@ class KeyValueTableSpec extends AnyFunSuite {
     }
     assert(t.currentVersion == v1, "a refused putIfVersion committed")
     assert(t.get("a").map(p => new String(p._1)) == Some("1"))
+  }
+
+  test("a put failing in its tasks throws GraftException with the cause; nothing lands") {
+    val t = fresh(parts = 4)
+    val v1 = t.put(kv("a" -> "1"))
+    val boom = udf((k: String) => {
+      if (k == "k3") throw new IllegalStateException("boom in udf")
+      k
+    })
+    // a distributed input, so the udf runs in the write's tasks (a
+    // driver-local one is evaluated while the plan is optimized)
+    val input = spark.sparkContext.parallelize((0 until 20).map(i => (s"k$i", s"v$i")), 2)
+      .toDF("pk", "v").select(boom($"pk").as("pk"), lit("").as("sk"), encode($"v", "UTF-8").as("value"))
+    val e = intercept[GraftException](t.put(input))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage.contains("boom in udf")), s"cause chain: ${chain.map(_.getClass.getName)}")
+    val dir = new Path(t.tableDirPath)
+    val deltas = dir.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(dir)
+      .map(_.getPath.getName).filter(_.startsWith("delta-")).toSet
+    assert(deltas == t.liveFilePaths.map(p => new Path(p).getName).toSet,
+      "the failed put's delta dir is gone")
+    assert(t.currentVersion == v1)
+    assert(t.get("a").map(p => new String(p._1)) == Some("1"))
+    assert(t.fsck().isEmpty)
+  }
+
+  test("a driver-local put is one named job of one task, no shuffle, with output metrics") {
+    val t = fresh(parts = 8)
+    val names = new ConcurrentLinkedQueue[String]()
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        names.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val group = s"kv-put-${java.util.UUID.randomUUID()}"
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val jobs, tasks, shuffled, bytes, records = new AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add(_))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) Option(e.taskMetrics).foreach { m =>
+          tasks.incrementAndGet()
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          bytes.addAndGet(m.outputMetrics.bytesWritten)
+          records.addAndGet(m.outputMetrics.recordsWritten)
+        }
+    }
+    spark.listenerManager.register(qeListener)
+    spark.sparkContext.addSparkListener(listener)
+    val pairs = (0 until 6).map(i => s"m$i" -> s"v$i")
+    try {
+      spark.sparkContext.setJobGroup(group, "a measured put")
+      try t.put(kv(pairs: _*)) finally spark.sparkContext.clearJobGroup()
+      val dir = new Path(t.liveFilePaths.last)
+      val files = dir.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(dir)
+        .filter(_.getPath.getName.startsWith("part-"))
+      val parts = pairs.map(p => KeyValueTable.partIndexOfBucket(KeyValueTable.bucketOf(p._1, 8), 8))
+      assert(files.length == parts.distinct.size, files.map(_.getPath.getName).toSeq)
+      val deadline = System.currentTimeMillis() + 10000
+      def settled = records.get == 6L && bytes.get == files.map(_.getLen).sum &&
+        names.asScala.toSeq.contains("graft.kvUpdate")
+      while (!settled && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(settled, s"output metrics: $records rows, $bytes bytes; executions ${names.asScala.toSeq}")
+      assert(jobs.get == 1L && tasks.get == 1L, s"$jobs jobs, $tasks tasks")
+      assert(shuffled.get == 0L)
+    } finally {
+      spark.listenerManager.unregister(qeListener)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(pairs.forall { case (k, v) => t.get(k).map(p => new String(p._1)).contains(v) })
   }
 
   test("compact() reclaims past-grace tombstones from earlier compactions") {

@@ -4,7 +4,9 @@ import graft.SparkTestSession
 import graft.core._
 import graft.storage.GraftStreams
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.streaming.{ReadMaxRows, SupportsAdmissionControl}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -67,6 +69,21 @@ class StreamingSourceSpec extends AnyFunSuite {
       val batches = q.recentProgress.count(_.numInputRows > 0)
       assert(batches >= 3, s"expected pacing into >=3 non-empty batches, got $batches")
     } finally q.stop()
+  }
+
+  test("a per-read option wins over the table's own value of the key") {
+    val (_, root) = mk()
+    val props = new java.util.HashMap[String, String]()
+    Seq("rootDir" -> root, "scope" -> "s", "stream" -> "ev", "maxRowsPerTrigger" -> "5")
+      .foreach { case (k, v) => props.put(k, v) }
+    val scan = new GraftStreamTable(props)
+      .newScanBuilder(new CaseInsensitiveStringMap(java.util.Map.of("maxRowsPerTrigger", "2")))
+      .build()
+    val stream = scan.toMicroBatchStream(Files.createTempDirectory("graft-ss-ckpt").toString)
+    try stream.asInstanceOf[SupportsAdmissionControl].getDefaultReadLimit match {
+      case m: ReadMaxRows => assert(m.maxRows() == 2L)
+      case other => fail(s"read limit $other")
+    } finally stream.stop()
   }
 
   test("maxBytesPerTrigger paces by manifest byte stats; min wins with a row cap") {
