@@ -144,6 +144,26 @@ object StreamCatalog {
     * ConcurrencySpec): retries-per-commit = Δlosses / commits.
     */
   val casLosses = new java.util.concurrent.atomic.LongAdder()
+
+  /** The catalog a reader without its own (a DSv2 scan) reads `rootDir`
+    * through: the one a [[graft.storage.GraftStreams]] on that root last
+    * registered, else a new one kept for the next scan. Its tip hints
+    * stay warm, so a scan's manifest read is a few exact-key probes, not
+    * a LIST plus a checkpoint replay. The 64 most recently used roots
+    * are kept.
+    */
+  def shared(rootDir: String, conf: => Configuration): StreamCatalog =
+    sharedByRoot.synchronized {
+      Option(sharedByRoot.get(rootDir)).getOrElse(share(rootDir, new StreamCatalog(rootDir, conf)))
+    }
+
+  private[graft] def share(rootDir: String, c: StreamCatalog): StreamCatalog =
+    sharedByRoot.synchronized { sharedByRoot.put(rootDir, c); c }
+
+  private val sharedByRoot = new java.util.LinkedHashMap[String, StreamCatalog](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, StreamCatalog]): Boolean =
+      size() > 64
+  }
 }
 
 class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configuration(),

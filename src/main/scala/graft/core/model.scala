@@ -122,19 +122,30 @@ final case class StreamConfig(
   */
 final case class StreamCut(positions: Map[Long, Long]) {
   def offsetOf(segmentId: Long): Option[Long] = positions.get(segmentId)
+  /** `{"segmentId":offset,...}`, keys sorted, so equal cuts serialize
+    * equally — the form read options and source offsets carry.
+    */
+  def json: String =
+    positions.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
 }
 
 object StreamCut {
   val Unbounded: StreamCut = StreamCut(Map.empty)
+  /** Parse [[StreamCut.json]]'s form. */
+  def fromJson(s: String): StreamCut = {
+    implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
+    StreamCut(org.json4s.jackson.Serialization.read[Map[String, Long]](s)
+      .map { case (k, v) => k.toLong -> v })
+  }
 }
 
 /** Direct address of one event (client/.../stream/impl/EventPointerImpl.java:39). */
 final case class EventPointer(segmentId: Long, offset: Long)
 
 /** One committed data file of a segment; rows inside carry explicit
-  * (segmentId, offset) columns so scans prune on parquet stats.
-  * `txnId` marks files written under an open transaction (invisible until
-  * the txn commits and they are merged in).
+  * (segmentId, offset) columns so scans prune on parquet stats. Files
+  * staged by an open transaction never appear here: the commit merges
+  * them into new files first.
   */
 final case class FileEntry(
     segmentId: Long,

@@ -34,7 +34,7 @@ class GraftStreamListener(
       .foreach { s =>
         sawGraftSource = true
         Option(s.endOffset).foreach { json =>
-          val n = GraftSourceOffset.countSegments(json)
+          val n = GraftStreamOffset.countSegments(json)
           val prev = lastCount.getAndSet(n)
           if (prev >= 0 && prev != n) onSegmentCountChange(n)
         }

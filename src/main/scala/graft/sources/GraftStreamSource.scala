@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.catalog.StreamCatalog
 import graft.core._
 import graft.storage.GraftStreams
 import org.apache.hadoop.fs.Path
@@ -15,8 +16,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.json4s.{DefaultFormats, Formats, JInt, JObject}
-import org.json4s.jackson.{JsonMethods, Serialization}
+import org.json4s.{JInt, JObject}
+import org.json4s.jackson.JsonMethods
 
 /** Structured Streaming over graft streams as a DataSource V2
   * `TableProvider` + `MicroBatchStream` (SURVEY §2.8/§3.2, §7 step 4):
@@ -45,10 +46,16 @@ import org.json4s.jackson.{JsonMethods, Serialization}
   * getNextStreamCut read throttling (BatchClientFactory.java:123), split
   * evenly across subscribed streams, then segments.
   *
-  * Large (> MaxEventSize) events arrive WHOLE: pacing cuts snap around
-  * chunk-group files and batches containing them route through a
-  * reassembling row reader (GraftReaderFactory), so the streaming and
-  * batch (GraftStreams.readEvents) surfaces agree on event granularity.
+  * Bounded batch reads plan through the same planner
+  * (GraftReadPlanner): `spark.read.format("graft-stream")` and the Scala
+  * API's `GraftStreams.readEvents` / `fetchEvent` / `segmentsAtTime`,
+  * which are this scan with cut options.
+  *
+  * Large (> MaxEventSize) events arrive WHOLE on every surface: pacing
+  * cuts snap around chunk-group files, and batches containing chunks
+  * route through the one reassembler, GraftReaderFactory's
+  * ReassemblingReader. An event belongs to the range holding its head
+  * chunk.
   */
 final case class StreamSub(scope: String, stream: String,
                            from: Option[StreamCut], to: Option[StreamCut],
@@ -67,19 +74,9 @@ final case class GraftSourceConfig(rootDir: String, subs: Seq[StreamSub],
     "asOfVersion (time travel) targets exactly one stream — manifest versions are per-stream")
   def multi: Boolean = subs.size > 1
 
-  /** Planning metadata: live tail, or the pinned historical manifest
-    * when this is a time-travel scan (`VERSION AS OF` / `asOfVersion`;
-    * multi-stream reads pin PER STREAM via `asOfVersion.<scope/stream>`
-    * since manifest versions are per-stream).
-    */
   /** True when ANY subscription is pinned to a historical manifest. */
   def timeTravel: Boolean = asOfVersion.nonEmpty || subs.exists(_.asOf.nonEmpty)
 
-  def metaOf(g: GraftStreams, sub: StreamSub): graft.core.StreamMetadata =
-    sub.asOf.orElse(asOfVersion) match {
-      case Some(v) => g.catalog.getStreamAt(sub.scope, sub.stream, v)
-      case None => g.catalog.getStream(sub.scope, sub.stream)
-    }
   def schema: StructType =
     if (multi) StructType(GraftStreams.eventSchema.fields :+
       StructField("stream", StringType, nullable = false))
@@ -93,7 +90,7 @@ object GraftSourceConfig {
       throw new IllegalArgumentException(s"graft-stream source requires option '$k'"))
     def cut(k: String): Option[StreamCut] =
       Option(o.get(k)).filter(s => s.nonEmpty && s != "head" && s != "unbounded")
-        .map(GraftSourceOffset.fromJson)
+        .map(StreamCut.fromJson)
     val rootDir = req("rootDir")
     val subs = Option(o.get("streams")) match {
       case Some(list) =>
@@ -134,8 +131,8 @@ object GraftSourceConfig {
         // session-derived Hadoop conf, like every other catalog path —
         // a default Configuration would drop credentials/settings that
         // live only in the session conf (e.g. s3a keys)
-        val cat = new graft.catalog.StreamCatalog(rootDir,
-          org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+        val cat = StreamCatalog.shared(rootDir,
+          SparkSession.active.sessionState.newHadoopConf())
         val f = fromV.map(v => cat.getStreamAt(sub.scope, sub.stream, v).tailCut)
         val t = toV.map(v => cat.getStreamAt(sub.scope, sub.stream, v).tailCut)
         (Seq(sub.copy(from = f, to = t)), toV.orElse(asOf0))
@@ -153,13 +150,10 @@ object GraftSourceConfig {
   */
 final case class GraftStreamOffset(cuts: Map[String, StreamCut], flat: Boolean)
     extends Offset {
-  private def cutJson(c: StreamCut): String =
-    c.positions.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
   override val json: String =
-    if (flat) cutJson(cuts.head._2)
+    if (flat) cuts.head._2.json
     else cuts.toSeq.sortBy(_._1)
-      .map { case (k, c) => s""""$k":${cutJson(c)}""" }.mkString("{", ",", "}")
+      .map { case (k, c) => s""""$k":${c.json}""" }.mkString("{", ",", "}")
 }
 
 object GraftStreamOffset {
@@ -176,8 +170,12 @@ object GraftStreamOffset {
               s"bad offset for segment $sid: $other")
           }.toMap)
         }.toMap
-      case _ => Map(singleKey -> GraftSourceOffset.fromJson(json))
+      case _ => Map(singleKey -> StreamCut.fromJson(json))
     }
+
+  /** Segment count across a flat OR nested (multi-stream) offset JSON. */
+  def countSegments(json: String): Int =
+    parse(json, "_").values.map(_.positions.size).sum
 }
 
 /** `format("graft-stream")` — DSv2 provider. Options: rootDir, scope,
@@ -306,6 +304,7 @@ final class GraftScanBuilder(conf: GraftSourceConfig) extends ScanBuilder
   import org.apache.spark.sql.sources.Filter
   import org.apache.spark.sql.types.LongType
 
+  private val snapshot = new ScanSnapshot(conf)
   private var pushed: PushedPredicates = PushedPredicates.empty
   private var required: StructType = conf.schema
   private var aggResult: Option[(StructType, Seq[Array[Any]])] = None
@@ -398,13 +397,11 @@ final class GraftScanBuilder(conf: GraftSourceConfig) extends ScanBuilder
     */
   private def manifestAggregate(wantsTime: Boolean, bySeg: Boolean)
       : Option[Seq[(Long, Long, Option[Long], Option[Long])]] = {
-    val g = new GraftStreams(SparkSession.active, conf.rootDir)
     val acc = scala.collection.mutable.LinkedHashMap
       .empty[Long, (Long, Option[Long], Option[Long])]
     // head-cut enforcement (enforceHead): loud even on the zero-IO path
     val exact = conf.subs.forall { sub =>
-      val sr = new SubRange(conf.metaOf(g, sub),
-        sub.key, sub.from, sub.to, enforceHead = true)
+      val sr = snapshot.range(sub, enforceHead = true)
       sr.meta.files.distinctBy(_.path).forall { f =>
         val overlap = sr.overlap(f)
         if (overlap == 0) true
@@ -430,16 +427,16 @@ final class GraftScanBuilder(conf: GraftSourceConfig) extends ScanBuilder
 
   override def build(): Scan = aggResult match {
     case Some((schema, values)) => new GraftAggScan(conf, schema, values)
-    case None => new GraftScan(conf, pushed, required, limit)
+    case None => new GraftScan(conf, pushed, required, limit, snapshot)
   }
 }
 
 /** Shared per-subscription read-range arithmetic — the ONE place the
-  * cut-capping rules live, used by the batch planner
-  * (GraftReadPlanner.plan), the statistics estimate
-  * (GraftScan.cachedStats) and the manifest-aggregate pushdown
-  * (GraftScanBuilder.manifestAggregate) so the three surfaces can never
-  * drift:
+  * cut-capping rules live, used by the planner (GraftReadPlanner.plan,
+  * batch and micro-batch), the statistics estimate
+  * (GraftScan.cachedStats), the manifest-aggregate pushdown
+  * (GraftScanBuilder.manifestAggregate) and the call-time check of
+  * `GraftStreams.readEvents`, so the surfaces can never drift:
   *   - an EXPLICIT from-position below the head cut is truncated-away
   *     data — throw loudly when `enforceHead` (TruncatedDataException),
   *     never skip silently;
@@ -471,6 +468,29 @@ private[graft] final class SubRange(val meta: graft.core.StreamMetadata,
     math.min(f.endOffset, hi(f.segmentId)) - math.max(f.startOffset, lo(f.segmentId)))
   def keep(f: graft.core.FileEntry, pushed: PushedPredicates): Boolean =
     pushed.keepFile(f, segById.get(f.segmentId))
+}
+
+/** The manifest state one batch scan reads: each subscription's manifest
+  * is read once, on first use, and the aggregate pushdown, the
+  * statistics and the planner all see that one state — a commit or
+  * truncate landing between them cannot make them disagree. The state is
+  * the live tip, or the pinned historical manifest of a time-travel scan
+  * (`VERSION AS OF` / `asOfVersion`; multi-stream reads pin PER STREAM
+  * via `asOfVersion.<scope/stream>`, since versions are per-stream).
+  */
+private[graft] final class ScanSnapshot(conf: GraftSourceConfig) {
+  private val metas = scala.collection.mutable.Map.empty[String, graft.core.StreamMetadata]
+  private def meta(sub: StreamSub): graft.core.StreamMetadata = synchronized {
+    metas.getOrElseUpdate(sub.key, {
+      val cat = StreamCatalog.shared(conf.rootDir, SparkSession.active.sessionState.newHadoopConf())
+      sub.asOf.orElse(conf.asOfVersion) match {
+        case Some(v) => cat.getStreamAt(sub.scope, sub.stream, v)
+        case None => cat.getStream(sub.scope, sub.stream)
+      }
+    })
+  }
+  def range(sub: StreamSub, enforceHead: Boolean): SubRange =
+    new SubRange(meta(sub), sub.key, sub.from, sub.to, enforceHead)
 }
 
 /** Pre-aggregated rows, computed driver-side from stream manifests —
@@ -508,10 +528,13 @@ final class GraftAggScan(conf: GraftSourceConfig, aggSchema: StructType,
 class GraftScan(conf: GraftSourceConfig,
     pushed: PushedPredicates = PushedPredicates.empty,
     required: StructType = null,
-    limit: Option[Int] = None) extends Scan
+    limit: Option[Int] = None,
+    snap: ScanSnapshot = null) extends Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
+    with org.apache.spark.sql.internal.connector.SupportsMetadata {
   private val outSchema: StructType = Option(required).getOrElse(conf.schema)
+  private val snapshot = Option(snap).getOrElse(new ScanSnapshot(conf))
   override def readSchema(): StructType = outSchema
 
   /** Runtime (join-driven) pruning — the DSv2 dynamic-partition-pruning
@@ -540,6 +563,23 @@ class GraftScan(conf: GraftSourceConfig,
             else s" PushedFilters: [${pushed.recognized.mkString(", ")}]"
     s"GraftStreamSource[${conf.describe}]$f ReadSchema: ${outSchema.simpleString}"
   }
+
+  /** Formatted explain's lines: the pushed filters (the recognized
+    * predicates plus the cut's offset bounds) and the read schema.
+    */
+  override def getMetaData(): Map[String, String] = Map(
+    "PushedFilters" -> (pushed.recognized ++ cutFilters.map(_._1)).mkString("[", ", ", "]"),
+    "ReadSchema" -> outSchema.catalogString)
+
+  /** The cut's offset bounds as parquet row-group filters, (full,
+    * lower-only), when a file straddles a bound (None otherwise: every
+    * row group is in range). Statistics' view of the snapshot, so it
+    * never throws.
+    */
+  private lazy val cutFilters: Option[(org.apache.spark.sql.sources.Filter,
+      org.apache.spark.sql.sources.Filter)] =
+    GraftReadPlanner.cutFilters(conf.subs.filter(sub => pushed.keepStream(sub.key))
+      .map(snapshot.range(_, enforceHead = false)))
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     require(!conf.timeTravel,
       "asOfVersion (time travel) is a batch-read surface; streaming reads tail the live manifest")
@@ -564,7 +604,6 @@ class GraftScan(conf: GraftSourceConfig,
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = cachedStats
   private lazy val cachedStats: org.apache.spark.sql.connector.read.Statistics = {
     val spark = SparkSession.active
-    val g = new GraftStreams(spark, conf.rootDir)
     var rows = 0L
     var bytes = 0L
     lazy val hadoopConf = spark.sessionState.newHadoopConf()
@@ -575,8 +614,7 @@ class GraftScan(conf: GraftSourceConfig,
     // enforceHead = false: stats never throw; the planner stays the
     // loud surface for truncated-under-reader positions.
     conf.subs.filter(sub => pushed.keepStream(sub.key)).foreach { sub =>
-      val sr = new SubRange(conf.metaOf(g, sub),
-        sub.key, sub.from, sub.to, enforceHead = false)
+      val sr = snapshot.range(sub, enforceHead = false)
       sr.meta.files.distinctBy(_.path).foreach { f =>
         val overlap = sr.overlap(f)
         if (overlap > 0 && sr.keep(f, pushed)) {
@@ -600,47 +638,36 @@ class GraftScan(conf: GraftSourceConfig,
     }
   }
 
-  /** Bounded batch read (`spark.read.format("graft-stream")`) — the
-    * BatchClientFactory.getSegments(from, to) analog through the
-    * DataFrame reader: every subscribed stream scans (fromStreamCut,
-    * toStreamCut], defaulting to head → the tail captured at planning.
-    * Chunked large events reassemble to whole rows, like every other
-    * read surface.
+  /** Bounded batch read (`spark.read.format("graft-stream")`, and so
+    * `GraftStreams.readEvents`) — the BatchClientFactory.getSegments(from,
+    * to) analog through the DataFrame reader: every subscribed stream
+    * scans [fromStreamCut, toStreamCut) of the scan's snapshot, by
+    * default its head to its tail. Chunked large events reassemble to
+    * whole rows, like every other read surface.
     */
   override def toBatch(): org.apache.spark.sql.connector.read.Batch =
     new org.apache.spark.sql.connector.read.Batch {
       private val spark = SparkSession.active
-      private val g = new GraftStreams(spark, conf.rootDir)
-      override def planInputPartitions(): Array[InputPartition] = {
-        val fromC = conf.subs.map { sub =>
-          sub.key -> sub.from.getOrElse(conf.metaOf(g, sub).headStreamCut)
-        }.toMap
-        val toC = conf.subs.map { sub =>
-          val tail = conf.metaOf(g, sub).tailCut
-          sub.key -> sub.to.map(t => StreamCut(tail.positions.map { case (sid, off) =>
-            sid -> math.min(off, t.positions.getOrElse(sid, 0L))
-          })).getOrElse(tail)
-        }.toMap
-        GraftReadPlanner.plan(spark, g, conf, fromC, toC, effective, limit)
-      }
+      override def planInputPartitions(): Array[InputPartition] =
+        GraftReadPlanner.plan(spark, conf, snapshot.range(_, enforceHead = true), effective, limit)
       override def createReaderFactory(): PartitionReaderFactory =
-        GraftReadPlanner.factory(spark, conf, outSchema, pushed)
+        GraftReadPlanner.factory(spark, conf, outSchema, pushed, cutFilters)
     }
 }
 
-/** Shared micro-batch/batch planning: manifest files overlapping the
-  * (from, to] cuts become packed FilePartitions; when any planned file
-  * straddles a cut bound the whole batch carries exact row bounds (and
-  * reads row-filtered), otherwise it reads columnar.
+/** Shared micro-batch/batch planning: manifest files overlapping each
+  * subscription's [from, to) range become packed FilePartitions; when
+  * any planned file straddles a cut bound the whole batch carries exact
+  * row bounds (and reads row-filtered), otherwise it reads columnar.
   */
 private[sources] object GraftReadPlanner {
+  import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThanOrEqual, LessThan, Or}
   private val dataSchema = GraftStreams.eventSchema
   private def partitionSchema(conf: GraftSourceConfig): StructType =
     if (conf.multi) StructType(Seq(StructField("stream", StringType, nullable = false)))
     else new StructType()
 
-  def plan(spark: SparkSession, g: GraftStreams, conf: GraftSourceConfig,
-           fromC: Map[String, StreamCut], toC: Map[String, StreamCut],
+  def plan(spark: SparkSession, conf: GraftSourceConfig, rangeOf: StreamSub => SubRange,
            pushed: PushedPredicates = PushedPredicates.empty,
            limit: Option[Int] = None): Array[InputPartition] = {
     lazy val hadoopConf = spark.sessionState.newHadoopConf()
@@ -659,9 +686,7 @@ private[sources] object GraftReadPlanner {
         // wrong segment, routing-key hash outside the segment's key
         // range) — conservative, the residual filters still run over
         // whatever is read
-        val sr = new SubRange(conf.metaOf(g, sub), sub.key,
-          fromC.get(sub.key), Some(toC.getOrElse(sub.key, StreamCut(Map.empty))),
-          enforceHead = true)
+        val sr = rangeOf(sub)
         boundsB += sub.key -> sr.meta.segments.map(s => s.segmentId ->
           (sr.lo(s.segmentId), sr.hi(s.segmentId))).toMap
         val pv: InternalRow =
@@ -703,19 +728,39 @@ private[sources] object GraftReadPlanner {
       .map(fp => GraftInputPartition(fp, bounds, anyChunked)).toArray
   }
 
-  def factory(spark: SparkSession, conf: GraftSourceConfig): PartitionReaderFactory =
-    factory(spark, conf, null, PushedPredicates.empty)
+  /** Parquet row-group filters for the ranges' cut bounds, when a file in
+    * range straddles one (None otherwise — every row group is in range):
+    * OR over the segments with files in range of `segmentId = s AND
+    * offset >= lo [AND offset < hi]`. The first filter has both bounds;
+    * the second only the lower, for the reassembling reader — an upper
+    * bound would drop the trailing chunks of an event whose head is in
+    * range. Multi-stream ranges OR together, which only keeps more.
+    */
+  def cutFilters(ranges: Seq[SubRange]): Option[(Filter, Filter)] = {
+    val inRange = for (sr <- ranges; f <- sr.meta.files if sr.overlap(f) > 0) yield (sr, f)
+    if (!inRange.exists { case (sr, f) => sr.overlap(f) < f.rowCount }) None
+    else {
+      val segs = inRange.map { case (sr, f) => (f.segmentId, sr.lo(f.segmentId), sr.hi(f.segmentId)) }.distinct
+      def bounded(sid: Long, lo: Long, hi: Long): Filter =
+        (Seq(GreaterThanOrEqual("offset", lo)) ++ Some(LessThan("offset", hi)).filter(_ => hi < Long.MaxValue))
+          .foldLeft(EqualTo("segmentId", sid): Filter)(And)
+      Some((segs.map { case (s, lo, hi) => bounded(s, lo, hi) }.reduce(Or),
+        segs.map { case (s, lo, _) => bounded(s, lo, Long.MaxValue) }.reduce(Or)))
+    }
+  }
 
   /** Reader factory honoring column pruning (`out` = the scan's pruned
-    * output schema) and pushed filters (forwarded to parquet row-group
-    * stats). The parquet read schema is the pruned data columns PLUS
-    * `segmentId`/`offset` — two cheap delta-encoded longs the cut-bounds
-    * row filter and chunk reassembly key on — and pruned-away extras are
-    * projected off after filtering, row- and columnar-wise. The payload
-    * column, the actual data volume, is read only when requested.
+    * output schema, null = the full schema), pushed filters and the cut
+    * filters (forwarded to parquet row-group stats). The parquet read
+    * schema is the pruned data columns PLUS `segmentId`/`offset` — two
+    * cheap delta-encoded longs the cut-bounds row filter and chunk
+    * reassembly key on — and pruned-away extras are projected off after
+    * filtering, row- and columnar-wise. The payload column, the actual
+    * data volume, is read only when requested.
     */
-  def factory(spark: SparkSession, conf: GraftSourceConfig, out: StructType,
-              pushed: PushedPredicates): PartitionReaderFactory = {
+  def factory(spark: SparkSession, conf: GraftSourceConfig, out: StructType = null,
+              pushed: PushedPredicates = PushedPredicates.empty,
+              cut: Option[(Filter, Filter)] = None): PartitionReaderFactory = {
     val outSchema = Option(out).getOrElse(conf.schema)
     val outNames = outSchema.fieldNames.toSet
     val readData = StructType(dataSchema.fields.filter(f =>
@@ -744,8 +789,9 @@ private[sources] object GraftReadPlanner {
       "segmentId/offset ordinals diverge between pruned and storage layouts")
     new GraftReaderFactory(
       ParquetShim.parquetReaderFactory(spark, dataSchema, pSchema, readData,
-        pushed.parquetFilters),
-      ParquetShim.parquetReaderFactory(spark, GraftStreams.storageSchema, pSchema),
+        pushed.parquetFilters ++ cut.map(_._1)),
+      ParquetShim.parquetReaderFactory(spark, GraftStreams.storageSchema, pSchema,
+        filters = cut.map(_._2).toArray),
       readData.fieldIndex("segmentId"), readData.fieldIndex("offset"),
       if (conf.multi) Some(readData.size) else None,
       conf.subs.head.key, conf.multi,
@@ -925,8 +971,12 @@ class GraftMicroBatchStream(spark: SparkSession, conf: GraftSourceConfig)
 
   // ------------------------------------------------------------- planning
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    GraftReadPlanner.plan(spark, g, conf, toCuts(start), toCuts(end))
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val (from, to) = (toCuts(start), toCuts(end))
+    GraftReadPlanner.plan(spark, conf, sub => new SubRange(
+      g.catalog.getStream(sub.scope, sub.stream), sub.key, from.get(sub.key),
+      Some(to.getOrElse(sub.key, StreamCut.Unbounded)), enforceHead = true))
+  }
 
   // one factory for the query's lifetime: building it per micro-batch
   // would broadcast two fresh Hadoop confs every trigger and accumulate
@@ -1102,10 +1152,10 @@ final case class GraftTailPartitionOffset(
   * straddling and no chunked files pass through COLUMNAR; boundary
   * batches read as rows filtered by the exact (stream, segment) offset
   * bounds; batches containing large-event chunk rows read the at-rest
-  * storage schema and reassemble each chunk group into one whole event
-  * (the streaming analog of GraftStreams.reassembleLargeEvents —
-  * chunk-safe pacing in latestOffset guarantees groups never split
-  * across micro-batches, and groups never span files by construction).
+  * storage schema and reassemble each chunk group into one whole event —
+  * the engine's one reassembler, for batch and streaming reads alike
+  * (groups never span files by construction, and chunk-safe pacing in
+  * latestOffset keeps them inside one micro-batch).
   */
 final class GraftReaderFactory(delegate: PartitionReaderFactory,
     storageDelegate: PartitionReaderFactory, segOrd: Int,
@@ -1204,10 +1254,11 @@ final class GraftReaderFactory(delegate: PartitionReaderFactory,
   /** Rows arrive offset-ordered per file (and chunk groups are
     * file-contiguous), so reassembly is a streaming merge: buffer the
     * chunkCount consecutive rows of a group, emit one event row with
-    * the concatenated payload at the group's head offset. Incomplete
-    * groups (cut/truncation edges — possible only with non-chunk-safe
-    * external cuts) are dropped, exactly like the batch reassembler's
-    * nRows === chunkCount filter.
+    * the concatenated payload at the group's head offset. A group
+    * belongs to the range holding its head: it is emitted whole when the
+    * head is in bounds (its trailing chunks may lie past the upper
+    * bound) and skipped when the head is below the range. A group broken
+    * inside a file (corruption) is dropped.
     */
   private final class ReassemblingReader(r: PartitionReader[InternalRow],
       bounds: Option[Map[String, Map[Long, (Long, Long)]]])
@@ -1483,14 +1534,4 @@ object GraftStreamSource {
         s"offset carries no cut for $key: $offsetJson"))
     new GraftStreams(spark, rootDir).timeWindowAt(scope, stream, cut)
   }
-}
-
-object GraftSourceOffset {
-  private implicit val fmts: Formats = DefaultFormats
-  /** Parse a bare StreamCut (`{"segmentId": offset}`). */
-  def fromJson(s: String): StreamCut =
-    StreamCut(Serialization.read[Map[String, Long]](s).map { case (k, v) => k.toLong -> v })
-  /** Segment count across a flat OR nested (multi-stream) offset JSON. */
-  def countSegments(json: String): Int =
-    GraftStreamOffset.parse(json, "_").values.map(_.positions.size).sum
 }

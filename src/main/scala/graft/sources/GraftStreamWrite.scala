@@ -4,12 +4,14 @@ import graft.storage.GraftStreams
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.ParquetWriteShim
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, ShortType, StringType, StructType}
-import org.apache.spark.util.SerializableConfiguration
 
 /** DSv2 write path for graft streams — the EventStreamWriter surface
   * (client/.../stream/EventStreamWriter.java:75) through SQL and the
@@ -68,6 +70,12 @@ object GraftWriteMapping {
     }
   }
 
+  /** The canonical write shape; the sink's staged files keep it. */
+  val writeSchema: StructType = new StructType()
+    .add("routingKey", StringType, nullable = false)
+    .add("eventTime", LongType, nullable = false)
+    .add("payload", BinaryType, nullable = false)
+
   /** Project a DataFrame onto the canonical write shape. */
   def project(df: DataFrame): DataFrame = {
     val (rk, et, pay) = resolve(df.schema)
@@ -125,7 +133,8 @@ final class GraftStreamingWrite(conf: GraftSourceConfig, queryId: String,
     schema: StructType, autoNoteTime: Boolean) extends StreamingWrite {
   private val sub = conf.subs.head
   private def spark = SparkSession.active
-  private def g = new GraftStreams(spark, conf.rootDir)
+  // one engine (and so one warm catalog) for the query's epoch commits
+  private val g = new GraftStreams(spark, conf.rootDir)
   // staging lives beside the stream's data dir so it inherits the same
   // filesystem/permissions; per-query so concurrent sinks never collide
   private val stagingRoot =
@@ -136,7 +145,7 @@ final class GraftStreamingWrite(conf: GraftSourceConfig, queryId: String,
     val (rk, et, pay) = GraftWriteMapping.resolve(schema)
     val etIsLong = schema(et).dataType == LongType
     new GraftStagingWriterFactory(stagingRoot.toString,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
+      ParquetWriteShim.parquetWriters(spark, GraftWriteMapping.writeSchema),
       rk, et, pay, etIsLong)
   }
 
@@ -150,7 +159,7 @@ final class GraftStreamingWrite(conf: GraftSourceConfig, queryId: String,
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.collect { case m: GraftStagedFiles => m.paths }.flatten
     if (files.nonEmpty) {
-      val staged = spark.read.schema(GraftStagingWriter.stagingSparkSchema)
+      val staged = spark.read.schema(GraftWriteMapping.writeSchema)
         .parquet(files.toSeq: _*)
       g.writeEventsWithRetry(sub.scope, sub.stream, staged,
         writerId = Some(s"sink-$queryId"), batchId = Some(epochId),
@@ -172,82 +181,47 @@ final class GraftStreamingWrite(conf: GraftSourceConfig, queryId: String,
 }
 
 final class GraftStagingWriterFactory(stagingRoot: String,
-    conf: SerializableConfiguration, rkOrd: Int, etOrd: Int, payOrd: Int,
+    writers: ParquetWriteShim.Writers, rkOrd: Int, etOrd: Int, payOrd: Int,
     etIsLong: Boolean) extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new GraftStagingWriter(
-      new Path(new Path(stagingRoot, s"epoch-$epochId"),
-        f"part-$partitionId%05d-$taskId.parquet"),
-      conf.value, rkOrd, etOrd, payOrd, etIsLong)
+    new GraftStagingWriter(s"$stagingRoot/epoch-$epochId", f"part-$partitionId%05d-$taskId",
+      writers, rkOrd, etOrd, payOrd, etIsLong)
 }
 
 /** Executor-side staging writer: raw (routingKey, eventTime, payload)
-  * parquet via the public parquet-hadoop Group API — no Spark write
-  * internals. Files are task-unique; only files named in the task's
-  * commit message are ever read back.
+  * parquet through the engine's shared task-side parquet writer
+  * (ParquetWriteShim, as TaskFileWriter uses it). Files are task-unique;
+  * only files named in the task's commit message are ever read back.
   */
-final class GraftStagingWriter(path: Path, conf: org.apache.hadoop.conf.Configuration,
+final class GraftStagingWriter(dir: String, name: String, writers: ParquetWriteShim.Writers,
     rkOrd: Int, etOrd: Int, payOrd: Int, etIsLong: Boolean)
     extends DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
-  import org.apache.parquet.hadoop.metadata.CompressionCodecName
-  import org.apache.parquet.hadoop.util.HadoopOutputFile
-  import org.apache.parquet.io.api.Binary
-
-  private val factory = new SimpleGroupFactory(GraftStagingWriter.stagingType)
   // opened on first row: an all-filtered partition stages no file at all
-  private var writerOpt: Option[org.apache.parquet.hadoop.ParquetWriter[org.apache.parquet.example.data.Group]] = None
-  private def writer = writerOpt.getOrElse {
-    val w = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(path, conf))
-      .withConf(conf)
-      .withType(GraftStagingWriter.stagingType)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    writerOpt = Some(w)
-    w
-  }
+  private var w: OutputWriter = _
+  private val out = new GenericInternalRow(3)
   private var rows = 0L
 
   override def write(row: InternalRow): Unit = {
     if (row.isNullAt(rkOrd) || row.isNullAt(etOrd) || row.isNullAt(payOrd))
       throw new IllegalArgumentException(
         "graft-stream sink: routingKey, eventTime and payload must be non-null")
-    val grp = factory.newGroup()
-    grp.append("routingKey", Binary.fromConstantByteArray(row.getUTF8String(rkOrd).getBytes))
-    grp.append("eventTime", if (etIsLong) row.getLong(etOrd) else row.getInt(etOrd).toLong)
-    grp.append("payload", Binary.fromConstantByteArray(row.getBinary(payOrd)))
-    writer.write(grp)
+    if (w == null) w = writers.open(dir, name)
+    out.update(0, row.getUTF8String(rkOrd))
+    out.setLong(1, if (etIsLong) row.getLong(etOrd) else row.getInt(etOrd).toLong)
+    out.update(2, row.getBinary(payOrd))
+    w.write(out)
     rows += 1
   }
 
-  override def commit(): WriterCommitMessage = {
-    writerOpt.foreach(_.close())
-    if (rows > 0) GraftStagedFiles(Seq(path.toString), rows)
-    else GraftStagedFiles(Nil, 0L)
-  }
+  override def commit(): WriterCommitMessage =
+    if (w == null) GraftStagedFiles(Nil, 0L)
+    else { w.close(); GraftStagedFiles(Seq(w.path()), rows) }
 
-  override def abort(): Unit = {
-    try writerOpt.foreach(_.close()) catch { case _: Throwable => () }
-    try path.getFileSystem(conf).delete(path, false) catch { case _: Throwable => () }
+  override def abort(): Unit = if (w != null) {
+    try w.close() catch { case _: Throwable => () }
+    val p = new Path(w.path())
+    try p.getFileSystem(writers.conf.value).delete(p, false) catch { case _: Throwable => () }
   }
 
   override def close(): Unit = ()
-}
-
-object GraftStagingWriter {
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-
-  val stagingType: MessageType = Types.buildMessage()
-    .addField(Types.required(BINARY).as(LogicalTypeAnnotation.stringType()).named("routingKey"))
-    .addField(Types.required(INT64).named("eventTime"))
-    .addField(Types.required(BINARY).named("payload"))
-    .named("graft_sink_staging")
-
-  val stagingSparkSchema: StructType = new StructType()
-    .add("routingKey", StringType, nullable = false)
-    .add("eventTime", LongType, nullable = false)
-    .add("payload", BinaryType, nullable = false)
 }

@@ -3,6 +3,7 @@ package graft.storage
 import graft.catalog.{CasFiles, StreamCatalog}
 import graft.core._
 import graft.functions.GraftFunctions.hash_to_range
+import graft.sources.SubRange
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -31,9 +32,10 @@ import scala.util.Try
   *   durability tiers.
   *
   * Read path (BatchClientFactory analog, client/.../BatchClientFactory.java:80):
-  *   plan = manifest file entries overlapping [fromCut, toCut) — the exact
+  *   every bounded read is the `graft-stream` DSv2 batch scan between two
+  *   cuts — manifest file entries overlapping [fromCut, toCut), the exact
   *   StreamCut → byte-range pruning of the reference, here as file pruning
-  *   plus parquet min/max stats on the (segmentId, offset) columns.
+  *   plus parquet row-group stats on the (segmentId, offset) columns.
   *
   * Rows at rest use the canonical event schema (SURVEY §1.2):
   * (segmentId long, offset long, routingKey string, eventTime long,
@@ -41,8 +43,8 @@ import scala.util.Try
   */
 class GraftStreams(val spark: SparkSession, val rootDir: String,
                    checkpointInterval: Int = graft.catalog.StreamCatalog.DefaultCheckpointInterval) {
-  val catalog = new StreamCatalog(rootDir, spark.sessionState.newHadoopConf(),
-    checkpointInterval)
+  val catalog: StreamCatalog = StreamCatalog.share(rootDir,
+    new StreamCatalog(rootDir, spark.sessionState.newHadoopConf(), checkpointInterval))
 
   import spark.implicits._
 
@@ -129,7 +131,7 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
     * they are split in-plan into <= MaxEventSize chunk rows occupying
     * CONSECUTIVE offsets of the same segment (the LargeEventWriter
     * transient-segment + merge analog, client/.../stream/impl/
-    * LargeEventWriter.java:77,99,153); readEvents reassembles them. The
+    * LargeEventWriter.java:77,99,153); every read reassembles them. The
     * split runs BEFORE the shuffle, so no shuffled row exceeds the chunk.
     */
   private def appendPlan(df: DataFrame, open: Seq[SegmentRecord]): DataFrame =
@@ -227,50 +229,25 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
 
   // ------------------------------------------------------------------- read
 
-  /** Bounded batch read between two cuts, default [head, tail). Planning
-    * never lists directories — only manifest entries overlapping the cut
-    * range are scanned, and the per-row offset predicate rides parquet
-    * stats.
+  /** Bounded batch read between two cuts, default [head, tail): the
+    * `graft-stream` DSv2 batch scan with `fromStreamCut`/`toStreamCut`
+    * (planning reads one manifest snapshot and never lists or stats a
+    * data file). An unbounded `to` is the tail at call time, so the
+    * frame reads what was committed when it was made; a `from` below the
+    * head cut throws [[TruncatedDataException]] here, at call time.
     */
   def readEvents(scope: String, stream: String,
                  from: StreamCut = StreamCut.Unbounded,
                  to: StreamCut = StreamCut.Unbounded): DataFrame = {
     val meta = catalog.getStream(scope, stream)
-    val head = meta.headStreamCut
-    val lo: Long => Long = sid => from.positions.getOrElse(sid, head.positions.getOrElse(sid, 0L))
-    // A real (non-Unbounded) `to` cut strictly precedes any segment born
-    // after it: absent segments cap at 0 rows, mirroring the DSv2 path's
-    // latestOffset rule — only a truly unbounded read tails every segment.
-    val hi: Long => Long =
-      if (to.positions.isEmpty) _ => Long.MaxValue
-      else sid => to.positions.getOrElse(sid, 0L)
+    new SubRange(meta, s"$scope/$stream", Some(from), None, enforceHead = true) // the head rule, now
+    scan(scope, stream, from, if (to.positions.isEmpty) meta.tailCut else to)
+  }
 
-    from.positions.foreach { case (sid, off) =>
-      val h = head.positions.getOrElse(sid, 0L)
-      if (off < h) throw new TruncatedDataException(
-        s"segment $sid offset $off is below head cut $h (truncated)")
-    }
-
-    val files = meta.files.filter(f => f.endOffset > lo(f.segmentId) && f.startOffset < hi(f.segmentId))
-    if (files.isEmpty) return emptyEvents()
-
-    val cond = meta.segments.map(_.segmentId).map { sid =>
-      col("segmentId") === sid && col("offset") >= lo(sid) && col("offset") < hi(sid)
-    }.reduce(_ || _)
-
-    // Fast path: no scanned file contains large-event chunks (footer-
-    // derived manifest flag), so the canonical projection never reads the
-    // chunk columns and no reassembly shuffle is planned.
-    if (files.forall(_.maxChunkCount <= 1))
-      spark.read.schema(GraftStreams.storageSchema)
-        .parquet(files.map(_.path).distinct: _*)
-        .filter(cond)
-        .select(GraftStreams.eventSchema.fieldNames.map(col): _*)
-    else
-      GraftStreams.reassembleLargeEvents(
-        spark.read.schema(GraftStreams.storageSchema)
-          .parquet(files.map(_.path).distinct: _*)
-          .filter(cond))
+  private def scan(scope: String, stream: String, from: StreamCut, to: StreamCut): DataFrame = {
+    val r = spark.read.format("graft-stream").option("rootDir", rootDir)
+      .option("scope", scope).option("stream", stream).option("toStreamCut", to.json)
+    (if (from.positions.isEmpty) r else r.option("fromStreamCut", from.json)).load()
   }
 
   /** Ordered per-key consumption view: epoch-major, offset-minor — parents
@@ -283,30 +260,14 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
       .orderBy($"epoch", $"segmentId", $"offset")
       .drop("epoch")
 
-  /** fetchEvent(EventPointer) (EventStreamReader.java:82). A pointer to a
-    * large event addresses its HEAD chunk; the chunk span is bounded by
-    * the covering files' maxChunkCount, so the read stays a point lookup.
+  /** fetchEvent(EventPointer) (EventStreamReader.java:82): the one-row
+    * range [offset, offset + 1) of the pointer's segment. A pointer to a
+    * large event addresses its HEAD chunk, and the read emits the whole
+    * event; a pointer below the head cut throws like any read from there.
     */
-  def fetchEvent(scope: String, stream: String, p: EventPointer): DataFrame = {
-    val meta = catalog.getStream(scope, stream)
-    val segFiles = meta.files.filter(_.segmentId == p.segmentId)
-    val bound = segFiles.map(_.maxChunkCount.toLong).foldLeft(1L)(math.max)
-    val files = segFiles.filter(f =>
-      p.offset < f.endOffset && p.offset + bound > f.startOffset)
-    if (files.isEmpty) return emptyEvents()
-    val scanned = spark.read.schema(GraftStreams.storageSchema).parquet(files.map(_.path): _*)
-      .filter($"segmentId" === p.segmentId &&
-        $"offset" >= p.offset && $"offset" < p.offset + bound)
-    if (bound <= 1L)
-      scanned.filter($"offset" === p.offset)
-        .select(GraftStreams.eventSchema.fieldNames.map(col): _*)
-    else
-      GraftStreams.reassembleLargeEvents(scanned).filter($"offset" === p.offset)
-  }
-
-  private def emptyEvents(): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      GraftStreams.eventSchema)
+  def fetchEvent(scope: String, stream: String, p: EventPointer): DataFrame =
+    readEvents(scope, stream, StreamCut(Map(p.segmentId -> p.offset)),
+      StreamCut(Map(p.segmentId -> (p.offset + 1))))
 
   // --------------------------------------------------------- cut arithmetic
 
@@ -358,18 +319,16 @@ class GraftStreams(val spark: SparkSession, val rootDir: String,
   }
 
   /** getSegmentsAtTime (Controller.java:388): first live offset whose
-    * eventTime ≥ t per segment; file-level eventTime stats prune the scan.
+    * eventTime ≥ t per segment, else its tail — a read of [head, tail)
+    * filtered on eventTime, whose pushdown prunes files by their recorded
+    * time span. Every position is at or above the head cut.
     */
   def segmentsAtTime(scope: String, stream: String, t: Long): StreamCut = {
     val meta = catalog.getStream(scope, stream)
-    val candidates = meta.files.filter(_.maxEventTime >= t)
-    val found: Map[Long, Long] =
-      if (candidates.isEmpty) Map.empty
-      else spark.read.schema(GraftStreams.eventSchema)
-        .parquet(candidates.map(_.path).distinct: _*)
-        .filter($"eventTime" >= t)
-        .groupBy($"segmentId").agg(min($"offset").as("pos"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val found = scan(scope, stream, StreamCut.Unbounded, meta.tailCut)
+      .filter($"eventTime" >= t)
+      .groupBy($"segmentId").agg(min($"offset"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     StreamCut(meta.segments.map(s =>
       s.segmentId -> found.getOrElse(s.segmentId, s.tailOffset)).toMap)
   }
@@ -925,8 +884,9 @@ object GraftStreams {
     * [[chunkPayloads]].
     */
   val MaxEventSize: Int = 8 * 1024 * 1024
-  /** Canonical OUTWARD event schema (SURVEY §1.2) — what readEvents /
-    * fetchEvent / the streaming source produce.
+  /** Canonical OUTWARD event schema (SURVEY §1.2) — what the
+    * `graft-stream` scan produces, batch or streaming, and so readEvents
+    * and fetchEvent.
     */
   val eventSchema: StructType = StructType(Seq(
     StructField("segmentId", LongType, nullable = false),
@@ -965,32 +925,4 @@ object GraftStreams {
         when(col("chunkCount") === 1, col("payload"))
           .otherwise(col("payload").substr(col("chunkSeq") * max + 1, lit(max))))
   }
-
-  /** Reassemble chunked large events from a storage-schema scan back into
-    * canonical whole-event rows (the mergeSegments-read analog): chunks
-    * group on (segmentId, head offset = offset - chunkSeq), sort by
-    * chunkSeq and concatenate. An event sliced by a mid-event cut (some
-    * chunks outside the scanned range) is dropped whole rather than
-    * surfaced truncated. Only planned when the scanned files' footer
-    * stats say chunks exist.
-    */
-  def reassembleLargeEvents(scanned: DataFrame): DataFrame =
-    scanned
-      .withColumn("chunkSeq", coalesce(col("chunkSeq"), lit(0)))
-      .withColumn("chunkCount", coalesce(col("chunkCount"), lit(1)))
-      .withColumn("eventHead", col("offset") - col("chunkSeq"))
-      .groupBy(col("segmentId"), col("eventHead"))
-      .agg(
-        min(col("routingKey")).as("routingKey"),
-        min(col("eventTime")).as("eventTime"),
-        min(col("processingTime")).as("processingTime"),
-        max(col("chunkCount")).as("chunkCount"),
-        count(lit(1)).as("nRows"),
-        array_sort(collect_list(struct(col("chunkSeq"), col("payload")))).as("chunks"))
-      .filter(col("nRows") === col("chunkCount"))
-      .withColumn("payload",
-        aggregate(col("chunks"), lit(Array.emptyByteArray),
-          (acc, x) => concat(acc, x.getField("payload"))))
-      .select(col("segmentId"), col("eventHead").as("offset"), col("routingKey"),
-        col("eventTime"), col("processingTime"), col("payload"))
 }

@@ -59,6 +59,8 @@ class PlanAuditSpec extends AnyFunSuite {
     val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(plan.contains("PushedFilters: [") && !plan.contains("PushedFilters: []"),
       "cut-range offset predicates not pushed to parquet")
+    val pushed = plan.linesIterator.find(_.trim.startsWith("PushedFilters:")).getOrElse("")
+    assert(pushed.contains("offset"), s"cut bounds not handed to parquet: $pushed")
     val readSchema = plan.linesIterator.find(_.trim.startsWith("ReadSchema:")).getOrElse("")
     assert(!readSchema.contains("payload"),
       s"projection did not prune the payload column: $readSchema")

@@ -12,11 +12,15 @@ class CountingOsFs extends graft.storage.LaggedObjectStoreFs {
     // RawLocalFileSystem.listStatus materializes each child through
     // getFileStatus — those are part of the ONE listing round trip on a
     // real store, not extra point GETs, so don't double-count them
-    if (!CountingOsFs.inList.get()) CountingOsFs.statusCalls.incrementAndGet()
+    if (!CountingOsFs.inList.get()) {
+      CountingOsFs.statusCalls.incrementAndGet()
+      CountingOsFs.statusPaths.add(f.toUri.getPath)
+    }
     super.getFileStatus(f)
   }
   override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
     CountingOsFs.listCalls.incrementAndGet()
+    CountingOsFs.listPaths.add(f.toUri.getPath)
     CountingOsFs.inList.set(true)
     try super.listStatus(f) finally CountingOsFs.inList.set(false)
   }
@@ -25,6 +29,9 @@ class CountingOsFs extends graft.storage.LaggedObjectStoreFs {
 object CountingOsFs {
   val statusCalls = new java.util.concurrent.atomic.AtomicLong()
   val listCalls = new java.util.concurrent.atomic.AtomicLong()
+  /** The probed and listed paths, in call order (specs drain them). */
+  val statusPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val listPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val inList: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 }

@@ -154,7 +154,7 @@ class GraftWriteSpec extends AnyFunSuite {
     val g = mkStream("w6", "ev")
     val conf = GraftSourceConfig(root, Seq(StreamSub("w6", "ev", None, None)), None)
     val sw = new GraftStreamingWrite(conf, "q-redeliver",
-      GraftStagingWriter.stagingSparkSchema, autoNoteTime = true)
+      GraftWriteMapping.writeSchema, autoNoteTime = true)
 
     def stage(tag: String): Array[org.apache.spark.sql.connector.write.WriterCommitMessage] = {
       val dir = Files.createTempDirectory(s"graft-stage-$tag").toString + "/data"

@@ -114,7 +114,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
     val joined = events.join(broadcast(dim), "routingKey")
       .groupBy($"tier").agg(count(lit(1)).as("n")).orderBy($"tier")
     val rows = joined.collect()
-    val expected = g.readEvents("rf5", "ev")
+    val expected = ReferenceRead.events(g, "rf5", "ev")
       .join(dim, "routingKey").groupBy($"tier").agg(count(lit(1)).as("n"))
       .orderBy($"tier").collect()
     assert(rows.map(r => (r.getString(0), r.getLong(1))).toSeq ===

@@ -14,8 +14,9 @@ import java.nio.file.Files
   * manifest-file pruning, column pruning (payload never read when not
   * requested), and manifest-only aggregate pushdown
   * (COUNT/MIN/MAX(eventTime) with zero file IO). Every pruned plan is
-  * also value-checked against the unpruned batch surface, so pruning
-  * can only ever skip work, not change answers.
+  * also value-checked against a plain parquet read of the manifest's
+  * files (ReferenceRead), so pruning can only ever skip work, not change
+  * answers.
   */
 class ScanPushdownSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -76,8 +77,8 @@ class ScanPushdownSpec extends AnyFunSuite {
     // one epoch = 2 files (one per segment)
     assert(planned <= total / 2, s"weak pruning: $planned of $total")
 
-    // values unchanged vs the batch surface
-    val expected = g.readEvents("pr1", "ev")
+    // values unchanged vs a plain parquet read of the manifest's files
+    val expected = ReferenceRead.events(g, "pr1", "ev")
       .filter($"eventTime" >= 1000L && $"eventTime" < 2000L).count()
     assert(sliced.count() === expected)
     assert(expected === 1000L)
@@ -102,7 +103,7 @@ class ScanPushdownSpec extends AnyFunSuite {
     val meta = g.catalog.getStream("pr3", "ev")
     val owner = meta.segments.find(_.range.contains(RoutingKeyHash.hashToRange(key)))
     assert(owner.isDefined)
-    val expected = g.readEvents("pr3", "ev").filter($"routingKey" === key).count()
+    val expected = ReferenceRead.events(g, "pr3", "ev").filter($"routingKey" === key).count()
     assert(hit.count() === expected)
     assert(expected > 0L)
   }
@@ -115,7 +116,7 @@ class ScanPushdownSpec extends AnyFunSuite {
     val one = all.filter($"segmentId" === sid)
     assert(plannedFiles(one) <= total / 2)
     assert(one.count() ===
-      g.readEvents("pr4", "ev").filter($"segmentId" === sid).count())
+      ReferenceRead.events(g, "pr4", "ev").filter($"segmentId" === sid).count())
   }
 
   test("column pruning drops payload from the parquet read schema") {
@@ -144,8 +145,8 @@ class ScanPushdownSpec extends AnyFunSuite {
     assert(row.getLong(0) === 4000L)
     assert(row.getLong(1) === 0L)
     assert(row.getLong(2) === 3999L)
-    // cross-check vs the batch surface
-    assert(g.readEvents("pr6", "ev").count() === 4000L)
+    // cross-check vs a plain parquet read of the manifest's files
+    assert(ReferenceRead.events(g, "pr6", "ev").count() === 4000L)
   }
 
   test("aggregate over an empty stream emits the empty-partial row") {
@@ -248,7 +249,7 @@ class ScanPushdownSpec extends AnyFunSuite {
     assert(scanExec(agg).scan.isInstanceOf[GraftAggScan],
       s"grouped count not pushed: ${scanExec(agg).scan.description()}")
     val rows = agg.collect()
-    val expected = g.readEvents("prG", "ev").groupBy($"segmentId")
+    val expected = ReferenceRead.events(g, "prG", "ev").groupBy($"segmentId")
       .agg(count(lit(1)).as("n"), min($"eventTime").as("lo"))
       .orderBy($"segmentId").collect()
     assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ===

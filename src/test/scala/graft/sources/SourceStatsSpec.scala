@@ -92,7 +92,60 @@ class SourceStatsSpec extends AnyFunSuite {
     assert(bounded.numRows().getAsLong === 4000L,
       s"post-scale files leaked into the bounded estimate: ${bounded.numRows()}")
     // and the reported rows agree with what the read path actually returns
-    val read = g.readEvents("st3", "ev", to = cutBeforeScale).count()
+    val read = ReferenceRead.events(g, "st3", "ev", to = cutBeforeScale).count()
     assert(read === 4000L)
+  }
+
+  test("a batch scan reads one manifest state and never stats or lists a data file") {
+    val fsImpl = classOf[graft.catalog.CountingOsFs].getName
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", fsImpl)
+    val root = "cntfs://" + Files.createTempDirectory("graft-stats-cnt").toString
+    val g = new GraftStreams(spark, root)
+    g.catalog.createScope("st5")
+    g.catalog.createStream("st5", "ev", StreamConfig(initialSegments = 2))
+    (0 until 20).foreach { i =>
+      g.writeEvents("st5", "ev", spark.range(0, 100).select(
+        concat(lit("k"), col("id") % 7).as("routingKey"),
+        (col("id") + i * 100L).as("eventTime"),
+        encode(col("id").cast("string"), "UTF-8").as("payload")))
+    }
+    assert(g.catalog.getStream("st5", "ev").files.size >= 40)
+    import graft.catalog.CountingOsFs.{listPaths, statusPaths}
+    import scala.jdk.CollectionConverters._
+    // a warm manifest read makes two status calls here: the GC floor
+    // record and the v0 identity record its cached state is validated
+    // against (its tip probes are `exists` calls, not counted)
+    def calls[T](what: String, manifestReads: Int)(body: => T): T = {
+      statusPaths.clear(); listPaths.clear()
+      val out = body
+      val stats = statusPaths.asScala.toSeq
+      assert(stats.forall(_.contains("/_meta/")), s"$what: non-manifest stats: $stats")
+      assert(stats.size == 2 * manifestReads, s"$what: not $manifestReads warm manifest reads: $stats")
+      assert(listPaths.isEmpty, s"$what: listings: ${listPaths.asScala.toSeq}")
+      out
+    }
+    val dsv2 = spark.read.format("graft-stream")
+      .option("rootDir", root).option("scope", "st5").option("stream", "ev").load()
+    assert(calls("graft-stream count", 1)(dsv2.count()) === 2000L)
+    // readEvents reads the tip once at call time, the scan once more
+    assert(calls("readEvents count", 2)(g.readEvents("st5", "ev").count()) === 2000L)
+    // a filter keeps the read off the manifest aggregate: plan its files
+    val planned = calls("graft-stream planning", 1)(
+      dsv2.filter($"eventTime" >= 0L).queryExecution.toRdd.partitions.length)
+    assert(planned > 0)
+  }
+
+  test("statistics and planning of one scan see one manifest state") {
+    val (g, root) = mk("st6")
+    val filesBefore = g.catalog.getStream("st6", "ev").files.size
+    val scan = new GraftScan(GraftSourceConfig(root, Seq(StreamSub("st6", "ev", None, None)), None))
+    assert(scan.estimateStatistics().numRows().getAsLong === 4000L)
+    // a truncate to the tail lands between statistics and planning
+    g.catalog.truncateStream("st6", "ev", g.catalog.getStream("st6", "ev").tailCut)
+    val planned = scan.toBatch.planInputPartitions().map {
+      case p: GraftInputPartition =>
+        p.files.asInstanceOf[org.apache.spark.sql.execution.datasources.FilePartition].files.length
+    }.sum
+    assert(planned === filesBefore, "planning re-read the manifest its statistics did not")
   }
 }

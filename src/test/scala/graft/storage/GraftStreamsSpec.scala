@@ -144,6 +144,35 @@ class GraftStreamsSpec extends AnyFunSuite {
     }
   }
 
+  test("segmentsAtTime after a mid-file truncate answers at or above the head") {
+    val g = freshStreams()
+    g.catalog.createScope("sc")
+    g.catalog.createStream("sc", "sat", StreamConfig(initialSegments = 1))
+    g.writeEvents("sc", "sat", fixture(1, 100).drop("seqPerKey"))
+    val sid = g.catalog.getStream("sc", "sat").segments.head.segmentId
+    // the one file straddles the new head, so it stays live
+    g.catalog.truncateStream("sc", "sat", StreamCut(Map(sid -> 40L)))
+    assert(g.catalog.getStream("sc", "sat").files.size == 1)
+
+    val at = g.segmentsAtTime("sc", "sat", 0L)
+    assert(at.positions(sid) == 40L, s"position below the head cut: $at")
+    assert(g.readEvents("sc", "sat", from = at).count() == 60L)
+  }
+
+  test("fetchEvent below the head cut fails like a read from there") {
+    val g = freshStreams()
+    g.catalog.createScope("sc")
+    g.catalog.createStream("sc", "fev", StreamConfig(initialSegments = 1))
+    g.writeEvents("sc", "fev", fixture(1, 100).drop("seqPerKey"))
+    val sid = g.catalog.getStream("sc", "fev").segments.head.segmentId
+    g.catalog.truncateStream("sc", "fev", StreamCut(Map(sid -> 40L)))
+
+    assertThrows[TruncatedDataException](
+      g.fetchEvent("sc", "fev", EventPointer(sid, 10L)).collect())
+    val live = g.fetchEvent("sc", "fev", EventPointer(sid, 40L)).collect()
+    assert(live.length == 1 && live.head.getAs[Long]("offset") == 40L)
+  }
+
   test("seal rejects writes") {
     val g = freshStreams()
     g.catalog.createScope("sc")

@@ -1,7 +1,7 @@
 package graft.storage
 
 import graft.SparkTestSession
-import graft.core.{EventPointer, StreamConfig}
+import graft.core.{EventPointer, StreamConfig, StreamCut}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -83,6 +83,38 @@ class LargeEventSpec extends AnyFunSuite {
     assert(got.length == 1 && got.head.getInt(0) == Max + 4)
     // a pointer into the middle of the chunk span is not an event head
     assert(g.fetchEvent("s", "ev", EventPointer(seg, 1L)).count() == 0)
+  }
+
+  test("adjacent ranges cut inside a large event return every event exactly once") {
+    val (g, root) = fresh()
+    g.catalog.createStream("s", "one", StreamConfig(initialSegments = 1))
+    def smalls(tag: String) = spark.range(3).select(concat(lit(tag), $"id").as("routingKey"),
+      $"id".as("eventTime"), encode($"id".cast("string"), "UTF-8").as("payload"))
+    // one file: 3 small events, a 2-chunk event, 3 small events
+    g.writeEvents("s", "one", smalls("a")
+      .union(ev("big", concat(repeat(lit("abcdefgh"), Max / 8), lit("z"))))
+      .union(smalls("b")).coalesce(1))
+    val meta = g.catalog.getStream("s", "one")
+    assert(meta.files.size == 1 && meta.files.head.maxChunkCount == 2)
+    val sid = meta.segments.head.segmentId
+    val head = g.readEvents("s", "one").filter($"routingKey" === "big")
+      .select($"offset").head().getLong(0)
+    val (a, m, b) = (meta.headStreamCut, StreamCut(Map(sid -> (head + 1))), meta.tailCut)
+
+    def json(c: StreamCut) = c.positions.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    def dsv2(from: StreamCut, to: StreamCut) = spark.read.format("graft-stream")
+      .option("rootDir", root).option("scope", "s").option("stream", "one")
+      .option("fromStreamCut", json(from)).option("toStreamCut", json(to)).load()
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select($"routingKey", length($"payload")).collect().map(r => (r.getString(0), r.getInt(1)))
+    val want = (Seq("a0", "a1", "a2", "b0", "b1", "b2").map(_ -> 1) :+ ("big" -> (Max + 1))).sorted
+    for ((surface, read) <- Seq[(String, (StreamCut, StreamCut) => org.apache.spark.sql.DataFrame)](
+        "readEvents" -> ((f, t) => g.readEvents("s", "one", f, t)), "graft-stream" -> dsv2)) {
+      val lower = keys(read(a, m))
+      val upper = keys(read(m, b))
+      assert(lower.map(_._1).contains("big"), s"$surface: the event whose head is below m")
+      assert((lower ++ upper).toSeq.sorted == want, s"$surface: ${lower.toSeq} + ${upper.toSeq}")
+    }
   }
 
   test("large events survive compaction and keep reassembling") {
