@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.ParquetShim
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
@@ -20,9 +22,15 @@ object Tables {
     spark
   }
 
+  /** The table as `spark.read.parquet` reads it, with the schema resolved
+    * from the footer on the driver: Spark's own inference would run a
+    * one-task job per load.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     configure(spark)
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = ParquetShim.parquetSchema(spark, new Path(path))
+      .fold(spark.read)(spark.read.schema).parquet(path)
     if (name == "events") {
       import org.apache.spark.sql.types.{LongType, TimestampType}
       df.schema("ts").dataType match {

@@ -4,7 +4,7 @@ import graft.catalog.{ChainIssue, ManifestChain}
 import graft.core.{ConditionalCheckFailedException, GraftException, ManifestChainBrokenException}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import graft.sources.GraftKvTable
+import graft.sources.{GraftKvScan, GraftKvTable}
 import graft.storage.TaskFileWriter
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.RelationShim
+import org.apache.spark.sql.sources.EqualTo
 import org.apache.spark.sql.types.StructType
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
@@ -36,7 +37,9 @@ import java.util.UUID
   * which relies on the write layout ([[KeyValueTable.partIndexOfBucket]]): a
   * key's whole history sits at one part index in every directory, so a
   * point read plans one partition, resolves without a shuffle, and reads
-  * #deltas files, bounded by the compaction cadence. No driver-side state.
+  * #deltas files, bounded by the compaction cadence. A `get` runs that
+  * partition on the driver and holds only the requested key's history;
+  * no other driver-side state.
   */
 final case class KvFile(path: String, kind: String, commitVersion: Long)
 /** One file a KV write task wrote: its part index, rows and bytes. */
@@ -74,6 +77,10 @@ object KeyValueTable {
     * fall back to a broadcast semi-join above the same scan.
     */
   val ConditionPruneLimit: Int = 1024
+
+  /** The columns a point read asks its scan for, in this order. */
+  private val PointColumns: StructType =
+    StructType.fromDDL("pk STRING, sk STRING, value BINARY, version BIGINT")
 
   /** A key's bucket: the write path's `pmod(xxhash64(pk), n)`, replicated
     * on the driver so a key becomes a literal without a Spark job.
@@ -333,12 +340,18 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
       .select($"pk", $"sk", $"value", $"version")
   }
 
-  /** Point lookup (KeyValueTable.java:181 get): one part index's files,
-    * one Spark job, via the same path as [[getAll]].
+  /** Point lookup (KeyValueTable.java:181 get): the scan [[getAll]]
+    * runs, pushed `pk = <pk>` and pinned to the latest manifest, read on
+    * the calling thread with no Dataset and no Spark job. It plans one
+    * part index and folds only `pk`'s history.
     */
   def get(pk: String, sk: String = ""): Option[(Array[Byte], Long)] = {
-    val rows = getAll(Seq((pk, sk))).select($"value", $"version").collect()
-    rows.headOption.map(r => (r.getAs[Array[Byte]]("value"), r.getAs[Long]("version")))
+    val scan = new GraftKvScan(spark, this, None, None, None, KeyValueTable.PointColumns,
+      GraftKvTable.DefaultResolvedBudgetBytes, Array(EqualTo("pk", pk)), Some(latest()))
+    scan.readOnDriver().collectFirst {
+      case r if r.getUTF8String(0).toString == pk && r.getUTF8String(1).toString == sk =>
+        (r.getBinary(2), r.getLong(3))
+    }
   }
 
   def exists(pk: String, sk: String = ""): Boolean = get(pk, sk).isDefined

@@ -48,7 +48,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This is the only KV resolver: the typed API ([[KeyValueTable]]
   * reads, conditional checks, compaction) reads through the same scan,
-  * pinned to the manifest it already resolved.
+  * pinned to the manifest it already resolved. A point `get` runs that
+  * scan's own planning and reader fold on the calling thread
+  * ([[GraftKvScan.readOnDriver]]), with no Dataset and no Spark job;
+  * every other read runs it as a Spark scan.
   */
 object GraftKvTable {
   /** Raw file layout = table schema; resolved reads report op='PUT'. */
@@ -235,7 +238,23 @@ class GraftKvScan(spark: SparkSession, kvt: KeyValueTable,
         new StructType(), parquetReadSchema, versionBounds ++ keyFilters),
       parquetReadSchema.fieldNames, required.fieldNames,
       delta, fromV.getOrElse(-1L), toV.getOrElse(Long.MaxValue),
-      budgetBytes, kvt.partitionCount)
+      budgetBytes, kvt.partitionCount, GraftKvTable.pkLiterals(pushedFilters))
+  }
+
+  /** This scan's rows, read on the calling thread: its own planning and
+    * reader factory, every partition drained and closed in turn. For
+    * reads small enough to hold on the driver, such as a point read.
+    */
+  private[graft] def readOnDriver(): Seq[InternalRow] = {
+    val factory = createReaderFactory()
+    planInputPartitions().toSeq.flatMap { p =>
+      val reader = factory.createReader(p)
+      try {
+        val rows = Vector.newBuilder[InternalRow]
+        while (reader.next()) rows += reader.get().copy()
+        rows.result()
+      } finally reader.close()
+    }
   }
 }
 
@@ -245,13 +264,17 @@ final case class GraftKvInputPartition(partIdx: Int, files: FilePartition)
 /** Row-mode readers over the stock vectorized-parquet delegate. Resolved
   * mode folds its partition's complete key histories into a hash map
   * (latest version wins, REMOVE winners drop) and emits the live rows;
-  * delta mode streams rows through a version-window filter.
+  * delta mode streams rows through a version-window filter. With `pks`
+  * (the pushed pk literals), the fold skips rows of every other pk: key
+  * filters keep or drop whole key groups, so this changes what is held,
+  * never an answer.
   */
 final class GraftKvReaderFactory(delegate: PartitionReaderFactory,
     readNames: Array[String], outNames: Array[String],
     delta: Boolean, fromV: Long, toV: Long,
     budgetBytes: Long = GraftKvTable.DefaultResolvedBudgetBytes,
-    partitionCount: Int = -1) extends PartitionReaderFactory {
+    partitionCount: Int = -1,
+    pks: Option[Set[String]] = None) extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val inner = delegate.createReader(p.asInstanceOf[GraftKvInputPartition].files)
@@ -301,8 +324,7 @@ final class GraftKvReaderFactory(delegate: PartitionReaderFactory,
         def entryBytes(key: (String, String), value: Array[Byte]): Long =
           2L * (key._1.length + key._2.length) +
             (if (value == null) 0L else value.length.toLong) + 120L
-        while (inner.next()) {
-          val r = inner.get()
+        def fold(r: InternalRow): Unit = {
           val key = (r.getUTF8String(pkO).toString,
             if (r.isNullAt(skO)) "" else r.getUTF8String(skO).toString)
           val v = r.getLong(veO)
@@ -317,6 +339,11 @@ final class GraftKvReaderFactory(delegate: PartitionReaderFactory,
             m.put(key, (v, if (bkO >= 0) r.getLong(bkO) else -1L, isPut, value))
             guard()
           }
+        }
+        val keep = pks.map(_.map(UTF8String.fromString))
+        while (inner.next()) {
+          val r = inner.get()
+          if (keep.forall(_.contains(r.getUTF8String(pkO)))) fold(r)
         }
         val rows = Vector.newBuilder[InternalRow]
         m.forEach { (key, win) =>

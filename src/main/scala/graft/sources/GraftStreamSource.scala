@@ -978,9 +978,10 @@ class GraftMicroBatchStream(spark: SparkSession, conf: GraftSourceConfig)
       Some(to.getOrElse(sub.key, StreamCut.Unbounded)), enforceHead = true))
   }
 
-  // one factory for the query's lifetime: building it per micro-batch
-  // would broadcast two fresh Hadoop confs every trigger and accumulate
-  // them on the driver for as long as the query runs
+  // one factory for the query's lifetime, so every trigger reads with the
+  // session conf the query started with. (A build no longer broadcasts:
+  // ParquetShim shares one primed conf per schema and conf contents with
+  // the session's batch scans.)
   private lazy val readerFactory = GraftReadPlanner.factory(spark, conf)
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 

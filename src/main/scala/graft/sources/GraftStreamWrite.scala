@@ -220,7 +220,7 @@ final class GraftStagingWriter(dir: String, name: String, writers: ParquetWriteS
   override def abort(): Unit = if (w != null) {
     try w.close() catch { case _: Throwable => () }
     val p = new Path(w.path())
-    try p.getFileSystem(writers.conf.value).delete(p, false) catch { case _: Throwable => () }
+    try p.getFileSystem(writers.hadoopConf).delete(p, false) catch { case _: Throwable => () }
   }
 
   override def close(): Unit = ()

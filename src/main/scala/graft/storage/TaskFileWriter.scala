@@ -58,15 +58,24 @@ object TaskFileWriter {
                          layout: Layout[E]): Seq[E] = {
     require(plan.schema.map(_.dataType) == layout.schema.map(_.dataType),
       s"$name: plan must produce ${layout.schema.simpleString}, got ${plan.schema.simpleString}")
-    val writers = ParquetWriteShim.parquetWriters(spark, layout.schema)
-    val out = dir.toString
-    try ParquetWriteShim.withExecution(plan, name)(_.mapPartitions(rows =>
-      writeTask(rows, out, writers, layout)).collect().toSeq)
+    val run = task(spark, dir, layout)
+    try ParquetWriteShim.withExecution(plan, name)(_.mapPartitions(run).collect().toSeq)
     catch {
       case NonFatal(e) =>
         dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
         throw new GraftException(s"$name failed, staging dropped: ${e.getMessage}", e)
     }
+  }
+
+  /** The function each task of [[write]] runs. It holds the shared
+    * parquet writers, whose primed conf is a broadcast, so the task
+    * closure stays small.
+    */
+  private[storage] def task[E](spark: SparkSession, dir: Path,
+                               layout: Layout[E]): Iterator[InternalRow] => Iterator[E] = {
+    val writers = ParquetWriteShim.parquetWriters(spark, layout.schema)
+    val out = dir.toString
+    rows => writeTask(rows, out, writers, layout)
   }
 
   private[storage] def stripScheme(p: String): String =
@@ -79,7 +88,7 @@ object TaskFileWriter {
   private def writeTask[E](rows: Iterator[InternalRow], dir: String, writers: ParquetWriteShim.Writers,
                            layout: Layout[E]): Iterator[E] = {
     val tc = TaskContext.get()
-    val conf = writers.conf.value
+    val conf = writers.hadoopConf
     val entries = mutable.ArrayBuffer.empty[E]
     val opened = mutable.ArrayBuffer.empty[Path]
     tc.addTaskFailureListener { (_, _) =>

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -29,25 +31,39 @@ object ParquetWriteShim {
   }
 
   /** Serializable parquet writers for rows of `schema`, conf-primed by
-    * `ParquetFileFormat.prepareWrite` (session codec and options).
+    * `ParquetFileFormat.prepareWrite` (session codec and options). The
+    * primed job conf travels as a broadcast, so a task closure holding
+    * these carries a reference, not the conf.
     */
-  final class Writers(factory: OutputWriterFactory, val conf: SerializableConfiguration,
+  final class Writers(factory: OutputWriterFactory, conf: Broadcast[SerializableConfiguration],
                       schema: StructType) extends Serializable {
+    /** The primed job conf, in a task. */
+    def hadoopConf: Configuration = conf.value.value
+
     /** Open `dir/name<ext>` (ext = codec + `.parquet`) for the running task. */
     def open(dir: String, name: String): OutputWriter = {
       val tc = TaskContext.get()
-      val ctx = new TaskAttemptContextImpl(conf.value,
+      val ctx = new TaskAttemptContextImpl(hadoopConf,
         new TaskAttemptID("graft", tc.stageId(), TaskType.MAP, tc.partitionId(), tc.attemptNumber()))
       factory.newInstance(s"$dir/$name${factory.getFileExtension(ctx)}", schema, ctx)
     }
   }
 
-  /** Every column is written nullable, as Spark's own file sink does. */
+  private val writers =
+    new PrimedCache[(StructType, Map[String, String]), Writers](capacity = 16)
+
+  /** Every column is written nullable, as Spark's own file sink does.
+    * Built once per (schema, session Hadoop conf contents) and shared.
+    */
   def parquetWriters(spark: SparkSession, schema: StructType): Writers = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val fileSchema = schema.asNullable
-    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, fileSchema)
-    new Writers(factory, new SerializableConfiguration(job.getConfiguration), fileSchema)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    writers(spark.sparkContext, (fileSchema, PrimedCache.contents(hadoopConf))) {
+      val job = Job.getInstance(hadoopConf)
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, fileSchema)
+      new Writers(factory,
+        spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)), fileSchema)
+    }
   }
 
   /** Set the running task's output metrics, as Spark's file sink does. */

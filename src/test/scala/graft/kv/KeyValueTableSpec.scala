@@ -543,6 +543,27 @@ class KeyValueTableSpec extends AnyFunSuite {
     assert(pairs.forall { case (k, v) => t.get(k).map(p => new String(p._1)).contains(v) })
   }
 
+  test("a warm get starts no Spark job and no broadcast, and answers as before") {
+    val t = fresh(parts = 8)
+    t.put(kv((0 until 200).map(i => s"k$i" -> s"v$i"): _*))
+    val v2 = t.put(kv("k7" -> "w7"))
+    t.remove(Seq(("k9", "")).toDF("pk", "sk"))
+    assert(t.get("k1").isDefined) // warm: the shared reader setup is primed
+    val sc = spark.sparkContext
+    // broadcast ids are sequential: two probes bracket the gets
+    val ((got, broadcasts), jobs) = graft.SparkJobs.during(spark) {
+      val b0 = sc.broadcast(0)
+      val got = Seq("k7", "k9", "k150", "nope").map(k => k -> t.get(k).map(p => (new String(p._1), p._2)))
+      val b1 = sc.broadcast(0)
+      Seq(b0, b1).foreach(_.destroy())
+      (got, b1.id - b0.id - 1)
+    }
+    assert(broadcasts == 0L, s"$broadcasts broadcasts during the gets")
+    assert(jobs == 0L, s"$jobs jobs during the gets")
+    assert(got.toMap == Map("k7" -> Some(("w7", v2)), "k9" -> None,
+      "k150" -> Some(("v150", v2 - 1)), "nope" -> None))
+  }
+
   test("compact() reclaims past-grace tombstones from earlier compactions") {
     val root = Files.createTempDirectory("graft-kv-sweep").toString
     val grace = new KeyValueTable(spark, root, "g", 4) // default 15-min grace

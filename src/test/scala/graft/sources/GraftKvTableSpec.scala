@@ -180,6 +180,20 @@ class GraftKvTableSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT count(*) AS n FROM $cat.s.t").as[Long].head() == 48L)
   }
 
+  test("the resolved fold holds only pushed pk literals: a budget too small " +
+    "for the part index resolves one key, and fails loudly without the key filter") {
+    val (cat, _, t) = mk(partitions = 1) // all 48 live keys at one part index
+    def read = spark.read.option("resolvedBudgetBytes", "1024").table(s"$cat.s.t")
+    val one = read.filter($"pk" === "k03").select($"pk", decode($"value", "UTF-8"), $"version")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    assert(one == Seq(("k03", "u3", 2L)))
+    assert(read.filter($"pk".isin("k01", "k03", "k05")).count() == 2L) // k05 is removed
+    val e = intercept[Exception](read.collect())
+    val msg = Option(e.getCause).fold(e.getMessage)(c => e.getMessage + c.getMessage)
+    assert(msg.contains("partitionCount") && msg.contains("resolvedBudgetBytes"), msg)
+    assert(t.get("k03").map(p => new String(p._1)) == Some("u3"))
+  }
+
   test("a null sk reads as \"\" on every surface: get, getAll, entries, SQL") {
     val (cat, _, t) = mk()
     t.put(Seq(("nul", "n1")).toDF("pk", "v")
