@@ -30,6 +30,20 @@ object ManifestChain {
     */
   private val TornRetries = 20
   private val TornSleepMs = 10L
+
+  /** Delete each tombstoned path and return the ones now gone — the one
+    * rule streams and KV tables clear their tombstones by: a tombstone
+    * clears exactly when its path does not exist after the attempt.
+    * `delete` returns false for a path that is already gone (an earlier
+    * sweep deleted it, then lost its CAS or crashed), and a delete that
+    * throws may have removed nothing.
+    */
+  def deleteTombstoned(fs: FileSystem, paths: Seq[String]): Seq[String] =
+    paths.filter { p =>
+      val path = new Path(p)
+      try fs.delete(path, true) catch { case NonFatal(_) => false }
+      try !fs.exists(path) catch { case NonFatal(_) => false }
+    }
 }
 
 /** A dense chain of immutable records `<prefix>%012d<suffix>` in one

@@ -540,15 +540,14 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
   /** Physically delete tombstoned files whose reader-grace deadline has
     * passed, and clear them from the manifest. Deletion happens BEFORE
     * the manifest update: re-running after a crash is idempotent (a
-    * missing file just deletes as a no-op), and a tombstone is only
-    * cleared once its file is actually gone.
+    * missing file counts as gone), and a tombstone is only cleared once
+    * its file is actually gone ([[ManifestChain.deleteTombstoned]]).
     */
   def sweepDeletes(scope: String, stream: String): Seq[String] = {
     val now = System.currentTimeMillis()
     val due = getStream(scope, stream).pendingDeletes.filter(_.notBefore <= now)
     if (due.isEmpty) return Nil
-    due.foreach(p => try fs.delete(new Path(p.path), false) catch { case _: Exception => () })
-    val donePaths = due.map(_.path).toSet
+    val donePaths = ManifestChain.deleteTombstoned(fs, due.map(_.path)).toSet
     update(scope, stream) { m =>
       m.copy(pendingDeletes = m.pendingDeletes.filterNot(p => donePaths.contains(p.path)))
     }

@@ -578,12 +578,10 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     val m = latest()
     val due = m.pendingDeletes.filter(_.notBefore <= now)
     if (due.isEmpty) return Nil
-    // only paths whose delete actually succeeded count as done — a
-    // failed delete keeps its tombstone so the next sweep retries it
-    // (reporting it reclaimed would leak the file forever)
-    val donePaths = due.map(_.path)
-      .filter(p => scala.util.Try(fs.delete(new Path(p), true)).getOrElse(false))
-      .toSet
+    // only paths that are gone count as done — a failed delete keeps its
+    // tombstone so the next sweep retries it (reporting it reclaimed would
+    // leak the file forever)
+    val donePaths = ManifestChain.deleteTombstoned(fs, due.map(_.path)).toSet
     // a lost CAS is fine: the files are gone, tombstones clear on a later sweep
     commit(m.copy(version = m.version + 1,
       pendingDeletes = m.pendingDeletes.filterNot(p => donePaths.contains(p.path))),

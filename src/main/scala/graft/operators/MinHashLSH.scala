@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Pin
 
 /** MinHash + banded LSH near-duplicate detection, entirely in codegen'd
   * array expressions and native kernels (no UDFs, no driver-side state):
@@ -114,8 +115,8 @@ object MinHashLSH {
     * are md5 over the '|'-joined row minima, identical to the oracle's
     * `md5(concat_ws('|', …))`.
     *
-    * The verified pairs are materialized EAGERLY (localCheckpoint) so the
-    * two intermediate caches can be unpersisted before returning — a
+    * The verified pairs are materialized EAGERLY (`Pin.scope`) so the
+    * intermediate pins can be unpersisted before returning — a
     * long-lived session invoking this repeatedly must not accumulate
     * leaked cached partitions (the round-8 scale bench measured exactly
     * that: cache-eviction churn, not the plan, dominating repeat runs).
@@ -217,36 +218,34 @@ object MinHashLSH {
           .as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
 
-    // Cache lifecycle rides in try/finally: the saturation guard and any
-    // failed job between persist() and release would otherwise leave the
-    // caches pinned — and a session that hits the designed fail-loud
+    // Pins ride in one Pin.scope, released in its finally: the
+    // saturation guard and any failed job after a pin would otherwise
+    // leave it cached — and a session that hits the designed fail-loud
     // path, raises the budget knob, and retries would accumulate leaked
     // cached partitions, largest exactly in the saturated regime where
     // memory is already the problem (r14 ADVICE).
-    val cacheSigs = persistSignatures(narrow)
-    var dupCache: DataFrame = null
-    var candidates: DataFrame = null
-    var verif: DataFrame = null
-    try {
-      if (cacheSigs) banded.persist()
-      val (sized, dup) = boundedBuckets(banded, maxBucketSize,
-        resolvedMaxCandidates(docs.sparkSession, maxCandidates))
-      dupCache = dup
-      candidates = sized.as("x").join(sized.as("y"),
+    // The banded rows are pinned only when the narrow (id, text)
+    // estimate passes the heap-relative gate: then the bucket counts and
+    // the self-join feed share one kernel pass; otherwise (or with no
+    // estimate) the kernel runs twice, as above. Results are identical.
+    Pin.scope { pin =>
+      if (Pin.fits(narrow, 1L, "lsh.bandedRows")) pin(banded, "lsh.bandedRows")
+      val sized = boundedBuckets(banded, maxBucketSize,
+        resolvedMaxCandidates(docs.sparkSession, maxCandidates), pin)
+      val candidates = pin(sized.as("x").join(sized.as("y"),
           col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
             col("x.id") < col("y.id"))
         .select(col("x.id").as("a_id"), col("y.id").as("b_id"))
-        .distinct()
-        .persist()
+        .distinct(), "lsh.candidates")
 
       val candIds = candidates.select(col("a_id").as("id"))
         .union(candidates.select(col("b_id").as("id"))).distinct()
-      verif = docs.select(col(idCol).as("id"), col(textCol).as("txt"))
+      val verif = pin(docs.select(col(idCol).as("id"), col(textCol).as("txt"))
         .join(candIds, Seq("id"), "left_semi")
         .select(col("id"),
           array_sort(array_distinct(
-            transform(split(lower(trim(col("txt"))), "\\s+"), x => xxhash64(x)))).as("toks"))
-        .persist()
+            transform(split(lower(trim(col("txt"))), "\\s+"), x => xxhash64(x)))).as("toks")),
+        "lsh.verifyTokens")
 
       val a = verif.select(col("id").as("a_id"), col("toks").as("a_toks"))
       val b = verif.select(col("id").as("b_id"), col("toks").as("b_toks"))
@@ -256,104 +255,7 @@ object MinHashLSH {
           col("inter") / (size(col("a_toks")) + size(col("b_toks")) - col("inter")))
         .filter(col("jaccard") >= threshold)
         .select(col("a_id"), col("b_id"), col("jaccard"))
-        .localCheckpoint() // eager: pairs computed here, caches released in finally
-    } finally {
-      // audit the ACTUAL cached bytes before release (BRANCHLOG): the
-      // heap-relative cap below rests on the banded-rows blow-up factor
-      // being a large multiple of the narrow estimate — keep it measured
-      if (cacheSigs && sys.env.contains("SPARK_GRAFT_BRANCHLOG")) {
-        val st = docs.sparkSession.sparkContext.getRDDStorageInfo
-        println(s"BRANCH lsh.bandedCacheBytes mem=${st.map(_.memSize).sum} " +
-          s"disk=${st.map(_.diskSize).sum}")
-      }
-      if (dupCache != null) dupCache.unpersist(false)
-      if (cacheSigs) banded.unpersist(false)
-      if (candidates != null) candidates.unpersist(false)
-      if (verif != null) verif.unpersist(false)
     }
-  }
-
-  /** Banded-signature cache (`spark.graft.lsh.persistSignatures`): trade
-    * ~(28 bytes × bands) of storage per doc (≈22 GB at 5×10⁷ docs / 16
-    * bands) for running the minhash kernel ONCE instead of twice. The
-    * r14 fifth-decade probe established that corpus-sized storage is the
-    * resource that actually dies first at scale (recompute is a
-    * scan-side pass that parallelizes with executors; cached
-    * corpus-sized partitions are pressure every executor pays), so
-    * recompute stays the policy for large corpora. Since r15 the default
-    * is SIZE-ADAPTIVE rather than always-off: when the optimizer's size
-    * estimate for the narrow (id, text) projection fits
-    * [[AutoPersistMaxBytesConf]] (default 2 GiB — banded rows are the
-    * same order as the raw text, comfortably inside storage memory on
-    * any executor that holds a 2 GiB scan), the banded rows persist and
-    * both the bucket counts and the self-join feed reuse one kernel
-    * pass; above it, or when the estimate is unavailable, recompute —
-    * exactly the r14 behavior the fifth-decade probe validated. An
-    * explicit true/false in the conf always wins. Results are identical
-    * either way (same deterministic kernel on the same input).
-    */
-  val PersistSignaturesConf = "spark.graft.lsh.persistSignatures"
-
-  /** Ceiling (bytes) on the optimizer size estimate of the (id, text)
-    * projection under which the banded rows are persisted by default.
-    */
-  val AutoPersistMaxBytesConf = "spark.graft.lsh.autoPersistMaxBytes"
-  val DefaultAutoPersistMaxBytes: Long = 2L * 1024 * 1024 * 1024
-
-  /** Adaptive-branch audit trail (`SPARK_GRAFT_BRANCHLOG`): one line per
-    * cache/pin decision so a scale probe can PROVE which branch ran
-    * (r16, verdict item 7 — the fallbacks had only been reasoned about).
-    */
-  @inline private[graft] def logBranch(site: String, pin: Boolean, est: BigInt): Unit =
-    if (sys.env.contains("SPARK_GRAFT_BRANCHLOG"))
-      println(s"BRANCH $site pin=$pin est=$est")
-
-  private def persistSignatures(narrow: DataFrame): Boolean = {
-    val s = narrow.sparkSession
-    s.conf.getOption(PersistSignaturesConf).map(_.trim.toBoolean).getOrElse {
-      val confCap = s.conf.getOption(AutoPersistMaxBytesConf).map(_.trim.toLong)
-        .getOrElse(DefaultAutoPersistMaxBytes)
-      // HEAP-RELATIVE ceiling on the auto decision (r16 fifth-decade
-      // probe): at estimate 759 MB on an 8 GiB heap the pinned banded
-      // rows OOM'd the sf300 leg outright (UnsafeKVExternalSorter heap
-      // exhaustion under the self-join agg), while the >cap recompute
-      // branch completed the 3.3×-larger sf1000 leg on the same code.
-      // The blow-up is MEASURED, not assumed: `lsh.bandedCacheBytes`
-      // recorded 3.30 GB of cache for a 25 MB estimate (~130× — the
-      // optimizer estimates the compressed parquet scan, the cache holds
-      // 16 exploded band rows per doc in columnar batches). An absolute
-      // byte cap is only meaningful relative to executor memory:
-      // heap/512 keeps the post-blow-up pin ≈25% of the heap, leaving
-      // execution headroom for the bucket agg + self-join. An explicit
-      // persistSignatures=true still forces the cache.
-      val cap = math.min(confCap, Runtime.getRuntime.maxMemory() / 512)
-      val est = narrow.queryExecution.optimizedPlan.stats.sizeInBytes
-      val pin = est >= 0 && est <= cap
-      logBranch("lsh.persistSignatures", pin, est)
-      pin
-    }
-  }
-
-  /** Gate for pinning DERIVED data whose size is a multiple of the source
-    * estimate (r15 verdict/advice: the gram-explosion pins in
-    * DedupOps/CurationOps gated the exploded stream on the RAW corpus
-    * estimate, so a corpus just under the 2 GiB cap could pin ~gramSize×
-    * that). The blow-up factor scales the estimate before the compare: a
-    * word k-gram explosion emits ≤ k gram rows per token, each ~k tokens
-    * long plus per-row id/overhead, so callers pass ~2·k. Same cap conf
-    * as the signature cache; conservative (unknown estimate → no pin).
-    */
-  def pinEstimateFits(src: DataFrame, blowUp: Long): Boolean =
-    pinEstimateFits(src, blowUp, "pinEstimateFits")
-
-  def pinEstimateFits(src: DataFrame, blowUp: Long, site: String): Boolean = {
-    val s = src.sparkSession
-    val cap = s.conf.getOption(AutoPersistMaxBytesConf).map(_.trim.toLong)
-      .getOrElse(DefaultAutoPersistMaxBytes)
-    val est = src.queryExecution.optimizedPlan.stats.sizeInBytes
-    val pin = est >= 0 && est * blowUp <= cap
-    logBranch(site, pin, est)
-    pin
   }
 
   /** Hot-bucket guard + CANDIDATE-VOLUME budget. The per-bucket cap alone
@@ -390,30 +292,21 @@ object MinHashLSH {
     * tiny on healthy corpora (AQE broadcasts it, so the semi-join
     * re-shuffles NOTHING), and the self-join's exchange then carries
     * only collision rows instead of the whole corpus × bands.
-    * Returns (sized, dupBuckets-cache) — the caller releases the cache
-    * after the pairs materialize (the semi-join consumes it lazily).
+    * The collision-bucket set is pinned in the caller's scope: the
+    * histogram and the semi-join both read it, and the saturation failure
+    * is designed to throw right after it is computed.
     */
   private def boundedBuckets(banded: DataFrame, maxBucketSize: Int,
-                             maxCandidates: Long): (DataFrame, DataFrame) = {
-    val dup = banded.groupBy(col("band"), col("bsig"))
+                             maxCandidates: Long, pin: Pin.Scope): DataFrame = {
+    val dup = pin(banded.groupBy(col("band"), col("bsig"))
       .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") >= 2)
-      .persist()
-    // Release the cache if anything between persist() and the return
-    // throws — chooseBucketCap's saturation failure is DESIGNED to throw
-    // here, and that is exactly the regime where the collision-bucket
-    // cache is largest (r14 ADVICE: a retry-after-raising-the-knob
-    // session would otherwise accumulate the leak).
-    try {
-      val hist = dup.groupBy(col("bn"))
-        .agg(count(lit(1)).as("nbuckets"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val effCap = chooseBucketCap(hist, maxBucketSize, maxCandidates)
-      val keep = dup.filter(col("bn") <= effCap).select(col("band"), col("bsig"))
-      (banded.join(keep, Seq("band", "bsig"), "left_semi"), dup)
-    } catch {
-      case t: Throwable => dup.unpersist(false); throw t
-    }
+      .filter(col("bn") >= 2), "lsh.collisionBuckets")
+    val hist = dup.groupBy(col("bn"))
+      .agg(count(lit(1)).as("nbuckets"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val effCap = chooseBucketCap(hist, maxBucketSize, maxCandidates)
+    val keep = dup.filter(col("bn") <= effCap).select(col("band"), col("bsig"))
+    banded.join(keep, Seq("band", "bsig"), "left_semi")
   }
 
   /** Largest bucket cap ≤ `maxBucketSize` with Σ_{2 ≤ n_b ≤ cap}

@@ -260,7 +260,7 @@ object CurationOps {
     // gate on the EXPLODED size (estimate × ~2·gramSize — r16, verdict
     // item 4): what pins is the 6-gram stream, ~12× the raw corpus bytes
     // the old gate measured
-    val pinGrams = graft.operators.MinHashLSH.pinEstimateFits(docs, 12L, "bloomContamination.gramPin")
+    val pinGrams = graft.util.Pin.fits(docs, 12L, "bloomContamination.gramPin")
     val grams =
       if (pinGrams)
         Some(GramStage.explodeGrams(docs, 6, distinctPerDoc = true)
@@ -813,20 +813,19 @@ object CurationOps {
     g.writeEvents("q", "docs", Tables.documents(s, dir).select(
       $"source".as("routingKey"), $"doc_id".as("eventTime"),
       encode($"text", "UTF-8").as("payload")))
-    val d = g.readEvents("q", "docs")
-      .select($"eventTime".as("doc_id"), $"routingKey".as("source"),
-        decode($"payload", "UTF-8").as("text"))
-      .select($"doc_id", $"source", $"text",
-        md5(lower(trim($"text"))).as("fp"),
-        size(split(trim($"text"), "\\s+")).cast("long").as("n_tok"))
-      .cache()
-    // Materialize the (tiny) report eagerly so the corpus cache can be
-    // RELEASED before returning — this query used to leak one cached
+    // The report is materialized eagerly (Pin.scope) so the corpus pin
+    // is RELEASED before returning — this query used to leak one cached
     // corpus copy per invocation into the session (the bench invokes it
     // twice), storage pressure every later query paid (r15). The release
-    // covers every stage after the cache(): the LSH saturation guard is
-    // designed to throw.
-    try {
+    // also covers the LSH saturation guard, which is designed to throw.
+    graft.util.Pin.scope { pin =>
+      val d = pin(g.readEvents("q", "docs")
+        .select($"eventTime".as("doc_id"), $"routingKey".as("source"),
+          decode($"payload", "UTF-8").as("text"))
+        .select($"doc_id", $"source", $"text",
+          md5(lower(trim($"text"))).as("fp"),
+          size(split(trim($"text"), "\\s+")).cast("long").as("n_tok")),
+        "pipelineFull.corpus")
       val keepFp = d.groupBy($"fp").agg(min($"doc_id").as("keep_id"))
       val exactKept = d.join(
         keepFp.select($"fp", $"keep_id".as("doc_id")), Seq("fp", "doc_id"), "left_semi")
@@ -870,8 +869,8 @@ object CurationOps {
       val packRows = packed
         .groupBy(concat(lit("6_pack_"), $"split").as("stage"))
         .agg(count(lit(1)).as("n_docs"), sum($"n_tok").as("n_tokens"))
-      stages.unionByName(packRows).orderBy($"stage").localCheckpoint()
-    } finally d.unpersist(false)
+      stages.unionByName(packRows).orderBy($"stage")
+    }
   }
 
   private val pipelineFullSql = {

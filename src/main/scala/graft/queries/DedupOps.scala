@@ -203,8 +203,7 @@ object DedupOps {
       lastSum = Some(sum)
       labels = next
       iter += 1
-      if (sys.env.contains("SPARK_GRAFT_JOBS"))
-        println(s"CLUSTER pass=$iter sum=$sum converged=$converged")
+      graft.util.Pin.event("clusterLabels.pass", "pass" -> iter, "sum" -> sum, "converged" -> converged)
     }
     labels
   }
@@ -636,7 +635,7 @@ object DedupOps {
     // raw corpus the old gate measured), and pin LAZILY so a missing or
     // under-estimated stat degrades to guard-first ordering instead of
     // materializing a corpus-gram-sized checkpoint before the verdict
-    val pinGrams = MinHashLSH.pinEstimateFits(docs, 6L, "prefixJoin.gramPin")
+    val pinGrams = graft.util.Pin.fits(docs, 6L, "prefixJoin.gramPin")
     val toksPre =
       if (pinGrams) Some(GramStage.explodeGrams(docs, 3, distinctPerDoc = true)
         .localCheckpoint(eager = false))

@@ -297,7 +297,7 @@ object SimilarityOps {
     * keep-lowest-id policy of `dedup_embedding`), and qualifying pair
     * count. The only persisted intermediate is the assignment
     * projection (vec_id, embedding, nrm, c_id) — read three times
-    * (histogram + both pair sides), released in try/finally.
+    * (histogram + both pair sides), pinned in one `Pin.scope`.
     */
   private[queries] val SemDedupTargetCluster = 512
   /** Skew-guard multiplier: the within-cluster pair sum may exceed the
@@ -328,7 +328,7 @@ object SimilarityOps {
         val hCut = math.min(4294967295L, (kFine.toLong * 17179869184L) / math.max(1L, n))
         val cand = hashed.filter($"h" <= hCut)
         val engaged = cand.count() >= kFine
-        graft.operators.MinHashLSH.logBranch("semDedup.centroidPrefilter", engaged, BigInt(hCut))
+        graft.util.Pin.event("semDedup.centroidPrefilter", "engaged" -> engaged, "hCut" -> hCut)
         if (engaged) cand else hashed
       } else hashed
     prefiltered.orderBy($"h", $"vec_id").limit(kFine)
@@ -398,20 +398,20 @@ object SimilarityOps {
     val coarseLit = array(coarse.map { case (gid, gemb, gnrm) =>
       struct(lit(gid).as("g_id"), lit(gemb).as("g_emb"), lit(gnrm).as("g_nrm"))
     }.toIndexedSeq: _*)
-    val assigned = e
-      .withColumn("bg", array_max(transform(coarseLit, c =>
-        struct((Similarity.dot($"embedding", c.getField("g_emb")) /
-            ($"nrm" * c.getField("g_nrm"))).as("gcos"),
-          (-c.getField("g_id")).as("neg")))))
-      .withColumn("g_id", -$"bg.neg")
-      .join(broadcast(pack), Seq("g_id"))
-      .withColumn("bf", array_max(transform($"fents", f =>
-        struct((Similarity.dot($"embedding", f.getField("c_emb")) /
-            ($"nrm" * f.getField("c_nrm"))).as("fcos"),
-          (-f.getField("c_id")).as("neg")))))
-      .select($"vec_id", $"embedding", $"nrm", (-$"bf.neg").as("c_id"))
-      .persist()
-    try {
+    graft.util.Pin.scope { pin =>
+      val assigned = pin(e
+        .withColumn("bg", array_max(transform(coarseLit, c =>
+          struct((Similarity.dot($"embedding", c.getField("g_emb")) /
+              ($"nrm" * c.getField("g_nrm"))).as("gcos"),
+            (-c.getField("g_id")).as("neg")))))
+        .withColumn("g_id", -$"bg.neg")
+        .join(broadcast(pack), Seq("g_id"))
+        .withColumn("bf", array_max(transform($"fents", f =>
+          struct((Similarity.dot($"embedding", f.getField("c_emb")) /
+              ($"nrm" * f.getField("c_nrm"))).as("fcos"),
+            (-f.getField("c_id")).as("neg")))))
+        .select($"vec_id", $"embedding", $"nrm", (-$"bf.neg").as("c_id")),
+        "semDedup.assigned")
       // SKEW guard from the EXACT cluster histogram (kFine rows at
       // most): fail loudly before the pair join, naming the knob. The
       // bound is RELATIVE to the healthy-contract pair term, not the
@@ -459,8 +459,7 @@ object SimilarityOps {
           coalesce($"n_dropped", lit(0L)).as("n_dropped"),
           coalesce($"n_pairs", lit(0L)).as("n_pairs"))
         .orderBy($"c_id")
-        .localCheckpoint() // eager: the persisted assignment is released below
-    } finally assigned.unpersist(false)
+    }
   }
 
   /** Replays the two-level corpus-scaled assignment end to end: the same

@@ -86,6 +86,30 @@ class StreamCatalogSpec extends AnyFunSuite {
     assert(c.getStream("s", "t").headCut(s0) == 5L)
   }
 
+  test("sweepDeletes keeps the tombstone of a file whose delete throws") {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.delfail.impl", classOf[DeleteFailFs].getName)
+    val dir = Files.createTempDirectory("graft-cat-sweep").toString
+    val c = new StreamCatalog("delfail://" + dir, conf)
+    c.createScope("s")
+    c.createStream("s", "t")
+    val paths = Seq("keep", "gone").map { n =>
+      val p = java.nio.file.Paths.get(dir, s"$n.parquet")
+      Files.write(p, Array[Byte](1))
+      p.toString
+    }
+    c.update("s", "t")(m => m.copy(pendingDeletes = paths.map(PendingDelete(_, 0L))))
+    DeleteFailFs.failing = paths.head
+    try assert(c.sweepDeletes("s", "t") == Seq(paths(1)))
+    finally DeleteFailFs.failing = ""
+    assert(c.getStream("s", "t").pendingDeletes.map(_.path) == Seq(paths.head),
+      "a failed delete must keep its tombstone")
+    assert(Files.exists(java.nio.file.Paths.get(paths.head)))
+    // the next sweep retries it
+    assert(c.sweepDeletes("s", "t") == Seq(paths.head))
+    assert(c.getStream("s", "t").pendingDeletes.isEmpty)
+  }
+
   test("getStream on missing stream raises NoSuchStream") {
     val c = freshCatalog()
     c.createScope("s")
@@ -155,4 +179,17 @@ class StreamCatalogSpec extends AnyFunSuite {
     assert(c.deleteKeyValueTable("s", "t"))
     assert(!c.keyValueTableExists("s", "t"))
   }
+}
+
+/** Local FS (`delfail://`) whose `delete` throws for one chosen path. */
+class DeleteFailFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "delfail"
+  override def getUri: java.net.URI = java.net.URI.create("delfail:///")
+  override def delete(f: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    if (f.toUri.getPath == DeleteFailFs.failing) throw new java.io.IOException(s"injected: $f")
+    else super.delete(f, recursive)
+}
+
+object DeleteFailFs {
+  @volatile var failing = ""
 }

@@ -97,6 +97,23 @@ class KvKillPointsSpec extends AnyFunSuite {
     assert(t.get("a").map(p => new String(p._1)) == Some("1"))
   }
 
+  test("kill between physical delete and tombstone clear: the next sweep clears the tombstones") {
+    val (t, _) = fresh(grace = 0L)
+    t.put(kv("a" -> "1"))
+    t.put(kv("b" -> "2"))
+    t.compact()
+    val tombstoned = t.manifestAt(None).pendingDeletes.map(_.path)
+    assert(tombstoned.nonEmpty)
+    // the crashed sweep deleted the dirs but never committed the clear
+    val fs = new org.apache.hadoop.fs.Path(t.tableDirPath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    tombstoned.foreach(p => assert(fs.delete(new org.apache.hadoop.fs.Path(p), true)))
+    assert(t.sweepDeletes().sorted == tombstoned.sorted)
+    assert(t.manifestAt(None).pendingDeletes.isEmpty, "gone paths must clear their tombstones")
+    assert(t.fsck().isEmpty)
+    assert(t.get("b").map(p => new String(p._1)) == Some("2"))
+  }
+
   test("grace shields an in-flight writer's delta from the orphan sweep") {
     val (t, root) = fresh()
     t.put(kv("a" -> "1"))

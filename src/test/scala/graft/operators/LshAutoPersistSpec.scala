@@ -1,14 +1,15 @@
 package graft.operators
 
 import graft.SparkTestSession
+import graft.util.{Pin, PinLog}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The r15 size-adaptive banded-signature cache: the persist decision
-  * must never change WHAT nearDuplicates computes — only whether the
-  * minhash kernel runs once (cached feed) or twice (r14's scale-safe
-  * recompute). Pin pair-set equality across all three policies on the
-  * same corpus, and that the auto policy flips with the size cap.
+/** The r15 size-adaptive banded-signature pin: the gate's decision must
+  * never change WHAT nearDuplicates computes — only whether the minhash
+  * kernel runs once (pinned feed) or twice (r14's scale-safe recompute).
+  * Drive both branches through the cap extremes, check that each branch
+  * really ran, and pin pair-set equality.
   */
 class LshAutoPersistSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -22,26 +23,28 @@ class LshAutoPersistSpec extends AnyFunSuite {
         concat(lit(s"w$i"), ($"id" + i) % 9)): _*).as("text"))
   }
 
-  private def pairs(): Set[(Long, Long)] =
-    MinHashLSH.nearDuplicates(docs, "doc_id", "text",
-        shingleSize = 3, numHashes = 32, bands = 8, threshold = 0.4)
-      .select($"a_id", $"b_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+  /** The pair set and whether the banded rows were pinned, at cap `cap`. */
+  private def pairs(cap: Long): (Set[(Long, Long)], Boolean) = {
+    spark.conf.set(Pin.MaxBytesConf, cap.toString)
+    try {
+      val (set, lines) = PinLog.capture(
+        MinHashLSH.nearDuplicates(docs, "doc_id", "text",
+            shingleSize = 3, numHashes = 32, bands = 8, threshold = 0.4)
+          .select($"a_id", $"b_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet)
+      val decisions = PinLog.events(lines, "pin.fits", "lsh.bandedRows").map(_("pin").toBoolean)
+      assert(decisions.size == 1, lines.mkString("\n"))
+      val released = PinLog.events(lines, "pin.release", "lsh.bandedRows")
+      assert(released.size == (if (decisions.head) 1 else 0), lines.mkString("\n"))
+      (set, decisions.head)
+    } finally spark.conf.unset(Pin.MaxBytesConf)
+  }
 
-  test("pair set is identical with the cache forced on, forced off, and auto at both cap extremes") {
-    val onOff = MinHashLSH.PersistSignaturesConf
-    val cap = MinHashLSH.AutoPersistMaxBytesConf
-    def withConf(k: String, v: String)(f: => Set[(Long, Long)]) = {
-      spark.conf.set(k, v)
-      try f finally spark.conf.unset(k)
-    }
-    val forcedOn = withConf(onOff, "true")(pairs())
-    val forcedOff = withConf(onOff, "false")(pairs())
-    val autoPersist = withConf(cap, Long.MaxValue.toString)(pairs()) // est always fits
-    val autoRecompute = withConf(cap, "0")(pairs()) // est never fits
-    assert(forcedOn.nonEmpty, "fixture must produce near-dup pairs")
-    assert(forcedOff == forcedOn, "recompute path diverged from cached path")
-    assert(autoPersist == forcedOn, "auto(persist) diverged")
-    assert(autoRecompute == forcedOn, "auto(recompute) diverged")
+  test("pair set is identical with the banded rows pinned and recomputed, at both cap extremes") {
+    val (pinned, pinnedBranch) = pairs(Long.MaxValue) // est fits the heap ceiling
+    val (recomputed, recomputedBranch) = pairs(0L) // est never fits
+    assert(pinnedBranch && !recomputedBranch, "the cap extremes must select both branches")
+    assert(pinned.nonEmpty, "fixture must produce near-dup pairs")
+    assert(recomputed == pinned, "recompute path diverged from pinned path")
   }
 }

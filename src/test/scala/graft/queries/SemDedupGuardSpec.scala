@@ -38,6 +38,8 @@ class SemDedupGuardSpec extends AnyFunSuite {
         lit(0).as("label"))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     spark.conf.set(knob, "100") // floor below the skew bound so it decides
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     try {
       val e = intercept[IllegalArgumentException] {
         SparkEntry.queries("dedup_semdedup")(spark, dir).count()
@@ -45,5 +47,9 @@ class SemDedupGuardSpec extends AnyFunSuite {
       assert(e.getMessage.contains("pathologically clustered"), e.getMessage)
       assert(e.getMessage.contains(knob), "the error must name the knob")
     } finally spark.conf.unset(knob)
+    // the guard trips after the assignment is pinned: the trip releases it
+    assert(spark.sharedState.cacheManager.isEmpty, "guard trip leaked a cached plan")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(rddsBefore).isEmpty,
+      "guard trip leaked a persisted RDD")
   }
 }

@@ -2,28 +2,50 @@ package graft.util
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
-/** Every main builds its session through [[LocalSession]], so the mains'
-  * conf cannot drift apart again: outside the helper, no code line in
-  * `src/main/scala` calls `SparkSession.builder` (comments may name it).
+/** Source rules over `src/main/scala`, one scanner for all of them
+  * (comments may name what a rule forbids; code lines may not):
+  *   - every main builds its session through [[LocalSession]], so the
+  *     mains' conf cannot drift apart again;
+  *   - every pin goes through [[Pin]], so each is released in `finally`;
+  *   - the engine packages report through logs, not `println` or env
+  *     switches.
   */
 class LocalSessionSpec extends AnyFunSuite {
-  test("SparkSession.builder appears in main code only inside LocalSession") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the project root: ${root.toAbsolutePath}")
-    val helper = root.resolve("graft/util/LocalSession.scala")
-    val files = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p != helper).toSeq
-    assert(files.contains(root.resolve("graft/Bench.scala")), s"no mains under $root")
-    val builder = """SparkSession\s*\.\s*builder""".r
-    val offenders = files.flatMap { p =>
+  private val root = Paths.get("src/main/scala")
+
+  /** Code lines matching `rule` in the `.scala` files under `dirs`, outside `allowed`. */
+  private def offenders(rule: Regex, allowed: String = "", dirs: Seq[String] = Seq("")): Seq[String] = {
+    assert(Files.isRegularFile(root.resolve("graft/Bench.scala")),
+      s"run from the project root: ${root.toAbsolutePath}")
+    val files: Seq[Path] = dirs.map(root.resolve).flatMap { d =>
+      assert(Files.isDirectory(d), s"no source dir $d")
+      Files.walk(d).iterator().asScala.toSeq
+    }.filter(p => p.toString.endsWith(".scala") && p != root.resolve(allowed))
+    files.flatMap { p =>
       val code = Files.readString(p).replaceAll("(?s)/\\*.*?\\*/", "")
       code.linesIterator.map(_.replaceAll("//.*", ""))
-        .filter(l => builder.findFirstIn(l).isDefined)
+        .filter(l => rule.findFirstIn(l).isDefined)
         .map(l => s"${root.relativize(p)}: ${l.trim}")
     }
-    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  private def assertNone(found: Seq[String]): Unit =
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+
+  test("SparkSession.builder appears in main code only inside LocalSession") {
+    assertNone(offenders("""SparkSession\s*\.\s*builder""".r, "graft/util/LocalSession.scala"))
+  }
+
+  test("persist, cache and unpersist appear in main code only inside Pin") {
+    assertNone(offenders("""\.(persist|unpersist)\(|\.cache\(\)""".r, "graft/util/Pin.scala"))
+  }
+
+  test("no println and no sys.env in the engine packages") {
+    assertNone(offenders("""\bprintln\b|\bsys\.env\b""".r,
+      dirs = Seq("operators", "queries", "catalog", "kv", "sources", "storage").map("graft/" + _)))
   }
 }
