@@ -75,11 +75,11 @@ final class ManifestChain(fsf: () => FileSystem, dir: Path, prefix: String, suff
   private val Name = (Pattern.quote(prefix) + "(\\d+)" + Pattern.quote(suffix)).r
 
   /** Newest version this instance has seen — the probe-forward hint that
-    * keeps warm reads and commits LIST-free (VersionsBench measured the
-    * directory listing dominating every warm read and commit past ~10^3
-    * versions: 160 ms per commit at 10^4). Only a hint: a stale, retired
-    * or recreated value falls back to the listing, never to a wrong
-    * answer. -1 = none yet.
+    * keeps warm reads and commits LIST-free (ManifestBench's versions leg
+    * measured the directory listing dominating every warm read and commit
+    * past ~10^3 versions: 160 ms per commit at 10^4). Only a hint: a
+    * stale, retired or recreated value falls back to the listing, never
+    * to a wrong answer. -1 = none yet.
     */
   @volatile private var hint: Long = -1L
 
@@ -222,7 +222,9 @@ final class ManifestChain(fsf: () => FileSystem, dir: Path, prefix: String, suff
     val versions = list()
     if (versions.isEmpty) return None
     val newest = versions.last
-    readNewest(newest, math.max(first, newest - 1), read).orElse(
+    // a version-0 identity record below `first` is a chain's whole state
+    // until its first commit lands
+    readNewest(newest, math.min(newest, math.max(first, newest - 1)), read).orElse(
       throw new GraftException(s"$dir: no readable version at or below $newest"))
   }
 

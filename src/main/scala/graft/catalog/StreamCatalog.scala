@@ -22,16 +22,10 @@ import java.nio.charset.StandardCharsets
   * commits and consistent StreamCuts.
   *
   * Scale note: stream state is O(live files) — at 100 TB with ~1 GB
-  * files, ~10^5 entries per stream. The manifest chain is therefore an
-  * incremental LOG (see [[ManifestRecord]]): EVERY commit writes an
-  * O(delta) record; a full checkpoint sidecar lands OUT-OF-BAND (async,
-  * after the CAS) every `checkpointInterval` versions, and readers
-  * replay ≤ one interval of deltas from the nearest sidecar/cached
-  * state (a tailing reader pays one small record read per poll).
-  * `tools.ManifestBench` measures all three designs (full-list, inline
-  * checkpoints, out-of-band); COVERAGE.md carries the table.
-  * Retention/compaction keeps the file list bounded; nothing here is
-  * per-row or per-executor state.
+  * files, ~10^5 entries per stream — so the chain is an incremental log
+  * ([[ManifestLog]]): O(delta) commits, out-of-band checkpoints,
+  * replay of at most one interval. Nothing here is per-row or
+  * per-executor state.
   */
 /** KeyValueTableConfiguration analog (client/.../tables/
   * KeyValueTableConfiguration.java:39). Only partitionCount carries over:
@@ -46,52 +40,6 @@ final case class KvTableConfig(
       * housekeeping. 0 = manual `CALL g.system.kv_gc_manifests` only.
       */
     manifestKeepVersions: Int = 0)
-
-/** One committed manifest version on disk — either a FULL record
-  * (complete `StreamMetadata`: version 0, pre-upgrade manifests, and the
-  * rare diff-fallback commit) or a DELTA against the previous version.
-  * Periodic full checkpoints live OUTSIDE the chain as out-of-band
-  * `checkpoint-%012d.json` sidecars written after the delta CAS lands.
-  *
-  * Motivation (measured by `tools.ManifestBench` on the pre-log design):
-  * a full-list manifest costs O(live files) JSON parse + serialize per
-  * COMMIT — 1.08 s/commit at 10^5 entries (the ~100 TB design point at
-  * ~1 GB data files), 4.6 s at 3×10^5, and every CAS retry pays the
-  * serialize again. The reference never rewrites full state per op
-  * either: the controller's metadata store is event-sourced per-key
-  * table updates (controller/.../store/stream/
-  * PravegaTablesStreamMetadataStore.java). This is the same shape as the
-  * Delta/Iceberg log-plus-checkpoint: per-commit delta records, an
-  * out-of-band full checkpoint sidecar every `checkpointInterval`
-  * versions to bound replay without ever putting O(files) work on the
-  * commit path.
-  *
-  * Only the two O(files) collections (`files`, `pendingDeletes`) are
-  * diffed; every bounded-size field (segments, epochs, transactions,
-  * writer state, cuts, rates, watermarks, `committedAt`) rides wholesale
-  * in `meta`. A delta's `meta` therefore carries `files = Nil` /
-  * `pendingDeletes = Nil` and reconstruction is
-  * `meta.copy(files = prev.files -- removed ++ added, …)`.
-  *
-  * CAS semantics are untouched: the record still lands as
-  * `manifest-%012d.json` via exclusive create, the version chain stays
-  * dense and monotone (hole-probe discovery, Fsck's chain check, as-of
-  * reads and the delta feed all keyed purely on file names), and
-  * manifests written before this format (bare `StreamMetadata` JSON,
-  * no `kind` field) read as checkpoints.
-  */
-final case class ManifestRecord(
-    kind: String, // ManifestRecord.Full | ManifestRecord.Delta
-    meta: StreamMetadata,
-    filesAdded: Seq[FileEntry] = Nil,
-    filesRemoved: Seq[String] = Nil,
-    pendingAdded: Seq[PendingDelete] = Nil,
-    pendingRemoved: Seq[String] = Nil)
-
-object ManifestRecord {
-  val Full = "full"
-  val Delta = "delta"
-}
 
 /** Manifest-log retention marker (one record of the `_meta/floor-<seq>`
   * CAS chain — see [[FloorChain]]): versions in (0, floor) have been
@@ -126,17 +74,20 @@ object StreamCatalog {
     */
   val DefaultCheckpointInterval: Int = 16
 
-
-  /** One shared daemon thread serializes all out-of-band checkpoint
-    * writes — sidecars are an optimization (readers fall back to delta
-    * replay), so they must never hold up a commit or keep the JVM alive.
-    */
-  private[catalog] val ckptExec: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "graft-manifest-checkpointer")
-      t.setDaemon(true)
-      t
-    })
+  /** How the manifest log reads and stamps a stream's state. */
+  private implicit object StreamLog extends LogState[StreamMetadata, FileEntry] {
+    def version(s: StreamMetadata): Long = s.version
+    def committedAt(s: StreamMetadata): Long = s.committedAt
+    def incarnation(s: StreamMetadata): String = s.incarnation
+    def files(s: StreamMetadata): Seq[FileEntry] = s.files
+    def pendingDeletes(s: StreamMetadata): Seq[PendingDelete] = s.pendingDeletes
+    def path(f: FileEntry): String = f.path
+    def stamped(s: StreamMetadata, committedAt: Long, incarnation: String): StreamMetadata =
+      s.copy(committedAt = committedAt, incarnation = incarnation)
+    def withLists(s: StreamMetadata, files: Seq[FileEntry],
+                  pendingDeletes: Seq[PendingDelete]): StreamMetadata =
+      s.copy(files = files, pendingDeletes = pendingDeletes)
+  }
 
   /** JVM-wide count of manifest-CAS losses (an `update` attempt beaten to
     * its version by a concurrent committer, re-read + retried). Pure
@@ -168,24 +119,9 @@ object StreamCatalog {
 
 class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configuration(),
                     checkpointInterval: Int = StreamCatalog.DefaultCheckpointInterval) {
-  import StreamCatalog.DefaultDeleteGraceMillis
+  import StreamCatalog.{DefaultDeleteGraceMillis, StreamLog}
   require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
   private implicit val fmts: Formats = DefaultFormats
-
-  /** Newest reconstructed state per stream, version-monotone WITHIN a
-    * stream incarnation. Manifests are immutable once written, so within
-    * an incarnation a cached state is never WRONG, at most behind — and
-    * `getStream` always resolves the chain tip first, so staleness is
-    * impossible too. Across incarnations (delete+recreate of the same
-    * name by ANOTHER catalog instance) version numbers collide, so
-    * `reconstruct` validates every cache use against the on-disk record's
-    * `incarnation` stamp before trusting it. Steady state: a committer's
-    * read-modify-write reads one tip record (the validation GET) and
-    * writes O(delta); a tailing reader pays a few exact-key probes + one
-    * small record read per poll — O(1), independent of file count.
-    */
-  private val tipCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), StreamMetadata]
 
   private val root = new Path(rootDir)
   private def fs: FileSystem = root.getFileSystem(hadoopConf)
@@ -193,17 +129,19 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
   private def scopePath(scope: String) = new Path(root, scope)
   private def streamPath(scope: String, stream: String) = new Path(scopePath(scope), stream)
   private def metaPath(scope: String, stream: String) = new Path(streamPath(scope, stream), "_meta")
-  // the name deliberately does NOT match the `manifest-*.json` pattern:
-  // sidecars are invisible to the chain's version listing
-  private def checkpointPath(scope: String, stream: String, version: Long) =
-    new Path(metaPath(scope, stream), f"checkpoint-$version%012d.json")
-  // one manifest chain per stream, so warm reads ride its tip hint
-  private val chains =
-    scala.collection.concurrent.TrieMap.empty[(String, String), ManifestChain]
-  private def chain(scope: String, stream: String): ManifestChain =
-    chains.getOrElseUpdate((scope, stream),
-      new ManifestChain(() => fs, metaPath(scope, stream), "manifest-", ".json",
-        first = 0L, probeCap = math.max(2 * checkpointInterval, 8)))
+  private val logs =
+    scala.collection.concurrent.TrieMap.empty[(String, String), ManifestLog[StreamMetadata, FileEntry]]
+  private def log(scope: String, stream: String): ManifestLog[StreamMetadata, FileEntry] =
+    logs.getOrElseUpdate((scope, stream),
+      new ManifestLog[StreamMetadata, FileEntry](() => fs, metaPath(scope, stream), first = 0L,
+        checkpointInterval, s"stream $scope/$stream", new NoSuchStreamException(_)))
+  private def chain(scope: String, stream: String): ManifestChain = log(scope, stream).chain
+  /** Forget deleted streams' logs: a recreated stream restarts at 0. */
+  private def dropLogs(keys: Iterable[(String, String)]): Unit = {
+    keys.foreach(k => logs.get(k).foreach(_.dropPending()))
+    flushCheckpoints()
+    keys.foreach(k => logs.remove(k).foreach(_.invalidate()))
+  }
   def dataDir(scope: String, stream: String): Path = new Path(streamPath(scope, stream), "data")
   def txnDir(scope: String, stream: String, txnId: String): Path =
     new Path(streamPath(scope, stream), s"txn-$txnId")
@@ -227,15 +165,10 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
   def deleteScope(scope: String, recursive: Boolean = false): Boolean = {
     if (!recursive && (listStreams(scope).nonEmpty || listKeyValueTables(scope).nonEmpty))
       throw new GraftException(s"scope $scope not empty")
-    // dequeue + drain the checkpointer BEFORE deleting (see deleteStream:
-    // an in-flight sidecar write must not resurrect a deleted _meta dir)
-    pendingCkpt.keySet.removeIf(_._1 == scope)
-    flushCheckpoints()
-    val ok = fs.delete(scopePath(scope), true)
-    // recreated streams under a recreated scope restart their chains at 0
-    tipCache.keysIterator.filter(_._1 == scope).foreach(tipCache.remove)
-    chains.keysIterator.filter(_._1 == scope).foreach(k => chains.remove(k).foreach(_.invalidate()))
-    ok
+    // drain the checkpointer BEFORE deleting (see deleteStream: an
+    // in-flight sidecar write must not resurrect a deleted _meta dir)
+    dropLogs(logs.keys.filter(_._1 == scope).toSeq)
+    fs.delete(scopePath(scope), true)
   }
 
   // --------------------------------------------------------------- streams
@@ -267,26 +200,24 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     }
     val meta = StreamMetadata(
       scope = scope, name = stream, config = config, version = 0L, createdAt = now,
-      incarnation = java.util.UUID.randomUUID().toString,
       isSealed = false, tags = tags,
       epochs = Seq(EpochRecord(0, segs.map(_.segmentId), now)),
       segments = segs, files = Nil, headCut = Map.empty,
       transactions = Map.empty, writerMarks = Map.empty, writerBatches = Map.empty)
-    writeManifest(meta, None).getOrElse(
+    log(scope, stream).create(meta).getOrElse(
       throw new GraftException(s"stream $scope/$stream already exists"))
   }
 
   def streamExists(scope: String, stream: String): Boolean =
     chain(scope, stream).list().nonEmpty
 
-  /** The stream's newest committed state (see [[ManifestChain.readTip]]:
+  /** The stream's newest committed state (see [[ManifestLog.tip]]:
     * LIST-free while this instance's tip hint is warm, torn-tip fallback
-    * of one version). reconstruct() validates any cached state against
-    * the v0 identity record, so a delete+recreate collision is caught on
-    * either path.
+    * of one version, any cached state validated against the v0 identity
+    * record).
     */
   def getStream(scope: String, stream: String): StreamMetadata =
-    chain(scope, stream).readTip(v => reconstruct(scope, stream, v)).map(_._2)
+    log(scope, stream).tip()
       .getOrElse(throw new NoSuchStreamException(s"stream $scope/$stream does not exist"))
 
   def listStreams(scope: String): Seq[String] = {
@@ -313,14 +244,10 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     // version, which can be checkpoint-eligible), and an in-flight write
     // landing after the delete would resurrect _meta — making a
     // subsequent createStream of the same name fail "already exists".
-    // Dequeue first so nothing NEW starts, then barrier on the in-flight.
-    pendingCkpt.remove((scope, stream))
-    flushCheckpoints()
-    fs.delete(streamPath(scope, stream), true)
-    // a recreated stream restarts its version chain at 0 — the old tip
-    // must not shadow it; same for the chain's hints
-    tipCache.remove((scope, stream))
-    chains.remove((scope, stream)).foreach(_.invalidate())
+    // A recreated stream restarts its version chain at 0, so the old tip
+    // and hints are dropped too.
+    dropLogs(Seq((scope, stream)))
+    fs.delete(streamPath(scope, stream), true): Unit
   }
 
   /** EWMA (α=¼) of one CAS attempt's wall cost — read tip + transform +
@@ -443,7 +370,7 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
       }
       val cur = getStream(scope, stream)
       val next = f(cur).copy(version = cur.version + 1)
-      writeManifest(next, Some(cur)) match {
+      log(scope, stream).write(next, Some(cur)) match {
         case Some(committed) =>
           observeAttempt()
           return committed
@@ -644,134 +571,25 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
     * VACUUM contract).
     */
   def getStreamAt(scope: String, stream: String, version: Long): StreamMetadata =
-    chain(scope, stream).readAt(version)(v => reconstruct(scope, stream, v)).getOrElse(
+    log(scope, stream).at(version).getOrElse(
       throw new NoSuchStreamException(
         s"stream $scope/$stream has no manifest version $version " +
           s"(available: ${manifestVersions(scope, stream).mkString(", ")})"))
 
   /** Latest version committed at or before `epochMillis`, for
-    * `TIMESTAMP AS OF` (see [[ManifestChain.versionAtTime]]). None if the
+    * `TIMESTAMP AS OF` (see [[ManifestLog.versionAtTime]]). None if the
     * stream didn't exist yet at t; [[TruncatedDataException]] if the
     * instant falls inside manifest history that [[gcManifests]] retired.
-    * The stamp is the `committedAt` written inside each record at CAS
-    * time, clamped monotone by [[writeManifest]]; with a warm tip hint
-    * the whole query is O(log n) record GETs and no listing.
     */
   def versionAtTime(scope: String, stream: String, epochMillis: Long): Option[Long] =
-    chain(scope, stream).versionAtTime(epochMillis, () =>
+    log(scope, stream).versionAtTime(epochMillis, () =>
       try Some(getStream(scope, stream).version)
-      catch { case _: NoSuchStreamException => None }
-    )(b => parseRecord(b).meta.committedAt)
-
-  /** Parse ONE manifest version's on-disk record without reconstructing
-    * state. Legacy manifests (bare StreamMetadata JSON, pre-log format)
-    * read as full checkpoints — the `kind` field is the discriminator.
-    */
-  private def readRecord(scope: String, stream: String, version: Long): ManifestRecord =
-    parseRecord(chain(scope, stream).bytes(version))
-
-  private def parseRecord(bytes: Array[Byte]): ManifestRecord = {
-    val jv = org.json4s.jackson.JsonMethods.parse(new String(bytes, StandardCharsets.UTF_8))
-    jv \ "kind" match {
-      case org.json4s.JString(_) => jv.extract[ManifestRecord]
-      case _ => ManifestRecord(ManifestRecord.Full, jv.extract[StreamMetadata])
-    }
-  }
-
-  /** Read one record BELOW the requested version during a chain walk.
-    * Every such record was readable by the committer that built on it, so
-    * any persistent failure — missing file OR corrupt/truncated bytes —
-    * means the chain cannot replay: that is storage corruption,
-    * distinguished as [[ManifestChainBrokenException]] so callers never
-    * silently fall back to a deep-stale state instead. A bounded retry
-    * absorbs transient IO first.
-    */
-  private def readChainRecord(scope: String, stream: String, v: Long,
-                              requested: Long): ManifestRecord = {
-    var last: Exception = null
-    for (_ <- 1 to 3) {
-      try return readRecord(scope, stream, v)
-      catch { case e: Exception => last = e; Thread.sleep(5) }
-    }
-    throw new ManifestChainBrokenException(
-      s"manifest chain of $scope/$stream broken: version $v unreadable " +
-        s"below requested $requested ($last)")
-  }
-
-  private def checkpointEligible(v: Long): Boolean =
-    v > 0 && v % checkpointInterval == 0
-
-  /** Try the out-of-band checkpoint sidecar at `v`. None (fall back to
-    * delta replay) when missing — the checkpointer is asynchronous, so a
-    * crash between the delta CAS and the sidecar write legitimately
-    * leaves a hole — or torn mid-write, or from a dead incarnation.
-    */
-  private def readSidecar(scope: String, stream: String, v: Long,
-                          incarnation: String): Option[StreamMetadata] =
-    try {
-      val in = fs.open(checkpointPath(scope, stream, v))
-      val meta =
-        try Serialization.read[StreamMetadata](
-          new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-        finally in.close()
-      if (meta.incarnation == incarnation && meta.version == v) Some(meta) else None
-    } catch { case _: Exception => None }
-
-  /** Write the checkpoint sidecar for a just-committed state: temp file +
-    * rename for atomic visibility; failures are swallowed (the sidecar
-    * only shortens replay — correctness never depends on it). Concurrent
-    * writers of the same version produce identical content (state is a
-    * pure function of the delta chain), so lost renames are harmless.
-    */
-  private def writeSidecar(meta: StreamMetadata): Unit =
-    try {
-      // never resurrect a deleted stream's _meta dir: the chain record
-      // this sidecar summarizes must still exist (read-repair and the
-      // async queue can both race a concurrent deleteStream)
-      if (!chain(meta.scope, meta.name).exists(meta.version)) return
-      val dst = checkpointPath(meta.scope, meta.name, meta.version)
-      val tmp = new Path(dst.getParent,
-        dst.getName + ".tmp-" + java.util.UUID.randomUUID())
-      val out = fs.create(tmp, true)
-      try out.write(Serialization.write(meta).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, dst)) fs.delete(tmp, false): Unit
-      // the guard above is check-then-act: a concurrent deleteStream on
-      // ANOTHER instance can finish between it and the rename, leaving
-      // the rename to resurrect _meta with only this sidecar inside.
-      // Re-verify after the rename and self-delete the orphan sidecar
-      // (deleting ONLY the file, never the dir — a concurrent recreate
-      // may already own _meta again). A residual v0-less _meta dir is
-      // additionally tolerated everywhere: createStream clears it,
-      // listStreams skips it.
-      if (!chain(meta.scope, meta.name).exists(meta.version))
-        fs.delete(dst, false): Unit
-    } catch { case _: Exception => () }
-
-  /** Pending checkpoint states, coalesced per stream: if commits outrun
-    * the checkpointer, only the NEWEST eligible state per stream is
-    * written (an older checkpoint is strictly redundant once a newer one
-    * exists), so the queue depth is bounded by live streams.
-    */
-  private val pendingCkpt = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), StreamMetadata]()
-
-  private def scheduleCheckpoint(meta: StreamMetadata): Unit = {
-    pendingCkpt.put((meta.scope, meta.name), meta)
-    StreamCatalog.ckptExec.submit(new Runnable {
-      override def run(): Unit = {
-        val m = pendingCkpt.remove((meta.scope, meta.name))
-        if (m != null) writeSidecar(m)
-      }
-    }): Unit
-  }
+      catch { case _: NoSuchStreamException => None })
 
   /** Block until every checkpoint scheduled so far has been written —
     * for benches/tests that measure or assert the steady state.
     */
-  def flushCheckpoints(): Unit =
-    StreamCatalog.ckptExec.submit(new Runnable { override def run(): Unit = () })
-      .get(): Unit
+  def flushCheckpoints(): Unit = ManifestLog.flushCheckpoints()
 
   /** The stream's GC floor: versions in (0, floor) are retired. 0 =
     * never GC'd (no marker file). See [[ManifestFloor]].
@@ -789,308 +607,23 @@ class StreamCatalog(rootDir: String, hadoopConf: Configuration = new Configurati
   def floorAnchorPresent(scope: String, stream: String): Boolean =
     chain(scope, stream).floorAnchorPresent()
 
-  /** The stream's manifest chain audit for Fsck (see
-    * [[ManifestChain.audit]]): a version's base reads when it
-    * reconstructs; the live identity is the current incarnation.
-    */
+  /** The stream's manifest chain audit for Fsck (see [[ManifestLog.audit]]). */
   def auditStream(scope: String, stream: String): Seq[ChainIssue] =
-    chain(scope, stream).audit(
-      v => scala.util.Try(reconstruct(scope, stream, v)).isSuccess,
-      () => getStream(scope, stream).incarnation)
+    log(scope, stream).audit()
 
   /** The chain audit of a registered key-value table's manifests — no
-    * Spark session needed (see [[graft.kv.KeyValueTable.auditChain]]).
+    * Spark session needed.
     */
   def auditKeyValueTable(scope: String, name: String): Seq[ChainIssue] =
-    graft.kv.KeyValueTable.auditChain(graft.kv.KeyValueTable.manifestChain(
-      () => fs, new Path(new Path(kvtRoot(scope), name), "_meta")))
+    graft.kv.KeyValueTable.manifestLog(() => fs, new Path(new Path(kvtRoot(scope), name), "_meta"),
+      s"kv table $scope/$name").audit()
 
-  /** Retire manifest history older than `keepVersions` behind the tip —
-    * log retention, the piece that keeps `_meta/` from growing one file
-    * per commit forever (at one commit/second a year of history is
-    * 3×10^7 objects in one listing). The floor lands on the largest
-    * checkpoint-eligible version ≤ (tip − keepVersions) whose SIDECAR is
-    * verified readable (read-repaired on the spot if the checkpointer
-    * had crashed); then [[ManifestChain.gc]] commits the floor and deletes
-    * records and sidecars strictly below it — except the v0 identity
-    * record. As-of reads below the floor fail loudly at resolution (the
-    * same retention-bounded time-travel contract as data-file sweeps);
-    * everything at or above the floor reconstructs exactly as before.
-    * Returns the retired versions.
+  /** Retire manifest history older than `keepVersions` behind the tip
+    * (see [[ManifestLog.gc]]): at one commit/second a year of history is
+    * 3×10^7 objects in one listing. As-of reads below the floor fail
+    * loudly at resolution (the same retention-bounded time-travel
+    * contract as data-file sweeps). Returns the retired versions.
     */
-  def gcManifests(scope: String, stream: String, keepVersions: Int): Seq[Long] = {
-    require(keepVersions >= 1, "keepVersions must be >= 1")
-    // UNCONDITIONAL sidecar delete (a no-op when absent): a catalog with
-    // a different checkpointInterval may have written sidecars at
-    // versions THIS instance considers ineligible, and those would leak
-    // below the floor forever
-    chain(scope, stream).gc(v =>
-      try fs.delete(checkpointPath(scope, stream, v), false): Unit
-      catch { case _: Exception => () }) { versions =>
-      if (versions.isEmpty)
-        throw new NoSuchStreamException(s"stream $scope/$stream does not exist")
-      val cut = versions.last - keepVersions
-      // the floor only ever moves up, in checkpoint-interval steps
-      val cv = (cut / checkpointInterval) * checkpointInterval
-      if (cv <= manifestFloor(scope, stream) || cv <= 0) None
-      else {
-        val inc = streamIncarnation(scope, stream).getOrElse(
-          throw new GraftException(
-            s"gc aborted for $scope/$stream: identity record unreadable"))
-        // the new floor must carry a readable base BEFORE anything is
-        // deleted; a crashed checkpointer's hole is repaired synchronously.
-        // A CONCURRENT gc with a larger cut may retire cv itself mid-flight —
-        // that is supersession, not failure: their floor covers ours.
-        if (readSidecar(scope, stream, cv, inc).isDefined) Some((cv, inc))
-        else {
-          try writeSidecar(getStreamAt(scope, stream, cv))
-          catch { case _: NoSuchStreamException => }
-          if (readSidecar(scope, stream, cv, inc).isDefined) Some((cv, inc))
-          else if (manifestFloor(scope, stream) >= cv) None // superseded
-          else throw new GraftException(
-            s"gc aborted for $scope/$stream: could not establish a checkpoint base at v$cv")
-        }
-      }
-    }
-  }
-
-  /** The CURRENT incarnation id of a stream, read from the v0 record —
-    * tiny (creation writes files = Nil) and immutable for the life of an
-    * incarnation, so this is an O(1)-byte GET regardless of how large
-    * any later record grew (validating against the TIP record would cost
-    * O(tip bytes): ManifestBench measured 8.4 s when the tip was a
-    * 10^6-entry bulk-ingest delta). None when unreadable — callers must
-    * then distrust any cached state.
-    */
-  private def streamIncarnation(scope: String, stream: String): Option[String] =
-    try Some(readRecord(scope, stream, 0L).meta.incarnation)
-    catch { case _: Exception => None }
-
-  /** Reconstruct the committed state at `version`: walk delta records
-    * backward to the nearest checkpoint SIDECAR, inline full record (v0,
-    * pre-upgrade chains, diff-fallback commits) or this instance's
-    * cached state, whichever is nearer, then replay forward. Every
-    * record on the walk except `version` itself was readable by the
-    * committer that built on it, so a torn read can only happen at the
-    * requested version — the caller's retry/fallback loops handle that
-    * exactly as before; unreadable records BELOW it are chain corruption
-    * ([[readChainRecord]]). A missing sidecar is NOT corruption (the
-    * checkpointer is async and crash-lossy): the walk just continues to
-    * the next older base, so a crash between delta CAS and sidecar write
-    * is invisible.
-    *
-    * Cached state is NEVER trusted without an on-disk identity check:
-    * the cache can hold a DEAD incarnation (another catalog instance
-    * deleted+recreated this stream; chains restart at 0, so version
-    * numbers collide across incarnations). [[streamIncarnation]] — one
-    * O(1)-byte v0 read — validates the cached `incarnation` stamp, so
-    * the tailing reader's steady state is one LIST plus one tiny GET,
-    * independent of file count and of tip-record size.
-    */
-  private def reconstruct(scope: String, stream: String, version: Long): StreamMetadata = {
-    val key = (scope, stream)
-    // lazily fetched at most once per call: needed only when a cached
-    // state or a checkpoint sidecar is a candidate base
-    var inc: Option[Option[String]] = None
-    def incarnation(): Option[String] = {
-      if (inc.isEmpty) inc = Some(streamIncarnation(scope, stream))
-      inc.get
-    }
-    val cached = tipCache.get(key)
-      .filter(_.version <= version)
-      .filter { c =>
-        val live = incarnation().contains(c.incarnation)
-        // dead incarnation: drop it so the monotone guard can't keep it
-        if (!live) tipCache.remove(key)
-        live
-      }
-    cached match {
-      case Some(c) if c.version == version => return c
-      case _ =>
-    }
-    var base: StreamMetadata = null
-    var chain: List[ManifestRecord] = Nil
-    var v = version
-    // eligible versions whose sidecar the walk found MISSING — the
-    // checkpointer that should have written them crashed. Repaired
-    // below from the replayed states (read-repair), otherwise a
-    // read-mostly stream would replay those deltas on every cold read
-    // forever (no further commits ever heal it).
-    var repair = Set.empty[Long]
-    while (base == null) {
-      if (cached.exists(_.version == v)) base = cached.get
-      else {
-        val side =
-          if (checkpointEligible(v))
-            incarnation().flatMap(i => readSidecar(scope, stream, v, i))
-          else None
-        side match {
-          case Some(st) => base = st
-          case None =>
-            if (checkpointEligible(v)) repair += v
-            // a missing/unreadable record at the REQUESTED version is
-            // the torn-tip case (CAS winner crashed mid-write) — throw
-            // as-is for the caller's retry/fall-back-one-version loop
-            val rec =
-              if (v == version) readRecord(scope, stream, v)
-              else try readChainRecord(scope, stream, v, version)
-              catch {
-                case e: ManifestChainBrokenException =>
-                  // the record may be GC-RETIRED rather than corrupt:
-                  // the floor marker's sidecar is then the mandated
-                  // base — checked by the FLOOR version, not by this
-                  // instance's checkpointInterval, so a catalog with a
-                  // different interval still reads GC'd streams
-                  val fl = manifestFloor(scope, stream)
-                  // a floor ABOVE the requested version means the
-                  // request itself was retired (a concurrent gc overtook
-                  // this walk): the retention miss, never the floor
-                  // state masquerading as the requested version
-                  if (fl > version)
-                    throw new NoSuchStreamException(
-                      s"version $version of $scope/$stream was garbage-collected " +
-                        s"mid-read (manifest retention floor is now $fl)")
-                  val side =
-                    if (fl > v)
-                      incarnation().flatMap(i => readSidecar(scope, stream, fl, i))
-                    else None
-                  // a REGRESSED marker (legacy rename-replaced floors or
-                  // hand surgery; unreachable through the FloorChain CAS)
-                  // points BELOW the retired range, so the floor lookup
-                  // above misses — but the retained chain's true base is
-                  // some version in (v, requested] with a readable
-                  // sidecar: probe them all before giving up. Exact-key
-                  // GETs on a rare already-broken recovery path, and the
-                  // only thing that keeps a different-checkpointInterval
-                  // instance able to read such a stream at all (sidecar
-                  // placement follows the WRITER's interval, so this
-                  // instance's eligibility test can skip right past it).
-                  val mandated = side.orElse(incarnation().flatMap { i =>
-                    ((v + 1) to version).iterator
-                      .flatMap(w => readSidecar(scope, stream, w, i))
-                      .nextOption()
-                  })
-                  mandated match {
-                    case Some(st) =>
-                      base = st
-                      // records at or below the base are already folded
-                      // into the sidecar state
-                      chain = chain.dropWhile(_.meta.version <= st.version)
-                      null
-                    case None => throw e
-                  }
-              }
-            if (base != null) ()
-            else if (rec.kind == ManifestRecord.Full) base = rec.meta
-            else {
-              require(v > 0, s"delta record at version 0 of $scope/$stream")
-              chain ::= rec
-              v -= 1
-            }
-        }
-      }
-    }
-    val state = chain.foldLeft(base) { (st, rec) =>
-      val next = applyDelta(st, rec)
-      if (repair.contains(next.version)) scheduleCheckpoint(next)
-      next
-    }
-    cacheForward(key, state)
-    state
-  }
-
-  private def applyDelta(base: StreamMetadata, rec: ManifestRecord): StreamMetadata = {
-    val rmF = rec.filesRemoved.toSet
-    val files =
-      (if (rmF.isEmpty) base.files else base.files.filterNot(f => rmF(f.path))) ++
-        rec.filesAdded
-    val rmP = rec.pendingRemoved.toSet
-    val pending =
-      (if (rmP.isEmpty) base.pendingDeletes
-       else base.pendingDeletes.filterNot(p => rmP(p.path))) ++ rec.pendingAdded
-    rec.meta.copy(files = files, pendingDeletes = pending)
-  }
-
-  /** Version-monotone cache install (an as-of read of an OLD version
-    * must never displace a newer cached tip). Monotonicity only holds
-    * WITHIN an incarnation: a state read from a different (i.e. newly
-    * recreated) incarnation reflects what is on disk NOW and replaces the
-    * dead tip regardless of version number.
-    */
-  private def cacheForward(key: (String, String), state: StreamMetadata): Unit =
-    tipCache.updateWith(key) {
-      case Some(old) if old.incarnation == state.incarnation &&
-        old.version >= state.version => Some(old)
-      case _ => Some(state)
-    }
-
-  /** CAS `meta0` as its version; None = the version was already taken. */
-  private def writeManifest(meta0: StreamMetadata,
-                            prev: Option[StreamMetadata]): Option[StreamMetadata] = {
-    // commit time is stamped INSIDE the manifest at CAS time — the
-    // TIMESTAMP AS OF authority (file mtimes are unreliable: coarse
-    // granularity / writer clock skew can order them against versions) —
-    // and CLAMPED to never precede the previous version's stamp: the CAS
-    // serializes commits and every committer reconstructs the previous
-    // state first, so the clamp costs nothing and makes the stamp
-    // sequence monotone BY CONSTRUCTION even across skewed writer clocks
-    // (a commit sequenced after a post-t commit can never be pre-t in
-    // any consistent timeline). Monotone stamps are what let
-    // versionAtTime resolve by pure binary search — O(log n) record GETs
-    // at any chain depth (VersionsBench `time_resolve_ms`).
-    // The incarnation id is force-carried from the previous version so no
-    // update closure can accidentally drop or rewrite the stream identity.
-    val meta = meta0.copy(
-      committedAt = prev.fold(System.currentTimeMillis())(p =>
-        math.max(System.currentTimeMillis(), p.committedAt)),
-      incarnation = prev.map(_.incarnation).getOrElse(meta0.incarnation))
-    val rec = prev match {
-      case Some(p) =>
-        // Two tiers. Fast path: append-only commits (the writeEvents /
-        // txn-merge shape, i.e. almost every commit) keep the previous
-        // list as a prefix — element instances are SHARED after `++`/`:+`
-        // so startsWith degenerates to pointer compares and the diff
-        // costs O(prev) eq-checks, no hashing. Slow path (truncate/
-        // compact/redact/sweep — rare): a path-keyed structural diff; a
-        // record that CHANGED for an existing path is removed+re-added.
-        // Replay reproduces the writer's exact sequence for every real
-        // operation — and file order carries no semantics regardless:
-        // scans key on explicit offsets.
-        def diff[A](prev: Seq[A], next: Seq[A], pathOf: A => String): Option[(Seq[A], Seq[String])] =
-          if (next.lengthCompare(prev.size) >= 0 && next.startsWith(prev))
-            Some((next.drop(prev.size), Nil))
-          else {
-            val pm = prev.iterator.map(a => pathOf(a) -> a).toMap
-            val nm = next.iterator.map(a => pathOf(a) -> a).toMap
-            // duplicate paths would make the diff lossy — never happens
-            // with UUID'd part files, but fall back to a lossless full
-            // checkpoint rather than trust it
-            if (pm.size != prev.size || nm.size != next.size) None
-            else Some((
-              next.filter(a => !pm.get(pathOf(a)).contains(a)),
-              prev.collect { case a if !nm.get(pathOf(a)).contains(a) => pathOf(a) }))
-          }
-        (diff[FileEntry](p.files, meta.files, _.path),
-          diff[PendingDelete](p.pendingDeletes, meta.pendingDeletes, _.path)) match {
-          case (Some((fa, fr)), Some((pa, pr))) =>
-            ManifestRecord(ManifestRecord.Delta,
-              meta.copy(files = Nil, pendingDeletes = Nil),
-              filesAdded = fa, filesRemoved = fr,
-              pendingAdded = pa, pendingRemoved = pr)
-          case _ => ManifestRecord(ManifestRecord.Full, meta)
-        }
-      case _ => ManifestRecord(ManifestRecord.Full, meta)
-    }
-    if (!chain(meta.scope, meta.name).create(meta.version,
-        Serialization.write(rec).getBytes(StandardCharsets.UTF_8))) return None
-    // seed the cache with what was just committed: the writer's next
-    // read-modify-write round trip touches only the tip record
-    cacheForward((meta.scope, meta.name), meta)
-    // out-of-band checkpoint: the in-line commit above stayed O(delta);
-    // the O(files) full-state serialize happens on the checkpointer
-    // thread AFTER the CAS landed. A crash before the sidecar lands is
-    // invisible — readers replay deltas to the previous base.
-    if (checkpointEligible(meta.version)) scheduleCheckpoint(meta)
-    Some(meta)
-  }
+  def gcManifests(scope: String, stream: String, keepVersions: Int): Seq[Long] =
+    log(scope, stream).gc(keepVersions)
 }

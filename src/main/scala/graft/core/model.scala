@@ -112,7 +112,8 @@ final case class StreamConfig(
       * 0 = no policy (manual `CALL g.system.gc_manifests` only). Without
       * a cadence the chain grows one object per commit forever (a
       * 1-commit/sec stream is 3×10^7 `_meta` objects/year — the listing
-      * itself becomes the bottleneck, measured by tools.VersionsBench).
+      * itself becomes the bottleneck, measured by the versions leg of
+      * tools.ManifestBench).
       */
     manifestKeepVersions: Int = 0)
 

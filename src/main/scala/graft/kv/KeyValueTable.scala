@@ -1,7 +1,7 @@
 package graft.kv
 
-import graft.catalog.{ChainIssue, ManifestChain}
-import graft.core.{ConditionalCheckFailedException, GraftException, ManifestChainBrokenException}
+import graft.catalog.{LogState, ManifestChain, ManifestLog}
+import graft.core.{ConditionalCheckFailedException, GraftException, ManifestChainBrokenException, PendingDelete}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.sources.{GraftKvScan, GraftKvTable}
@@ -15,10 +15,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.RelationShim
 import org.apache.spark.sql.sources.EqualTo
 import org.apache.spark.sql.types.StructType
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
 
-import java.nio.charset.StandardCharsets
 import java.util.UUID
 
 /** Versioned, partitioned key-value table
@@ -33,6 +30,10 @@ import java.util.UUID
   * (TableCompactor analog). Entry versions are commit versions — exactly
   * the reference's monotonic per-entry `Version` semantics.
   *
+  * The manifest is the stream's log ([[graft.catalog.ManifestLog]]): a
+  * commit appends one delta record naming the directories it added or
+  * removed. Chains written as full state per commit read unchanged.
+  *
   * Scale: every read resolves through [[graft.sources.GraftKvScan]],
   * which relies on the write layout ([[KeyValueTable.partIndexOfBucket]]): a
   * key's whole history sits at one part index in every directory, so a
@@ -44,30 +45,17 @@ import java.util.UUID
 final case class KvFile(path: String, kind: String, commitVersion: Long)
 /** One file a KV write task wrote: its part index, rows and bytes. */
 final case class KvPartFile(partIndex: Int, path: String, rows: Long, bytes: Long)
-/** A compacted-away file awaiting physical deletion after its
-  * reader-grace deadline (see StreamCatalog.sweepDeletes rationale).
+/** A table's state at one commit: its live delta/base directories and
+  * the compacted-away ones awaiting deletion after their reader-grace
+  * deadline (see StreamCatalog.sweepDeletes rationale).
   */
-final case class KvPendingDelete(path: String, notBefore: Long)
 final case class KvManifest(name: String, partitionCount: Int, version: Long,
                             files: Seq[KvFile],
-                            pendingDeletes: Seq[KvPendingDelete] = Nil,
-                            /** Wall-clock stamped at commit (CAS) time —
-                              * the TIMESTAMP AS OF authority, mirroring
-                              * StreamMetadata.committedAt. 0 = pre-upgrade
-                              * manifest (resolution falls back to mtime).
-                              */
+                            pendingDeletes: Seq[PendingDelete] = Nil,
+                            /** As StreamMetadata.committedAt (0 = pre-upgrade). */
                             committedAt: Long = 0L,
-                            /** Creation identity of this table INCARNATION
-                              * (mirrors StreamMetadata.incarnation): a fresh
-                              * UUID stamped by the v1 commit — the table's
-                              * first after (re)creation, since chains
-                              * restart at 1 — and force-carried by every
-                              * later commit. GC stamps it into the floor
-                              * chain, so a floor chain that survived a
-                              * delete+recreate (hand surgery / partial
-                              * delete) is auditable as STALE by comparing
-                              * against the live chain's identity ("" =
-                              * pre-upgrade manifest, exempt).
+                            /** As StreamMetadata.incarnation, minted in the
+                              * v0 identity record ("" = pre-upgrade).
                               */
                             incarnation: String = "")
 
@@ -129,28 +117,29 @@ object KeyValueTable {
     }
   }
 
-  /** The table's manifest chain: self-contained `manifest-%012d.json`
-    * records under `_meta`. Versions start at 1 (an empty table is
-    * version 0, so entry versions stay strictly positive and never
-    * collide with the expectedVersion=0 "must not exist" sentinel); the
-    * LIST-free tip walk is capped at 32 probes, about a few LIST pages'
-    * worth of latency.
-    */
-  private[graft] def manifestChain(fsf: () => FileSystem, metaDir: Path): ManifestChain =
-    new ManifestChain(fsf, metaDir, "manifest-", ".json", first = 1L, probeCap = 32)
-
-  private def decode(bytes: Array[Byte]): KvManifest = {
-    implicit val fmts: Formats = DefaultFormats
-    Serialization.read[KvManifest](new String(bytes, StandardCharsets.UTF_8))
+  /** How the manifest log reads and stamps a table's state. */
+  private implicit object KvLog extends LogState[KvManifest, KvFile] {
+    def version(m: KvManifest): Long = m.version
+    def committedAt(m: KvManifest): Long = m.committedAt
+    def incarnation(m: KvManifest): String = m.incarnation
+    def files(m: KvManifest): Seq[KvFile] = m.files
+    def pendingDeletes(m: KvManifest): Seq[PendingDelete] = m.pendingDeletes
+    def path(f: KvFile): String = f.path
+    def stamped(m: KvManifest, committedAt: Long, incarnation: String): KvManifest =
+      m.copy(committedAt = committedAt, incarnation = incarnation)
+    def withLists(m: KvManifest, files: Seq[KvFile], pendingDeletes: Seq[PendingDelete]): KvManifest =
+      m.copy(files = files, pendingDeletes = pendingDeletes)
   }
 
-  /** The chain half of fsck, without Spark: a version's base reads when
-    * its manifest parses (KV manifests are self-contained); the live
-    * identity is the newest readable manifest's incarnation.
+  /** The table's manifest log under `metaDir`. Commit versions start at 1
+    * (an empty table is version 0, so entry versions stay strictly
+    * positive and never collide with the expectedVersion=0 "must not
+    * exist" sentinel); version 0 is the identity record only.
     */
-  def auditChain(chain: ManifestChain): Seq[ChainIssue] =
-    chain.audit(v => scala.util.Try(decode(chain.bytes(v))).isSuccess,
-      () => chain.readTip(v => decode(chain.bytes(v))).fold("")(_._2.incarnation))
+  private[graft] def manifestLog(fsf: () => FileSystem, metaDir: Path,
+                                 label: String): ManifestLog[KvManifest, KvFile] =
+    new ManifestLog[KvManifest, KvFile](fsf, metaDir, first = 1L,
+      graft.catalog.StreamCatalog.DefaultCheckpointInterval, label, new IllegalArgumentException(_))
 }
 
 class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
@@ -158,7 +147,6 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
                     deleteGraceMillis: Long = graft.catalog.StreamCatalog.DefaultDeleteGraceMillis,
                     hadoopConf: Configuration = new Configuration()) {
   import spark.implicits._
-  private implicit val fmts: Formats = DefaultFormats
 
   private val tableDir = new Path(new Path(rootDir), name)
   private val metaDir = new Path(tableDir, "_meta")
@@ -168,31 +156,31 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
 
   // the GC retention floor rides the chain: `floor-<seq>.json` records
   // under _meta, outside the `manifest-*` names
-  private val chain = KeyValueTable.manifestChain(() => fs, metaDir)
+  private val log = KeyValueTable.manifestLog(() => fs, metaDir, s"kv table $name")
+  private def chain: ManifestChain = log.chain
 
-  private def readManifest(v: Long): KvManifest = KeyValueTable.decode(chain.bytes(v))
+  private def empty: KvManifest = KvManifest(name, partitionCount, 0L, Nil)
 
-  /** The newest committed manifest (empty table = version 0). Manifests
-    * are SELF-CONTAINED, so whatever version the tip walk lands on reads
-    * as exactly that version's full state — delete+recreate of the same
-    * name can never mix incarnations.
+  /** The newest committed manifest (empty table = version 0). */
+  private def latest(): KvManifest = log.tip().getOrElse(empty)
+
+  /** `m`, once the log has its v0 identity record (see [[ManifestLog]]):
+    * the table's first commit writes it, and so does the first commit to
+    * a chain written before identity records, carrying the incarnation
+    * its records already have.
     */
-  private def latest(): KvManifest =
-    chain.readTip(readManifest).map(_._2).getOrElse(KvManifest(name, partitionCount, 0L, Nil))
+  private def identified(m: KvManifest): KvManifest =
+    if (m.version > 0L) {
+      if (!chain.exists(0L)) log.create(empty, Some(m.incarnation))
+      m
+    } else {
+      log.create(empty)
+      log.at(0L).getOrElse(throw new GraftException(s"kv $name: identity record unreadable"))
+    }
 
-  /** CAS `m0` as its version; false = the version was already taken. */
-  private def commit(m0: KvManifest, prevCommittedAt: Long): Boolean = {
-    // the TIMESTAMP AS OF stamp, clamped monotone exactly as
-    // StreamCatalog.writeManifest's
-    // v1 = the incarnation's first commit: mint its identity here (the
-    // CAS arbitrates racing first-committers, so exactly one identity
-    // ever lands); every later commit carries the tip's forward
-    val m = m0.copy(committedAt =
-      math.max(System.currentTimeMillis(), prevCommittedAt),
-      incarnation =
-        if (m0.version == 1L) UUID.randomUUID().toString else m0.incarnation)
-    chain.create(m.version, Serialization.write(m).getBytes(StandardCharsets.UTF_8))
-  }
+  /** CAS `next` on top of `prev`; false = the version was already taken. */
+  private def commit(next: KvManifest, prev: KvManifest): Boolean =
+    log.write(next, Some(identified(prev))).isDefined
 
   // ------------------------------------------------------------------ write
 
@@ -263,8 +251,7 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
       writeParts("graft.kvUpdate", placed, deltaDir, Some(commitVersion))
 
       if (commit(m.copy(version = commitVersion,
-          files = m.files :+ KvFile(deltaDir.toString, "delta", commitVersion)),
-          m.committedAt))
+          files = m.files :+ KvFile(deltaDir.toString, "delta", commitVersion)), m))
         return commitVersion
       fs.delete(deltaDir, true) // lost the race: re-check conditions on fresh state
       attempts += 1
@@ -413,9 +400,10 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     */
   def manifestFloor: Long = chain.floor()
 
-  /** This table incarnation's creation identity (minted by the v1
-    * commit, carried by every commit after it; "" before the first
-    * commit and on pre-upgrade chains). See [[KvManifest.incarnation]].
+  /** This table incarnation's creation identity (minted with the v0
+    * identity record by the first commit, carried by every commit after
+    * it; "" before the first commit and on pre-upgrade chains). See
+    * [[KvManifest.incarnation]].
     */
   def incarnation: String = latest().incarnation
 
@@ -427,23 +415,21 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     */
   def floorAnchorPresent: Boolean = chain.floorAnchorPresent()
 
-  /** Retire manifest history older than `keepVersions` behind the tip —
-    * the KVT side of manifest-log retention (the chain otherwise grows
-    * one file per commit forever). KV manifests are SELF-CONTAINED full
-    * state, so unlike the stream log no checkpoint base is needed: any
-    * retained version reconstructs alone. [[ManifestChain.gc]] commits the
-    * floor (stamped with the table's incarnation, so a chain surviving a
-    * delete+recreate audits as stale), then deletes manifests below it.
-    * As-of reads (`entriesAt`, SQL `VERSION AS OF`) below the floor fail
-    * loudly at resolution; `deltaSince` and live reads only ever read the
-    * LATEST manifest and are unaffected. Returns the retired versions.
+  /** Retire manifest history older than `keepVersions` behind the tip
+    * (see [[ManifestLog.gc]]; the chain otherwise grows one file per
+    * commit forever). The floor is stamped with the table's incarnation,
+    * so a chain surviving a delete+recreate audits as stale. As-of reads
+    * (`entriesAt`, SQL `VERSION AS OF`) below the floor fail loudly at
+    * resolution; `deltaSince` and live reads only ever read the LATEST
+    * manifest and are unaffected. Returns the retired versions.
     */
   def gcManifests(keepVersions: Int): Seq[Long] = {
     require(keepVersions >= 1, "keepVersions must be >= 1")
-    chain.gc() { _ =>
-      val m = latest()
-      val cut = m.version - keepVersions
-      if (cut <= 0 || cut <= manifestFloor) None else Some((cut, m.incarnation))
+    val m = latest()
+    if (m.version == 0L) Nil
+    else {
+      identified(m)
+      log.gc(keepVersions)
     }
   }
 
@@ -472,8 +458,7 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     * instant before the first commit once a floor exists.
     */
   def versionAtTime(epochMillis: Long): Option[Long] =
-    chain.versionAtTime(epochMillis, () => Some(latest().version))(
-      b => KeyValueTable.decode(b).committedAt)
+    log.versionAtTime(epochMillis, () => Some(latest().version))
 
   /** The committed manifest at `version` (None = latest) — the planning
     * surface for the SQL read path (`sources.GraftKvTable`), which needs
@@ -481,12 +466,12 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     */
   private[graft] def manifestAt(version: Option[Long]): KvManifest = version match {
     case None => latest()
-    case Some(v) if v <= 0L => KvManifest(name, partitionCount, 0L, Nil)
+    case Some(v) if v <= 0L => empty
     case Some(v) =>
       // deliberately no latest() in the message: resolving the tip costs
       // a probe walk/LIST, and error paths (e.g. probing retired versions)
       // must stay O(1) — the floor covers the common cause
-      chain.readAt(v)(readManifest).getOrElse(throw new IllegalArgumentException(
+      log.at(v).getOrElse(throw new IllegalArgumentException(
         s"kv table $name has no commit $v" +
           (if (manifestFloor > 0L) s" (versions below $manifestFloor are GC-retired)" else "")))
   }
@@ -505,7 +490,7 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
 
   def fsck(): Seq[String] = {
     val issues = Seq.newBuilder[String]
-    issues ++= KeyValueTable.auditChain(chain).map(i => s"${i.kind}: ${i.detail}")
+    issues ++= log.audit().map(i => s"${i.kind}: ${i.detail}")
     // a floor naming an unreachable retained chain throws loudly in
     // latest(); the audit above reported it, and there is no live
     // manifest to check files against
@@ -560,11 +545,10 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     // an in-flight read planned from the old manifest can finish;
     // sweepDeletes() reclaims them afterwards
     val deadline = System.currentTimeMillis() + deleteGraceMillis
-    if (!commit(KvManifest(name, partitionCount, m.version + 1,
-        Seq(KvFile(baseDir.toString, "base", m.version)),
-        m.pendingDeletes ++ m.files.map(f => KvPendingDelete(f.path, deadline)),
-        incarnation = m.incarnation),
-        m.committedAt)) {
+    if (!commit(m.copy(version = m.version + 1,
+        files = Seq(KvFile(baseDir.toString, "base", m.version)),
+        pendingDeletes = m.pendingDeletes ++ m.files.map(f => PendingDelete(f.path, deadline))),
+        m)) {
       fs.delete(baseDir, true)
       throw new GraftException(s"kv $name: compaction lost CAS; rerun")
     }
@@ -584,8 +568,7 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     val donePaths = ManifestChain.deleteTombstoned(fs, due.map(_.path)).toSet
     // a lost CAS is fine: the files are gone, tombstones clear on a later sweep
     commit(m.copy(version = m.version + 1,
-      pendingDeletes = m.pendingDeletes.filterNot(p => donePaths.contains(p.path))),
-      m.committedAt): Unit
+      pendingDeletes = m.pendingDeletes.filterNot(p => donePaths.contains(p.path))), m): Unit
     donePaths.toSeq.sorted
   }
 

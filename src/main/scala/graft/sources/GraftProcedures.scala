@@ -233,8 +233,8 @@ object GraftProcedures {
           val t = eng.catalog.openKeyValueTable(eng.spark, str(r, 0), str(r, 1))
           val (seq, rec) = t.floorWithSeq
           val tip = t.currentVersion
-          // KV manifests are self-contained: the retained range is
-          // [max(1, floor), tip], no separate checkpoint base to verify
+          // the retained range is [max(1, floor), tip]; v0, the identity
+          // record, is not a commit
           Seq(Seq(rec.floor, seq, rec.incarnation, t.incarnation,
             t.floorAnchorPresent, tip, tip - math.max(1L, rec.floor) + 1L))
         }

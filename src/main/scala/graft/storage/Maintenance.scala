@@ -87,8 +87,8 @@ class Maintenance(g: GraftStreams,
 
   /** Manifest-log retention across a scope's KEY-VALUE tables, honoring
     * each table's persisted `manifestKeepVersions` (the KVT side of the
-    * periodic-retention plane; KV manifests are self-contained, so no
-    * checkpoint base is involved). Returns retired versions per table.
+    * periodic-retention plane; `gcManifests` verifies the floor's
+    * checkpoint base itself). Returns retired versions per table.
     * Bounded-parallel across tables like [[runScope]] is across streams.
     */
   def runKvTables(scope: String,

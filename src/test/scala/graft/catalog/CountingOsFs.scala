@@ -1,8 +1,8 @@
 package graft.catalog
 
-/** Instrumented object-store contract FS: counts point-status probes and
-  * listings so specs can assert HOW a read resolved (probe walk vs LIST
-  * fallback), not only what it returned. Separate scheme (`cntfs`) keeps
+/** Instrumented object-store contract FS: counts point-status probes,
+  * listings and opens so specs can assert HOW a read resolved (probe walk
+  * vs LIST fallback), not only what it returned. Separate scheme (`cntfs`) keeps
   * the counters isolated from parallel suites using `oscas`.
   */
 class CountingOsFs extends graft.storage.LaggedObjectStoreFs {
@@ -18,6 +18,12 @@ class CountingOsFs extends graft.storage.LaggedObjectStoreFs {
     }
     super.getFileStatus(f)
   }
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    // only opens that found a file: a probe for a missing record is a miss
+    val in = super.open(f, bufferSize)
+    CountingOsFs.openPaths.add(f.toUri.getPath)
+    in
+  }
   override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
     CountingOsFs.listCalls.incrementAndGet()
     CountingOsFs.listPaths.add(f.toUri.getPath)
@@ -29,9 +35,10 @@ class CountingOsFs extends graft.storage.LaggedObjectStoreFs {
 object CountingOsFs {
   val statusCalls = new java.util.concurrent.atomic.AtomicLong()
   val listCalls = new java.util.concurrent.atomic.AtomicLong()
-  /** The probed and listed paths, in call order (specs drain them). */
+  /** The probed, listed and opened paths, in call order (specs drain them). */
   val statusPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val listPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val openPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val inList: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 }

@@ -12,7 +12,10 @@ import java.nio.file.{Files, Path, Paths}
 /** Incremental manifest log (delta records + periodic checkpoints):
   * on-disk cadence, exact state reconstruction through mixed operations,
   * as-of reads at delta versions, torn-tip vs broken-chain distinction,
-  * and cross-instance tailing. ManifestBench carries the wall-clock
+  * cross-instance tailing, recreate, GC and the retention floor. The log
+  * cases run once per store — a stream through its catalog and a
+  * key-value table (`[kv]` in the name) — since both keep their state in
+  * the one [[ManifestLog]]. ManifestBench carries the wall-clock
   * evidence (p50 commit flat 2–5 ms from 10^3 to 10^6 live files); this
   * spec carries the semantics.
   */
@@ -24,9 +27,9 @@ class ManifestLogSpec extends AnyFunSuite {
     (root, new StreamCatalog(rootDir = root, checkpointInterval = interval))
   }
 
-  private def rawKind(root: String, v: Long): String = {
-    val p = Paths.get(root, "s", "x", "_meta", f"manifest-$v%012d.json")
-    val jv = JsonMethods.parse(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+  private def rawKind(meta: Path, v: Long): String = {
+    val jv = JsonMethods.parse(new String(
+      Files.readAllBytes(meta.resolve(f"manifest-$v%012d.json")), StandardCharsets.UTF_8))
     jv \ "kind" match {
       case org.json4s.JString(k) => k
       case _ => "legacy-full"
@@ -37,181 +40,365 @@ class ManifestLogSpec extends AnyFunSuite {
     FileEntry(seg, s"data/part-$i-${java.util.UUID.randomUUID()}.parquet",
       if (off >= 0) off else i * 100L, 100L, 0L, 99L, 1, 1024L)
 
-  test("cadence: every commit is a delta; checkpoints land out-of-band") {
-    val (root, c) = fresh(interval = 4)
-    c.createScope("s")
-    c.createStream("s", "x", StreamConfig(initialSegments = 2))
-    for (i <- 1 to 9) {
-      c.update("s", "x")(m => m.copy(files = m.files :+ fe(i)))
-      // drain per commit: the checkpointer COALESCES per stream (newest
-      // pending wins), so without a flush a lagging executor would only
-      // write the newest eligible sidecar — this test asserts the
-      // per-version cadence, so keep it in lockstep
-      c.flushCheckpoints()
-    }
-    assert(rawKind(root, 0) == ManifestRecord.Full)      // createStream
-    // the chain itself never carries O(files) records after v0
-    for (v <- 1L to 9L)
-      assert(rawKind(root, v) == ManifestRecord.Delta, s"v$v should be delta")
-    for (v <- Seq(4L, 8L)) {
-      val p = Paths.get(root, "s", "x", "_meta", f"checkpoint-$v%012d.json")
-      assert(Files.exists(p), s"sidecar for v$v missing")
-      val st = JsonMethods.parse(
-        new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-        .extract[StreamMetadata]
-      assert(st.version == v && st.files.size == v.toInt)
-    }
-    assert(!Files.exists(
-      Paths.get(root, "s", "x", "_meta", f"checkpoint-${9L}%012d.json")))
-    // a lost sidecar (crashed checkpointer) is an OPTIMIZATION loss,
-    // not corruption: reads fall back to delta replay transparently…
-    val ck8 = Paths.get(root, "s", "x", "_meta", f"checkpoint-${8L}%012d.json")
-    Files.delete(ck8)
-    val c2 = new StreamCatalog(root, checkpointInterval = 4)
-    assert(c2.getStream("s", "x").files.size == 9)
-    assert(c2.getStreamAt("s", "x", 8L).files.size == 8)
-    // …and the walk READ-REPAIRS the hole from the replayed state, so a
-    // read-mostly stream (no further commits) heals itself
-    c2.flushCheckpoints()
-    assert(Files.exists(ck8), "missing sidecar not read-repaired")
-    val healed = JsonMethods.parse(
-      new String(Files.readAllBytes(ck8), StandardCharsets.UTF_8))
-      .extract[StreamMetadata]
-    assert(healed.version == 8L && healed.files.size == 8)
+  /** One instance of a store's log, as the shared cases drive it. Every
+    * `append` commits one more live file, so the state at version v lists
+    * exactly v files; `state` is the store's whole state at a version.
+    */
+  private trait LogHandle {
+    def append(i: Int): Unit
+    def tip(): (Long, Int)
+    def at(v: Long): (Long, Int)
+    def state(v: Option[Long] = None): AnyRef
+    def incarnation: String
+    /** Replace the first live file and tombstone it (stream: a truncate-
+      * shaped update that also retags the stream, a small field riding
+      * wholesale; KV: compaction, which replaces them all).
+      */
+    def retire(): Unit
+    /** Clear every tombstone. */
+    def sweep(): Unit
+    def gc(keep: Int): Seq[Long]
+    def floor: Long
+    /** Delete the log and create it anew under the same name. */
+    def recreate(): Unit
+    def fsckKinds(): Seq[String]
   }
 
-  test("mixed append/remove/small-field ops reconstruct exactly") {
-    val (root, c) = fresh(interval = 5)
-    c.createScope("s")
-    c.createStream("s", "x", StreamConfig(initialSegments = 2))
-    // appends (prefix fast path)
-    for (i <- 1 to 3)
-      c.update("s", "x")(m => m.copy(files = m.files ++ Seq(fe(i, seg = 0), fe(100 + i, seg = 1))))
-    // a removal + tombstone (slow-path diff), like truncate/compaction
-    val before = c.getStream("s", "x")
-    val victim = before.files.head
-    c.update("s", "x") { m =>
-      m.copy(files = m.files.filterNot(_.path == victim.path),
-        pendingDeletes = m.pendingDeletes :+ PendingDelete(victim.path, 1L))
-    }
-    // small-field updates ride wholesale
-    c.updateStreamTags("s", "x", Set("tagged"))
-    val last = c.update("s", "x")(m => m.copy(files = m.files :+ fe(999)))
-
-    // a FRESH instance (no cache) replays the chain to the same state
-    val c2 = new StreamCatalog(root, checkpointInterval = 5)
-    val replayed = c2.getStream("s", "x")
-    assert(replayed == last, "replayed state must equal the writer's committed state")
-    assert(replayed.files.size == 6 && !replayed.files.exists(_.path == victim.path))
-    assert(replayed.pendingDeletes.map(_.path) == Seq(victim.path))
-    assert(replayed.tags == Set("tagged"))
+  /** A store whose log the shared cases run against. */
+  private trait Store {
+    def tag: String
+    def interval: Int
+    def fixture(contract: String = "local"): Fixture
   }
 
-  test("as-of reads resolve at delta versions; cache stays tip-monotone") {
-    val (root, c) = fresh(interval = 4)
-    c.createScope("s")
-    c.createStream("s", "x", StreamConfig(initialSegments = 1))
-    val states = (1 to 7).map { i =>
-      c.update("s", "x")(m => m.copy(files = m.files :+ fe(i)))
-    }
-    val c2 = new StreamCatalog(root, checkpointInterval = 4)
-    // read an OLD delta version first…
-    val v3 = c2.getStreamAt("s", "x", 3L)
-    assert(v3 == states(2), "as-of state at a delta version")
-    assert(v3.files.size == 3)
-    // …then the tip still reads as the tip (old read must not shadow it)
-    assert(c2.getStream("s", "x") == states.last)
-    // and every version is individually addressable
-    for ((st, i) <- states.zipWithIndex)
-      assert(c2.getStreamAt("s", "x", i + 1L) == st, s"as-of v${i + 1}")
+  private trait Fixture {
+    /** The log's `_meta` directory on the local disk. */
+    def meta: Path
+    /** A new instance on the same root, sharing no cache. */
+    def open(): LogHandle
   }
 
-  test("torn tip falls back one version; broken chain fails loudly") {
-    val (root, c) = fresh(interval = 4)
-    c.createScope("s")
-    c.createStream("s", "x", StreamConfig(initialSegments = 1))
-    for (i <- 1 to 6) c.update("s", "x")(m => m.copy(files = m.files :+ fe(i)))
-
-    // torn tip: version 7 exists with zero bytes (CAS winner crashed)
-    val torn = Paths.get(root, "s", "x", "_meta", f"manifest-${7L}%012d.json")
-    Files.write(torn, Array.empty[Byte])
-    val c2 = new StreamCatalog(root, checkpointInterval = 4)
-    assert(c2.getStream("s", "x").version == 6L, "torn tip → fall back one version")
-    assert(graft.tools.Fsck.checkRoot(root).map(_.kind).contains("manifest-torn"))
-    Files.delete(torn)
-
-    // broken chain: CORRUPT a committed mid-chain delta (v5, between the
-    // v4 checkpoint and the v6 tip) — present but truncated bytes must
-    // classify exactly like a missing record (a parse failure below the
-    // requested version is storage corruption, not a torn tip), never
-    // silently serve v4
-    val hole: Path = Paths.get(root, "s", "x", "_meta", f"manifest-${5L}%012d.json")
-    val intact = Files.readAllBytes(hole)
-    Files.write(hole, intact.take(intact.length / 2))
-    val c3 = new StreamCatalog(root, checkpointInterval = 4)
-    assertThrows[ManifestChainBrokenException](c3.getStream("s", "x"))
-    assertThrows[ManifestChainBrokenException](c3.getStreamAt("s", "x", 6L))
-    // …and the same for a missing mid-chain record
-    Files.delete(hole)
-    val c4 = new StreamCatalog(root, checkpointInterval = 4)
-    assertThrows[ManifestChainBrokenException](c4.getStream("s", "x"))
-    // versions at or below the checkpoint stay readable
-    assert(c4.getStreamAt("s", "x", 4L).files.size == 4)
+  private def contractRoot(contract: String, tag: String): (String, String, org.apache.hadoop.conf.Configuration) = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    if (contract == "objectstore")
+      conf.set("fs.oscas.impl", classOf[graft.storage.LaggedObjectStoreFs].getName)
+    val dir = Files.createTempDirectory(s"graft-mlog-$tag-$contract").toString
+    (dir, if (contract == "objectstore") "oscas://" + dir else dir, conf)
   }
 
-  test("cross-instance tailing applies one delta per new version") {
-    val (root, c) = fresh(interval = 8)
-    c.createScope("s")
-    c.createStream("s", "x", StreamConfig(initialSegments = 1))
-    val reader = new StreamCatalog(root, checkpointInterval = 8)
-    assert(reader.getStream("s", "x").version == 0L)
-    for (i <- 1 to 5) {
-      c.update("s", "x")(m => m.copy(files = m.files :+ fe(i)))
-      val seen = reader.getStream("s", "x")
-      assert(seen.version == i.toLong && seen.files.size == i)
+  private object StreamStore extends Store {
+    val tag = ""
+    val interval = 4
+    def fixture(contract: String): Fixture = {
+      val (dir, root, conf) = contractRoot(contract, "s")
+      val c = new StreamCatalog(root, conf, interval)
+      c.createScope("s")
+      c.createStream("s", "x", StreamConfig(initialSegments = 1))
+      new Fixture {
+        val meta: Path = Paths.get(dir, "s", "x", "_meta")
+        def open(): LogHandle = new LogHandle {
+          private val c = new StreamCatalog(root, conf, interval)
+          private def n(m: StreamMetadata) = (m.version, m.files.size)
+          def append(i: Int): Unit = c.update("s", "x")(m => m.copy(files = m.files :+ fe(i))): Unit
+          def tip(): (Long, Int) = n(c.getStream("s", "x"))
+          def at(v: Long): (Long, Int) = n(c.getStreamAt("s", "x", v))
+          def state(v: Option[Long]): AnyRef = v.fold(c.getStream("s", "x"))(c.getStreamAt("s", "x", _))
+          def incarnation: String = c.getStream("s", "x").incarnation
+          def retire(): Unit = c.update("s", "x") { m =>
+            m.copy(files = m.files.tail :+ fe(1000 + m.files.size), tags = m.tags + "retired",
+              pendingDeletes = m.pendingDeletes :+ PendingDelete(m.files.head.path, 1L))
+          }: Unit
+          def sweep(): Unit = c.update("s", "x")(m => m.copy(pendingDeletes = Nil)): Unit
+          def gc(keep: Int): Seq[Long] = c.gcManifests("s", "x", keep)
+          def floor: Long = c.manifestFloor("s", "x")
+          def recreate(): Unit = {
+            c.sealStream("s", "x")
+            c.deleteStream("s", "x")
+            c.createStream("s", "x", StreamConfig(initialSegments = 2)): Unit
+          }
+          // this spec's FileEntry paths are synthetic: only chain kinds count
+          def fsckKinds(): Seq[String] = graft.tools.Fsck.checkRoot(root, hadoopConf = Some(conf))
+            .map(_.kind).filterNot(_ == "file-missing")
+        }
+      }
     }
   }
 
-  // delete+recreate restarts the version chain at 0, so version numbers
-  // collide across incarnations — a cached tip of the DEAD incarnation
-  // must never be served once another instance recreates the stream.
-  // Parameterized over both FS contracts like ConcurrencySpec.
-  for (contract <- Seq("local", "objectstore")) {
-    test(s"[$contract] recreate across instances invalidates the cached tip") {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      if (contract == "objectstore")
-        conf.set("fs.oscas.impl", classOf[graft.storage.LaggedObjectStoreFs].getName)
-      val dir = Files.createTempDirectory(s"graft-mlog-rc-$contract").toString
-      val root = if (contract == "objectstore") "oscas://" + dir else dir
-      val a = new StreamCatalog(root, conf, checkpointInterval = 4)
-      a.createScope("s")
-      a.createStream("s", "x", StreamConfig(initialSegments = 1))
-      for (i <- 1 to 3) a.update("s", "x")(m => m.copy(files = m.files :+ fe(i)))
-      val oldTip = a.getStream("s", "x") // instance A caches tip v3 (a delta)
-      assert(oldTip.version == 3L && oldTip.incarnation.nonEmpty)
+  private object KvStore extends Store {
+    val tag = "[kv] "
+    val interval: Int = StreamCatalog.DefaultCheckpointInterval
+    private lazy val spark = {
+      val s = graft.SparkTestSession.spark
+      s.sparkContext.hadoopConfiguration
+        .set("fs.oscas.impl", classOf[graft.storage.LaggedObjectStoreFs].getName)
+      s
+    }
+    def fixture(contract: String): Fixture = {
+      val (dir, root, conf) = contractRoot(contract, "kv")
+      val sp = spark
+      import sp.implicits._
+      import org.apache.spark.sql.functions.{encode, lit}
+      new Fixture {
+        val meta: Path = Paths.get(dir, "t", "_meta")
+        def open(): LogHandle = new LogHandle {
+          private val t = new graft.kv.KeyValueTable(sp, root, "t", partitionCount = 2,
+            deleteGraceMillis = 0L, hadoopConf = conf)
+          private def n(m: graft.kv.KvManifest) = (m.version, m.files.size)
+          def append(i: Int): Unit = t.put(Seq(s"k$i").toDF("pk")
+            .select($"pk", lit("").as("sk"), encode($"pk", "UTF-8").as("value"))): Unit
+          def tip(): (Long, Int) = n(t.manifestAt(None))
+          def at(v: Long): (Long, Int) = n(t.manifestAt(Some(v)))
+          def state(v: Option[Long]): AnyRef = t.manifestAt(v)
+          def incarnation: String = t.incarnation
+          def retire(): Unit = t.compact()
+          def sweep(): Unit = t.sweepDeletes(): Unit
+          def gc(keep: Int): Seq[Long] = t.gcManifests(keep)
+          def floor: Long = t.manifestFloor
+          def recreate(): Unit = {
+            val p = new org.apache.hadoop.fs.Path(root, "t")
+            p.getFileSystem(conf).delete(p, true): Unit
+          }
+          def fsckKinds(): Seq[String] = t.fsck().map(_.takeWhile(_ != ':'))
+        }
+      }
+    }
+  }
 
-      // instance B: seal + delete + recreate the SAME name, then commit
-      // the new chain to the colliding version 3
-      val b = new StreamCatalog(root, conf, checkpointInterval = 4)
-      b.sealStream("s", "x")
-      b.deleteStream("s", "x")
-      b.createStream("s", "x", StreamConfig(initialSegments = 2))
-      for (i <- 1 to 3) b.update("s", "x")(m => m.copy(files = m.files :+ fe(100 + i)))
-      val newTip = b.getStream("s", "x")
-      assert(newTip.version == 3L && newTip.incarnation != oldTip.incarnation)
+  /** Where gc puts the floor for a cut (see [[ManifestLog.gc]]). */
+  private def floorOf(store: Store, tip: Long, keep: Int): Long = {
+    val cut = tip - keep
+    if (cut >= store.interval) cut / store.interval * store.interval else cut
+  }
 
-      // A's cache holds the dead incarnation at the SAME version — the
-      // equality fast path must detect and replace it
-      val seenAtCollision = a.getStream("s", "x")
-      assert(seenAtCollision == newTip,
-        "instance A served the dead incarnation's cached tip")
+  private def sidecar(meta: Path, v: Long): Path = meta.resolve(f"checkpoint-$v%012d.json")
 
-      // and the delta-base path (cached version < requested) too
-      val v4 = b.update("s", "x")(m => m.copy(files = m.files :+ fe(104)))
-      assert(a.getStream("s", "x") == v4)
-      // as-of reads address the NEW incarnation's history
-      assert(a.getStreamAt("s", "x", 1L).files.map(_.path) ==
-        b.getStreamAt("s", "x", 1L).files.map(_.path))
+  for (store <- Seq(StreamStore, KvStore)) {
+    val tag = store.tag
+    val iv = store.interval
+
+    test(s"${tag}cadence: every commit is a delta; checkpoints land out-of-band") {
+      val fx = store.fixture()
+      val w = fx.open()
+      val n = 2 * iv + 1
+      for (i <- 1 to n) {
+        w.append(i)
+        // drain per commit: the checkpointer COALESCES per log (newest
+        // pending wins), so without a flush a lagging executor would only
+        // write the newest eligible sidecar — this test asserts the
+        // per-version cadence, so keep it in lockstep
+        ManifestLog.flushCheckpoints()
+      }
+      // v0 is the full identity record; the chain itself never carries
+      // O(files) records after it
+      assert(rawKind(fx.meta, 0) == ManifestRecord.Full)
+      for (v <- 1L to n)
+        assert(rawKind(fx.meta, v) == ManifestRecord.Delta, s"v$v should be delta")
+      def sidecarOk(v: Long): Boolean = {
+        val jv = JsonMethods.parse(new String(Files.readAllBytes(sidecar(fx.meta, v)), StandardCharsets.UTF_8))
+        (jv \ "version").extract[Long] == v && (jv \ "files").children.size == v.toInt
+      }
+      for (v <- Seq(iv.toLong, 2L * iv)) {
+        assert(Files.exists(sidecar(fx.meta, v)), s"sidecar for v$v missing")
+        assert(sidecarOk(v))
+      }
+      assert(!Files.exists(sidecar(fx.meta, n)))
+      // a lost sidecar (crashed checkpointer) is an OPTIMIZATION loss,
+      // not corruption: reads fall back to delta replay transparently…
+      Files.delete(sidecar(fx.meta, 2L * iv))
+      val r = fx.open()
+      assert(r.tip() == ((n.toLong, n)))
+      assert(r.at(2L * iv) == ((2L * iv, 2 * iv)))
+      // …and the walk READ-REPAIRS the hole from the replayed state, so a
+      // read-mostly log (no further commits) heals itself
+      ManifestLog.flushCheckpoints()
+      assert(Files.exists(sidecar(fx.meta, 2L * iv)), "missing sidecar not read-repaired")
+      assert(sidecarOk(2L * iv))
+    }
+
+    test(s"${tag}mixed append/remove/small-field ops reconstruct exactly") {
+      val fx = store.fixture()
+      val w = fx.open()
+      // appends (prefix fast path)
+      for (i <- 1 to 3) w.append(i)
+      // a removal + tombstone (slow-path diff), like truncate/compaction
+      w.retire()
+      val retired = w.state()
+      w.append(4)
+      // clearing tombstones (slow-path diff of the pending list)
+      w.sweep()
+      w.append(5)
+      val last = w.state()
+      // a FRESH instance (no cache) replays the chain to the same state
+      val r = fx.open()
+      assert(r.state() == last, "replayed state must equal the writer's committed state")
+      assert(r.state(Some(4L)) == retired)
+      assert(fx.open().state(Some(4L)) == retired)
+      for (v <- 1L to 7L) assert(fx.open().state(Some(v)) == r.state(Some(v)), s"as-of v$v")
+    }
+
+    test(s"${tag}as-of reads resolve at delta versions; cache stays tip-monotone") {
+      val fx = store.fixture()
+      val w = fx.open()
+      val states = (1 to 7).map { i => w.append(i); w.state() }
+      val r = fx.open()
+      // read an OLD delta version first…
+      assert(r.state(Some(3L)) == states(2), "as-of state at a delta version")
+      assert(r.at(3L) == ((3L, 3)))
+      // …then the tip still reads as the tip (old read must not shadow it)
+      assert(r.state() == states.last)
+      // and every version is individually addressable
+      for ((st, i) <- states.zipWithIndex)
+        assert(r.state(Some(i + 1L)) == st, s"as-of v${i + 1}")
+    }
+
+    test(s"${tag}torn tip falls back one version; broken chain fails loudly") {
+      val fx = store.fixture()
+      val w = fx.open()
+      val n = iv + 2
+      for (i <- 1 to n) w.append(i)
+      ManifestLog.flushCheckpoints()
+
+      // torn tip: version n+1 exists with zero bytes (CAS winner crashed)
+      val torn = fx.meta.resolve(f"manifest-${n + 1L}%012d.json")
+      Files.write(torn, Array.empty[Byte])
+      assert(fx.open().tip()._1 == n.toLong, "torn tip → fall back one version")
+      assert(fx.open().fsckKinds().contains("manifest-torn"))
+      Files.delete(torn)
+
+      // broken chain: CORRUPT a committed mid-chain delta (between the
+      // checkpoint and the tip) — present but truncated bytes must
+      // classify exactly like a missing record (a parse failure below the
+      // requested version is storage corruption, not a torn tip), never
+      // silently serve the checkpoint
+      val hole = fx.meta.resolve(f"manifest-${iv + 1L}%012d.json")
+      val intact = Files.readAllBytes(hole)
+      Files.write(hole, intact.take(intact.length / 2))
+      assertThrows[ManifestChainBrokenException](fx.open().tip())
+      assertThrows[ManifestChainBrokenException](fx.open().at(n.toLong))
+      // …and the same for a missing mid-chain record
+      Files.delete(hole)
+      val r = fx.open()
+      assertThrows[ManifestChainBrokenException](r.tip())
+      // versions at or below the checkpoint stay readable
+      assert(r.at(iv.toLong) == ((iv.toLong, iv)))
+    }
+
+    test(s"${tag}cross-instance tailing applies one delta per new version") {
+      val fx = store.fixture()
+      val w = fx.open()
+      val reader = fx.open()
+      assert(reader.tip()._1 == 0L)
+      for (i <- 1 to 5) {
+        w.append(i)
+        assert(reader.tip() == ((i.toLong, i)))
+      }
+    }
+
+    // delete+recreate restarts the version chain, so version numbers
+    // collide across incarnations — a cached tip of the DEAD incarnation
+    // must never be served once another instance recreates the log.
+    // Parameterized over both FS contracts like ConcurrencySpec.
+    for (contract <- Seq("local", "objectstore")) {
+      test(s"$tag[$contract] recreate across instances invalidates the cached tip") {
+        val fx = store.fixture(contract)
+        val a = fx.open()
+        for (i <- 1 to 3) a.append(i)
+        val oldTip = a.state() // instance A caches tip v3 (a delta)
+        val oldInc = a.incarnation
+        assert(a.tip()._1 == 3L && oldInc.nonEmpty)
+
+        // instance B: delete + recreate the SAME name, then commit the new
+        // chain to the colliding version 3
+        val b = fx.open()
+        b.recreate()
+        for (i <- 1 to 3) b.append(100 + i)
+        val newTip = b.state()
+        assert(b.tip()._1 == 3L && b.incarnation != oldInc)
+
+        // A's cache holds the dead incarnation at the SAME version — the
+        // equality fast path must detect and replace it
+        assert(a.state() == newTip, "instance A served the dead incarnation's cached tip")
+        assert(a.state() != oldTip)
+
+        // and the delta-base path (cached version < requested) too
+        b.append(104)
+        assert(a.state() == b.state())
+        // as-of reads address the NEW incarnation's history
+        assert(a.state(Some(1L)) == b.state(Some(1L)))
+      }
+    }
+
+    test(s"${tag}gc with a crashed checkpointer repairs the floor base first") {
+      val fx = store.fixture()
+      val w = fx.open()
+      val n = 2 * iv + 5
+      for (i <- 1 to n) w.append(i)
+      ManifestLog.flushCheckpoints()
+      val fl = 2L * iv
+      assert(floorOf(store, n, 5) == fl)
+      // simulate the checkpointer having crashed at the floor's write
+      // (under a lagging shared executor the coalescer may have skipped
+      // it anyway — same scenario, so a missing file is fine)
+      Files.deleteIfExists(sidecar(fx.meta, fl))
+      assert(w.gc(keep = 5) == (1L until fl))
+      assert(w.floor == fl)
+      // the base was re-established synchronously before any delete
+      assert(Files.exists(sidecar(fx.meta, fl)))
+      assert(fx.open().at(fl + 1) == ((fl + 1, fl.toInt + 1)))
+    }
+
+    // GC + list-lag DOUBLE-BLIND (GcRaceSpec caught it live; this is the
+    // deterministic pin): gc retires [1, floor) while the lag window
+    // still hides every RETAINED manifest from listings, so a fresh
+    // instance's listing collapses to at most {manifest-0} — probe-past-max
+    // dies at the first retired version and, before the floor-probe
+    // recovery, the read silently reconstructed the EMPTY creation state.
+    // The floor marker is the recovery base: retained by the gc contract
+    // (base verified → marker written → deletes), so probing forward from
+    // it always rediscovers the chain.
+    test(s"${tag}gc + list-lag double-blind: fresh instance recovers the chain from the floor") {
+      val fx = store.fixture("objectstore")
+      val prev = graft.storage.LaggedObjectStoreFs.lagMs
+      try {
+        val a = fx.open()
+        for (i <- 1 to 10) a.append(i)
+        // every FURTHER manifest stays invisible to LIST for an hour —
+        // exact-key reads stay consistent (the object-store contract)
+        graft.storage.LaggedObjectStoreFs.lagMs = 3600000L
+        for (i <- 11 to 14) a.append(i)
+        ManifestLog.flushCheckpoints()
+        // tip 14, keep 2 → floor 12: the whole retained chain [12..14]
+        // sits inside the lag window, [1, 12) is deleted
+        assert(floorOf(store, 14, 2) == 12L)
+        assert(a.gc(keep = 2) == (1L to 11L))
+        assert(a.floor == 12L)
+
+        val b = fx.open()
+        assert(b.tip() == ((14L, 14)),
+          "fresh instance resolved a shorter chain — the empty-creation-state answer is the bug this pins")
+        for (v <- 12L to 14L) assert(b.at(v) == ((v, v.toInt)), s"as-of v$v")
+        // commits keep extending the recovered chain
+        b.append(99)
+        assert(b.tip()._1 == 15L)
+      } finally graft.storage.LaggedObjectStoreFs.lagMs = prev
+    }
+
+    // …and when the floor names a retained chain that is GENUINELY gone
+    // (not lag-hidden), resolution must fail loudly — the silent
+    // alternative is answering with the empty creation state — while
+    // fsck reports the state instead of crashing on it.
+    test(s"${tag}floor with no readable retained chain: loud failure; fsck classifies") {
+      val fx = store.fixture()
+      val w = fx.open()
+      for (i <- 1 to 14) w.append(i)
+      ManifestLog.flushCheckpoints()
+      val fl = floorOf(store, 14, 5)
+      assert(w.gc(keep = 5).nonEmpty && w.floor == fl)
+      // storage loses the ENTIRE retained chain (v0 + floor marker survive)
+      for (v <- fl to 14L) Files.deleteIfExists(fx.meta.resolve(f"manifest-$v%012d.json"))
+      assertThrows[ManifestChainBrokenException](fx.open().tip())
+      val kinds = fx.open().fsckKinds()
+      assert(kinds.contains("gc-floor-base"), kinds.mkString("; "))
     }
   }
 
@@ -250,25 +437,6 @@ class ManifestLogSpec extends AnyFunSuite {
     // …but a LOST floor base after GC is corruption and is reported
     Files.delete(Paths.get(root, "s", "x", "_meta", f"checkpoint-${8L}%012d.json"))
     assert(chainKinds().contains("gc-floor-base"))
-  }
-
-  test("gc with a crashed checkpointer repairs the floor base first") {
-    val (root, c) = fresh(interval = 4)
-    c.createScope("s")
-    c.createStream("s", "x", StreamConfig(initialSegments = 1))
-    for (i <- 1 to 14) c.update("s", "x")(m => m.copy(files = m.files :+ fe(i)))
-    c.flushCheckpoints()
-    // simulate the checkpointer having crashed at v8's write (under a
-    // lagging shared executor the coalescer may have skipped v8 anyway —
-    // same scenario, so a missing file is fine)
-    Files.deleteIfExists(Paths.get(root, "s", "x", "_meta", f"checkpoint-${8L}%012d.json"))
-    val retired = c.gcManifests("s", "x", keepVersions = 5)
-    assert(retired == (1L to 7L))
-    // the base was re-established synchronously before any delete
-    assert(Files.exists(
-      Paths.get(root, "s", "x", "_meta", f"checkpoint-${8L}%012d.json")))
-    val c2 = new StreamCatalog(root, checkpointInterval = 4)
-    assert(c2.getStreamAt("s", "x", 9L).files.size == 9)
   }
 
   test("TIMESTAMP AS OF resolves from record-level committedAt stamps") {
@@ -471,7 +639,7 @@ class ManifestLogSpec extends AnyFunSuite {
       val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/s/x/_meta", f"checkpoint-${8L}%012d.json"), false)
       val gate = new java.util.concurrent.CountDownLatch(1)
-      StreamCatalog.ckptExec.submit(new Runnable { override def run(): Unit = gate.await() })
+      ManifestLog.ckptExec.submit(new Runnable { override def run(): Unit = gate.await() })
       val b = new StreamCatalog(root, conf, checkpointInterval = 4)
       assert(b.getStream("s", "x").version == 8L) // queues the v8 repair behind the gate
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/s/x"), true) // "remote" deleteStream
@@ -489,70 +657,5 @@ class ManifestLogSpec extends AnyFunSuite {
       // B (stale cache, dead incarnation) converges on the new stream too
       assert(b.getStream("s", "x").incarnation == recreated.incarnation)
     }
-  }
-
-  // GC + list-lag DOUBLE-BLIND (GcRaceSpec caught it live; this is the
-  // deterministic pin): gcManifests retires (0, floor) while the lag
-  // window still hides every RETAINED manifest from listings, so a fresh
-  // instance's listing collapses to {manifest-0} — probe-past-max dies at
-  // the first retired version and, before the floor-probe recovery,
-  // getStream silently reconstructed the EMPTY v0 creation state. The
-  // floor marker is the recovery base: retained by the gc contract
-  // (base verified → marker written → deletes), so probing forward from
-  // it always rediscovers the chain.
-  test("gc + list-lag double-blind: fresh instance recovers the chain from the floor") {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    conf.set("fs.oscas.impl", classOf[graft.storage.LaggedObjectStoreFs].getName)
-    val dir = Files.createTempDirectory("graft-mlog-blind").toString
-    val root = "oscas://" + dir
-    val prev = graft.storage.LaggedObjectStoreFs.lagMs
-    try {
-      val a = new StreamCatalog(root, conf, checkpointInterval = 4)
-      a.createScope("s")
-      a.createStream("s", "x", StreamConfig(initialSegments = 1))
-      for (i <- 1 to 10) a.update("s", "x")(m => m.copy(files = m.files :+ fe(i)))
-      // every FURTHER manifest stays invisible to LIST for an hour —
-      // exact-key reads stay consistent (the object-store contract)
-      graft.storage.LaggedObjectStoreFs.lagMs = 3600000L
-      for (i <- 11 to 14) a.update("s", "x")(m => m.copy(files = m.files :+ fe(i)))
-      a.flushCheckpoints()
-      // tip 14, keep 2 → cut 12 → floor v12: the whole retained chain
-      // [12..14] sits inside the lag window, (0, 12) is deleted
-      assert(a.gcManifests("s", "x", keepVersions = 2) == (1L to 11L))
-      assert(a.manifestFloor("s", "x") == 12L)
-
-      val b = new StreamCatalog(root, conf, checkpointInterval = 4)
-      val tip = b.getStream("s", "x")
-      assert(tip.version == 14L && tip.files.size == 14,
-        s"fresh instance resolved v${tip.version}/${tip.files.size} files — " +
-          "the empty-creation-state answer is the bug this pins")
-      assert(b.manifestVersions("s", "x") == (0L +: (12L to 14L)))
-      for (v <- 12L to 14L)
-        assert(b.getStreamAt("s", "x", v).files.size == v.toInt, s"as-of v$v")
-      // commits keep extending the recovered chain
-      assert(b.update("s", "x")(m =>
-        m.copy(files = m.files :+ fe(99))).version == 15L)
-    } finally graft.storage.LaggedObjectStoreFs.lagMs = prev
-  }
-
-  // …and when the floor names a retained chain that is GENUINELY gone
-  // (not lag-hidden), resolution must fail loudly — the silent
-  // alternative is answering with the empty v0 creation state — while
-  // Fsck reports the state instead of crashing on it.
-  test("floor with no readable retained chain: loud failure; fsck classifies") {
-    val (root, c) = fresh(interval = 4)
-    c.createScope("s")
-    c.createStream("s", "x", StreamConfig(initialSegments = 1))
-    for (i <- 1 to 14) c.update("s", "x")(m => m.copy(files = m.files :+ fe(i)))
-    c.flushCheckpoints()
-    assert(c.gcManifests("s", "x", keepVersions = 5).nonEmpty)
-    assert(c.manifestFloor("s", "x") == 8L)
-    // storage loses the ENTIRE retained chain (v0 + floor marker survive)
-    for (v <- 8L to 14L)
-      Files.deleteIfExists(Paths.get(root, "s", "x", "_meta", f"manifest-$v%012d.json"))
-    val c2 = new StreamCatalog(root, checkpointInterval = 4)
-    assertThrows[ManifestChainBrokenException](c2.getStream("s", "x"))
-    val kinds = graft.tools.Fsck.checkRoot(root).map(_.kind)
-    assert(kinds.contains("gc-floor-base"), kinds.mkString("; "))
   }
 }

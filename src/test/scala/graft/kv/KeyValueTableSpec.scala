@@ -656,6 +656,29 @@ class KeyValueTableSpec extends AnyFunSuite {
     assert(listCalls.get() == l1, "warm read re-listed _meta")
   }
 
+  test("a warm get lists nothing under _meta and opens at most one _meta record") {
+    val fsImpl = classOf[graft.catalog.CountingOsFs].getName
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.cntfs.impl", fsImpl)
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", fsImpl)
+    val dir = Files.createTempDirectory("graft-kvwarm").toString
+    val t = new KeyValueTable(spark, "cntfs://" + dir, "t", 4, hadoopConf = conf)
+    // past one checkpoint interval, so the tip is a delta above a sidecar
+    for (i <- 1 to 20) t.put(kv(s"k$i" -> s"v$i"))
+    graft.catalog.ManifestLog.flushCheckpoints()
+    assert(t.get("k1").isDefined) // warm: tip cached, reader setup primed
+    import graft.catalog.CountingOsFs.{listPaths, openPaths}
+    def underMeta(q: java.util.Queue[String]) =
+      q.asScala.toSeq.filter(_.startsWith(s"$dir/t/_meta"))
+    val (l0, o0) = (underMeta(listPaths).size, underMeta(openPaths).size)
+    val got = t.get("k20").map(p => new String(p._1))
+    val lists = underMeta(listPaths).drop(l0)
+    val opens = underMeta(openPaths).drop(o0)
+    assert(got.contains("v20"))
+    assert(lists.isEmpty, s"a warm get listed $lists")
+    assert(opens.size <= 1, s"a warm get opened $opens")
+  }
+
   // the CAS winner of tip+1 died between the exclusive create and its
   // write: the zero-byte record must cost one version of staleness, never
   // the table (reads, fsck) — and commits must fail loudly, not parse-crash
