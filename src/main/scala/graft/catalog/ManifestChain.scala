@@ -378,6 +378,9 @@ final class ManifestChain(fsf: () => FileSystem, dir: Path, prefix: String, suff
   /** The GC floor: versions in [1, floor) are retired; 0 = never GC'd. */
   def floor(): Long = floors.read().floor
 
+  /** [[floor]], at worst stale-low (see [[FloorChain.floorFast]]). */
+  def floorFast(): Long = floors.floorFast()
+
   /** (floor-chain seq, floor record) — the `describe_retention` surface. */
   def floorWithSeq(): (Long, ManifestFloor) = floors.readWithSeq()
 

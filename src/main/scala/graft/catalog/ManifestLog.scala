@@ -141,12 +141,19 @@ final class ManifestLog[S <: AnyRef, F](fsf: () => FileSystem, dir: Path, first:
   def versionAtTime(epochMillis: Long, tipVersion: () => Option[Long]): Option[Long] =
     chain.versionAtTime(epochMillis, tipVersion)(b => st.committedAt(parseRecord(b).meta))
 
+  /** This instance has seen v0, which GC never retires (a recreated log
+    * writes its own): [[ensureIdentity]] need not probe again.
+    */
+  @volatile private var identified = false
+
   /** The incarnation in the v0 identity record; None when unreadable —
     * callers must then distrust any cached state.
     */
-  def identity(): Option[String] =
-    try Some(st.incarnation(parseRecord(chain.bytes(0L)).meta))
-    catch { case NonFatal(_) => None }
+  def identity(): Option[String] = {
+    val i = scala.util.Try(st.incarnation(parseRecord(chain.bytes(0L)).meta)).toOption
+    identified ||= i.isDefined
+    i
+  }
 
   /** Write version 0, the identity record: `initial` under a freshly
     * minted incarnation, or under `carry` for a chain written before
@@ -154,8 +161,17 @@ final class ManifestLog[S <: AnyRef, F](fsf: () => FileSystem, dir: Path, first:
     */
   def create(initial: S, carry: Option[String] = None): Option[S] = {
     require(st.version(initial) == 0L, s"$label: the identity record is version 0")
-    write(st.stamped(initial, 0L, carry.getOrElse(java.util.UUID.randomUUID().toString)), None)
+    val out = write(st.stamped(initial, 0L, carry.getOrElse(java.util.UUID.randomUUID().toString)), None)
+    identified = true
+    out
   }
+
+  /** Give a chain written before identity records its v0, carrying the
+    * incarnation its records already have; one probe per instance.
+    */
+  def ensureIdentity(initial: S, carry: String): Unit =
+    if (!identified && !chain.exists(0L)) create(initial, Some(carry))
+    else identified = true
 
   /** CAS `next` as its version on top of `prev`; None = the version was
     * already taken. The record is a delta against `prev` (a full one
@@ -216,7 +232,8 @@ final class ManifestLog[S <: AnyRef, F](fsf: () => FileSystem, dir: Path, first:
     * commit forever. The floor lands on the newest checkpoint-eligible
     * version at or below (tip − keepVersions), whose sidecar the
     * checkpointer has usually written already; a log shorter than that
-    * has no eligible version, and its floor is the cut itself. Either
+    * has no eligible version, and its floor is the cut itself, whose
+    * sidecar reads then take as their base ([[reconstruct]]). Either
     * way the floor's sidecar is verified readable (written on the spot
     * when missing) BEFORE [[ManifestChain.gc]] commits the floor and
     * deletes records and sidecars strictly below it — except v0.
@@ -271,6 +288,7 @@ final class ManifestLog[S <: AnyRef, F](fsf: () => FileSystem, dir: Path, first:
   /** Forget the cached state and the chain's hints (the log was deleted). */
   def invalidate(): Unit = {
     cache.set(null.asInstanceOf[S])
+    identified = false
     chain.invalidate()
   }
 
@@ -366,17 +384,13 @@ final class ManifestLog[S <: AnyRef, F](fsf: () => FileSystem, dir: Path, first:
     * v0 (see the class doc).
     */
   private def reconstruct(version: Long): S = {
-    // lazily fetched at most once per call: needed only when a cached
-    // state or a checkpoint sidecar is a candidate base
-    var inc: Option[Option[String]] = None
-    def incarnation(): Option[String] = {
-      if (inc.isEmpty) inc = Some(identity())
-      inc.get
-    }
+    // fetched at most once per call: needed only when a cached state or
+    // a checkpoint sidecar is a candidate base
+    lazy val inc = identity()
     val cached = Option(cache.get())
       .filter(c => st.version(c) <= version)
       .filter { c =>
-        val live = incarnation().contains(st.incarnation(c))
+        val live = inc.contains(st.incarnation(c))
         // dead incarnation: drop it so the monotone guard can't keep it
         if (!live) cache.compareAndSet(c, null.asInstanceOf[S])
         live
@@ -385,6 +399,11 @@ final class ManifestLog[S <: AnyRef, F](fsf: () => FileSystem, dir: Path, first:
       case Some(c) if st.version(c) == version => return c
       case _ =>
     }
+    // a short log's gc floor is off the checkpoint cadence (see [[gc]]):
+    // its sidecar is the base there, the record under it being retired
+    lazy val floorHint = chain.floorFast()
+    def atLowFloor(v: Long): Boolean =
+      v > 0 && v < checkpointInterval && !cached.exists(c => st.version(c) == v - 1) && v == floorHint
     var base: Option[S] = None
     var walk: List[ManifestRecord[S, F]] = Nil
     var v = version
@@ -397,7 +416,7 @@ final class ManifestLog[S <: AnyRef, F](fsf: () => FileSystem, dir: Path, first:
       if (cached.exists(c => st.version(c) == v)) base = cached
       else {
         val side =
-          if (checkpointEligible(v)) incarnation().flatMap(i => readSidecar(v, i))
+          if (checkpointEligible(v) || atLowFloor(v)) inc.flatMap(i => readSidecar(v, i))
           else None
         if (side.isDefined) base = side
         else {
@@ -422,14 +441,14 @@ final class ManifestLog[S <: AnyRef, F](fsf: () => FileSystem, dir: Path, first:
                 if (fl > version)
                   throw missing(s"version $version of $label was garbage-collected " +
                     s"mid-read (manifest retention floor is now $fl)")
-                val atFloor = if (fl > v) incarnation().flatMap(i => readSidecar(fl, i)) else None
+                val atFloor = if (fl > v) inc.flatMap(i => readSidecar(fl, i)) else None
                 // a REGRESSED marker (legacy rename-replaced floors or hand
                 // surgery) points BELOW the retired range, so the floor
                 // lookup above misses — but the retained chain's true base
                 // is some version in (v, requested] with a readable
                 // sidecar: probe them all before giving up (exact-key GETs
                 // on a rare, already-broken recovery path)
-                val mandated = atFloor.orElse(incarnation().flatMap { i =>
+                val mandated = atFloor.orElse(inc.flatMap { i =>
                   ((v + 1) to version).iterator.flatMap(w => readSidecar(w, i)).nextOption()
                 })
                 mandated match {

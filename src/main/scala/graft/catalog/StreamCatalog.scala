@@ -47,12 +47,12 @@ final case class KvTableConfig(
   * log-plus-checkpoint table needs (Delta's logRetentionDuration,
   * Iceberg's expire_snapshots), or the chain grows one file per commit
   * forever. Version 0 is always retained (the tiny identity record the
-  * incarnation guard validates against); `floor` itself is always a
-  * checkpoint-eligible version whose sidecar was verified readable
-  * BEFORE anything was deleted, so every retained version still
-  * reconstructs. Committed before the deletes (a floor claiming more
-  * than was deleted is harmless; the reverse would turn GC holes into
-  * phantom lag probes), and monotone across JVMs by CAS-append.
+  * incarnation guard validates against); `floor` itself is a version
+  * whose checkpoint sidecar was verified readable BEFORE anything was
+  * deleted, so every retained version still reconstructs. Committed
+  * before the deletes (a floor claiming more than was deleted is
+  * harmless; the reverse would turn GC holes into phantom lag probes),
+  * and monotone across JVMs by CAS-append.
   */
 final case class ManifestFloor(floor: Long, incarnation: String)
 

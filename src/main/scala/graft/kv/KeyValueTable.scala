@@ -164,19 +164,13 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
   /** The newest committed manifest (empty table = version 0). */
   private def latest(): KvManifest = log.tip().getOrElse(empty)
 
-  /** `m`, once the log has its v0 identity record (see [[ManifestLog]]):
-    * the table's first commit writes it, and so does the first commit to
-    * a chain written before identity records, carrying the incarnation
-    * its records already have.
+  /** `m`, once the log has its v0 identity record: the first commit
+    * writes it (see [[ManifestLog.ensureIdentity]] for older chains).
     */
   private def identified(m: KvManifest): KvManifest =
-    if (m.version > 0L) {
-      if (!chain.exists(0L)) log.create(empty, Some(m.incarnation))
-      m
-    } else {
-      log.create(empty)
-      log.at(0L).getOrElse(throw new GraftException(s"kv $name: identity record unreadable"))
-    }
+    if (m.version > 0L) { log.ensureIdentity(empty, m.incarnation); m }
+    else log.create(empty).orElse(log.at(0L))
+      .getOrElse(throw new GraftException(s"kv $name: identity record unreadable"))
 
   /** CAS `next` on top of `prev`; false = the version was already taken. */
   private def commit(next: KvManifest, prev: KvManifest): Boolean =
@@ -426,11 +420,7 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
   def gcManifests(keepVersions: Int): Seq[Long] = {
     require(keepVersions >= 1, "keepVersions must be >= 1")
     val m = latest()
-    if (m.version == 0L) Nil
-    else {
-      identified(m)
-      log.gc(keepVersions)
-    }
+    if (m.version == 0L) Nil else { identified(m); log.gc(keepVersions) }
   }
 
   /** Snapshot (time-travel) read: the table as of commit `version`.
@@ -476,6 +466,12 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
           (if (manifestFloor > 0L) s" (versions below $manifestFloor are GC-retired)" else "")))
   }
 
+  /** Every retained manifest version, ascending (see [[ManifestChain.list]]). */
+  private[graft] def manifestVersions: Seq[Long] = chain.list()
+
+  private[kv] def tableDirPath: String = tableDir.toString
+  private[kv] def liveFilePaths: Seq[String] = latest().files.map(_.path)
+
   /** Integrity audit of this table's own storage (the KVT counterpart
     * of `tools.Fsck`'s stream checks — O(metadata), no data scan): the
     * manifest chain audit ([[ManifestChain.audit]]: history for the delta
@@ -485,9 +481,6 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     * leak — harmless to reads, reclaimable). Returns human-readable
     * issue lines; empty = clean.
     */
-  private[kv] def tableDirPath: String = tableDir.toString
-  private[kv] def liveFilePaths: Seq[String] = latest().files.map(_.path)
-
   def fsck(): Seq[String] = {
     val issues = Seq.newBuilder[String]
     issues ++= log.audit().map(i => s"${i.kind}: ${i.detail}")

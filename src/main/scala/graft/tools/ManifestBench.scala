@@ -28,10 +28,6 @@ import java.nio.file.{Files, Paths}
   *     commits (a put's shape), cold and warm tip reads and the tip
   *     record's bytes.
   *
-  * Reference analog: the controller's event-sourced metadata store
-  * (controller/.../store/stream/PravegaTablesStreamMetadataStore.java)
-  * never rewrites full state per op either.
-  *
   * Usage: runMain graft.tools.ManifestBench [files|versions|kv] [n1 n2 ...]
   * (`GRAFT_MB_INTERVAL` sets the `files` leg's checkpoint cadence;
   * `GRAFT_MB_VERBOSE` prints each leg's raw commit walls.)

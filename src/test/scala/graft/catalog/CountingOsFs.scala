@@ -19,8 +19,14 @@ class CountingOsFs extends graft.storage.LaggedObjectStoreFs {
     super.getFileStatus(f)
   }
   override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
-    // only opens that found a file: a probe for a missing record is a miss
-    val in = super.open(f, bufferSize)
+    // openPaths: opens that found a file; openMisses: opens that did not
+    val in =
+      try super.open(f, bufferSize)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          CountingOsFs.openMisses.add(f.toUri.getPath)
+          throw e
+      }
     CountingOsFs.openPaths.add(f.toUri.getPath)
     in
   }
@@ -35,10 +41,11 @@ class CountingOsFs extends graft.storage.LaggedObjectStoreFs {
 object CountingOsFs {
   val statusCalls = new java.util.concurrent.atomic.AtomicLong()
   val listCalls = new java.util.concurrent.atomic.AtomicLong()
-  /** The probed, listed and opened paths, in call order (specs drain them). */
+  /** The probed, listed, opened and missed paths, in call order (specs drain them). */
   val statusPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val listPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val openPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val openMisses = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val inList: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 }

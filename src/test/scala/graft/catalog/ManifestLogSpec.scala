@@ -46,13 +46,20 @@ class ManifestLogSpec extends AnyFunSuite {
     */
   private trait LogHandle {
     def append(i: Int): Unit
+    /** One commit adding a live file per element. */
+    def appendAll(is: Seq[Int]): Unit
     def tip(): (Long, Int)
     def at(v: Long): (Long, Int)
     def state(v: Option[Long] = None): AnyRef
     def incarnation: String
-    /** Replace the first live file and tombstone it (stream: a truncate-
-      * shaped update that also retags the stream, a small field riding
-      * wholesale; KV: compaction, which replaces them all).
+    /** (live file paths, tombstoned paths) at a version (None = tip). */
+    def paths(v: Option[Long] = None): (Seq[String], Seq[String])
+    /** Version numbers the log's listing resolves, ascending. */
+    def versions(): Seq[Long]
+    /** Retire live files to tombstones (stream: a truncate-shaped update
+      * of the first file, then a retag through `updateStreamTags`, a
+      * small field riding wholesale; KV: compaction, which replaces them
+      * all).
       */
     def retire(): Unit
     /** Clear every tombstone. */
@@ -100,14 +107,24 @@ class ManifestLogSpec extends AnyFunSuite {
           private val c = new StreamCatalog(root, conf, interval)
           private def n(m: StreamMetadata) = (m.version, m.files.size)
           def append(i: Int): Unit = c.update("s", "x")(m => m.copy(files = m.files :+ fe(i))): Unit
+          def appendAll(is: Seq[Int]): Unit =
+            c.update("s", "x")(m => m.copy(files = m.files ++ is.map(i => fe(i, seg = i % 2)))): Unit
           def tip(): (Long, Int) = n(c.getStream("s", "x"))
           def at(v: Long): (Long, Int) = n(c.getStreamAt("s", "x", v))
           def state(v: Option[Long]): AnyRef = v.fold(c.getStream("s", "x"))(c.getStreamAt("s", "x", _))
           def incarnation: String = c.getStream("s", "x").incarnation
-          def retire(): Unit = c.update("s", "x") { m =>
-            m.copy(files = m.files.tail :+ fe(1000 + m.files.size), tags = m.tags + "retired",
-              pendingDeletes = m.pendingDeletes :+ PendingDelete(m.files.head.path, 1L))
-          }: Unit
+          def paths(v: Option[Long]): (Seq[String], Seq[String]) = {
+            val m = v.fold(c.getStream("s", "x"))(c.getStreamAt("s", "x", _))
+            (m.files.map(_.path), m.pendingDeletes.map(_.path))
+          }
+          def versions(): Seq[Long] = c.manifestVersions("s", "x")
+          def retire(): Unit = {
+            c.update("s", "x") { m =>
+              m.copy(files = m.files.tail,
+                pendingDeletes = m.pendingDeletes :+ PendingDelete(m.files.head.path, 1L))
+            }
+            c.updateStreamTags("s", "x", Set("retired")): Unit
+          }
           def sweep(): Unit = c.update("s", "x")(m => m.copy(pendingDeletes = Nil)): Unit
           def gc(keep: Int): Seq[Long] = c.gcManifests("s", "x", keep)
           def floor: Long = c.manifestFloor("s", "x")
@@ -144,12 +161,18 @@ class ManifestLogSpec extends AnyFunSuite {
           private val t = new graft.kv.KeyValueTable(sp, root, "t", partitionCount = 2,
             deleteGraceMillis = 0L, hadoopConf = conf)
           private def n(m: graft.kv.KvManifest) = (m.version, m.files.size)
-          def append(i: Int): Unit = t.put(Seq(s"k$i").toDF("pk")
+          def append(i: Int): Unit = appendAll(Seq(i))
+          def appendAll(is: Seq[Int]): Unit = t.put(is.map(i => s"k$i").toDF("pk")
             .select($"pk", lit("").as("sk"), encode($"pk", "UTF-8").as("value"))): Unit
           def tip(): (Long, Int) = n(t.manifestAt(None))
           def at(v: Long): (Long, Int) = n(t.manifestAt(Some(v)))
           def state(v: Option[Long]): AnyRef = t.manifestAt(v)
           def incarnation: String = t.incarnation
+          def paths(v: Option[Long]): (Seq[String], Seq[String]) = {
+            val m = t.manifestAt(v)
+            (m.files.map(_.path), m.pendingDeletes.map(_.path))
+          }
+          def versions(): Seq[Long] = t.manifestVersions
           def retire(): Unit = t.compact()
           def sweep(): Unit = t.sweepDeletes(): Unit
           def gc(keep: Int): Seq[Long] = t.gcManifests(keep)
@@ -218,22 +241,29 @@ class ManifestLogSpec extends AnyFunSuite {
     test(s"${tag}mixed append/remove/small-field ops reconstruct exactly") {
       val fx = store.fixture()
       val w = fx.open()
-      // appends (prefix fast path)
-      for (i <- 1 to 3) w.append(i)
+      // appends of two files per commit (prefix fast path)
+      for (i <- 1 to 3) w.appendAll(Seq(i, 100 + i))
+      val (before, _) = w.paths()
       // a removal + tombstone (slow-path diff), like truncate/compaction
       w.retire()
       val retired = w.state()
+      val retiredAt = w.tip()._1
+      val victims = before.filterNot(w.paths()._1.toSet)
+      assert(victims.nonEmpty)
       w.append(4)
       // clearing tombstones (slow-path diff of the pending list)
       w.sweep()
       w.append(5)
       val last = w.state()
+      val lastV = w.tip()._1
       // a FRESH instance (no cache) replays the chain to the same state
       val r = fx.open()
       assert(r.state() == last, "replayed state must equal the writer's committed state")
-      assert(r.state(Some(4L)) == retired)
-      assert(fx.open().state(Some(4L)) == retired)
-      for (v <- 1L to 7L) assert(fx.open().state(Some(v)) == r.state(Some(v)), s"as-of v$v")
+      assert(r.state(Some(retiredAt)) == retired)
+      val (live, tombs) = fx.open().paths(Some(retiredAt))
+      assert(victims.forall(p => !live.contains(p) && tombs.contains(p)))
+      assert(r.paths()._2.isEmpty)
+      for (v <- 1L to lastV) assert(fx.open().state(Some(v)) == r.state(Some(v)), s"as-of v$v")
     }
 
     test(s"${tag}as-of reads resolve at delta versions; cache stays tip-monotone") {
@@ -376,6 +406,7 @@ class ManifestLogSpec extends AnyFunSuite {
         val b = fx.open()
         assert(b.tip() == ((14L, 14)),
           "fresh instance resolved a shorter chain — the empty-creation-state answer is the bug this pins")
+        assert(b.versions() == (0L +: (12L to 14L)))
         for (v <- 12L to 14L) assert(b.at(v) == ((v, v.toInt)), s"as-of v$v")
         // commits keep extending the recovered chain
         b.append(99)

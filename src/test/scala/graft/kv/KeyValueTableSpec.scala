@@ -679,6 +679,29 @@ class KeyValueTableSpec extends AnyFunSuite {
     assert(opens.size <= 1, s"a warm get opened $opens")
   }
 
+  // a log shorter than one checkpoint interval gets its floor at the cut
+  // itself, off the checkpoint cadence: a cold reader must take the
+  // floor's sidecar as its base instead of walking onto retired records
+  test("a cold read above a short log's gc floor opens no retired record") {
+    val fsImpl = classOf[graft.catalog.CountingOsFs].getName
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.cntfs.impl", fsImpl)
+    spark.sparkContext.hadoopConfiguration.set("fs.cntfs.impl", fsImpl)
+    val dir = Files.createTempDirectory("graft-kvshortgc").toString
+    def open() = new KeyValueTable(spark, "cntfs://" + dir, "t", 4, hadoopConf = conf)
+    val t = open()
+    for (i <- 1 to 10) t.put(kv(s"k$i" -> s"v$i"))
+    assert(t.gcManifests(3) == (1L to 6L))
+    assert(t.manifestFloor == 7L)
+    import graft.catalog.CountingOsFs.openMisses
+    val m0 = openMisses.size
+    assert(open().get("k10").map(p => new String(p._1)).contains("v10"))
+    assert(open().entriesAt(8L).count() == 8L)
+    assert(open().fsck().isEmpty)
+    val retired = openMisses.asScala.toSeq.drop(m0).filter(_.startsWith(s"$dir/t/_meta/manifest-"))
+    assert(retired.isEmpty, s"cold reads opened retired records $retired")
+  }
+
   // the CAS winner of tip+1 died between the exclusive create and its
   // write: the zero-byte record must cost one version of staleness, never
   // the table (reads, fsck) — and commits must fail loudly, not parse-crash
