@@ -6,15 +6,17 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.sources.{GraftKvScan, GraftKvTable}
 import graft.storage.TaskFileWriter
-import org.apache.spark.TaskContext
+import graft.util.EventLog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.analysis.Resolver
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Murmur3HashFunction, UnsafeRow, XxHash64Function}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.RelationShim
-import org.apache.spark.sql.sources.EqualTo
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.sources.{EqualTo, In}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.UUID
 
@@ -23,9 +25,10 @@ import java.util.UUID
   * KeyValueTableConfiguration.java:39-55) re-expressed as an LSM over
   * parquet: every update batch writes one delta directory holding one
   * file per part index it touches, through the task-side
-  * [[graft.storage.TaskFileWriter]], and commits it with a manifest CAS;
-  * a driver-local batch is one write task with no shuffle, any other is
-  * shuffled by bucket first. Reads resolve base+deltas by latest commit
+  * [[graft.storage.TaskFileWriter]], and commits it with a manifest CAS.
+  * A driver-local batch (a local relation) is checked and written on the
+  * calling thread with no Spark job; any other is one write job, shuffled
+  * by bucket first. Reads resolve base+deltas by latest commit
   * version per key; compaction rewrites the resolved state as a new base
   * (TableCompactor analog). Entry versions are commit versions — exactly
   * the reference's monotonic per-entry `Version` semantics.
@@ -70,13 +73,21 @@ object KeyValueTable {
   private val PointColumns: StructType =
     StructType.fromDDL("pk STRING, sk STRING, value BINARY, version BIGINT")
 
+  /** The columns a conditional check reads, in this order. */
+  private val CheckColumns: StructType = StructType.fromDDL("pk STRING, sk STRING, version BIGINT")
+
+  /** Driver-side KV IO, which no task reports: one `event=kv.read` or
+    * `event=kv.write` line per read or write on the `graft.kv` logger.
+    */
+  private[graft] val events = new EventLog("graft.kv")
+
   /** A key's bucket: the write path's `pmod(xxhash64(pk), n)`, replicated
     * on the driver so a key becomes a literal without a Spark job.
     */
-  def bucketOf(pk: String, partitionCount: Int): Long = {
-    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-      org.apache.spark.unsafe.types.UTF8String.fromString(pk),
-      org.apache.spark.sql.types.StringType, 42L)
+  def bucketOf(pk: String, partitionCount: Int): Long = bucketOf(UTF8String.fromString(pk), partitionCount)
+
+  private def bucketOf(pk: UTF8String, partitionCount: Int): Long = {
+    val h = XxHash64Function.hash(pk, StringType, 42L)
     ((h % partitionCount) + partitionCount) % partitionCount
   }
 
@@ -88,8 +99,7 @@ object KeyValueTable {
     * files).
     */
   def partIndexOfBucket(bucket: Long, partitionCount: Int): Int = {
-    val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction.hash(
-      bucket, org.apache.spark.sql.types.LongType, 42L).toInt
+    val h = Murmur3HashFunction.hash(bucket, LongType, 42L).toInt
     ((h % partitionCount) + partitionCount) % partitionCount
   }
 
@@ -101,11 +111,11 @@ object KeyValueTable {
     * (column 0); with `version`, each row's version (column 5) is that
     * commit version, set in place.
     */
-  private final class PartLayout(partitionCount: Int, version: Option[Long])
+  private[kv] final class PartLayout(partitionCount: Int, version: Option[Long])
       extends TaskFileWriter.Layout[KvPartFile] {
     def schema: StructType = GraftKvTable.schema
     def fileKey(row: InternalRow): Long = partIndexOfBucket(row.getLong(0), partitionCount)
-    def fileName(idx: Long, tc: TaskContext): String = f"part-$idx%05d-${tc.taskAttemptId()}"
+    def fileName(idx: Long, token: TaskFileWriter.Token): String = f"part-$idx%05d-${token.attempt}"
     def newFile(idx: Long): TaskFileWriter.FileRows[KvPartFile] = new TaskFileWriter.FileRows[KvPartFile] {
       def add(r: InternalRow, i: Long): InternalRow = version.fold(r) { v =>
         val m = r match { case u: UnsafeRow => u; case o => o.copy() }
@@ -114,6 +124,78 @@ object KeyValueTable {
       }
       def entry(path: String, rows: Long, bytes: Long): KvPartFile =
         KvPartFile(idx.toInt, path, rows, bytes)
+    }
+  }
+
+  /** A batch whose rows are already on the driver, so it is checked and
+    * written on the calling thread: `rows` are the delta's rows in the
+    * table schema (version 0 until [[PartLayout]] stamps the commit's),
+    * sorted by (part index, bucket, pk, sk) in Spark's binary string
+    * order, stably, so the files hold what the write job's
+    * `sortWithinPartitions` writes; `conds` are its (pk, sk,
+    * expectedVersion) conditions in row order.
+    */
+  private[kv] final case class LocalBatch(rows: Seq[InternalRow], conds: Seq[(String, String, Long)])
+
+  private[kv] object LocalBatch {
+    /** `frame`'s batch when its optimized plan is a local relation whose
+      * columns have the types the table stores; None otherwise (the write
+      * job then casts or rejects them as before). `fixed` is every row's
+      * (op, expectedVersion) when the frame does not carry them; a REMOVE's
+      * value is null.
+      */
+    def apply(frame: DataFrame, fixed: Option[(String, Long)], partitionCount: Int,
+              resolver: Resolver): Option[LocalBatch] = frame.queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
+        def ord(col: String, t: DataType): Option[Int] =
+          l.output.zipWithIndex.filter(a => resolver(a._1.name, col)) match {
+            case Seq((a, i)) if a.dataType == t => Some(i)
+            case _ => None
+          }
+        def str(r: InternalRow, i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).clone()
+        for {
+          pk <- ord("pk", StringType)
+          sk <- ord("sk", StringType)
+          value <- if (fixed.exists(_._1 == "REMOVE")) Some(-1) else ord("value", BinaryType)
+          op <- if (fixed.isDefined) Some(-1) else ord("op", StringType)
+          expected <- if (fixed.isDefined) Some(-1) else ord("expectedVersion", LongType)
+        } yield {
+          val fixedOp = fixed.map(f => UTF8String.fromString(f._1)).orNull
+          val keyed = l.data.map { r =>
+            val p = str(r, pk)
+            val bucket = bucketOf(p, partitionCount)
+            val row = new GenericInternalRow(Array[Any](bucket, p,
+              if (r.isNullAt(sk)) UTF8String.EMPTY_UTF8 else r.getUTF8String(sk).clone(),
+              if (value < 0 || r.isNullAt(value)) null else r.getBinary(value),
+              if (op < 0) fixedOp else str(r, op), 0L))
+            val e = fixed.fold(if (r.isNullAt(expected)) -1L else r.getLong(expected))(_._2)
+            (partIndexOfBucket(bucket, partitionCount), row, e)
+          }
+          LocalBatch(keyed.sorted(FileOrder).map(_._2),
+            keyed.collect { case (_, r, e) if e >= 0L =>
+              (Option(r.getUTF8String(1)).map(_.toString).orNull, r.getUTF8String(2).toString, e)
+            })
+        }
+      case _ => None
+    }
+
+    /** (part index, bucket, pk, sk) ascending, a null pk first. */
+    private val FileOrder: Ordering[(Int, InternalRow, Long)] = (a, b) => {
+      val (x, y) = (a._2, b._2)
+      def pk = (x.getUTF8String(1), y.getUTF8String(1)) match {
+        case (null, null) => 0
+        case (null, _) => -1
+        case (_, null) => 1
+        case (p, q) => p.compareTo(q)
+      }
+      val c = Integer.compare(a._1, b._1)
+      if (c != 0) c else {
+        val d = java.lang.Long.compare(x.getLong(0), y.getLong(0))
+        if (d != 0) d else {
+          val e = pk
+          if (e != 0) e else x.getUTF8String(2).compareTo(y.getUTF8String(2))
+        }
+      }
     }
   }
 
@@ -188,61 +270,57 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     * conditional-update analog,
     * segmentstore/contracts/.../tables/TableStore.java:114-242).
     */
-  def update(ops: DataFrame): Long = {
-    var attempts = 0
-    val keyed = ops.withColumn("sk", coalesce($"sk", lit("")))
+  def update(ops: DataFrame): Long = updateWith(ops, None)
+
+  /** [[update]] of `frame`, with every row's op and expectedVersion
+    * `fixed` when given (a REMOVE's value is null). A batch whose rows are
+    * on the driver ([[KeyValueTable.LocalBatch]]) is checked and written
+    * on the calling thread with no Spark job; any other is one write job,
+    * shuffled by bucket, one task per part index: without the shuffle
+    * every input task would write its own file per part index, and every
+    * get reads all of a part index's files.
+    */
+  private def updateWith(frame: DataFrame, fixed: Option[(String, Long)]): Long = {
+    val local = KeyValueTable.LocalBatch(frame, fixed, partitionCount, spark.sessionState.conf.resolver)
+    lazy val keyed = fixed.fold(frame) { case (op, expected) =>
+      (if (op == "REMOVE") frame.withColumn("value", lit(null).cast("binary")) else frame)
+        .withColumn("op", lit(op)).withColumn("expectedVersion", lit(expected))
+    }.withColumn("sk", coalesce($"sk", lit("")))
       .withColumn("bucket", pmod(xxhash64($"pk"), lit(partitionCount)))
-    // the delta's rows; the version is set per call in the write tasks.
-    // A driver-local batch is one task with no shuffle. Any other input
-    // is shuffled by bucket, one task per part index: without it every
-    // input task would write its own file per part index, and every get
-    // reads all of a part index's files.
-    val rows = keyed.select($"bucket", $"pk", $"sk", $"value", $"op", lit(0L).as("version"))
-    val placed =
-      if (keyed.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) rows.coalesce(1)
-      else rows.repartition(partitionCount, $"bucket")
+    lazy val conds = keyed.filter($"expectedVersion" >= 0)
+    // the conditions, one past the limit: a batch within it is compared
+    // on the driver, a larger one semi-joins a broadcast of its keys
+    val condRows: Seq[(String, String, Long)] = local.fold(
+      conds.select($"pk", $"sk", $"expectedVersion").limit(KeyValueTable.ConditionPruneLimit + 1)
+        .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2))))(
+      _.conds.take(KeyValueTable.ConditionPruneLimit + 1))
+    var attempts = 0
     while (true) {
       val m = latest()
       val commitVersion = m.version + 1
-
       // conditional checks against the state of manifest m (the one
-      // this commit CASes on), for the TOUCHED keys only: small batches
-      // read their pk literals (one part index each) and compare on the
-      // driver; oversized ones semi-join a broadcast of their keys.
-      val conds = keyed.filter($"expectedVersion" >= 0)
-      val condRows = conds.select($"pk", $"sk", $"expectedVersion")
-        .limit(KeyValueTable.ConditionPruneLimit + 1).collect()
-      if (condRows.nonEmpty) {
-        def violates(expected: Long, actual: Option[Long]) =
-          if (expected == 0L) actual.isDefined else !actual.contains(expected)
-        val bad: Option[(String, Long, Option[Long])] =
-          if (condRows.length <= KeyValueTable.ConditionPruneLimit) {
-            val pks = condRows.map(_.getString(0)).distinct.toSeq
-            val cur = read(m).filter($"pk".isin(pks: _*))
-              .select($"pk", $"sk", $"version").collect()
-              .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-            condRows.iterator.map(r =>
-              (r.getString(0), r.getLong(2), cur.get((r.getString(0), r.getString(1)))))
-              .find { case (_, e, v) => violates(e, v) }
-          } else {
-            val cur = read(m).select($"pk", $"sk", $"version").join(
-              broadcast(conds.select($"pk", $"sk").distinct()), Seq("pk", "sk"), "left_semi")
-            conds.join(cur, Seq("pk", "sk"), "left")
-              .filter(
-                ($"expectedVersion" === 0 && $"version".isNotNull) ||
-                ($"expectedVersion" > 0 && ($"version".isNull || $"version" =!= $"expectedVersion")))
-              .select($"pk", $"expectedVersion", $"version")
-              .limit(1).collect().headOption
-              .map(r => (r.getString(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long])))
-          }
-        bad.foreach { case (pk, e, v) =>
+      // this commit CASes on), for the TOUCHED keys only
+      if (condRows.nonEmpty)
+        (if (condRows.length <= KeyValueTable.ConditionPruneLimit) violated(m, condRows)
+         else violatedJoin(m, conds)).foreach { case (pk, e, v) =>
           throw new ConditionalCheckFailedException(
             s"kv $name: condition failed for pk=$pk expected=$e actual=${v.getOrElse("absent")}")
         }
-      }
 
       val deltaDir = new Path(tableDir, s"delta-$commitVersion-${UUID.randomUUID()}")
-      writeParts("graft.kvUpdate", placed, deltaDir, Some(commitVersion))
+      val layout = new KeyValueTable.PartLayout(partitionCount, Some(commitVersion))
+      local match {
+        case Some(b) =>
+          TaskFileWriter.writeHere(spark, "graft.kvUpdate", b.rows.iterator, deltaDir, layout) {
+            (files, bytes, rows) =>
+              KeyValueTable.events("kv.write", "table" -> name, "version" -> commitVersion,
+                "files" -> files, "rows" -> rows, "bytes" -> bytes)
+          }
+          if (b.rows.isEmpty) fs.mkdirs(deltaDir)
+        case None =>
+          writeParts("graft.kvUpdate", keyed.select($"bucket", $"pk", $"sk", $"value", $"op",
+            lit(0L).as("version")).repartition(partitionCount, $"bucket"), deltaDir, layout)
+      }
 
       if (commit(m.copy(version = commitVersion,
           files = m.files :+ KvFile(deltaDir.toString, "delta", commitVersion)), m))
@@ -254,27 +332,56 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     -1L // unreachable
   }
 
+  private def violates(expected: Long, actual: Option[Long]): Boolean =
+    if (expected == 0L) actual.isDefined else !actual.contains(expected)
+
+  /** The first of `conds` (pk, sk, expectedVersion) that manifest `m`
+    * violates, as (pk, expected, actual): the current versions are read
+    * on the calling thread through pushed pk literals, one part index
+    * per distinct pk.
+    */
+  private def violated(m: KvManifest, conds: Seq[(String, String, Long)]): Option[(String, Long, Option[Long])] = {
+    val scan = new GraftKvScan(spark, this, None, None, None, KeyValueTable.CheckColumns,
+      GraftKvTable.DefaultResolvedBudgetBytes, Array(In("pk", conds.map(_._1).distinct.toArray[Any])), Some(m))
+    val cur = scan.readOnDriver()
+      .map(r => (r.getUTF8String(0).toString, r.getUTF8String(1).toString) -> r.getLong(2)).toMap
+    conds.iterator.map { case (pk, sk, e) => (pk, e, cur.get((pk, sk))) }
+      .find { case (_, e, v) => violates(e, v) }
+  }
+
+  /** [[violated]] for batches past [[KeyValueTable.ConditionPruneLimit]]:
+    * the scan of `m` semi-joins a broadcast of the conditioned keys.
+    */
+  private def violatedJoin(m: KvManifest, conds: DataFrame): Option[(String, Long, Option[Long])] = {
+    val cur = read(m).select($"pk", $"sk", $"version").join(
+      broadcast(conds.select($"pk", $"sk").distinct()), Seq("pk", "sk"), "left_semi")
+    conds.join(cur, Seq("pk", "sk"), "left")
+      .filter(
+        ($"expectedVersion" === 0 && $"version".isNotNull) ||
+        ($"expectedVersion" > 0 && ($"version".isNull || $"version" =!= $"expectedVersion")))
+      .select($"pk", $"expectedVersion", $"version")
+      .limit(1).collect().headOption
+      .map(r => (r.getString(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long])))
+  }
+
   /** Write `rows` (the table schema) into `dir` through [[TaskFileWriter]]:
     * each task sorts by (part index, bucket, pk, sk) and writes one
-    * `part-NNNNN` file per part index it holds, every row stamped with
-    * `version` when one is given. An empty write still leaves `dir`, so a
-    * committed directory always lists.
+    * `part-NNNNN` file per part index it holds. An empty write still
+    * leaves `dir`, so a committed directory always lists.
     */
-  private def writeParts(name: String, rows: DataFrame, dir: Path, version: Option[Long]): Unit = {
+  private def writeParts(name: String, rows: DataFrame, dir: Path, layout: KeyValueTable.PartLayout): Unit = {
     val files = TaskFileWriter.write(spark, name,
       rows.sortWithinPartitions(KeyValueTable.partIndex($"bucket", partitionCount),
         $"bucket", $"pk", $"sk"),
-      dir, new KeyValueTable.PartLayout(partitionCount, version))
+      dir, layout)
     if (files.isEmpty) fs.mkdirs(dir)
   }
 
   /** Insert: fail if the key already exists (client/.../tables/Insert.java). */
-  def insert(entries: DataFrame): Long =
-    update(entries.withColumn("op", lit("PUT")).withColumn("expectedVersion", lit(0L)))
+  def insert(entries: DataFrame): Long = updateWith(entries, Some(("PUT", 0L)))
 
   /** Unconditional Put (client/.../tables/Put.java). */
-  def put(entries: DataFrame): Long =
-    update(entries.withColumn("op", lit("PUT")).withColumn("expectedVersion", lit(-1L)))
+  def put(entries: DataFrame): Long = updateWith(entries, Some(("PUT", -1L)))
 
   /** Conditional Put against an exact entry version (>= 1: commit
     * versions start at 1). The other modes have their own calls.
@@ -283,14 +390,11 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     require(expectedVersion >= 1L,
       s"putIfVersion needs an entry version >= 1, got $expectedVersion: " +
         "use put for an unconditional write or insert to write only if absent")
-    update(entries.withColumn("op", lit("PUT"))
-      .withColumn("expectedVersion", lit(expectedVersion)))
+    updateWith(entries, Some(("PUT", expectedVersion)))
   }
 
   /** Remove keys; `df` needs pk + sk. (client/.../tables/Remove.java). */
-  def remove(keys: DataFrame): Long =
-    update(keys.withColumn("value", lit(null).cast("binary"))
-      .withColumn("op", lit("REMOVE")).withColumn("expectedVersion", lit(-1L)))
+  def remove(keys: DataFrame): Long = updateWith(keys, Some(("REMOVE", -1L)))
 
   // ------------------------------------------------------------------- read
 
@@ -381,7 +485,12 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
   }
 
   /** Changes since a commit version — the ReadTableEntriesDelta analog
-    * (WireCommands.java:2718): every PUT/REMOVE with version > from.
+    * (WireCommands.java:2718): the PUT/REMOVE rows with version > from in
+    * the latest manifest's files. Horizon: `compact()` folds every file it
+    * replaces into a base of the latest live row per key, so below the last
+    * compaction the feed returns those live rows (at their entry versions),
+    * not every PUT and REMOVE: after `put(a, b)`, `remove(a)`, `compact()`,
+    * `deltaSince(0)` is `[b PUT 1]`.
     */
   def deltaSince(fromVersion: Long): DataFrame =
     read(latest(), Some(fromVersion))
@@ -533,7 +642,7 @@ class KeyValueTable(spark: SparkSession, rootDir: String, val name: String,
     val baseDir = new Path(tableDir, s"base-${m.version}-${UUID.randomUUID()}")
     writeParts("graft.kvCompact", resolvedAt(m)
       .select($"bucket", $"pk", $"sk", $"value", lit("PUT").as("op"), $"version")
-      .repartition(partitionCount, $"bucket"), baseDir, None)
+      .repartition(partitionCount, $"bucket"), baseDir, new KeyValueTable.PartLayout(partitionCount, None))
     // replaced files become tombstones with a reader-grace deadline —
     // an in-flight read planned from the old manifest can finish;
     // sweepDeletes() reclaims them afterwards

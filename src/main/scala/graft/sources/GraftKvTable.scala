@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.graftshim.ParquetShim
@@ -176,6 +177,13 @@ class GraftKvScan(spark: SparkSession, kvt: KeyValueTable,
       s", pushed=[${pushedFilters.mkString(", ")}]"
   }
 
+  /** The manifest this scan reads: the delta feed reads the file set AT
+    * toVersion (bounded history); resolved/as-of reads the manifest they
+    * resolve against; typed API reads arrive with the manifest they
+    * already resolved.
+    */
+  private lazy val manifest: KvManifest = pinned.getOrElse(kvt.manifestAt(if (delta) toV else asOf))
+
   /** Part indices a pk literal set touches (None = no pk literal bound). */
   private lazy val touchedParts: Option[Set[Int]] =
     GraftKvTable.pkLiterals(pushedFilters).map(_.map(pk =>
@@ -186,12 +194,8 @@ class GraftKvScan(spark: SparkSession, kvt: KeyValueTable,
     * and shared by statistics and planning.
     */
   private lazy val planned: Seq[(Int, Vector[PartitionedFile])] = {
-    // the delta feed reads the file set AT toVersion (bounded history);
-    // resolved/as-of reads the manifest they resolve against; typed API
-    // reads arrive with the manifest they already resolved
-    val m: KvManifest = pinned.getOrElse(kvt.manifestAt(if (delta) toV else asOf))
     // dir-level pruning: delta dirs wholly outside (from, to] never list
-    val dirs = m.files.filter(f => !delta || f.commitVersion > fromV.get)
+    val dirs = manifest.files.filter(f => !delta || f.commitVersion > fromV.get)
     val keep = touchedParts.getOrElse((0 until kvt.partitionCount).toSet)
     val conf = spark.sessionState.newHadoopConf()
     val byIdx = scala.collection.mutable.Map.empty[Int, Vector[PartitionedFile]]
@@ -216,6 +220,8 @@ class GraftKvScan(spark: SparkSession, kvt: KeyValueTable,
       java.util.OptionalLong.of(planned.iterator.flatMap(_._2).map(_.length).sum)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = Array(new KvRowsReadMetric)
 
   override def planInputPartitions(): Array[InputPartition] =
     planned.map { case (idx, pfs) =>
@@ -243,18 +249,27 @@ class GraftKvScan(spark: SparkSession, kvt: KeyValueTable,
 
   /** This scan's rows, read on the calling thread: its own planning and
     * reader factory, every partition drained and closed in turn. For
-    * reads small enough to hold on the driver, such as a point read.
+    * reads small enough to hold on the driver, such as a point read or a
+    * conditional put's check. No task reports this read, so it is one
+    * `event=kv.read` line on the `graft.kv` logger: the manifest version,
+    * the files planned, the rows read from them and their bytes.
     */
   private[graft] def readOnDriver(): Seq[InternalRow] = {
     val factory = createReaderFactory()
-    planInputPartitions().toSeq.flatMap { p =>
+    var rowsRead = 0L
+    val out = planInputPartitions().toSeq.flatMap { p =>
       val reader = factory.createReader(p)
       try {
         val rows = Vector.newBuilder[InternalRow]
         while (reader.next()) rows += reader.get().copy()
+        rowsRead += reader.currentMetricsValues().map(_.value).sum
         rows.result()
       } finally reader.close()
     }
+    val files = planned.flatMap(_._2)
+    KeyValueTable.events("kv.read", "table" -> kvt.name, "version" -> manifest.version,
+      "files" -> files.size, "rows" -> rowsRead, "bytes" -> files.map(_.length).sum)
+    out
   }
 }
 
@@ -282,10 +297,10 @@ final class GraftKvReaderFactory(delegate: PartitionReaderFactory,
     val (bkO, pkO, skO, vaO, opO, veO) =
       (ord("bucket"), ord("pk"), ord("sk"), ord("value"), ord("op"), ord("version"))
     val outOrds = outNames.map(n => readNames.indexOf(n))
-    if (delta) new PartitionReader[InternalRow] {
+    if (delta) new KvReader(inner) {
       private var row: InternalRow = _
       override def next(): Boolean = {
-        while (inner.next()) {
+        while (innerNext()) {
           val r = inner.get()
           val v = r.getLong(veO)
           if (v > fromV && v <= toV) {
@@ -301,8 +316,7 @@ final class GraftKvReaderFactory(delegate: PartitionReaderFactory,
         false
       }
       override def get(): InternalRow = row
-      override def close(): Unit = inner.close()
-    } else new PartitionReader[InternalRow] {
+    } else new KvReader(inner) {
       // (pk, sk) -> (version, bucket, isPut, value) — complete key
       // histories live in this partition by the write-layout invariant,
       // so latest-wins folds locally; bounded by live keys / partitions
@@ -341,7 +355,7 @@ final class GraftKvReaderFactory(delegate: PartitionReaderFactory,
           }
         }
         val keep = pks.map(_.map(UTF8String.fromString))
-        while (inner.next()) {
+        while (innerNext()) {
           val r = inner.get()
           if (keep.forall(_.contains(r.getUTF8String(pkO)))) fold(r)
         }
@@ -372,7 +386,6 @@ final class GraftKvReaderFactory(delegate: PartitionReaderFactory,
         if (it.hasNext) { row = it.next(); true } else false
       }
       override def get(): InternalRow = row
-      override def close(): Unit = inner.close()
     }
   }
 
@@ -384,4 +397,32 @@ final class GraftKvReaderFactory(delegate: PartitionReaderFactory,
       case "value" => r.getBinary(ord).clone()
       case _ => r.getLong(ord)
     }
+}
+
+/** A KV partition reader over its files' rows, counting the rows it has
+  * read from them (the scan's `rowsRead` metric).
+  */
+private abstract class KvReader(files: PartitionReader[InternalRow])
+    extends PartitionReader[InternalRow] {
+  private var rowsRead = 0L
+  protected def innerNext(): Boolean = {
+    val more = files.next()
+    if (more) rowsRead += 1
+    more
+  }
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(new CustomTaskMetric {
+    override def name(): String = KvRowsReadMetric.Name
+    override def value(): Long = rowsRead
+  })
+  override def close(): Unit = files.close()
+}
+
+/** Rows a KV scan read from its files, before resolution. */
+final class KvRowsReadMetric extends CustomSumMetric {
+  override def name(): String = KvRowsReadMetric.Name
+  override def description(): String = "rows read from KV files"
+}
+
+object KvRowsReadMetric {
+  val Name = "rowsRead"
 }

@@ -1,15 +1,13 @@
 package graft.sources
 
-import graft.storage.GraftStreams
+import graft.storage.{GraftStreams, TaskFileWriter}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftshim.ParquetWriteShim
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, ShortType, StringType, StructType}
 
@@ -145,7 +143,7 @@ final class GraftStreamingWrite(conf: GraftSourceConfig, queryId: String,
     val (rk, et, pay) = GraftWriteMapping.resolve(schema)
     val etIsLong = schema(et).dataType == LongType
     new GraftStagingWriterFactory(stagingRoot.toString,
-      ParquetWriteShim.parquetWriters(spark, GraftWriteMapping.writeSchema),
+      TaskFileWriter.rowFiles(spark, GraftWriteMapping.writeSchema),
       rk, et, pay, etIsLong)
   }
 
@@ -181,23 +179,22 @@ final class GraftStreamingWrite(conf: GraftSourceConfig, queryId: String,
 }
 
 final class GraftStagingWriterFactory(stagingRoot: String,
-    writers: ParquetWriteShim.Writers, rkOrd: Int, etOrd: Int, payOrd: Int,
+    files: TaskFileWriter.RowFiles, rkOrd: Int, etOrd: Int, payOrd: Int,
     etIsLong: Boolean) extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new GraftStagingWriter(s"$stagingRoot/epoch-$epochId", f"part-$partitionId%05d-$taskId",
-      writers, rkOrd, etOrd, payOrd, etIsLong)
+    new GraftStagingWriter(files(s"$stagingRoot/epoch-$epochId", f"part-$partitionId%05d-$taskId"),
+      rkOrd, etOrd, payOrd, etIsLong)
 }
 
 /** Executor-side staging writer: raw (routingKey, eventTime, payload)
-  * parquet through the engine's shared task-side parquet writer
-  * (ParquetWriteShim, as TaskFileWriter uses it). Files are task-unique;
+  * parquet through the engine's one file writer
+  * ([[graft.storage.TaskFileWriter.RowFile]]). Files are task-unique;
   * only files named in the task's commit message are ever read back.
   */
-final class GraftStagingWriter(dir: String, name: String, writers: ParquetWriteShim.Writers,
+final class GraftStagingWriter(file: TaskFileWriter.RowFile,
     rkOrd: Int, etOrd: Int, payOrd: Int, etIsLong: Boolean)
     extends DataWriter[InternalRow] {
   // opened on first row: an all-filtered partition stages no file at all
-  private var w: OutputWriter = _
   private val out = new GenericInternalRow(3)
   private var rows = 0L
 
@@ -205,23 +202,16 @@ final class GraftStagingWriter(dir: String, name: String, writers: ParquetWriteS
     if (row.isNullAt(rkOrd) || row.isNullAt(etOrd) || row.isNullAt(payOrd))
       throw new IllegalArgumentException(
         "graft-stream sink: routingKey, eventTime and payload must be non-null")
-    if (w == null) w = writers.open(dir, name)
     out.update(0, row.getUTF8String(rkOrd))
     out.setLong(1, if (etIsLong) row.getLong(etOrd) else row.getInt(etOrd).toLong)
     out.update(2, row.getBinary(payOrd))
-    w.write(out)
+    file.write(out)
     rows += 1
   }
 
-  override def commit(): WriterCommitMessage =
-    if (w == null) GraftStagedFiles(Nil, 0L)
-    else { w.close(); GraftStagedFiles(Seq(w.path()), rows) }
+  override def commit(): WriterCommitMessage = GraftStagedFiles(file.commit().toSeq, rows)
 
-  override def abort(): Unit = if (w != null) {
-    try w.close() catch { case _: Throwable => () }
-    val p = new Path(w.path())
-    try p.getFileSystem(writers.hadoopConf).delete(p, false) catch { case _: Throwable => () }
-  }
+  override def abort(): Unit = file.abort()
 
   override def close(): Unit = ()
 }

@@ -5,7 +5,6 @@ import graft.core._
 import graft.functions.GraftFunctions.hash_to_range
 import graft.sources.SubRange
 import org.apache.hadoop.fs.Path
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
@@ -853,8 +852,8 @@ object GraftStreams {
       extends TaskFileWriter.Layout[FileEntry] {
     def schema: StructType = storageSchema
     def fileKey(row: InternalRow): Long = row.getLong(0)
-    def fileName(seg: Long, tc: TaskContext): String =
-      f"segId=$seg/part-${tc.partitionId()}%05d-${tc.taskAttemptId()}"
+    def fileName(seg: Long, token: TaskFileWriter.Token): String =
+      f"segId=$seg/part-${token.partition}%05d-${token.attempt}"
     def newFile(seg: Long): TaskFileWriter.FileRows[FileEntry] = new TaskFileWriter.FileRows[FileEntry] {
       private val base = if (offsetBase.isEmpty) 0L else offsetBase(seg)
       private var first = 0L

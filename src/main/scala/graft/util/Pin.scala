@@ -2,7 +2,6 @@ package graft.util
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.ClassicConversions
-import org.slf4j.LoggerFactory
 
 /** The one place the engine pins an intermediate, and the one size gate
   * that decides whether a pin is worth its storage.
@@ -24,7 +23,7 @@ object Pin {
   val MaxBytesConf = "spark.graft.lsh.autoPersistMaxBytes"
   private val DefaultMaxBytes: Long = 2L * 1024 * 1024 * 1024
 
-  private val log = LoggerFactory.getLogger("graft.pin")
+  private val log = new EventLog("graft.pin")
 
   /** The pins of one [[scope]], released last-in first-out. */
   final class Scope private[Pin] () {
@@ -37,7 +36,7 @@ object Pin {
     }
 
     private[Pin] def release(): Unit = pins.foreach { case (site, df) =>
-      if (log.isInfoEnabled) {
+      if (log.enabled) {
         val (mem, disk) = storedBytes(df)
         event("pin.release", "site" -> site, "mem" -> mem, "disk" -> disk)
       }
@@ -76,9 +75,7 @@ object Pin {
   }
 
   /** One decision event as `event=<name> k=v …` on the `graft.pin` logger. */
-  def event(name: String, fields: (String, Any)*): Unit =
-    if (log.isInfoEnabled)
-      log.info((s"event=$name" +: fields.map { case (k, v) => s"$k=$v" }).mkString(" "))
+  def event(name: String, fields: (String, Any)*): Unit = log(name, fields: _*)
 
   /** (memory, disk) bytes held by `df`'s own cached RDD; (0, 0) when it
     * was never computed.

@@ -40,11 +40,13 @@ object ParquetWriteShim {
     /** The primed job conf, in a task. */
     def hadoopConf: Configuration = conf.value.value
 
-    /** Open `dir/name<ext>` (ext = codec + `.parquet`) for the running task. */
+    /** Open `dir/name<ext>` (ext = codec + `.parquet`) for the running
+      * task, or for the calling thread outside any task (attempt 0).
+      */
     def open(dir: String, name: String): OutputWriter = {
-      val tc = TaskContext.get()
-      val ctx = new TaskAttemptContextImpl(hadoopConf,
-        new TaskAttemptID("graft", tc.stageId(), TaskType.MAP, tc.partitionId(), tc.attemptNumber()))
+      val tc = Option(TaskContext.get())
+      val ctx = new TaskAttemptContextImpl(hadoopConf, new TaskAttemptID("graft",
+        tc.fold(0)(_.stageId()), TaskType.MAP, tc.fold(0)(_.partitionId()), tc.fold(0)(_.attemptNumber())))
       factory.newInstance(s"$dir/$name${factory.getFileExtension(ctx)}", schema, ctx)
     }
   }

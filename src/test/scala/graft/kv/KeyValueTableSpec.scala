@@ -3,16 +3,11 @@ package graft.kv
 import graft.SparkTestSession
 import graft.core.{ConditionalCheckFailedException, GraftException}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 /** kv-table fixture (FIXTURES.md) mirroring KeyValueTableTest.java:
@@ -411,28 +406,16 @@ class KeyValueTableSpec extends AnyFunSuite {
     t.compact()
     val v = t.get("k3").get._2
 
-    // capture per-job input rows: the conditional check must read one
-    // bucket's worth of rows, not all 400
-    val read = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        read.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      t.putIfVersion(kv("k3" -> "v3b"), v)
-      // listener delivery is async: wait until the counter stops moving
-      var last = -1L
-      var spins = 0
-      while (read.get() != last && spins < 40) {
-        last = read.get(); Thread.sleep(100); spins += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // the check reads on the driver, so its rows are on its kv.read line:
+    // one part index's worth of rows, not all 400
+    val (_, lines) = graft.util.PinLog.captureOn("graft.kv")(t.putIfVersion(kv("k3" -> "v3b"), v))
+    val reads = graft.util.PinLog.events(lines, "kv.read")
+    assert(reads.size == 1, lines)
+    val read = reads.head("rows").toLong
+    assert(reads.head("version") == (v + 1).toString && reads.head("files") == "1", lines)
     assert(new String(t.get("k3").get._1) == "v3b")
-    // the update also re-reads for the write itself; 400-row full scans
-    // would push this way past 400 — with 8 buckets a pruned check reads
-    // ~50 rows for the condition
-    assert(read.get() < 400, s"conditional check read ${read.get()} rows — full-table resolve?")
+    // with 8 part indices a pruned check reads ~50 rows for the condition
+    assert(read > 0L && read < 400L, s"conditional check read $read rows — full-table resolve?")
 
     // wrong version still fails via the pruned path
     assertThrows[ConditionalCheckFailedException](t.putIfVersion(kv("k3" -> "x"), v))
@@ -493,54 +476,32 @@ class KeyValueTableSpec extends AnyFunSuite {
     assert(t.fsck().isEmpty)
   }
 
-  test("a driver-local put is one named job of one task, no shuffle, with output metrics") {
+  test("a driver-local put starts no Spark job and no broadcast, writes one file per touched part index, and reports its rows and bytes") {
     val t = fresh(parts = 8)
-    val names = new ConcurrentLinkedQueue[String]()
-    val qeListener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        names.add(funcName)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    val group = s"kv-put-${java.util.UUID.randomUUID()}"
-    val stages = ConcurrentHashMap.newKeySet[Int]()
-    val jobs, tasks, shuffled, bytes, records = new AtomicLong()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          jobs.incrementAndGet()
-          e.stageIds.foreach(stages.add(_))
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId)) Option(e.taskMetrics).foreach { m =>
-          tasks.incrementAndGet()
-          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          bytes.addAndGet(m.outputMetrics.bytesWritten)
-          records.addAndGet(m.outputMetrics.recordsWritten)
-        }
-    }
-    spark.listenerManager.register(qeListener)
-    spark.sparkContext.addSparkListener(listener)
+    t.put(kv("warm" -> "0")) // warm: the shared writer setup is primed
     val pairs = (0 until 6).map(i => s"m$i" -> s"v$i")
-    try {
-      spark.sparkContext.setJobGroup(group, "a measured put")
-      try t.put(kv(pairs: _*)) finally spark.sparkContext.clearJobGroup()
-      val dir = new Path(t.liveFilePaths.last)
-      val files = dir.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(dir)
-        .filter(_.getPath.getName.startsWith("part-"))
-      val parts = pairs.map(p => KeyValueTable.partIndexOfBucket(KeyValueTable.bucketOf(p._1, 8), 8))
-      assert(files.length == parts.distinct.size, files.map(_.getPath.getName).toSeq)
-      val deadline = System.currentTimeMillis() + 10000
-      def settled = records.get == 6L && bytes.get == files.map(_.getLen).sum &&
-        names.asScala.toSeq.contains("graft.kvUpdate")
-      while (!settled && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(settled, s"output metrics: $records rows, $bytes bytes; executions ${names.asScala.toSeq}")
-      assert(jobs.get == 1L && tasks.get == 1L, s"$jobs jobs, $tasks tasks")
-      assert(shuffled.get == 0L)
-    } finally {
-      spark.listenerManager.unregister(qeListener)
-      spark.sparkContext.removeSparkListener(listener)
+    val sc = spark.sparkContext
+    // broadcast ids are sequential: two probes bracket the put
+    val (((v, broadcasts), lines), jobs) = graft.SparkJobs.during(spark) {
+      graft.util.PinLog.captureOn("graft.kv") {
+        val b0 = sc.broadcast(0)
+        val v = t.put(kv(pairs: _*))
+        val b1 = sc.broadcast(0)
+        Seq(b0, b1).foreach(_.destroy())
+        (v, b1.id - b0.id - 1)
+      }
     }
-    assert(pairs.forall { case (k, v) => t.get(k).map(p => new String(p._1)).contains(v) })
+    assert(jobs == 0L, s"$jobs jobs during the put")
+    assert(broadcasts == 0L, s"$broadcasts broadcasts during the put")
+    val dir = new Path(t.liveFilePaths.last)
+    val files = dir.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(dir)
+      .filter(_.getPath.getName.startsWith("part-"))
+    val parts = pairs.map(p => KeyValueTable.partIndexOfBucket(KeyValueTable.bucketOf(p._1, 8), 8))
+    assert(files.length == parts.distinct.size, files.map(_.getPath.getName).toSeq)
+    val writes = graft.util.PinLog.events(lines, "kv.write")
+    assert(writes == Seq(Map("event" -> "kv.write", "table" -> "t", "version" -> v.toString,
+      "files" -> files.length.toString, "rows" -> "6", "bytes" -> files.map(_.getLen).sum.toString)), lines)
+    assert(pairs.forall { case (k, x) => t.get(k).map(p => (new String(p._1), p._2)).contains((x, v)) })
   }
 
   test("a warm get starts no Spark job and no broadcast, and answers as before") {

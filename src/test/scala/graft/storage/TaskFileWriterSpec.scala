@@ -2,7 +2,7 @@ package graft.storage
 
 import graft.SparkTestSession
 import org.apache.hadoop.fs.Path
-import org.apache.spark.{SparkEnv, TaskContext}
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +13,7 @@ import java.nio.file.Files
 final class OneFileLayout extends TaskFileWriter.Layout[String] {
   def schema: StructType = StructType.fromDDL("id BIGINT")
   def fileKey(row: InternalRow): Long = 0L
-  def fileName(key: Long, tc: TaskContext): String = s"part-${tc.partitionId()}"
+  def fileName(key: Long, token: TaskFileWriter.Token): String = s"part-${token.partition}"
   def newFile(key: Long): TaskFileWriter.FileRows[String] = new TaskFileWriter.FileRows[String] {
     def add(row: InternalRow, i: Long): InternalRow = row
     def entry(path: String, rows: Long, bytes: Long): String = path

@@ -12,12 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
-/** Collects the `graft.pin` lines written while a body runs, with the
-  * logger raised to INFO for the duration.
+/** Collects the `graft.pin` (or another event logger's) lines written
+  * while a body runs, with the logger raised to INFO for the duration.
   */
 object PinLog {
-  def capture[T](body: => T): (T, Seq[String]) = {
-    val logger = LoggerContext.getContext(false).getLogger("graft.pin")
+  def capture[T](body: => T): (T, Seq[String]) = captureOn("graft.pin")(body)
+
+  def captureOn[T](name: String)(body: => T): (T, Seq[String]) = {
+    val logger = LoggerContext.getContext(false).getLogger(name)
     val lines = new ConcurrentLinkedQueue[String]()
     val app = new AbstractAppender("pin-capture", null, null, true, Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
@@ -32,8 +34,12 @@ object PinLog {
 
   /** The `key=value` fields of the `event` lines for `site`. */
   def events(lines: Seq[String], event: String, site: String): Seq[Map[String, String]] =
+    events(lines, event).filter(_.get("site").contains(site))
+
+  /** The `key=value` fields of the `event` lines. */
+  def events(lines: Seq[String], event: String): Seq[Map[String, String]] =
     lines.map(_.split(" ").map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap)
-      .filter(f => f.get("event").contains(event) && f.get("site").contains(site))
+      .filter(_.get("event").contains(event))
 }
 
 class PinSpec extends AnyFunSuite {
