@@ -24,7 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * keys), `VERSION AS OF v` to [[KeyValueTable.entriesAt]] semantics,
   * and read options `fromVersion`/`toVersion` to the
   * ReadTableEntriesDelta feed (WireCommands.java:2718): raw PUT/REMOVE
-  * rows with commit version ∈ (from, to]. Writes, TRUNCATE and
+  * rows with commit version ∈ (from, to] in the files of the manifest at
+  * `to`. Below that manifest's last compaction the feed returns the
+  * base's latest live rows, not every PUT/REMOVE (see
+  * [[KeyValueTable.deltaSince]]). Writes, TRUNCATE and
   * streaming reads are rejected — the typed API stays the mutation
   * surface, exactly like the reference keeps table writes behind the
   * client.

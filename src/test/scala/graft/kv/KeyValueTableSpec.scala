@@ -504,6 +504,77 @@ class KeyValueTableSpec extends AnyFunSuite {
     assert(pairs.forall { case (k, x) => t.get(k).map(p => (new String(p._1), p._2)).contains((x, v)) })
   }
 
+  test("a driver-side write that fails drops its delta directory and throws GraftException with the cause; nothing lands; fsck clean") {
+    val impl = classOf[CreateFailFs].getName
+    spark.sparkContext.hadoopConfiguration.set("fs.createfail.impl", impl)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.createfail.impl", impl)
+    val t = new KeyValueTable(spark, "createfail://" + Files.createTempDirectory("graft-kv-createfail"),
+      "t", 4, hadoopConf = conf)
+    val v1 = t.put(kv("a" -> "1"))
+    // 20 keys touch several part indices: the second file's create throws
+    val pairs = (0 until 20).map(i => s"k$i" -> s"v$i")
+    CreateFailFs.arm(2)
+    val e = try intercept[GraftException](t.put(kv(pairs: _*))) finally CreateFailFs.arm(0)
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[java.io.IOException] && c.getMessage.contains("injected create")),
+      s"cause chain: ${chain.map(_.getClass.getName)}")
+    val dir = new Path(t.tableDirPath)
+    val deltas = dir.getFileSystem(conf).listStatus(dir)
+      .map(_.getPath.getName).filter(_.startsWith("delta-")).toSet
+    assert(deltas == t.liveFilePaths.map(p => new Path(p).getName).toSet,
+      "the failed put's delta dir is gone")
+    assert(t.currentVersion == v1)
+    assert(t.get("a").map(p => new String(p._1)) == Some("1") && t.get("k1").isEmpty)
+    assert(t.fsck().isEmpty, t.fsck())
+  }
+
+  test("a driver-local and a distributed write of one batch give the same files, rows and order") {
+    // a null sk (stored as ""), REMOVE rows, non-ASCII pks and a (pk, sk)
+    // twice in the batch
+    val batch = Seq[(String, String, String, String)](
+      ("a", null, "1", "PUT"), ("é-ü", "s", "2", "PUT"), ("日本", "", "3", "PUT"),
+      ("dup", "x", "first", "PUT"), ("gone", "", null, "REMOVE"), ("b", "", "4", "PUT"),
+      ("dup", "x", "second", "PUT"), ("Ω", "z", null, "REMOVE")) ++
+      (0 until 30).map(i => (s"k$i", s"s${i % 3}", s"v$i", "PUT"))
+    def ops(df: DataFrame) = df.toDF("pk", "sk", "v", "op")
+      .select($"pk", $"sk", encode($"v", "UTF-8").as("value"), $"op", lit(-1L).as("expectedVersion"))
+    def files(local: Boolean): (KeyValueTable, Map[Int, Seq[org.apache.spark.sql.Row]]) = {
+      val t = fresh(parts = 8)
+      // one input partition, so the job meets the rows in the batch's order
+      t.update(if (local) ops(batch.toDF()) else ops(spark.sparkContext.parallelize(batch, 1).toDF()))
+      val dir = new Path(t.liveFilePaths.last)
+      (t, dir.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(dir)
+        .filter(_.getPath.getName.startsWith("part-")).map { st =>
+          graft.sources.GraftKvTable.partIndexOf(st.getPath.getName) ->
+            spark.read.parquet(st.getPath.toString).collect().toSeq
+        }.toMap)
+    }
+    val (local, here) = files(local = true)
+    val (dist, there) = files(local = false)
+    assert(here.keySet == there.keySet && here.size > 1, s"${here.keySet} vs ${there.keySet}")
+    def cells(rs: Seq[org.apache.spark.sql.Row]) =
+      rs.map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case x => x })
+    for (idx <- here.keySet) assert(cells(here(idx)) == cells(there(idx)), s"part $idx")
+    assert(here.values.flatten.exists(r => r.getAs[String]("pk") == "a" && r.getAs[String]("sk") == ""))
+    for (t <- Seq(local, dist)) {
+      assert(t.get("dup", "x").map(p => new String(p._1)) == Some("first"))
+      assert(t.get("日本").map(p => new String(p._1)) == Some("3") && t.get("gone").isEmpty)
+    }
+  }
+
+  test("deltaSince below the last compaction returns the base's live rows, not every change") {
+    val t = fresh()
+    t.put(kv("a" -> "1", "b" -> "2"))
+    t.remove(Seq(("a", "")).toDF("pk", "sk"))
+    def feed = t.deltaSince(0L).select($"pk", $"op", $"version").as[(String, String, Long)]
+      .collect().sorted.toSeq
+    assert(feed == Seq(("a", "PUT", 1L), ("a", "REMOVE", 2L), ("b", "PUT", 1L)))
+    t.compact()
+    // the base keeps the latest live row per key: the feed's horizon
+    assert(feed == Seq(("b", "PUT", 1L)))
+  }
+
   test("a warm get starts no Spark job and no broadcast, and answers as before") {
     val t = fresh(parts = 8)
     t.put(kv((0 until 200).map(i => s"k$i" -> s"v$i"): _*))
@@ -762,4 +833,33 @@ class KeyValueTableSpec extends AnyFunSuite {
     s1.compact(keep = 1)
     assert(s1.fetch()._2 == Some("state0+a+b"))
   }
+}
+
+/** Local FS (`createfail://`) whose create of the n-th `part-` file after
+  * [[CreateFailFs.arm]] throws.
+  */
+class CreateFailFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "createfail"
+  override def getUri: java.net.URI = java.net.URI.create("createfail:///")
+  private def check(f: Path): Unit =
+    if (CreateFailFs.failAt > 0 && f.getName.startsWith("part-") &&
+        CreateFailFs.created.incrementAndGet() == CreateFailFs.failAt)
+      throw new java.io.IOException(s"injected create failure: $f")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: org.apache.hadoop.fs.permission.FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object CreateFailFs {
+  @volatile var failAt = 0
+  val created = new java.util.concurrent.atomic.AtomicInteger()
+  def arm(n: Int): Unit = { created.set(0); failAt = n }
 }

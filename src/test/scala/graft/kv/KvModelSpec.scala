@@ -19,7 +19,8 @@ import scala.collection.mutable
   * of a sequence `entries`, `entriesAt(v)`, `deltaSince(v)` and
   * `versionAtTime` must match it at every version still readable.
   *
-  * Each sequence is generated from its own seed, and a failure names the
+  * Each sequence is generated from its own seed, which also draws each
+  * write's input as driver-local or distributed, and a failure names the
   * seed and the operations, so `Seeds` can be narrowed to reproduce it.
   */
 class KvModelSpec extends AnyFunSuite {
@@ -81,6 +82,11 @@ class KvModelSpec extends AnyFunSuite {
     var sweptBelow = 0L // versions below it name swept directories
 
     def where(i: Int, op: Op) = s"seed=$seed op #$i $op in ${ops.mkString(", ")}"
+    // each write's input is drawn from the seed: driver-local (written on
+    // the calling thread) or distributed (written by a Spark job)
+    val draw = new scala.util.Random(seed)
+    def input(df: DataFrame): DataFrame =
+      if (draw.nextBoolean()) df else spark.createDataFrame(df.rdd, df.schema)
     ops.zipWithIndex.foreach { case (op, i) =>
       val t = tables(op.on)
       val other = tables(1 - op.on)
@@ -108,18 +114,18 @@ class KvModelSpec extends AnyFunSuite {
         } catch { case _: ConditionalCheckFailedException => }
       op match {
         case Insert(_, k) =>
-          if (live.contains(pk(k))) refused(t.insert(frame(Seq(pk(k) -> value))), s"${pk(k)} exists")
-          else committed(t.insert(frame(Seq(pk(k) -> value))), Seq((pk(k), "PUT", value, 0L)))
+          if (live.contains(pk(k))) refused(t.insert(input(frame(Seq(pk(k) -> value)))), s"${pk(k)} exists")
+          else committed(t.insert(input(frame(Seq(pk(k) -> value)))), Seq((pk(k), "PUT", value, 0L)))
         case Put(_, ks) =>
-          committed(t.put(frame(ks.map(k => pk(k) -> value))), ks.map(k => (pk(k), "PUT", value, 0L)))
+          committed(t.put(input(frame(ks.map(k => pk(k) -> value)))), ks.map(k => (pk(k), "PUT", value, 0L)))
         case Remove(_, k) =>
-          committed(t.remove(Seq((pk(k), "")).toDF("pk", "sk")), Seq((pk(k), "REMOVE", null, 0L)))
+          committed(t.remove(input(Seq((pk(k), "")).toDF("pk", "sk"))), Seq((pk(k), "REMOVE", null, 0L)))
         case PutIfVersion(_, k, stale) =>
           val cur = live.get(pk(k)).map(_._2)
           val expected = cur.fold(1L)(c => if (stale) c + 1 else c)
           if (cur.contains(expected))
-            committed(t.putIfVersion(frame(Seq(pk(k) -> value)), expected), Seq((pk(k), "PUT", value, 0L)))
-          else refused(t.putIfVersion(frame(Seq(pk(k) -> value)), expected), s"${pk(k)} is at $cur")
+            committed(t.putIfVersion(input(frame(Seq(pk(k) -> value))), expected), Seq((pk(k), "PUT", value, 0L)))
+          else refused(t.putIfVersion(input(frame(Seq(pk(k) -> value))), expected), s"${pk(k)} is at $cur")
         case Compact(_) =>
           val before = version
           t.compact()

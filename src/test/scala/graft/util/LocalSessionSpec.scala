@@ -12,7 +12,9 @@ import scala.util.matching.Regex
   *     mains' conf cannot drift apart again;
   *   - every pin goes through [[Pin]], so each is released in `finally`;
   *   - the engine packages report through logs, not `println` or env
-  *     switches.
+  *     switches;
+  *   - parquet writers are opened only in `storage/TaskFileWriter`, so a
+  *     second file loop cannot come back.
   */
 class LocalSessionSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -42,6 +44,10 @@ class LocalSessionSpec extends AnyFunSuite {
 
   test("persist, cache and unpersist appear in main code only inside Pin") {
     assertNone(offenders("""\.(persist|unpersist)\(|\.cache\(\)""".r, "graft/util/Pin.scala"))
+  }
+
+  test("parquet writers are opened only in TaskFileWriter, the one file loop") {
+    assertNone(offenders("""\bParquetWriteShim\b""".r, "graft/storage/TaskFileWriter.scala", Seq("graft")))
   }
 
   test("no println and no sys.env in the engine packages") {
