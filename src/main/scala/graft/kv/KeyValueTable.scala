@@ -111,7 +111,7 @@ object KeyValueTable {
     * (column 0); with `version`, each row's version (column 5) is that
     * commit version, set in place.
     */
-  private[kv] final class PartLayout(partitionCount: Int, version: Option[Long])
+  private final class PartLayout(partitionCount: Int, version: Option[Long])
       extends TaskFileWriter.Layout[KvPartFile] {
     def schema: StructType = GraftKvTable.schema
     def fileKey(row: InternalRow): Long = partIndexOfBucket(row.getLong(0), partitionCount)
@@ -135,9 +135,9 @@ object KeyValueTable {
     * `sortWithinPartitions` writes; `conds` are its (pk, sk,
     * expectedVersion) conditions in row order.
     */
-  private[kv] final case class LocalBatch(rows: Seq[InternalRow], conds: Seq[(String, String, Long)])
+  private final case class LocalBatch(rows: Seq[InternalRow], conds: Seq[(String, String, Long)])
 
-  private[kv] object LocalBatch {
+  private object LocalBatch {
     /** `frame`'s batch when its optimized plan is a local relation whose
       * columns have the types the table stores; None otherwise (the write
       * job then casts or rejects them as before). `fixed` is every row's
